@@ -1704,17 +1704,25 @@ object Dedup {
     * pushed In(text_md5, …) literals fire parquet row-group stats. */
   private def ledgerWriteDigests(rows: DataFrame, mode: String,
       dest: String): Unit =
-    // explicit partition count (r19): repartition(col) without a count
-    // lets AQE coalesce the tiny write shuffle to ONE task that writes
-    // all touched bucket files serially (~0.5 s per write at bench
-    // scale) — the explicit NdlDocBuckets count pins the designed
-    // one-task-per-bucket parallel write at every scale (a db value
-    // lands in exactly one partition either way, so file layout and
-    // contents are unchanged)
-    rows.withColumn("db", ledgerDb(col("text_md5")))
-      .repartition(NdlDocBuckets, col("db"))
-      .sortWithinPartitions(col("text_md5"))
-      .write.mode(mode).partitionBy("db").parquet(dest)
+    writeBucketed(rows.withColumn("db", ledgerDb(col("text_md5"))),
+      "db", NdlDocBuckets, Seq("text_md5"), mode, dest)
+
+  /** The one write discipline of every ledger store (appends,
+    * compactions, forgets, expiries): hash-repartition on the bucket
+    * into min(buckets, defaultParallelism) tasks — a bucket lands wholly
+    * in one task (which may hold several), so each write leaves one
+    * file per touched bucket, without waves of near-empty tasks on a
+    * small session; the explicit count keeps AQE from coalescing the
+    * write into one serial task. The sort leads with the bucket: the
+    * write requires that order and would replace a keys-only sort
+    * (files left unsorted), while (bucket, keys…) satisfies it. */
+  private def writeBucketed(rows: DataFrame, bucket: String,
+      buckets: Int, keys: Seq[String], mode: String, dest: String): Unit =
+    rows.repartition(
+        math.min(buckets, rows.sparkSession.sparkContext.defaultParallelism),
+        col(bucket))
+      .sortWithinPartitions((bucket +: keys).map(col): _*)
+      .write.mode(mode).partitionBy(bucket).parquet(dest)
 
   /** Compact the [[ledgerAdmit]] digest store. Every admitted batch
     * appends its own parquet file set, so a year of daily ingest leaves
@@ -1986,7 +1994,8 @@ object Dedup {
       // generation protocol so a racing reader of a half-backfilled
       // band store is impossible (fresh stores just get gen-1)
       graft.util.Gen.rewrite(spark, bandsPath)(g =>
-        ndlWriteBands(ndlBandKeys(store, bands, rows), "overwrite", g))
+        ndlWriteBands(ndlWithKb(ndlBandKeys(store, bands, rows)),
+          "overwrite", g))
     // hasData (not just hasStore): an all-unshingleable history (every
     // doc shorter than the shingle width) appends ZERO band keys, and
     // partitionBy writes no files for an empty frame — the store dir
@@ -2163,7 +2172,7 @@ object Dedup {
           if (!fs.exists(m)) { write; fs.create(m, true).close() }
       }
       half("_bands_appended") {
-        ndlWriteBands(ndlBandKeys(novel, bands, rows), "append",
+        ndlWriteBands(ndlWithKb(ndlBandKeys(novel, bands, rows)), "append",
           graft.util.Gen.appendDir(spark, ndlBandsPath(path)))
       }
       half("_primary_appended") {
@@ -2271,16 +2280,13 @@ object Dedup {
     pmod(xxhash64(doc), lit(NdlDocBuckets.toLong)).cast("int")
 
   /** The primary store's one write discipline (append, compaction, and
-    * the forget rewrite): rows land partitioned by db = hash(doc) mod
-    * [[NdlDocBuckets]], pre-repartitioned so each touched bucket gets
-    * one file per write. */
+    * the forget and expiry rewrites): rows land partitioned by
+    * db = hash(doc) mod [[NdlDocBuckets]], one file per touched bucket
+    * per write ([[writeBucketed]]). */
   private def ndlWritePrimary(rows: DataFrame, mode: String,
       dest: String): Unit =
-    // explicit count: see ledgerWriteDigests — pins the parallel
-    // one-task-per-bucket write AQE's coalescing otherwise serializes
-    rows.withColumn("db", ndlDb(col("doc")))
-      .repartition(NdlDocBuckets, col("db"))
-      .write.mode(mode).partitionBy("db").parquet(dest)
+    writeBucketed(rows.withColumn("db", ndlDb(col("doc"))),
+      "db", NdlDocBuckets, Nil, mode, dest)
 
   /** Number of key buckets in the near-dup ledger's band store — the
     * partition-pruning granularity of an admit's candidate probe. A
@@ -2411,24 +2417,21 @@ object Dedup {
     * unchanged by the hashing. */
   private[graft] def ndlWithKb(keys: DataFrame): DataFrame =
     keys.withColumn("kh", xxhash64(col("key")))
-      .withColumn("kb",
-        pmod(col("kh"), lit(NdlKeyBuckets.toLong)).cast("int"))
+      .withColumn("kb", ndlKb(col("kh")))
       .drop("key")
 
-  /** The band store's one write discipline (append and rewrite): keyed
-    * rows land partitioned by (band, kb), pre-repartitioned so each
-    * touched bucket gets one file per write, sorted by key hash within
-    * the file so parquet row-group stats refine the bucket-level
-    * pruning. */
-  private def ndlWriteBands(keys: DataFrame, mode: String,
+  private def ndlKb(kh: Column): Column =
+    pmod(kh, lit(NdlKeyBuckets.toLong)).cast("int")
+
+  /** The band store's one write discipline (append, backfill and every
+    * rewrite): hashed rows (kb, band, kh, doc) land partitioned by kb,
+    * one file per touched bucket per write ([[writeBucketed]]), sorted
+    * by (band, kh) within the file so parquet row-group stats refine
+    * the bucket-level pruning. */
+  private def ndlWriteBands(hashed: DataFrame, mode: String,
       dest: String): Unit =
-    // explicit count: see ledgerWriteDigests — pins the parallel
-    // one-task-per-bucket write AQE's coalescing otherwise serializes
-    ndlWithKb(keys)
-      .select(col("kb"), col("band"), col("kh"), col("doc"))
-      .repartition(NdlKeyBuckets, col("kb"))
-      .sortWithinPartitions(col("band"), col("kh"))
-      .write.mode(mode).partitionBy("kb").parquet(dest)
+    writeBucketed(hashed.select(col("kb"), col("band"), col("kh"),
+      col("doc")), "kb", NdlKeyBuckets, Seq("band", "kh"), mode, dest)
 
   /** Rebuild the band store from the primary's signatures — the
     * explicit form of the backfill [[nearDupLedgerAdmit]] runs when the
@@ -2476,7 +2479,7 @@ object Dedup {
         s"$mh signature columns")
     val bandsPath = ndlBandsPath(path)
     graft.util.Gen.rewrite(spark, bandsPath, extraLeases = Seq(path))(
-      g => ndlWriteBands(ndlBandKeys(primary, useBands, useRows),
+      g => ndlWriteBands(ndlWithKb(ndlBandKeys(primary, useBands, useRows)),
         "overwrite", g))
     // an all-unshingleable primary rebuilds to an EMPTY band store
     // (no files, no schema) — report 0 keys instead of failing to
@@ -2555,13 +2558,11 @@ object Dedup {
         // by the late content re-verify
         graft.util.Gen.rewrite(spark, bandsPath,
             extraLeases = Seq(path)) { tmp =>
-          graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, bandsPath))
-            .join(broadcast(mapping), Seq("doc"), "left")
-            .select(col("kb"), col("band"), col("kh"),
-              coalesce(col("new_doc"), col("doc")).as("doc"))
-            .repartition(NdlKeyBuckets, col("kb"))
-            .sortWithinPartitions(col("band"), col("kh"))
-            .write.mode("overwrite").partitionBy("kb").parquet(tmp)
+          ndlWriteBands(
+            graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, bandsPath))
+              .join(broadcast(mapping), Seq("doc"), "left")
+              .withColumn("doc", coalesce(col("new_doc"), col("doc"))),
+            "overwrite", tmp)
         }
     } catch {
       case e: Throwable =>
@@ -2715,11 +2716,10 @@ object Dedup {
         // serializes ingest into this band store (see the forget)
         graft.util.Gen.rewrite(spark, bandsPath,
             extraLeases = Seq(path)) { tmp =>
-          graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, bandsPath))
-            .filter(!purge)
-            .repartition(NdlKeyBuckets, col("kb"))
-            .sortWithinPartitions(col("band"), col("kh"))
-            .write.mode("overwrite").partitionBy("kb").parquet(tmp)
+          ndlWriteBands(
+            graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, bandsPath))
+              .filter(!purge),
+            "overwrite", tmp)
         }
     } catch {
       case e: Throwable =>
@@ -2767,16 +2767,13 @@ object Dedup {
       // serializes ingest into this band store (see the forget)
       graft.util.Gen.rewrite(spark, bandsPath,
           extraLeases = Seq(path)) { tmp =>
-        graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, bandsPath))
-          .distinct()
-          // kb recomputes from kh — this is what makes compaction the
-          // bucket-modulus MIGRATION (a store written under an older
-          // modulus relayouts to the current one here)
-          .withColumn("kb",
-            pmod(col("kh"), lit(NdlKeyBuckets.toLong)).cast("int"))
-          .repartition(NdlKeyBuckets, col("kb"))
-          .sortWithinPartitions(col("band"), col("kh"))
-          .write.mode("overwrite").partitionBy("kb").parquet(tmp)
+        // kb recomputes from kh — this is what makes compaction the
+        // bucket-modulus MIGRATION (a store written under an older
+        // modulus relayouts to the current one here)
+        ndlWriteBands(
+          graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, bandsPath))
+            .distinct().withColumn("kb", ndlKb(col("kh"))),
+          "overwrite", tmp)
       }
     // the geometry sidecar re-stamps with the CURRENT moduli (bands ×
     // rows are the ledger's own, carried over); a pre-sidecar ledger

@@ -503,13 +503,13 @@ object Similarity {
     * and the unsalted one-task write is the right default. */
   private def writeCellStore(assigned: DataFrame, mode: String,
       dest: String, maxRowsPerTask: Long = 0): Unit = {
-    // explicit partition count (r19): repartition(col) without a count
-    // lets AQE coalesce a small write shuffle down to ONE task that
-    // writes every touched cell file serially (~0.6 s per store write
-    // at bench scale); pinning the count keeps the write parallel at
-    // every scale. Each cell still lands wholly in one task (hash of
-    // the cell picks the partition), so the one-file-per-touched-cell
-    // layout and file contents are unchanged.
+    // sized to the cores, as the dedup ledgers' bucketed writes are
+    // (Dedup.writeBucketed): the explicit count keeps AQE from
+    // coalescing a small write shuffle into ONE task that writes every
+    // touched cell file serially (~0.6 s per store write at bench
+    // scale). A task may hold several cells, but each cell lands
+    // wholly in one task (hash of the cell picks the partition), so
+    // each write still leaves one file per touched cell.
     val writeParts = assigned.sparkSession.sparkContext.defaultParallelism
     if (maxRowsPerTask <= 0) {
       assigned.repartition(writeParts, col("cell")).write.mode(mode)

@@ -1896,13 +1896,9 @@ class PipelineOpsSpec extends SparkTestBase {
     }
     // the store is db-bucketed (partition dirs): count part files
     // recursively, per bucket dir
-    def partFiles(): Seq[java.io.File] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-        else Seq(f).filter(_.getName.startsWith("part-"))
-      walk(new java.io.File(graft.util.Gen.resolve(spark, dir)))
-    }
-    val filesBefore = partFiles().size
+    def files(): Seq[java.io.File] =
+      partFiles(graft.util.Gen.resolve(spark, dir))
+    val filesBefore = files().size
     assert(filesBefore >= 5, s"no accretion: $filesBefore")
     val digests = spark.read
       .parquet(graft.util.Gen.resolve(spark, dir))
@@ -1911,8 +1907,8 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(Dedup.compactDedupLedger(spark, dir, targetFiles = 2)
       === digests.size)
     // one digest-sorted file per touched bucket post-compaction
-    assert(partFiles().groupBy(_.getParent).values.forall(_.size == 1))
-    assert(partFiles().size <= digests.size)
+    assert(files().groupBy(_.getParent).values.forall(_.size == 1))
+    assert(files().size <= digests.size)
     assert(spark.read.parquet(graft.util.Gen.resolve(spark, dir))
       .select("text_md5")
       .collect().map(_.getString(0)).toSet === digests)
@@ -2565,12 +2561,6 @@ class PipelineOpsSpec extends SparkTestBase {
       // bucket in the primary, one per (band, kb) bucket in the band
       // store), keeps the signature set and all future decisions
       // identical
-      def partFiles(d: String): Seq[java.io.File] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-          else Seq(f).filter(_.getName.startsWith("part-"))
-        walk(new java.io.File(d))
-      }
       assert(partFiles(graft.util.Gen.resolve(spark, dir)).size >= 3)
       val sigs = spark.read.parquet(graft.util.Gen.resolve(spark, dir))
         .collect().map(_.getString(1)).toSet
@@ -2978,6 +2968,144 @@ class PipelineOpsSpec extends SparkTestBase {
         Seq((800L, base)).toDF("doc_id", "text"), "doc_id", "text")
         .count() === 1L)
     } finally graft.util.Fs.deleteRecursively(root)
+  }
+
+  /** Part files under a store dir, recursively (the ledger stores are
+    * bucket-partitioned: one subdir per bucket). */
+  private def partFiles(dir: String): Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else Seq(f).filter(_.getName.startsWith("part-"))
+    walk(new java.io.File(dir))
+  }
+
+  /** The ledger write layout of a store's current generation: exactly
+    * one part file per bucket dir, its rows in `keys` order. One scan
+    * reads every part file (a file's rows arrive in file order). */
+  private def assertBucketLayout(store: String, keys: Seq[String]): Unit = {
+    val gen = graft.util.Gen.resolve(spark, store)
+    val files = partFiles(gen)
+    assert(files.nonEmpty, s"$gen holds no part files")
+    files.groupBy(_.getParent).foreach { case (d, fs) =>
+      assert(fs.size === 1, s"bucket dir $d holds ${fs.size} files")
+    }
+    val rows = spark.read.parquet(gen)
+      .select(input_file_name() +: keys.map(col): _*).collect()
+    // enough rows per file that an unsorted write cannot pass by luck
+    assert(rows.length >= 8 * files.size, s"${rows.length} rows")
+    def cmp(a: org.apache.spark.sql.Row, b: org.apache.spark.sql.Row) =
+      keys.indices.iterator.map(i => a.getAs[Comparable[Any]](i + 1)
+        .compareTo(b.get(i + 1))).find(_ != 0).getOrElse(0)
+    val unsorted = rows.groupBy(_.getString(0)).count { case (_, rs) =>
+      rs.sliding(2).exists {
+        case Array(a, b) => cmp(a, b) > 0
+        case _ => false
+      }
+    }
+    assert(unsorted == 0, s"$unsorted of ${files.size} files of $store " +
+      s"not sorted by ${keys.mkString(", ")}")
+  }
+
+  /** Distinct 16-word documents from a 65k-word vocabulary: no two share
+    * a shingle, so every doc admits and every bucket fills. */
+  private def layoutDocs(ids: Range): org.apache.spark.sql.DataFrame =
+    ids.map(i => (i.toLong, (0 until 16).map(j =>
+      "w" + (scala.util.hashing.MurmurHash3.stringHash(s"$i:$j") & 0xffff))
+      .mkString(" "))).toDF("doc_id", "text")
+
+  test("ledger stores: every write leaves one key-sorted file per " +
+      "bucket dir — exact ledger after an admit and a compaction; " +
+      "near-dup band store and primary after an admit, a forget, an " +
+      "expiry and a compaction") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_ledger_layout").toString
+    val exact = s"$root/exact"
+    val ndl = s"$root/ndl"
+    val bands = Dedup.ndlBandsPath(ndl)
+    try {
+      Dedup.ledgerAdmit(spark, exact, layoutDocs(0 until 1000),
+        "doc_id", "text")
+      assertBucketLayout(exact, Seq("text_md5"))
+      Dedup.ledgerAdmit(spark, exact, layoutDocs(1000 until 1200),
+        "doc_id", "text")
+      assert(Dedup.compactDedupLedger(spark, exact) === 1200L)
+      assertBucketLayout(exact, Seq("text_md5"))
+
+      assert(Dedup.nearDupLedgerAdmit(spark, ndl, layoutDocs(0 until 1000),
+        "doc_id", "text").count() === 1000L)
+      assertBucketLayout(bands, Seq("band", "kh"))
+      assertBucketLayout(ndl, Nil)
+      assert(Dedup.nearDupLedgerForget(spark, ndl,
+        (0L until 100L).toDF("doc_id"), "doc_id") === 100L)
+      assertBucketLayout(bands, Seq("band", "kh"))
+      assertBucketLayout(ndl, Nil)
+      Dedup.nearDupLedgerAdmit(spark, ndl, layoutDocs(1000 until 1200),
+        "doc_id", "text")
+      assert(Dedup.nearDupLedgerExpire(spark, ndl, beforeDoc = 200L,
+        dropSignatures = true) === 100L)
+      assertBucketLayout(bands, Seq("band", "kh"))
+      assertBucketLayout(ndl, Nil)
+      Dedup.nearDupLedgerAdmit(spark, ndl, layoutDocs(1200 until 1300),
+        "doc_id", "text")
+      assert(Dedup.compactNearDupLedger(spark, ndl) === 1200L)
+      assertBucketLayout(bands, Seq("band", "kh"))
+      assertBucketLayout(ndl, Nil)
+    } finally graft.util.Fs.deleteRecursively(root)
+  }
+
+  test("ledger writes run min(32, defaultParallelism) tasks — sized to " +
+      "the cores, not the 32 buckets, and never one coalesced task") {
+    val want = math.min(32, spark.sparkContext.defaultParallelism)
+    assert(want > 1, "a one-core session cannot tell the sizing from " +
+      "a coalesced write")
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_ledger_tasks").toString
+    // result tasks per stage, and the stages whose tasks wrote output
+    // records: the file writes (an admit without admittedOut writes
+    // nothing but its ledger appends)
+    val resultTasks =
+      new java.util.concurrent.ConcurrentHashMap[Int, Integer]
+    val writeStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
+    val tap = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (t.taskType == "ResultTask") {
+          resultTasks.merge(t.stageId, 1, (a, b) => a + b)
+          if (t.taskMetrics != null &&
+              t.taskMetrics.outputMetrics.recordsWritten > 0)
+            writeStages.add(t.stageId)
+          ()
+        }
+    }
+    // the task count of every write stage `body` runs
+    def writeTasks(body: => Unit): Seq[Int] = {
+      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
+      resultTasks.clear(); writeStages.clear()
+      body
+      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      writeStages.asScala.toSeq.map(resultTasks.get(_).intValue)
+    }
+    spark.sparkContext.addSparkListener(tap)
+    try {
+      // appends to existing ledgers: the steady-state write
+      Dedup.ledgerAdmit(spark, s"$root/exact", layoutDocs(0 until 50),
+        "doc_id", "text")
+      Dedup.nearDupLedgerAdmit(spark, s"$root/ndl", layoutDocs(0 until 50),
+        "doc_id", "text")
+      val exact = writeTasks(Dedup.ledgerAdmit(spark, s"$root/exact",
+        layoutDocs(50 until 300), "doc_id", "text"))
+      assert(exact.size === 1 && exact.forall(_ == want),
+        s"exact append write stages ran $exact tasks, want $want")
+      val near = writeTasks(Dedup.nearDupLedgerAdmit(spark, s"$root/ndl",
+        layoutDocs(50 until 300), "doc_id", "text").count())
+      assert(near.size === 2 && near.forall(_ == want),
+        s"near-dup append (bands, primary) write stages ran $near " +
+          s"tasks, want $want")
+    } finally {
+      spark.sparkContext.removeSparkListener(tap)
+      graft.util.Fs.deleteRecursively(root)
+    }
   }
 
   test("nearDupLedgerAdmit auditOut: drop reasons AND min partners are " +
