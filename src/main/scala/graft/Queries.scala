@@ -2599,7 +2599,7 @@ object Queries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Tombstone-filtered SQ8 serve ([[Similarity.deleteFromSq8Index]] →
+  /** Tombstone-filtered SQ8 serve ([[Similarity.deleteFromIndex]] →
     * [[Similarity.loadSq8Index]] → serve): the deletion verb's oracled
     * face — build, delete every vec_id ≡ 3 (mod 7), serve. The load's
     * tombstone exclusion must make the serve identical to an index that
@@ -2614,7 +2614,7 @@ object Queries {
       val idx = s"$path/idx"
       Similarity.saveSq8Index(
         Similarity.buildSq8Index(e, "vec_id", "embedding"), idx)
-      Similarity.deleteFromSq8Index(s, idx,
+      Similarity.deleteFromIndex(s, idx,
         e.filter(col("vec_id") % 7 === 3).select("vec_id"), "vec_id")
       Similarity.sq8TopKFromIndex(Similarity.loadSq8Index(s, idx), e,
           e.filter(col("vec_id") < 10), "vec_id", "embedding",

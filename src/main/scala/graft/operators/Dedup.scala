@@ -1030,14 +1030,16 @@ object Dedup {
     * Callers hold the ingest lease. */
   private def ledgerAppend(spark: org.apache.spark.sql.SparkSession,
       path: String, admitted: DataFrame, legacyLayout: Boolean): Unit =
-    if (!admitted.isEmpty) {
-      val dest = graft.util.Gen.appendDir(spark, path)
-      if (legacyLayout)
-        admitted.select(col("text_md5")).write.mode("append")
-          .parquet(dest)
-      else
-        ledgerWriteDigests(admitted.select(col("text_md5")), "append",
-          dest)
+    graft.util.Fs.labeled(spark, "exact:append") {
+      if (!admitted.isEmpty) {
+        val dest = graft.util.Gen.appendDir(spark, path)
+        if (legacyLayout)
+          admitted.select(col("text_md5")).write.mode("append")
+            .parquet(dest)
+        else
+          ledgerWriteDigests(admitted.select(col("text_md5")), "append",
+            dest)
+      }
     }
 
   /** Streamed [[ledgerAdmit]] — the `foreachBatch` epoch protocol that
@@ -1730,8 +1732,8 @@ object Dedup {
     * anti-join's build-side scan — the same accretion-vs-read-
     * amplification debt the IVF cell store pays, with the same answer.
     * Rewrites every db bucket to one digest-sorted file
-    * ([[ledgerWriteDigests]] — `targetFiles` is accepted for API
-    * compatibility but the bucket count is the layout's own) as a NEW
+    * ([[ledgerWriteDigests]] — the bucket count is the layout's own)
+    * as a NEW
     * GENERATION via [[graft.util.Gen.rewrite]] (atomic commit-marker
     * flip — ZERO reader outage, with the maintenance marker that makes
     * a racing [[ledgerAdmit]] fail loudly instead of losing its rows
@@ -1744,7 +1746,7 @@ object Dedup {
     * surviving forever. Returns the digest count of the compacted
     * ledger (= its row count, post-distinct). */
   def compactDedupLedger(spark: org.apache.spark.sql.SparkSession,
-      path: String, targetFiles: Int = 0): Long = {
+      path: String): Long = {
     graft.util.Gen.rewrite(spark, path)(tmp =>
       ledgerWriteDigests(
         graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, path))

@@ -22,10 +22,11 @@ import org.apache.spark.sql.functions._
   *     per group, so the Int rank can never overflow. A running count
   *     would defeat the rewrite and buffer/sort ENTIRE partitions —
   *     measured as the dominant cost at the >2^31-row scale the
-  *     long-safe form was meant to protect. ExplainCheck pins
-  *     `WindowGroupLimit` in representative plans so a pattern/conf
-  *     regression (which would silently restore both the slow path and
-  *     the overflow exposure) fails loudly.
+  *     long-safe form was meant to protect. AnnPlanPinsSpec (the ANN
+  *     serves) and ExplainCheck pin `WindowGroupLimit` in
+  *     representative plans so a pattern/conf regression (which would
+  *     silently restore both the slow path and the overflow exposure)
+  *     fails loudly.
   *   - **rank emitted as an OUTPUT column with no adjacent cut**
   *     (persisted shard positions, per-group indices feeding
   *     arithmetic) — use [[rowNumberL]]. No group limit exists to lose

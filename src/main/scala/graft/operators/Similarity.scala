@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.expressions.DotProduct
+import graft.util.{Fs, Gen}
 
 /** Similarity search over embedding columns (`Array[Float]`), SURVEY.md §2.6.
   *
@@ -55,21 +56,9 @@ object Similarity {
     * result is stable across engines and partitionings. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      l2Normalize(col(vecCol)).as("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      l2Normalize(col(vecCol)).as("cv"))
-    val scored = c.join(q, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim", round(dotCol(col("qv"), col("cv")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored
-      // cutRank: row_number under the group-limit threshold (prune =
-      // fast path + overflow guard), long-safe running count above it
-      .withColumn("rank", Ranks.cutRank(corpus.sparkSession, w, k))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cos_sim"))
+    val q = broadcast(queryRows(queries, idCol, vecCol))
+    cosineTopK(vectorRows(corpus, idCol, vecCol)
+      .join(q, col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** Hard-negative mining for embedding-model training (the
@@ -263,7 +252,7 @@ object Similarity {
     * `sort_array` + `slice` + `explode` array-local top-k) — a pure
     * projection with NO crossJoin, NO window, NO shuffle: the 100-TB
     * corpus assignment pass under build/append/drift/PQ-encode is a
-    * narrow scan (plan-pinned by ExplainCheck). Tie-break is (sim desc,
+    * narrow scan (plan-pinned by AnnPlanPinsSpec). Tie-break is (sim desc,
     * lowest cent_id) in both forms — the struct max/sort over
     * (s, neg_id) is order-identical to the window's
     * (cent_sim desc, cent_id asc), so results are bit-identical to the
@@ -404,87 +393,223 @@ object Similarity {
         col("pick").cast("long").as("pick"))
   }
 
-  /** Build the IVF index: trained centroids + the corpus assigned to its
-    * cells (normalized vectors). This is the expensive phase — persist it
-    * with [[saveIvfIndex]] and serve queries from the load, the standard
-    * build-once / query-many ANN deployment. */
-  def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      nCentroids: Int = 16, kmeansIters: Int = 4,
-      refineIters: Int = 0): (DataFrame, DataFrame) = {
-    val seed = trainCentroids(corpus, idCol, vecCol, nCentroids,
-      kmeansIters)
-    // refineIters > 0 runs full-corpus Lloyd refinement on the sampled
-    // seed ([[refineCentroids]]) — the right call when the corpus is
-    // genuinely clustered and much larger than the training sample
-    val cents =
-      if (refineIters > 0) refineCentroids(corpus, seed, vecCol,
-        refineIters)
-      else seed
-    // the in-memory index is CELL-PARTITIONED like the persisted one:
-    // one corpus-row exchange (NOT corpus×nCentroids — the assignment
-    // itself is the map-only kernel) that every consumer needs anyway —
-    // saveIvfIndex's writeCellStore repartition collapses with it
-    // (CollapseRepartition), the serve equi-join gets per-cell
-    // parallelism instead of riding the scan's split count, and the
-    // drift baseline's per-cell aggregates reuse the partitioning
-    val assigned = assignCells(
-      corpus.select(col(idCol).as("neighbor_id"),
-        l2Normalize(col(vecCol)).as("cv")),
-      cents, "neighbor_id", "cv", keep = 1)
-      .repartition(col("cell"))
-    (cents, assigned)
+  /** (neighbor_id, cv) rows of a vector frame, vectors L2-normalized —
+    * the row shape every index store and rerank fetch starts from. */
+  private def vectorRows(df: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    df.select(col(idCol).as("neighbor_id"), l2Normalize(col(vecCol)).as("cv"))
+
+  /** (query_id, qv) rows of a query frame, vectors L2-normalized. */
+  private def queryRows(queries: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"),
+      l2Normalize(col(vecCol)).as("qv"))
+
+  /** `df` as (neighbor_id, cv, cell) rows under the centroids `cents` —
+    * the keep-1 argmax every build, append, baseline and drift pass
+    * shares (`keepSim` adds the winning similarity as `cent_sim`). */
+  private def assignRows(df: DataFrame, idCol: String, vecCol: String,
+      cents: DataFrame, keepSim: Boolean = false): DataFrame =
+    assignCells(vectorRows(df, idCol, vecCol), cents, "neighbor_id", "cv",
+      keep = 1, keepSim)
+
+  /** The query rows of a cell-family serve, exploded to their `nProbe`
+    * nearest cells. */
+  private def probeRows(queries: DataFrame, idCol: String, vecCol: String,
+      cents: DataFrame, nProbe: Int): DataFrame =
+    assignCells(queryRows(queries, idCol, vecCol), cents, "query_id", "qv",
+      keep = nProbe)
+
+  /** Exact top-k by cosine over scored pairs (query_id, qv, neighbor_id,
+    * cv). Ranking uses the rounded score + id tie-break, so the result is
+    * stable across engines and partitionings; `cutRank` is row_number
+    * under the group-limit threshold (a WindowGroupLimit prune — the
+    * fast path and the Int-rank overflow guard) and a long-safe running
+    * count above it. */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos_sim").desc, col("neighbor_id"))
+    pairs.withColumn("cos_sim", round(dotCol(col("qv"), col("cv")), 6))
+      .withColumn("rank", Ranks.cutRank(pairs.sparkSession, w, k))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank").cast("long").as("rank"),
+        col("neighbor_id"), col("cos_sim"))
   }
 
-  /** Persist an IVF index (two parquet datasets under `path`). The cell
-    * assignment is written partitioned BY CELL, so a probe of nProbe
-    * cells reads only those partitions (partition pruning at serve
-    * time) — at 100 TB the index read is proportional to cells probed,
-    * not corpus size. Not just a layout hope: the serve join really
-    * prunes — Spark's dynamic partition pruning broadcasts the probe
-    * side's cells into the index scan's PartitionFilters
-    * (`dynamicpruningexpression(cell IN ...)`), asserted by
-    * ExplainCheck on a loaded index at nProbe = 2. */
-  def saveIvfIndex(index: (DataFrame, DataFrame), path: String,
-      maxRowsPerWriteTask: Long = 0, ingestMicros: Long = -1L): Unit =
-    graft.util.Gen.rewrite(index._1.sparkSession, path) { g =>
-      writeIvfIndexInto(index, g, maxRowsPerWriteTask)
-      logIngest(index._1.sparkSession, g,
-        graft.util.Gen.read(index._1.sparkSession, s"$g/assigned")
-          .select("neighbor_id"), ingestMicros)
+  /** The serve of the four compressed families (PQ, SQ8, IVF+PQ,
+    * IVF×SQ8). Candidates are the `store` rows joined to the broadcast
+    * query rows `q` — on `cell` when `q` carries probed cells, else every
+    * pair — scored by the family's approximate `approx` column. Each
+    * query keeps its `rerank` best: the cutRank + adjacent filter lets
+    * InferWindowGroupLimit prune candidates to `rerank` rows BEFORE the
+    * sort, which on a whole-store scan IS the serve's top-k fast path.
+    * Those candidates fetch their true vectors from `corpus` by id (the
+    * candidates-only fetch that makes the compressed scan pay) and rank
+    * by exact cosine. With full probe and `rerank` ≥ corpus size the
+    * result equals [[bruteForceTopK]] exactly (spec-pinned). */
+  private def rerankTopK(store: DataFrame, q: DataFrame, approx: Column,
+      corpus: DataFrame, idCol: String, vecCol: String, k: Int,
+      rerank: Int): DataFrame = {
+    val pairs =
+      if (q.columns.contains("cell"))
+        store.join(q, Seq("cell"))
+          .filter(col("query_id") =!= col("neighbor_id"))
+      else store.join(q, col("query_id") =!= col("neighbor_id"))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("approx").desc, col("neighbor_id"))
+    val cand = pairs.withColumn("approx", approx)
+      .withColumn("approx_rank", Ranks.cutRank(corpus.sparkSession, w, rerank))
+      .filter(col("approx_rank") <= rerank)
+      .select(col("query_id"), col("qv"), col("neighbor_id"))
+    cosineTopK(cand.join(vectorRows(corpus, idCol, vecCol),
+      Seq("neighbor_id")), k)
+  }
+
+  /** The on-disk layout of one persisted ANN index family inside its
+    * current [[graft.util.Gen]] generation dir: the row store (`store`,
+    * partitioned by `cell` when `cellPartitioned`), the auxiliary
+    * datasets its encoder and serve read (`aux`; with the row store,
+    * their presence identifies the family), and the frozen drift
+    * baseline it may carry. Beside these any family may hold
+    * `tombstones` (deletes awaiting physical drop) and `ingest_log`
+    * (ingest times for expiry). [[IndexLayouts]] is the one place that
+    * knows the five layouts: the lifecycle helpers below and
+    * [[StoreHealth.detectStoreKind]] read it. */
+  private[operators] final case class IndexLayout(kind: String,
+      store: String, cellPartitioned: Boolean, aux: Seq[String],
+      baseline: Option[String])
+
+  private val IvfPq = IndexLayout("ivf_pq", "codes", cellPartitioned = true,
+    Seq("centroids", "codebooks"), Some("err_baseline"))
+  private val Ivf = IndexLayout("ivf", "assigned", cellPartitioned = true,
+    Seq("centroids"), Some("baseline"))
+  private val IvfSq8 = IndexLayout("ivf_sq8", "codes",
+    cellPartitioned = true, Seq("centroids"), Some("baseline"))
+  private val Pq = IndexLayout("pq", "codes", cellPartitioned = false,
+    Seq("codebooks"), None)
+  private val Sq8 = IndexLayout("sq8", "codes", cellPartitioned = false,
+    Nil, None)
+
+  /** Most specific first: the first layout whose row store and `aux`
+    * datasets all exist names the family. */
+  private[operators] val IndexLayouts = Seq(IvfPq, Ivf, IvfSq8, Pq, Sq8)
+
+  /** The family of the index generation dir `g` ([[IndexLayouts]]). */
+  private[operators] def layoutOf(spark: SparkSession,
+      g: String): Option[IndexLayout] = {
+    val fs = new org.apache.hadoop.fs.Path(g)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    IndexLayouts.find(l => (l.store +: l.aux)
+      .forall(d => fs.exists(new org.apache.hadoop.fs.Path(g, d))))
+  }
+
+  /** The resolved DATA directory of a persisted index: its current
+    * committed generation under the [[graft.util.Gen]] layout (zero-
+    * reader-outage maintenance), or the path itself for a legacy flat
+    * index. Every persisted-index verb resolves ONCE at entry — one or
+    * two namenode RPCs, never per-expression. */
+  private def genDir(spark: SparkSession, path: String): String =
+    Gen.resolve(spark, path)
+
+  /** The row store of generation `g`, tombstoned rows excluded — what
+    * every load serves, so every consumer (serve, recall probe) sees the
+    * post-deletion corpus. */
+  private def liveStore(spark: SparkSession, g: String,
+      layout: IndexLayout): DataFrame =
+    dropTombstoned(spark, g, Gen.read(spark, s"$g/${layout.store}"))
+
+  /** Save an index as a new generation: `write` fills the generation
+    * dir with the family's datasets, then every saved row is logged at
+    * `ingestMicros` ([[logIngest]]). */
+  private def saveIndex(spark: SparkSession, path: String,
+      layout: IndexLayout, ingestMicros: Long)(write: String => Unit): Unit =
+    Fs.labeled(spark, "ann:save") {
+      Gen.rewrite(spark, path) { g =>
+        write(g)
+        logIngest(spark, g,
+          Gen.read(spark, s"$g/${layout.store}").select("neighbor_id"),
+          ingestMicros)
+      }
     }
 
-  /** The index-generation payload behind [[saveIvfIndex]] and
-    * [[rebuildIvfIndex]] — writes a COMPLETE index (centroids + cell
-    * store + frozen drift baseline) into `path`, which is always a
-    * generation dir handed out by [[graft.util.Gen.rewrite]]. */
-  private def writeIvfIndexInto(index: (DataFrame, DataFrame),
-      path: String, maxRowsPerWriteTask: Long): Unit = {
-    index._1.write.mode("overwrite").parquet(s"$path/centroids")
-    // the salted write runs a census pass before the write; checkpoint
-    // so the expensive lazy corpus argmax in index._2 executes once,
-    // not twice (the unsalted write is single-pass — no checkpoint)
-    val assigned =
-      if (maxRowsPerWriteTask > 0) index._2.localCheckpoint()
-      else index._2
-    writeCellStore(assigned, "overwrite", s"$path/assigned",
-      maxRowsPerWriteTask)
-    // the build-time per-cell assignment-quality baseline
-    // (≤ nCentroids rows) persists WITH the index: [[ivfDriftReport]]
-    // compares every ingest batch against it, and deriving it later
-    // from the (appended-to) store would let each drifted batch
-    // contaminate the very baseline that is supposed to expose it.
-    // Derived from the store JUST WRITTEN, not from index._2 — the lazy
-    // assignment plan is the expensive half of a build (corpus ×
-    // nCentroids argmax) and must not execute twice; the read-back is
-    // one columnar scan of two columns. The partition column reads back
-    // as int — cast to cent_id's long so the baseline schema matches
-    // the in-memory form
-    val spark = index._1.sparkSession
-    cellBaseline(index._1,
-      graft.util.Gen.read(spark, s"$path/assigned")
-        .select(col("cell").cast("long").as("cell"), col("cv")))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/baseline")
+  /** The centroids and cell-partitioned row store of a cell family's
+    * generation `g`. The salted write runs a census pass before the
+    * write, so it first checkpoints `rows` and the expensive lazy corpus
+    * argmax behind them executes once, not twice (the unsalted write is
+    * single-pass — no checkpoint). */
+  private def writeCellIndex(index: (DataFrame, DataFrame), g: String,
+      layout: IndexLayout, maxRowsPerWriteTask: Long): Unit = {
+    val (cents, rows) = index
+    cents.write.mode("overwrite").parquet(s"$g/centroids")
+    writeCellStore(
+      if (maxRowsPerWriteTask > 0) rows.localCheckpoint() else rows,
+      "overwrite", s"$g/${layout.store}", maxRowsPerWriteTask)
   }
+
+  /** Incremental maintenance, one order for all five families: fence
+    * against a racing maintenance rewrite (an append it would silently
+    * obsolete fails loudly instead), resolve the current generation,
+    * `encode` the batch with that generation's FROZEN aux datasets (no
+    * retrain — recall on appended data degrades gracefully with drift,
+    * and the drift reports say when a rebuild is due), checkpoint it
+    * (the write, the log and the count all read it), append it to the
+    * row store — a cell store writes only the cells the batch lands in,
+    * and serve-time partition pruning is untouched — log its ingest
+    * time, and return the appended count. */
+  private def appendToIndex(spark: SparkSession, path: String,
+      layout: IndexLayout, who: String, maxRowsPerWriteTask: Long,
+      ingestMicros: Long)(encode: String => DataFrame): Long =
+    Fs.labeled(spark, "ann:append") {
+      Fs.failIfUnderMaintenance(spark, path, who)
+      val g = genDir(spark, path)
+      val rows = encode(g).localCheckpoint()
+      val dest = s"$g/${layout.store}"
+      if (layout.cellPartitioned)
+        writeCellStore(rows, "append", dest, maxRowsPerWriteTask)
+      else rows.write.mode("append").parquet(dest)
+      logIngest(spark, g, rows.select("neighbor_id"), ingestMicros)
+      rows.count()
+    }
+
+  /** Publish the next generation of an index through
+    * [[graft.util.Gen.rewrite]]: an atomic commit-pointer flip with ZERO
+    * reader outage (a serve that resolved before the flip completes
+    * against its generation; see Gen's scaladoc for the crash protocol),
+    * ingest fenced by the maintenance marker for the window.
+    * `write(old, g)` fills the new generation dir `g` from the current
+    * one `old`. Returns the new generation's row count. */
+  private def rewriteIndex(spark: SparkSession, path: String,
+      layout: IndexLayout, label: String)(
+      write: (String, String) => Unit): Long =
+    Fs.labeled(spark, label) {
+      Gen.rewrite(spark, path)(g => write(genDir(spark, path), g))
+      Gen.read(spark, s"${genDir(spark, path)}/${layout.store}").count()
+    }
+
+  /** Compaction, one order for all five families. Appends write one
+    * file set per batch (one file per touched cell in a cell store), so
+    * a year of daily appends claws back the read amplification the
+    * layout bought. The next generation carries the aux datasets
+    * byte-for-byte ([[carryAuxDatasets]]) and the ingest log minus the
+    * tombstoned ids, and rewrites the row store with tombstoned rows
+    * PHYSICALLY dropped — a cell store to one file per cell (the
+    * [[writeCellStore]] discipline and its hot-cell caveat), a flat store
+    * to the session's default parallelism in files. Applied tombstones do
+    * not carry, so the new generation starts clean; served results are
+    * unchanged. Returns the compacted row count. */
+  private def compactIndex(spark: SparkSession, path: String,
+      layout: IndexLayout, maxRowsPerWriteTask: Long = 0): Long =
+    rewriteIndex(spark, path, layout, "ann:compact") { (old, g) =>
+      carryAuxDatasets(spark, old, g, layout)
+      carryIngestLog(spark, old, g)
+      val live = liveStore(spark, old, layout)
+      val dest = s"$g/${layout.store}"
+      if (layout.cellPartitioned)
+        writeCellStore(live, "overwrite", dest, maxRowsPerWriteTask)
+      else live.repartition(spark.sparkContext.defaultParallelism,
+          col("neighbor_id"))
+        .write.mode("overwrite").parquet(dest)
+    }
 
   /** The one home of the cell-store write discipline, shared by
     * save / append / compact. Hash-repartition on the partition column
@@ -502,7 +627,7 @@ object Similarity {
     * nCentroids ∝ √n (the documented sizing rule) cells stay ~√n rows
     * and the unsalted one-task write is the right default. */
   private def writeCellStore(assigned: DataFrame, mode: String,
-      dest: String, maxRowsPerTask: Long = 0): Unit = {
+      dest: String, maxRowsPerTask: Long): Unit = {
     // sized to the cores, as the dedup ledgers' bucketed writes are
     // (Dedup.writeBucketed): the explicit count keeps AQE from
     // coalescing a small write shuffle into ONE task that writes every
@@ -523,7 +648,7 @@ object Similarity {
     // per hot cell and NO single-task write straggler. The census that
     // sizes the salts is ≤ nCentroids rows to the driver but executes
     // the input plan once more — a caller whose upstream is expensive
-    // (saveIvfIndex's lazy corpus argmax) checkpoints BEFORE calling;
+    // (a save's lazy corpus argmax) checkpoints BEFORE calling;
     // compact's parquet-scan input and append's already-checkpointed
     // batch are cheap to run twice, and checkpointing here would copy
     // the whole store into executor block storage for a census's sake.
@@ -552,6 +677,323 @@ object Similarity {
     assigned.repartition(totalParts.toInt,
         col("cell"), pmod(hash(col("neighbor_id")), saltOf))
       .write.mode(mode).partitionBy("cell").parquet(dest)
+  }
+
+  /** Carry the layout's auxiliary datasets of an index generation
+    * (centroids, codebooks, baselines — all driver-tiny by construction)
+    * into the next generation a compaction is writing, byte-for-byte.
+    * The row store is what the compaction rewrites, the ingest log is
+    * carried minus the tombstoned ids ([[carryIngestLog]]), and the
+    * applied `tombstones` deliberately do NOT carry — the rewrite drops
+    * their rows physically, and a delete racing the rewrite is fenced
+    * (or caught by [[graft.util.Gen.rewrite]]'s content re-verify), so
+    * the new generation starts tombstone-free. */
+  private def carryAuxDatasets(spark: SparkSession, from: String,
+      to: String, layout: IndexLayout): Unit = {
+    val src = new org.apache.hadoop.fs.Path(from)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = src.getFileSystem(conf)
+    val carried = (layout.aux ++ layout.baseline).toSet
+    fs.listStatus(src).foreach { s =>
+      val name = s.getPath.getName
+      if (carried.contains(name))
+        org.apache.hadoop.fs.FileUtil.copy(fs, s.getPath, fs,
+          new org.apache.hadoop.fs.Path(s"$to/$name"), false, conf)
+    }
+  }
+
+  /** Append (neighbor_id, ingest_us) rows to an index generation's
+    * `ingest_log` — the side dataset behind [[expireFromIndex]]'s
+    * retention verb. A SIDE log, not a store column, deliberately: the
+    * row stores' schemas (and every spec/oracle pinned to them) stay
+    * untouched, and the log is two narrow columns an expiry scan reads
+    * without touching vector bytes. `micros < 0` (the default
+    * everywhere) writes nothing — rows without log entries are
+    * UNEXPIRABLE by design (age unknown), never silently aged. */
+  private def logIngest(spark: SparkSession, dataDir: String,
+      ids: DataFrame, micros: Long): Unit =
+    if (micros >= 0L)
+      ids.select(col("neighbor_id"), lit(micros).as("ingest_us"))
+        .write.mode("append").parquet(s"$dataDir/ingest_log")
+
+  /** Carry an index generation's ingest log into the next generation a
+    * compaction/rebuild is writing, minus the tombstoned ids — rows and
+    * their ages drop together, so the log stays ∝ live rows. */
+  private def carryIngestLog(spark: SparkSession, from: String,
+      to: String): Unit = {
+    val lp = new org.apache.hadoop.fs.Path(s"$from/ingest_log")
+    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(lp) && fs.listStatus(lp).nonEmpty)
+      dropTombstoned(spark, from, Gen.read(spark, lp.toString))
+        .write.parquet(s"$to/ingest_log")
+  }
+
+  /** Retention/TTL expiry — the OTHER deletion driver next to
+    * takedown-by-ids ([[deleteFromIndex]]): tombstone every row whose
+    * recorded ingest time is strictly before `olderThanMicros`, on any
+    * of the five families. Serves exclude the expired rows immediately,
+    * and the next compaction or rebuild makes the removal physical,
+    * exactly the deletion machinery. Ages come from the `ingest_log` the
+    * save/append verbs write when called with `ingestMicros ≥ 0`; rows
+    * ingested without a timestamp are unexpirable (documented — a
+    * retention policy should fail toward keeping, not silently aging
+    * unknowns). Idempotent: re-expiring appends duplicate tombstones the
+    * distinct-on-read collapses, and compaction drops the applied log
+    * entries with their rows. Returns the number of distinct ids
+    * tombstoned by this call (including re-tombstones of ids already
+    * deleted but not yet compacted). */
+  def expireFromIndex(spark: SparkSession, path: String,
+      olderThanMicros: Long): Long = {
+    val g = genDir(spark, path)
+    val lp = new org.apache.hadoop.fs.Path(s"$g/ingest_log")
+    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(lp) || fs.listStatus(lp).isEmpty) return 0L
+    val ids = Gen.read(spark, lp.toString)
+      .filter(col("ingest_us") < lit(olderThanMicros))
+      .select(col("neighbor_id"))
+    appendTombstones(spark, path, ids, "neighbor_id", "expireFromIndex")
+  }
+
+  /** Delete vectors from a persisted index of any family — the
+    * takedown/retention verb every real deployment is eventually legally
+    * required to run. Deletion is a TOMBSTONE append (`tombstones`, one
+    * id column): loads exclude tombstoned rows immediately (serve-time
+    * filtering), and the next compaction or rebuild makes the removal
+    * PHYSICAL (rows dropped from the store files, tombstones cleared).
+    * Idempotent — re-deleting an id appends a duplicate tombstone that
+    * the distinct-on-read collapses and the next compaction clears.
+    * Fenced against a racing maintenance swap. Returns the number of
+    * distinct ids tombstoned by this call. */
+  def deleteFromIndex(spark: SparkSession, path: String, ids: DataFrame,
+      idCol: String): Long =
+    appendTombstones(spark, path, ids, idCol, "deleteFromIndex")
+
+  private def appendTombstones(spark: SparkSession, indexPath: String,
+      ids: DataFrame, idCol: String, who: String): Long =
+    Fs.labeled(spark, "ann:delete") {
+      // deletes are fenced like appends: a tombstone landing mid-rewrite
+      // would be obsoleted by the generation flip without being applied
+      Fs.failIfUnderMaintenance(spark, indexPath, who)
+      val g = genDir(spark, indexPath)
+      val ts = ids.select(col(idCol).as("neighbor_id")).distinct()
+        .localCheckpoint()
+      val n = ts.count()
+      if (n > 0)
+        ts.write.mode("append").parquet(s"$g/tombstones")
+      n
+    }
+
+  /** Tombstone-set bound for the literal serve-time filter: up to this
+    * many deleted ids fold into an `isInCollection` FILTER on the store
+    * scan — a filter, unlike an anti-join, is transparent to the serve
+    * join's dynamic partition pruning (a join node between the scan and
+    * the cell equi-join would block DPP's scan extraction). Beyond the
+    * bound the exclusion falls back to a broadcast anti-join — correct,
+    * but the serve loses partition pruning until the next compaction
+    * physically drops the rows (compact on that cadence). */
+  private val MaxLiteralTombstones = 65536L
+
+  /** `dataDir` is the RESOLVED generation dir ([[genDir]]) — tombstones
+    * live inside the generation they apply to, so a compaction's new
+    * generation starts clean without any file bookkeeping. */
+  private def tombstonesOf(spark: SparkSession,
+      dataDir: String): Option[DataFrame] = {
+    val tp = new org.apache.hadoop.fs.Path(s"$dataDir/tombstones")
+    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(tp) && fs.listStatus(tp).nonEmpty)
+      Some(Gen.read(spark, tp.toString)
+        .select(col("neighbor_id")).distinct())
+    else None
+  }
+
+  private def dropTombstoned(spark: SparkSession, dataDir: String,
+      store: DataFrame): DataFrame =
+    tombstonesOf(spark, dataDir).map { ts =>
+      // one bounded collect decides the path AND fetches the ids (a
+      // separate count-then-collect would pay two jobs per load)
+      val dead = ts.limit((MaxLiteralTombstones + 1).toInt)
+        .collect().map(_.get(0))
+      if (dead.isEmpty) store
+      else if (dead.length <= MaxLiteralTombstones)
+        store.filter(!col("neighbor_id").isInCollection(dead))
+      else store.join(broadcast(ts), Seq("neighbor_id"), "left_anti")
+    }.getOrElse(store)
+
+  /** A caller-supplied rebuild corpus minus the index generation `g`'s
+    * tombstoned ids: deleted ids must not resurrect through the corpus
+    * a codes-only family (IVF+PQ, IVF×SQ8) rebuilds from. */
+  private def liveCorpus(spark: SparkSession, g: String, corpus: DataFrame,
+      idCol: String): DataFrame =
+    tombstonesOf(spark, g)
+      .map(ts => corpus.join(
+        broadcast(ts.withColumnRenamed("neighbor_id", idCol)),
+        Seq(idCol), "left_anti"))
+      .getOrElse(corpus)
+
+  /** Layout health of a persisted index of any family — the numbers an
+    * operator reads to schedule maintenance, from one zero-data-byte
+    * scan (the partition column and file names; no vector or code bytes
+    * are read). A cell store reports per cell (cell, n_rows, n_files):
+    * max(n_files) grows by one per append batch that touched the cell
+    * and is the compaction trigger, and max(n_rows)/avg(n_rows) ≫ 1
+    * means the cell layout itself has gone skewed (corpus drifted off
+    * the trained centroids), rebuild time regardless of what the drift
+    * report says about fresh batches. A flat store reports one
+    * (n_rows, n_files, n_tombstones) row: files grow one set per append
+    * batch, and tombstones count rows awaiting physical drop. */
+  def indexStats(spark: SparkSession, path: String): DataFrame = {
+    val g = genDir(spark, path)
+    val layout = layoutOf(spark, g).getOrElse(
+      throw new IllegalArgumentException(
+        s"indexStats: $path holds no persisted ANN index layout"))
+    val keys = if (layout.cellPartitioned) Seq(col("cell")) else Nil
+    val stats = Gen.read(spark, s"$g/${layout.store}")
+      .select(keys :+ input_file_name().as("f"): _*)
+      .groupBy(keys: _*)
+      .agg(count(lit(1)).as("n_rows"), countDistinct(col("f")).as("n_files"))
+    if (layout.cellPartitioned) stats
+    else stats.withColumn("n_tombstones",
+      lit(tombstonesOf(spark, g).map(_.count()).getOrElse(0L)))
+  }
+
+  /** Recall@k per nProbe, the core of the three cell families' probes —
+    * drift is a proxy; the serving SLA is RECALL, and this measures it
+    * directly on the live store: a deterministic hash-ordered sample of
+    * `sampleN` rows of `pool` is served at each nProbe
+    * (`serve(queries, nProbe)`) and scored against the full-probe serve
+    * (every cell of `cents`) on the same index. Emits (n_probe,
+    * sample_n, k, hits, truth_n, recall). Deterministic end to end
+    * (hash-ordered sample, tie-broken serve), so runs are comparable
+    * across days. Cost: sampleN queries × (1 + len(nProbes)) serves,
+    * each partition-pruned except the full-probe truth pass. */
+  private def recallProbe(spark: SparkSession, cents: DataFrame,
+      pool: DataFrame, poolId: String, sampleN: Int, k: Int,
+      nProbes: Seq[Int])(serve: (DataFrame, Int) => DataFrame): DataFrame = {
+    import spark.implicits._
+    val nCells = cents.count().toInt
+    val queries = pool.orderBy(xxhash64(col(poolId)), col(poolId))
+      .limit(sampleN).localCheckpoint()
+    def served(p: Int) =
+      serve(queries, p).select(col("query_id"), col("neighbor_id"))
+    val truth = served(nCells).localCheckpoint()
+    val truthN = truth.count()
+    nProbes.distinct.sorted.map { p =>
+      val hits = served(p)
+        .join(truth, Seq("query_id", "neighbor_id"), "left_semi").count()
+      (p, sampleN, k, hits, truthN,
+        Percentiles.roundHalfUp(hits.toDouble / math.max(truthN, 1L), 6))
+    }.toDF("n_probe", "sample_n", "k", "hits", "truth_n", "recall")
+  }
+
+  /** The page-on-this row, the core of the three cell families' health
+    * reports: ONE per-index row joining the three signals an operator
+    * otherwise reads separately — the family's drift report (`drift`,
+    * weighted by batch_n over has_baseline cells, exactly the filtering
+    * the drift scaladocs mandate, reported as `w_<meanCol>` and
+    * `w_<tailCol>`), the measured recall at the serving nProbe
+    * (`recall`, a [[recallProbe]] row) and the store layout
+    * ([[indexStats]] + the tombstone count). `rebuild_advised` when the
+    * weighted tail drift exceeds `maxTailDrift` OR recall falls below
+    * `minRecall`; `compact_advised` when any cell accretes more than
+    * `maxFilesPerCell` files or tombstones await physical drop. */
+  private def healthReport(spark: SparkSession, path: String,
+      drift: DataFrame, meanCol: String, tailCol: String,
+      maxTailDrift: Double, recall: => DataFrame, nProbe: Int, k: Int,
+      minRecall: Double, maxFilesPerCell: Int): DataFrame = {
+    import spark.implicits._
+    def weighted(c: String) =
+      sum(col(c) * col("batch_n")) / sum(col("batch_n"))
+    val d = drift.filter(col("has_baseline"))
+      .agg(coalesce(sum(col("batch_n")), lit(0L)).as("n"),
+        weighted(meanCol).as("md"), weighted(tailCol).as("pd"))
+      .first()
+    val batchN = d.getAs[Long]("n")
+    // a batch that lands only in no-baseline cells has NO measurable
+    // drift (batchN = 0) — report zero drift and let recall carry the
+    // decision rather than NPE on the null aggregate
+    def safe(i: Int): Double = Option(d.get(i))
+      .map(x => Percentiles.roundHalfUp(x.asInstanceOf[Double], 6))
+      .getOrElse(0.0)
+    val meanDrift = safe(1)
+    val tailDrift = safe(2)
+    val r = recall.select(col("recall")).first().getDouble(0)
+    val s = indexStats(spark, path)
+      .agg(max(col("n_files")).as("mf"), max(col("n_rows")).as("mr"),
+        sum(col("n_rows")).as("rows"))
+      .first()
+    val nTombstones = tombstonesOf(spark, genDir(spark, path))
+      .map(_.count()).getOrElse(0L)
+    Seq((batchN, meanDrift, tailDrift, nProbe, k, r,
+      s.getAs[Long]("rows"), s.getAs[Long]("mr"), s.getAs[Long]("mf"),
+      nTombstones,
+      tailDrift > maxTailDrift || r < minRecall,
+      s.getAs[Long]("mf") > maxFilesPerCell || nTombstones > 0L))
+      .toDF("batch_n", s"w_$meanCol", s"w_$tailCol", "n_probe", "k",
+        "recall", "store_rows", "max_cell_rows", "max_cell_files",
+        "n_tombstones", "rebuild_advised", "compact_advised")
+  }
+
+  /** Build the IVF index: trained centroids + the corpus assigned to its
+    * cells (normalized vectors). This is the expensive phase — persist it
+    * with [[saveIvfIndex]] and serve queries from the load, the standard
+    * build-once / query-many ANN deployment. */
+  def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
+      nCentroids: Int = 16, kmeansIters: Int = 4,
+      refineIters: Int = 0): (DataFrame, DataFrame) = {
+    val seed = trainCentroids(corpus, idCol, vecCol, nCentroids,
+      kmeansIters)
+    // refineIters > 0 runs full-corpus Lloyd refinement on the sampled
+    // seed ([[refineCentroids]]) — the right call when the corpus is
+    // genuinely clustered and much larger than the training sample
+    val cents =
+      if (refineIters > 0) refineCentroids(corpus, seed, vecCol,
+        refineIters)
+      else seed
+    // the in-memory index is CELL-PARTITIONED like the persisted one:
+    // one corpus-row exchange (NOT corpus×nCentroids — the assignment
+    // itself is the map-only kernel) that every consumer needs anyway —
+    // saveIvfIndex's writeCellStore repartition collapses with it
+    // (CollapseRepartition), the serve equi-join gets per-cell
+    // parallelism instead of riding the scan's split count, and the
+    // drift baseline's per-cell aggregates reuse the partitioning
+    (cents, assignRows(corpus, idCol, vecCol, cents).repartition(col("cell")))
+  }
+
+  /** Persist an IVF index (centroids, the cell store and the frozen drift
+    * baseline under `path`). The cell assignment is written partitioned
+    * BY CELL, so a probe of nProbe cells reads only those partitions
+    * (partition pruning at serve time) — at 100 TB the index read is
+    * proportional to cells probed, not corpus size. Not just a layout
+    * hope: the serve join really prunes — Spark's dynamic partition
+    * pruning broadcasts the probe side's cells into the index scan's
+    * PartitionFilters (`dynamicpruningexpression(cell IN ...)`), pinned
+    * by AnnPlanPinsSpec on a loaded index at nProbe = 2. */
+  def saveIvfIndex(index: (DataFrame, DataFrame), path: String,
+      maxRowsPerWriteTask: Long = 0, ingestMicros: Long = -1L): Unit =
+    saveIndex(index._1.sparkSession, path, Ivf, ingestMicros)(g =>
+      writeIvfIndexInto(index, g, maxRowsPerWriteTask))
+
+  /** The index-generation payload behind [[saveIvfIndex]] and
+    * [[rebuildIvfIndex]] — writes a COMPLETE index (centroids + cell
+    * store + frozen drift baseline) into the generation dir `g`. */
+  private def writeIvfIndexInto(index: (DataFrame, DataFrame), g: String,
+      maxRowsPerWriteTask: Long): Unit = {
+    writeCellIndex(index, g, Ivf, maxRowsPerWriteTask)
+    // the build-time per-cell assignment-quality baseline
+    // (≤ nCentroids rows) persists WITH the index: [[ivfDriftReport]]
+    // compares every ingest batch against it, and deriving it later
+    // from the (appended-to) store would let each drifted batch
+    // contaminate the very baseline that is supposed to expose it.
+    // Derived from the store JUST WRITTEN, not from index._2 — the lazy
+    // assignment plan is the expensive half of a build (corpus ×
+    // nCentroids argmax) and must not execute twice; the read-back is
+    // one columnar scan of two columns. The partition column reads back
+    // as int — cast to cent_id's long so the baseline schema matches
+    // the in-memory form
+    cellBaseline(index._1,
+      Gen.read(index._1.sparkSession, s"$g/assigned")
+        .select(col("cell").cast("long").as("cell"), col("cv")))
+      .coalesce(1).write.mode("overwrite").parquet(s"$g/baseline")
   }
 
   /** Per-cell assignment-quality profile of a cell store: (cell, n,
@@ -598,269 +1040,41 @@ object Similarity {
         round(org.apache.spark.sql.functions.expr("percentile(cos, 0.10)"),
           6).as(s"${prefix}_p10_cos"))
 
-  /** The resolved DATA directory of a persisted index: its current
-    * committed generation under the [[graft.util.Gen]] layout (zero-
-    * reader-outage maintenance), or the path itself for a legacy flat
-    * index. Every persisted-index verb resolves ONCE at entry — one or
-    * two namenode RPCs, never per-expression. */
-  private def genDir(spark: org.apache.spark.sql.SparkSession,
-      path: String): String = graft.util.Gen.resolve(spark, path)
-
-  /** Carry the auxiliary datasets of an index generation (centroids,
-    * codebooks, baselines — all driver-tiny by construction) into the
-    * next generation a compaction is writing, byte-for-byte. The row
-    * store (`except`) is what the compaction rewrites, and the applied
-    * `tombstones` deliberately do NOT carry — the rewrite drops their
-    * rows physically, and a delete racing the rewrite is fenced (or
-    * caught by [[graft.util.Gen.rewrite]]'s content re-verify), so the
-    * new generation starts tombstone-free. */
-  private def carryAuxDatasets(spark: org.apache.spark.sql.SparkSession,
-      from: String, to: String, except: String): Unit = {
-    val src = new org.apache.hadoop.fs.Path(from)
-    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val conf = spark.sparkContext.hadoopConfiguration
-    // ingest_log is carried SEPARATELY ([[carryIngestLog]] — minus the
-    // tombstoned ids), never byte-copied
-    val skip = Set(except, "tombstones", "ingest_log",
-      graft.util.Gen.CommitMarker)
-    fs.listStatus(src).foreach { s =>
-      val name = s.getPath.getName
-      if (!skip.contains(name) && !name.startsWith("_") &&
-          !name.startsWith("."))
-        org.apache.hadoop.fs.FileUtil.copy(fs, s.getPath, fs,
-          new org.apache.hadoop.fs.Path(s"$to/$name"), false, conf)
-    }
-  }
-
-  /** Append (neighbor_id, ingest_us) rows to an index generation's
-    * `ingest_log` — the side dataset behind [[expireFromIndex]]'s
-    * retention verb. A SIDE log, not a store column, deliberately: the
-    * row stores' schemas (and every spec/oracle pinned to them) stay
-    * untouched, and the log is two narrow columns an expiry scan reads
-    * without touching vector bytes. `micros < 0` (the default
-    * everywhere) writes nothing — rows without log entries are
-    * UNEXPIRABLE by design (age unknown), never silently aged. */
-  private def logIngest(spark: org.apache.spark.sql.SparkSession,
-      dataDir: String, ids: DataFrame, micros: Long): Unit =
-    if (micros >= 0L)
-      ids.select(col("neighbor_id"), lit(micros).as("ingest_us"))
-        .write.mode("append").parquet(s"$dataDir/ingest_log")
-
-  /** Carry an index generation's ingest log into the next generation a
-    * compaction/rebuild is writing, minus the tombstoned ids — rows and
-    * their ages drop together, so the log stays ∝ live rows. */
-  private def carryIngestLog(spark: org.apache.spark.sql.SparkSession,
-      from: String, to: String): Unit = {
-    val lp = new org.apache.hadoop.fs.Path(s"$from/ingest_log")
-    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(lp) && fs.listStatus(lp).nonEmpty)
-      dropTombstoned(spark, from, graft.util.Gen.read(spark, lp.toString))
-        .write.parquet(s"$to/ingest_log")
-  }
-
-  /** Retention/TTL expiry — the OTHER deletion driver next to
-    * takedown-by-ids ([[deleteFromIvfIndex]]): tombstone every row
-    * whose recorded ingest time is strictly before `olderThanMicros`.
-    * Works unchanged on ALL five persisted store families (IVF, PQ,
-    * SQ8, IVF+PQ, IVF×SQ8 — tombstones are family-agnostic): serves
-    * exclude the expired rows immediately, and the next compaction or
-    * rebuild makes the removal physical, exactly the deletion
-    * machinery. Ages come from the `ingest_log` the save/append verbs
-    * write when called with `ingestMicros ≥ 0`; rows ingested without
-    * a timestamp are unexpirable (documented — a retention policy
-    * should fail toward keeping, not silently aging unknowns).
-    * Idempotent: re-expiring appends duplicate tombstones the
-    * distinct-on-read collapses, and compaction drops the applied log
-    * entries with their rows. Returns the number of distinct ids
-    * tombstoned by this call (including re-tombstones of ids already
-    * deleted but not yet compacted). */
-  def expireFromIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, olderThanMicros: Long): Long = {
-    val g = genDir(spark, path)
-    val lp = new org.apache.hadoop.fs.Path(s"$g/ingest_log")
-    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(lp) || fs.listStatus(lp).isEmpty) return 0L
-    val ids = graft.util.Gen.read(spark, lp.toString)
-      .filter(col("ingest_us") < lit(olderThanMicros))
-      .select(col("neighbor_id"))
-    appendTombstones(spark, path, ids, "neighbor_id", "expireFromIndex")
-  }
-
   /** Load a persisted IVF index. Tombstoned rows (see
-    * [[deleteFromIvfIndex]]) are excluded from the returned store, so
+    * [[deleteFromIndex]]) are excluded from the returned store, so
     * every consumer — serve, recall probe, stats-free reads — sees the
     * post-deletion corpus. */
-  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession,
+  def loadIvfIndex(spark: SparkSession,
       path: String): (DataFrame, DataFrame) = {
     val g = genDir(spark, path)
-    (graft.util.Gen.read(spark, s"$g/centroids"),
-      dropTombstoned(spark, g, graft.util.Gen.read(spark, s"$g/assigned")))
+    (Gen.read(spark, s"$g/centroids"), liveStore(spark, g, Ivf))
   }
 
-  /** Delete vectors from a persisted index — the takedown/retention
-    * verb every real deployment is eventually legally required to run.
-    * Deletion is a TOMBSTONE append (`<path>/tombstones`, one id
-    * column): loads exclude tombstoned rows immediately (serve-time
-    * filtering), and the next [[compactIvfIndex]] / [[rebuildIvfIndex]]
-    * makes the removal PHYSICAL (rows dropped from the store files,
-    * tombstones cleared). Idempotent — re-deleting an id appends a
-    * duplicate tombstone that the distinct-on-read collapses and the
-    * next compaction clears. Fenced against a racing maintenance swap.
-    * Returns the number of distinct ids tombstoned by this call. */
-  def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, ids: DataFrame, idCol: String): Long =
-    appendTombstones(spark, path, ids, idCol, "deleteFromIvfIndex")
-
-  /** [[deleteFromIvfIndex]] for a persisted IVF+PQ index. */
-  def deleteFromIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, ids: DataFrame, idCol: String): Long =
-    appendTombstones(spark, path, ids, idCol, "deleteFromIvfPqIndex")
-
-  /** [[deleteFromIvfIndex]] for a persisted SQ8 index. */
-  def deleteFromSq8Index(spark: org.apache.spark.sql.SparkSession,
-      path: String, ids: DataFrame, idCol: String): Long =
-    appendTombstones(spark, path, ids, idCol, "deleteFromSq8Index")
-
-  private def appendTombstones(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, ids: DataFrame,
-      idCol: String, who: String): Long = {
-    // deletes are fenced like appends: a tombstone landing mid-rewrite
-    // would be obsoleted by the generation flip without being applied
-    graft.util.Fs.failIfUnderMaintenance(spark, indexPath, who)
-    val g = genDir(spark, indexPath)
-    val ts = ids.select(col(idCol).as("neighbor_id")).distinct()
-      .localCheckpoint()
-    val n = ts.count()
-    if (n > 0)
-      ts.write.mode("append").parquet(s"$g/tombstones")
-    n
-  }
-
-  /** Tombstone-set bound for the literal serve-time filter: up to this
-    * many deleted ids fold into an `isInCollection` FILTER on the store
-    * scan — a filter, unlike an anti-join, is transparent to the serve
-    * join's dynamic partition pruning (a join node between the scan and
-    * the cell equi-join would block DPP's scan extraction). Beyond the
-    * bound the exclusion falls back to a broadcast anti-join — correct,
-    * but the serve loses partition pruning until the next compaction
-    * physically drops the rows (compact on that cadence). */
-  private val MaxLiteralTombstones = 65536L
-
-  /** `dataDir` is the RESOLVED generation dir ([[genDir]]) — tombstones
-    * live inside the generation they apply to, so a compaction's new
-    * generation starts clean without any file bookkeeping. */
-  private def tombstonesOf(spark: org.apache.spark.sql.SparkSession,
-      dataDir: String): Option[DataFrame] = {
-    val tp = new org.apache.hadoop.fs.Path(s"$dataDir/tombstones")
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(tp) && fs.listStatus(tp).nonEmpty)
-      Some(graft.util.Gen.read(spark, tp.toString)
-        .select(col("neighbor_id")).distinct())
-    else None
-  }
-
-  private def dropTombstoned(spark: org.apache.spark.sql.SparkSession,
-      dataDir: String, store: DataFrame): DataFrame =
-    tombstonesOf(spark, dataDir).map { ts =>
-      // one bounded collect decides the path AND fetches the ids (a
-      // separate count-then-collect would pay two jobs per load)
-      val dead = ts.limit((MaxLiteralTombstones + 1).toInt)
-        .collect().map(_.get(0))
-      if (dead.isEmpty) store
-      else if (dead.length <= MaxLiteralTombstones)
-        store.filter(!col("neighbor_id").isInCollection(dead))
-      else store.join(broadcast(ts), Seq("neighbor_id"), "left_anti")
-    }.getOrElse(store)
-
-  /** Incremental index maintenance — the daily-embedding-ingest path:
-    * new vectors are assigned to the EXISTING centroids (no retrain;
+  /** Incremental IVF maintenance — the daily-embedding-ingest path: new
+    * vectors are assigned to the EXISTING centroids (no retrain;
     * standard IVF practice until centroid drift warrants a rebuild —
     * recall on appended data degrades gracefully with drift, never
     * collapses, since assignment and probe share the same centroids)
-    * and appended to the cell-partitioned assignment store. The dynamic
-    * partition append writes only the cells the batch lands in, and
-    * serve-time partition pruning is untouched. Returns the appended
-    * count. */
-  def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, newVecs: DataFrame, idCol: String,
-      vecCol: String, maxRowsPerWriteTask: Long = 0,
-      ingestMicros: Long = -1L): Long = {
-    graft.util.Fs.failIfUnderMaintenance(spark, path,
-      "appendToIvfIndex")
-    val g = genDir(spark, path)
-    val cents = graft.util.Gen.read(spark, s"$g/centroids")
-    val assigned = assignCells(
-      newVecs.select(col(idCol).as("neighbor_id"),
-        l2Normalize(col(vecCol)).as("cv")),
-      cents, "neighbor_id", "cv", keep = 1)
-      .localCheckpoint()
-    writeCellStore(assigned, "append", s"$g/assigned",
-      maxRowsPerWriteTask)
-    logIngest(spark, g, assigned.select("neighbor_id"), ingestMicros)
-    assigned.count()
-  }
+    * and appended to the cell-partitioned assignment store
+    * ([[appendToIndex]]). Returns the appended count. */
+  def appendToIvfIndex(spark: SparkSession, path: String,
+      newVecs: DataFrame, idCol: String, vecCol: String,
+      maxRowsPerWriteTask: Long = 0, ingestMicros: Long = -1L): Long =
+    appendToIndex(spark, path, Ivf, "appendToIvfIndex",
+        maxRowsPerWriteTask, ingestMicros)(g =>
+      assignRows(newVecs, idCol, vecCol, Gen.read(spark, s"$g/centroids")))
 
-  /** Compact the appended cell store — the missing third of the
-    * build → append → serve lifecycle. [[appendToIvfIndex]] writes one
-    * file per touched cell PER BATCH, so a year of daily appends leaves
-    * ~365 files per hot cell and claws back the read amplification the
-    * cell layout bought. This rewrites every cell to a single file
-    * (same repartition-on-cell discipline as [[saveIvfIndex]], same
-    * hot-cell caveat) with served results identical by construction —
-    * the store's rows are untouched, only their file layout changes
-    * (and the persisted drift baseline carries over byte-for-byte —
-    * it is build-time state). The rewrite publishes a NEW INDEX
-    * GENERATION through [[graft.util.Gen.rewrite]] (atomic commit-
-    * marker flip, ZERO reader outage — a serve that resolved before
-    * the flip completes against its generation; see Gen's scaladoc
-    * for the crash protocol): the row store rewrites with tombstoned
-    * rows PHYSICALLY dropped, the auxiliary datasets (centroids,
-    * baseline — driver-tiny) copy over, and the applied tombstones do
-    * not carry, so the new generation starts clean. The single-
-    * maintenance-writer rule is ENFORCED by the maintenance marker:
-    * an [[appendToIvfIndex]] racing this compaction fails loudly at
-    * its fence check instead of committing rows the generation flip
-    * would silently obsolete. Returns the number of rows in the
-    * compacted store. */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, maxRowsPerWriteTask: Long = 0): Long = {
-    graft.util.Gen.rewrite(spark, path) { g =>
-      val old = genDir(spark, path)
-      carryAuxDatasets(spark, old, g, except = "assigned")
-      carryIngestLog(spark, old, g)
-      writeCellStore(dropTombstoned(spark, old,
-        graft.util.Gen.read(spark, s"$old/assigned")), "overwrite",
-        s"$g/assigned", maxRowsPerWriteTask)
-    }
-    graft.util.Gen.read(spark, s"${genDir(spark, path)}/assigned").count()
-  }
-
-  /** Layout health of a persisted cell store: per cell, row count and
-    * distinct parquet-file count — the two numbers an operator reads to
-    * schedule maintenance. max(n_files) grows by one per append batch
-    * that touched the cell and is the [[compactIvfIndex]] trigger;
-    * max(n_rows)/avg(n_rows) ≫ 1 means the cell layout itself has gone
-    * skewed (corpus drifted off the trained centroids) and it is rebuild
-    * time regardless of what [[ivfDriftReport]] says about fresh batches.
-    * One scan touching only the partition column + file name — no vector
-    * bytes are read. */
-  def ivfIndexStats(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    cellStoreStats(spark, s"${genDir(spark, path)}/assigned")
-
-  /** [[ivfIndexStats]] for the IVF+PQ code store — same signals, same
-    * zero-data-bytes scan (the per-cell code bytes are never read). */
-  def ivfPqIndexStats(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    cellStoreStats(spark, s"${genDir(spark, path)}/codes")
-
-  private def cellStoreStats(spark: org.apache.spark.sql.SparkSession,
-      store: String): DataFrame =
-    graft.util.Gen.read(spark, store)
-      .select(col("cell"), input_file_name().as("f"))
-      .groupBy(col("cell"))
-      .agg(count(lit(1)).as("n_rows"),
-        countDistinct(col("f")).as("n_files"))
+  /** Compact the appended IVF cell store ([[compactIndex]]): every cell
+    * rewrites to a single file with tombstoned rows dropped, centroids
+    * and the drift baseline carried byte-for-byte. The single-
+    * maintenance-writer rule is ENFORCED by the maintenance marker: an
+    * [[appendToIvfIndex]] racing this compaction fails loudly at its
+    * fence check instead of committing rows the generation flip would
+    * silently obsolete. Returns the number of rows in the compacted
+    * store. */
+  def compactIvfIndex(spark: SparkSession, path: String,
+      maxRowsPerWriteTask: Long = 0): Long =
+    compactIndex(spark, path, Ivf, maxRowsPerWriteTask)
 
   /** The action [[ivfDriftReport]] triggers — retrain the index IN
     * PLACE, crash-safely, from the store's own vectors (the cell store
@@ -868,66 +1082,26 @@ object Similarity {
     * read the store's rows, retrain centroids (optionally with
     * full-corpus Lloyd refinement), re-assign with the map-only
     * kernel, and write a COMPLETE new index (centroids + cell store +
-    * frozen drift baseline) as the NEXT GENERATION, published by
-    * [[graft.util.Gen.rewrite]]'s atomic commit-marker flip — the
-    * three datasets flip together (a crash never leaves mixed-
-    * generation centroids/baseline) and readers see ZERO outage (a
-    * serve resolved pre-flip completes against its generation; new
-    * loads resolve the rebuilt one). Ingest is fenced for the window
-    * by the index's maintenance marker. The store read happens INSIDE
-    * the rewrite callback and is localCheckpointed so the new index
-    * derives from a materialized snapshot. Returns the rebuilt row
-    * count. */
-  def rebuildIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, nCentroids: Int = 16, kmeansIters: Int = 4,
-      refineIters: Int = 0, maxRowsPerWriteTask: Long = 0): Long = {
-    graft.util.Gen.rewrite(spark, path) { g =>
-      // tombstoned rows are excluded from the retrain corpus AND never
-      // copied into the new store — the old generation (tombstones
-      // included) is swept a cycle later, so the rebuild IS a physical
-      // delete
-      val old = genDir(spark, path)
-      val corpus = dropTombstoned(spark, old,
-          graft.util.Gen.read(spark, s"$old/assigned"))
+    * frozen drift baseline) as the NEXT GENERATION ([[rewriteIndex]]) —
+    * the three datasets flip together, so a crash never leaves mixed-
+    * generation centroids/baseline. The store read happens INSIDE the
+    * rewrite callback and is localCheckpointed so the new index derives
+    * from a materialized snapshot. Tombstoned rows are excluded from the
+    * retrain corpus AND never copied into the new store, so the rebuild
+    * IS a physical delete; ingest ages carry over. Returns the rebuilt
+    * row count. */
+  def rebuildIvfIndex(spark: SparkSession, path: String,
+      nCentroids: Int = 16, kmeansIters: Int = 4, refineIters: Int = 0,
+      maxRowsPerWriteTask: Long = 0): Long =
+    rewriteIndex(spark, path, Ivf, "ann:rebuild") { (old, g) =>
+      val corpus = liveStore(spark, old, Ivf)
         .select(col("neighbor_id"), col("cv")).localCheckpoint()
       writeIvfIndexInto(
         buildIvfIndex(corpus, "neighbor_id", "cv", nCentroids,
           kmeansIters, refineIters),
         g, maxRowsPerWriteTask)
-      // ages survive the rebuild: the new generation derives from the
-      // old store's LIVE rows, whose ingest times are unchanged
       carryIngestLog(spark, old, g)
     }
-    graft.util.Gen.read(spark, s"${genDir(spark, path)}/assigned").count()
-  }
-
-  /** [[rebuildIvfIndex]] for a persisted IVF+PQ index. The code store
-    * keeps codes, not vectors, so the rebuild REQUIRES the corpus (the
-    * same frame serves rerank from) — retrains centroids AND codebooks
-    * on it, re-encodes, and swaps the whole index dir (centroids +
-    * codebooks + code store + error baseline) atomically. Returns the
-    * rebuilt code-row count. */
-  def rebuildIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, corpus: DataFrame, idCol: String, vecCol: String,
-      nCells: Int = 16, m: Int = 16, k: Int = 16,
-      maxRowsPerWriteTask: Long = 0): Long = {
-    graft.util.Gen.rewrite(spark, path) { g =>
-      // deleted ids must not resurrect through the caller's corpus: the
-      // rebuild applies the index's tombstones to it before retraining
-      // (the generation flip then obsoletes the old tombstones dir)
-      val live = tombstonesOf(spark, genDir(spark, path))
-        .map(ts => corpus.join(
-          broadcast(ts.withColumnRenamed("neighbor_id", idCol)),
-          Seq(idCol), "left_anti"))
-        .getOrElse(corpus)
-      writeIvfPqIndexInto(
-        buildIvfPqIndex(live, idCol, vecCol, nCells, m, k),
-        g, maxRowsPerWriteTask)
-      writeIvfPqErrBaselineInto(spark, g, live, idCol, vecCol)
-      carryIngestLog(spark, genDir(spark, path), g)
-    }
-    graft.util.Gen.read(spark, s"${genDir(spark, path)}/codes").count()
-  }
 
   /** Centroid-drift report — the rebuild trigger [[appendToIvfIndex]]'s
     * frozen-centroid contract needs: recall on appended data degrades
@@ -968,9 +1142,8 @@ object Similarity {
     * instead of nCentroids rows). An index persisted before the baseline
     * existed fails with a pointer to [[backfillIvfBaseline]] instead of
     * a raw path-not-found. */
-  def ivfDriftReport(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String,
-      vecCol: String): DataFrame = {
+  def ivfDriftReport(spark: SparkSession, path: String, batch: DataFrame,
+      idCol: String, vecCol: String): DataFrame = {
     val g = genDir(spark, path)
     val base = new org.apache.hadoop.fs.Path(s"$g/baseline")
     if (!base.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -980,7 +1153,7 @@ object Similarity {
           "monitor existed). Run Similarity.backfillIvfBaseline(spark, " +
           "path) BEFORE any drifted appends land in the store, or " +
           "rebuild + re-save the index.")
-    val baseDf = graft.util.Gen.read(spark, s"$g/baseline")
+    val baseDf = Gen.read(spark, s"$g/baseline")
     // legacy-SCHEMA guard, not just legacy-existence: a baseline written
     // before the p10 columns would otherwise surface as a raw
     // unresolved-column AnalysisException deep inside the report plan
@@ -991,8 +1164,8 @@ object Similarity {
           "with Similarity.backfillIvfBaseline(spark, path) — sound " +
           "only while the store is unappended; if drifted appends have " +
           "already landed, rebuild + re-save the index.")
-    driftAgainst(baseDf,
-      graft.util.Gen.read(spark, s"$g/centroids"), batch, idCol, vecCol)
+    driftAgainst(baseDf, Gen.read(spark, s"$g/centroids"), batch, idCol,
+      vecCol)
   }
 
   /** Backfill the `baseline/` dataset for an index persisted before
@@ -1000,13 +1173,11 @@ object Similarity {
     * it is sound exactly while the store still holds the build-time
     * corpus — run it BEFORE drifted appends land, or the baseline is
     * born contaminated with precisely the drift it should expose. */
-  def backfillIvfBaseline(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
+  def backfillIvfBaseline(spark: SparkSession, path: String): Unit = {
     // a writer into the CURRENT generation: fenced like an append (a
     // rewrite racing this would either fence it out here or abort at
     // its content re-verify)
-    graft.util.Fs.failIfUnderMaintenance(spark, path,
-      "backfillIvfBaseline")
+    Fs.failIfUnderMaintenance(spark, path, "backfillIvfBaseline")
     val (cents, assigned) = loadIvfIndex(spark, path)
     cellBaseline(cents,
       assigned.select(col("cell").cast("long").as("cell"), col("cv")))
@@ -1023,10 +1194,7 @@ object Similarity {
     // similarity-desc/cent_id tiebreak) with the winning similarity kept,
     // profiled by the same aggregate as the baseline
     val bp = cellProfile(
-      assignCells(
-        batch.select(col(idCol).as("bid"), l2Normalize(col(vecCol))
-          .as("bv")),
-        cents, "bid", "bv", keep = 1, keepSim = true)
+      assignRows(batch, idCol, vecCol, cents, keepSim = true)
         .select(col("cell"), col("cent_sim").as("cos")),
       "batch")
     // A batch vector can argmax into a cell that attracted ZERO build
@@ -1053,7 +1221,7 @@ object Similarity {
     * Join-shape note: when the index is the PERSISTED cell-partitioned
     * store, the probe side stays broadcast-eligible — that is what
     * feeds Spark's dynamic partition pruning into the store scan
-    * (ExplainCheck-pinned), the low-nProbe production serve. For an
+    * (AnnPlanPinsSpec-pinned), the low-nProbe production serve. For an
     * IN-MEMORY index the probe side is explicitly co-partitioned on
     * `cell` instead: there is no partitioned scan to prune, and a
     * broadcast join here is the degenerate case — one hash key per
@@ -1065,20 +1233,11 @@ object Similarity {
   def ivfTopKFromIndex(index: (DataFrame, DataFrame), queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int = 2): DataFrame = {
     val (cents, assigned) = index
-    val q0 = assignCells(queries.select(col(idCol).as("query_id"),
-      l2Normalize(col(vecCol)).as("qv")), cents, "query_id", "qv",
-      keep = nProbe)
+    val q0 = probeRows(queries, idCol, vecCol, cents, nProbe)
     val q = if (isCellPartitionedScan(assigned)) q0
       else q0.repartition(col("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    assigned.join(q, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim", round(dotCol(col("qv"), col("cv")), 6))
-      .withColumn("rank", Ranks.cutRank(cents.sparkSession, w, k))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cos_sim"))
+    cosineTopK(assigned.join(q, Seq("cell"))
+      .filter(col("query_id") =!= col("neighbor_id")), k)
   }
 
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
@@ -1087,6 +1246,37 @@ object Similarity {
     ivfTopKFromIndex(
       buildIvfIndex(corpus, idCol, vecCol, nCentroids, kmeansIters),
       queries, idCol, vecCol, k, nProbe)
+
+  /** Recall probe for a persisted IVF index ([[recallProbe]]): the
+    * query sample is drawn from the store itself, and full probe ≡
+    * exact brute force over the store (the equivalence t52's oracle
+    * pins). Pair it with [[ivfDriftReport]] to calibrate "your
+    * tolerance" in measured recall instead of cosine points. */
+  def ivfRecallProbe(spark: SparkSession, path: String, sampleN: Int = 64,
+      k: Int = 10, nProbes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
+    val idx = loadIvfIndex(spark, path)
+    recallProbe(spark, idx._1,
+        idx._2.select(col("neighbor_id").as("vid"), col("cv")), "vid",
+        sampleN, k, nProbes)((q, p) =>
+      ivfTopKFromIndex(idx, q, "vid", "cv", k, nProbe = p))
+  }
+
+  /** The page-on-this operator for a persisted IVF index
+    * ([[healthReport]]): the drift axis is [[ivfDriftReport]] against the
+    * frozen baseline, recall comes from [[ivfRecallProbe]] at the serving
+    * nProbe. The thresholds are the r14 calibration: drift 0.00005 ⇔
+    * recall 0.9625 stays quiet, planted drift 0.663 ⇔ recall 0.75 pages
+    * (both spec-pinned). Cost = one ∝-batch drift pass + the probe's
+    * sampled serves + a zero-data-byte layout scan. */
+  def ivfIndexHealthReport(spark: SparkSession, path: String,
+      batch: DataFrame, idCol: String, vecCol: String, sampleN: Int = 64,
+      k: Int = 10, nProbe: Int = 2, maxP10Drift: Double = 0.05,
+      minRecall: Double = 0.9, maxFilesPerCell: Int = 16): DataFrame =
+    healthReport(spark, path,
+      ivfDriftReport(spark, path, batch, idCol, vecCol),
+      "mean_drift", "p10_drift", maxP10Drift,
+      ivfRecallProbe(spark, path, sampleN, k, Seq(nProbe)),
+      nProbe, k, minRecall, maxFilesPerCell)
 
   /** Trained PQ codebooks: `m` subspaces × `k` centroids × `dsub` dims,
     * flat layout `flat[((mi*k)+ki)*dsub + j]`. */
@@ -1159,27 +1349,35 @@ object Similarity {
   def buildPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int = 16, k: Int = 16, iters: Int = 4): (PqCodebooks, DataFrame) = {
     val cb = trainPqCodebooks(corpus, idCol, vecCol, m, k, iters)
-    val codes = corpus.select(col(idCol).as("neighbor_id"),
-      pqEncodeCol(l2Normalize(col(vecCol)), cb).as("codes"))
-    (cb, codes)
+    (cb, vectorRows(corpus, idCol, vecCol)
+      .select(col("neighbor_id"), pqEncodeCol(col("cv"), cb).as("codes")))
   }
 
   /** One-row codebook parquet table (shared by the PQ and IVF+PQ index
     * layouts). */
-  private def writeCodebooks(cb: PqCodebooks,
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+  private def writeCodebooks(cb: PqCodebooks, spark: SparkSession,
+      path: String): Unit = {
     import spark.implicits._
     Seq((cb.m, cb.k, cb.dsub, cb.flat.toSeq))
       .toDF("m", "k", "dsub", "flat")
       .write.mode("overwrite").parquet(path)
   }
 
-  private def readCodebooks(spark: org.apache.spark.sql.SparkSession,
+  private def readCodebooks(spark: SparkSession,
       path: String): PqCodebooks = {
-    val r = graft.util.Gen.read(spark, path).head()
+    val r = Gen.read(spark, path).head()
     PqCodebooks(r.getAs[Int]("m"), r.getAs[Int]("k"),
       r.getAs[Int]("dsub"), r.getAs[Seq[Double]]("flat").toArray)
   }
+
+  /** The serve's query rows for a PQ-coded store: a precomputed
+    * per-query LUT ([[graft.expressions.PqLut]]), so the code-word scan
+    * scores each pair with `m` table lookups. */
+  private def withLut(q: DataFrame, cb: PqCodebooks): DataFrame =
+    q.withColumn("lut", pqLutCol(col("qv"), cb))
+
+  private def pqScore(cb: PqCodebooks): Column =
+    pqAdcCol(col("codes"), col("lut"), cb)
 
   /** Persist a plain-PQ index: one-row codebook table + the encoded
     * corpus (`m` ints per vector — the serve-time scan reads codes, not
@@ -1187,108 +1385,52 @@ object Similarity {
     * nothing per session; mirror of [[saveIvfPqIndex]] minus the cell
     * layout. */
   def savePqIndex(index: (PqCodebooks, DataFrame), path: String,
-      ingestMicros: Long = -1L): Unit =
-    graft.util.Gen.rewrite(index._2.sparkSession, path) { g =>
-      writeCodebooks(index._1, index._2.sparkSession, s"$g/codebooks")
+      ingestMicros: Long = -1L): Unit = {
+    val spark = index._2.sparkSession
+    saveIndex(spark, path, Pq, ingestMicros) { g =>
+      writeCodebooks(index._1, spark, s"$g/codebooks")
       index._2.write.mode("overwrite").parquet(s"$g/codes")
-      logIngest(index._2.sparkSession, g,
-        graft.util.Gen.read(index._2.sparkSession, s"$g/codes")
-          .select("neighbor_id"), ingestMicros)
     }
+  }
 
   /** Load a persisted plain-PQ index (tombstone-filtered, like every
     * load). */
-  def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
+  def loadPqIndex(spark: SparkSession,
       path: String): (PqCodebooks, DataFrame) = {
     val g = genDir(spark, path)
-    (readCodebooks(spark, s"$g/codebooks"),
-      dropTombstoned(spark, g, graft.util.Gen.read(spark, s"$g/codes")))
+    (readCodebooks(spark, s"$g/codebooks"), liveStore(spark, g, Pq))
   }
-
-  /** [[deleteFromIvfIndex]] for a persisted plain-PQ index. */
-  def deleteFromPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, ids: DataFrame, idCol: String): Long =
-    appendTombstones(spark, path, ids, idCol, "deleteFromPqIndex")
 
   /** Incremental maintenance for the persisted plain-PQ index: new
     * vectors encode with the FROZEN codebooks (one codegen projection;
     * the [[ivfPqDriftReport]]-style rebuild decision belongs to the
     * cell-composed index — a flat PQ store re-encodes cheaply).
-    * Fenced. Returns the appended count. */
-  def appendToPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, newVecs: DataFrame, idCol: String,
-      vecCol: String, ingestMicros: Long = -1L): Long = {
-    graft.util.Fs.failIfUnderMaintenance(spark, path,
-      "appendToPqIndex")
-    val g = genDir(spark, path)
-    val cb = readCodebooks(spark, s"$g/codebooks")
-    val rows = newVecs.select(col(idCol).as("neighbor_id"),
-        pqEncodeCol(l2Normalize(col(vecCol)), cb).as("codes"))
-      .localCheckpoint()
-    rows.write.mode("append").parquet(s"$g/codes")
-    logIngest(spark, g, rows.select("neighbor_id"), ingestMicros)
-    rows.count()
-  }
-
-  /** Compact the plain-PQ code store — a new index generation with
-    * tombstoned rows physically dropped and the codebooks carried
-    * over, published by the zero-outage [[graft.util.Gen.rewrite]]
-    * flip (the [[compactSq8Index]] protocol on the PQ layout).
-    * Returns the compacted row count. */
-  def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, targetFiles: Int = 0): Long = {
-    val n = if (targetFiles > 0) targetFiles
-      else spark.sparkContext.defaultParallelism
-    graft.util.Gen.rewrite(spark, path) { g =>
-      val old = genDir(spark, path)
-      carryAuxDatasets(spark, old, g, except = "codes")
-      carryIngestLog(spark, old, g)
-      dropTombstoned(spark, old, graft.util.Gen.read(spark, s"$old/codes"))
-        .repartition(n, col("neighbor_id"))
-        .write.mode("overwrite").parquet(s"$g/codes")
+    * Returns the appended count. */
+  def appendToPqIndex(spark: SparkSession, path: String,
+      newVecs: DataFrame, idCol: String, vecCol: String,
+      ingestMicros: Long = -1L): Long =
+    appendToIndex(spark, path, Pq, "appendToPqIndex", 0, ingestMicros) { g =>
+      val cb = readCodebooks(spark, s"$g/codebooks")
+      vectorRows(newVecs, idCol, vecCol)
+        .select(col("neighbor_id"), pqEncodeCol(col("cv"), cb).as("codes"))
     }
-    graft.util.Gen.read(spark, s"${genDir(spark, path)}/codes").count()
-  }
 
-  /** PQ top-k serve: queries broadcast with a precomputed per-query LUT
-    * ([[graft.expressions.PqLut]]); the code-word scan scores each pair
-    * with `m` table lookups ([[graft.expressions.PqAdc]]); the top
-    * `rerank` ADC candidates per query fetch their true vectors by id
-    * (broadcast-hash probe of the corpus — at 100 TB this is the
-    * candidates-only fetch that makes PQ's compressed scan pay) and
-    * rerank by exact cosine. With `rerank` ≥ corpus size the result
-    * equals [[bruteForceTopK]] exactly — the spec pins that. */
+  /** Compact the plain-PQ code store ([[compactIndex]]): tombstoned rows
+    * physically dropped, the codebooks carried over. Returns the
+    * compacted row count. */
+  def compactPqIndex(spark: SparkSession, path: String): Long =
+    compactIndex(spark, path, Pq)
+
+  /** PQ top-k serve ([[rerankTopK]]): queries broadcast with a
+    * precomputed per-query LUT; the code-word scan scores each pair with
+    * `m` table lookups ([[graft.expressions.PqAdc]]); the top `rerank`
+    * ADC candidates per query rerank by exact cosine. */
   def pqTopKFromIndex(index: (PqCodebooks, DataFrame), corpus: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       rerank: Int = 32): DataFrame = {
     val (cb, codes) = index
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-        l2Normalize(col(vecCol)).as("qv"))
-      .withColumn("lut", pqLutCol(col("qv"), cb)))
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("neighbor_id"))
-    val cand = codes.join(q, col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc", pqAdcCol(col("codes"), col("lut"), cb))
-      // cutRank + adjacent rerank filter → InferWindowGroupLimit prunes
-      // each query's candidates to `rerank` rows BEFORE the sort — on
-      // the whole-code-table ADC scan this group limit IS the
-      // serve-path's top-k fast path, and it caps ranks at `rerank`
-      // (overflow-proof); above the rewrite threshold cutRank switches
-      // to the long-safe rank instead. Plan-pinned by ExplainCheck.
-      .withColumn("adc_rank",
-        Ranks.cutRank(codes.sparkSession, wAdc, rerank))
-      .filter(col("adc_rank") <= rerank)
-      .select(col("query_id"), col("qv"), col("neighbor_id"))
-    val vecs = corpus.select(col(idCol).as("neighbor_id"),
-      l2Normalize(col(vecCol)).as("cv"))
-    val wCos = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    cand.join(vecs, Seq("neighbor_id"))
-      .withColumn("cos_sim", round(dotCol(col("qv"), col("cv")), 6))
-      .withColumn("rank", Ranks.cutRank(codes.sparkSession, wCos, k))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cos_sim"))
+    rerankTopK(codes, broadcast(withLut(queryRows(queries, idCol, vecCol),
+      cb)), pqScore(cb), corpus, idCol, vecCol, k, rerank)
   }
 
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
@@ -1302,6 +1444,25 @@ object Similarity {
   def sq8DotCol(q: Column, codes: Column): Column =
     bridged(graft.expressions.Sq8Dot(expr(q), expr(codes)))
 
+  /** `rows`' `keys` plus the SQ8 code of their normalized `cv`:
+    * (keys…, vmin, delta, codes). */
+  private def sq8Rows(rows: DataFrame, keys: String*): DataFrame =
+    rows.select(keys.map(col) :+ sq8EncodeCol(col("cv")).as("sq"): _*)
+      .select(keys.map(col) ++ Seq(col("sq.vmin").as("vmin"),
+        col("sq.delta").as("delta"), col("sq.codes").as("codes")): _*)
+
+  /** The serve's query rows for an SQ8-coded store: a precomputed `Σq_j`
+    * (queries are broadcast-tiny: the interpreted HOF sum is fine), so
+    * the code scan scores each pair with the affine identity
+    * `⟨q, x̂⟩ = vmin·Σq_j + Δ·Σ q_j·code_j` ([[sq8Score]]). */
+  private def withQsum(q: DataFrame): DataFrame =
+    q.withColumn("qsum", org.apache.spark.sql.functions
+      .aggregate(col("qv"), lit(0.0), (a, x) => a + x))
+
+  private def sq8Score: Column =
+    col("vmin") * col("qsum") +
+      col("delta") * sq8DotCol(col("qv"), col("codes"))
+
   /** Build the SQ8 index: per-vector int8 affine quantization
     * ([[graft.expressions.Sq8Encode]]) of the normalized corpus —
     * (neighbor_id, vmin, delta, codes). The TRAINING-FREE compression
@@ -1311,120 +1472,43 @@ object Similarity {
     * first stop when PQ's 4–32× smaller codes aren't needed. */
   def buildSq8Index(corpus: DataFrame, idCol: String,
       vecCol: String): DataFrame =
-    corpus.select(col(idCol).as("neighbor_id"),
-        sq8EncodeCol(l2Normalize(col(vecCol))).as("sq"))
-      .select(col("neighbor_id"), col("sq.vmin").as("vmin"),
-        col("sq.delta").as("delta"), col("sq.codes").as("codes"))
+    sq8Rows(vectorRows(corpus, idCol, vecCol), "neighbor_id")
 
   def saveSq8Index(index: DataFrame, path: String,
       ingestMicros: Long = -1L): Unit =
-    graft.util.Gen.rewrite(index.sparkSession, path) { g =>
-      index.write.mode("overwrite").parquet(s"$g/codes")
-      logIngest(index.sparkSession, g,
-        graft.util.Gen.read(index.sparkSession, s"$g/codes")
-          .select("neighbor_id"), ingestMicros)
-    }
-  def loadSq8Index(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val g = genDir(spark, path)
-    dropTombstoned(spark, g, graft.util.Gen.read(spark, s"$g/codes"))
-  }
+    saveIndex(index.sparkSession, path, Sq8, ingestMicros)(g =>
+      index.write.mode("overwrite").parquet(s"$g/codes"))
+
+  def loadSq8Index(spark: SparkSession, path: String): DataFrame =
+    liveStore(spark, genDir(spark, path), Sq8)
 
   /** Incremental maintenance for the persisted SQ8 index — the
     * training-free tier's whole selling point is that append is ONE
     * map-only encode projection: no codebooks to freeze, nothing
-    * drifts, nothing needs retraining. Fenced like every ingest
-    * writer. Returns the appended count. */
-  def appendToSq8Index(spark: org.apache.spark.sql.SparkSession,
-      path: String, newVecs: DataFrame, idCol: String,
-      vecCol: String, ingestMicros: Long = -1L): Long = {
-    graft.util.Fs.failIfUnderMaintenance(spark, path,
-      "appendToSq8Index")
-    val g = genDir(spark, path)
-    val rows = buildSq8Index(newVecs, idCol, vecCol).localCheckpoint()
-    rows.write.mode("append").parquet(s"$g/codes")
-    logIngest(spark, g, rows.select("neighbor_id"), ingestMicros)
-    rows.count()
-  }
+    * drifts, nothing needs retraining. Returns the appended count. */
+  def appendToSq8Index(spark: SparkSession, path: String,
+      newVecs: DataFrame, idCol: String, vecCol: String,
+      ingestMicros: Long = -1L): Long =
+    appendToIndex(spark, path, Sq8, "appendToSq8Index", 0, ingestMicros)(
+      _ => buildSq8Index(newVecs, idCol, vecCol))
 
-  /** Compact the appended SQ8 code store: a new generation rewritten
-    * to the session's default parallelism in files, tombstoned rows
-    * ([[deleteFromSq8Index]]) physically dropped — the zero-outage
-    * [[graft.util.Gen.rewrite]] protocol, like [[compactIvfIndex]].
-    * Returns the compacted row count. */
-  def compactSq8Index(spark: org.apache.spark.sql.SparkSession,
-      path: String, targetFiles: Int = 0): Long = {
-    val n = if (targetFiles > 0) targetFiles
-      else spark.sparkContext.defaultParallelism
-    graft.util.Gen.rewrite(spark, path) { g =>
-      val old = genDir(spark, path)
-      carryAuxDatasets(spark, old, g, except = "codes")
-      carryIngestLog(spark, old, g)
-      dropTombstoned(spark, old, graft.util.Gen.read(spark, s"$old/codes"))
-        .repartition(n, col("neighbor_id"))
-        .write.mode("overwrite").parquet(s"$g/codes")
-    }
-    graft.util.Gen.read(spark, s"${genDir(spark, path)}/codes").count()
-  }
+  /** Compact the appended SQ8 code store ([[compactIndex]]): a new
+    * generation rewritten to the session's default parallelism in files,
+    * tombstoned rows physically dropped. Returns the compacted row
+    * count. */
+  def compactSq8Index(spark: SparkSession, path: String): Long =
+    compactIndex(spark, path, Sq8)
 
-  /** Layout health of a persisted SQ8 store: (n_rows, n_files,
-    * n_tombstones) — files grow one set per append batch (compaction
-    * trigger), tombstones count rows awaiting physical drop. One
-    * zero-data-byte scan + the tombstone ids. */
-  def sq8IndexStats(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val g = genDir(spark, path)
-    val nTs = tombstonesOf(spark, g).map(_.count()).getOrElse(0L)
-    graft.util.Gen.read(spark, s"$g/codes")
-      .select(input_file_name().as("f"))
-      .agg(count(lit(1)).as("n_rows"),
-        countDistinct(col("f")).as("n_files"))
-      .withColumn("n_tombstones", lit(nTs))
-  }
-
-  /** [[sq8IndexStats]]' layout triple for the plain-PQ store — the
-    * same flat `codes` dataset under the generation dir, the same
-    * (n_rows, n_files, n_tombstones) signals. */
-  def pqIndexStats(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = sq8IndexStats(spark, path)
-
-  /** SQ8 top-k serve: queries broadcast with a precomputed `Σq_j`; the
-    * code scan scores each pair with the affine identity
-    * `⟨q, x̂⟩ = vmin·Σq_j + Δ·Σ q_j·code_j` (one int-weighted dot —
-    * [[graft.expressions.Sq8Dot]]); the top `rerank` approximate
-    * candidates per query fetch their true vectors and rerank by exact
-    * cosine — the [[pqTopKFromIndex]] contract with SQ8's simpler
-    * codes. With `rerank` ≥ corpus size the result equals
-    * [[bruteForceTopK]] exactly (spec-pinned). */
+  /** SQ8 top-k serve ([[rerankTopK]]): queries broadcast with a
+    * precomputed `Σq`; the code scan scores each pair with the affine
+    * identity (one int-weighted dot — [[graft.expressions.Sq8Dot]]); the
+    * top `rerank` approximate candidates per query rerank by exact
+    * cosine. */
   def sq8TopKFromIndex(index: DataFrame, corpus: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      rerank: Int = 32): DataFrame = {
-    val spark = corpus.sparkSession
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-        l2Normalize(col(vecCol)).as("qv"))
-      // queries are broadcast-tiny: the interpreted HOF sum is fine here
-      .withColumn("qsum",
-        org.apache.spark.sql.functions
-          .aggregate(col("qv"), lit(0.0), (a, x) => a + x)))
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("neighbor_id"))
-    val cand = index.join(q, col("query_id") =!= col("neighbor_id"))
-      .withColumn("approx", col("vmin") * col("qsum") +
-        col("delta") * sq8DotCol(col("qv"), col("codes")))
-      .withColumn("adc_rank", Ranks.cutRank(spark, wAdc, rerank))
-      .filter(col("adc_rank") <= rerank)
-      .select(col("query_id"), col("qv"), col("neighbor_id"))
-    val vecs = corpus.select(col(idCol).as("neighbor_id"),
-      l2Normalize(col(vecCol)).as("cv"))
-    val wCos = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    cand.join(vecs, Seq("neighbor_id"))
-      .withColumn("cos_sim", round(dotCol(col("qv"), col("cv")), 6))
-      .withColumn("rank", Ranks.cutRank(spark, wCos, k))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cos_sim"))
-  }
+      rerank: Int = 32): DataFrame =
+    rerankTopK(index, broadcast(withQsum(queryRows(queries, idCol, vecCol))),
+      sq8Score, corpus, idCol, vecCol, k, rerank)
 
   def sq8TopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, rerank: Int = 32): DataFrame =
@@ -1449,16 +1533,8 @@ object Similarity {
       kmeansIters)
     // cv from assignCells is already the normalized vector — encode it
     // directly (a second l2Normalize would perturb low bits)
-    val assigned = assignCells(
-      corpus.select(col(idCol).as("neighbor_id"),
-        l2Normalize(col(vecCol)).as("cv")),
-      cents, "neighbor_id", "cv", keep = 1)
-      .select(col("neighbor_id"), col("cell"),
-        sq8EncodeCol(col("cv")).as("sq"))
-      .select(col("neighbor_id"), col("cell"), col("sq.vmin").as("vmin"),
-        col("sq.delta").as("delta"), col("sq.codes").as("codes"))
-      .repartition(col("cell"))
-    (cents, assigned)
+    (cents, sq8Rows(assignRows(corpus, idCol, vecCol, cents),
+      "neighbor_id", "cell").repartition(col("cell")))
   }
 
   /** Persist an IVF×SQ8 index: centroids + the code table partitioned
@@ -1467,23 +1543,8 @@ object Similarity {
     * vectors). No codebook table — SQ8 is training-free. */
   def saveIvfSq8Index(index: (DataFrame, DataFrame), path: String,
       maxRowsPerWriteTask: Long = 0, ingestMicros: Long = -1L): Unit =
-    graft.util.Gen.rewrite(index._1.sparkSession, path) { g =>
-      writeIvfSq8IndexInto(index, g, maxRowsPerWriteTask)
-      logIngest(index._1.sparkSession, g,
-        graft.util.Gen.read(index._1.sparkSession, s"$g/codes")
-          .select("neighbor_id"), ingestMicros)
-    }
-
-  private def writeIvfSq8IndexInto(index: (DataFrame, DataFrame),
-      path: String, maxRowsPerWriteTask: Long): Unit = {
-    val (cents, assigned) = index
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    val codes =
-      if (maxRowsPerWriteTask > 0) assigned.localCheckpoint()
-      else assigned
-    writeCellStore(codes, "overwrite", s"$path/codes",
-      maxRowsPerWriteTask)
-  }
+    saveIndex(index._1.sparkSession, path, IvfSq8, ingestMicros)(g =>
+      writeCellIndex(index, g, IvfSq8, maxRowsPerWriteTask))
 
   /** The frozen build-time drift baseline for a persisted IVF×SQ8
     * index — [[ivfDriftReport]]'s persisted overload reads it from
@@ -1493,82 +1554,47 @@ object Similarity {
     * while the build corpus is in hand — right after
     * [[saveIvfSq8Index]], before any append (same soundness window as
     * [[writeIvfPqErrBaseline]]). */
-  def writeIvfSq8Baseline(spark: org.apache.spark.sql.SparkSession,
-      path: String, corpus: DataFrame, idCol: String,
-      vecCol: String): Unit = {
+  def writeIvfSq8Baseline(spark: SparkSession, path: String,
+      corpus: DataFrame, idCol: String, vecCol: String): Unit = {
     // a writer into the CURRENT generation — fenced like an append
-    graft.util.Fs.failIfUnderMaintenance(spark, path,
-      "writeIvfSq8Baseline")
-    writeIvfSq8BaselineInto(spark, genDir(spark, path), corpus,
-      idCol, vecCol)
+    Fs.failIfUnderMaintenance(spark, path, "writeIvfSq8Baseline")
+    writeIvfSq8BaselineInto(spark, genDir(spark, path), corpus, idCol,
+      vecCol)
   }
 
-  private def writeIvfSq8BaselineInto(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, corpus: DataFrame, idCol: String,
-      vecCol: String): Unit = {
-    val cents = graft.util.Gen.read(spark, s"$path/centroids")
+  private def writeIvfSq8BaselineInto(spark: SparkSession, g: String,
+      corpus: DataFrame, idCol: String, vecCol: String): Unit = {
+    val cents = Gen.read(spark, s"$g/centroids")
     cellBaseline(cents,
-      assignCells(
-        corpus.select(col(idCol).as("bid"),
-          l2Normalize(col(vecCol)).as("cv")),
-        cents, "bid", "cv", keep = 1)
-        .select(col("cell"), col("cv")))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/baseline")
+      assignRows(corpus, idCol, vecCol, cents).select(col("cell"), col("cv")))
+      .coalesce(1).write.mode("overwrite").parquet(s"$g/baseline")
   }
 
   /** Load a persisted IVF×SQ8 index (tombstone-filtered, like every
     * load). */
-  def loadIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
+  def loadIvfSq8Index(spark: SparkSession,
       path: String): (DataFrame, DataFrame) = {
     val g = genDir(spark, path)
-    (graft.util.Gen.read(spark, s"$g/centroids"),
-      dropTombstoned(spark, g, graft.util.Gen.read(spark, s"$g/codes")))
+    (Gen.read(spark, s"$g/centroids"), liveStore(spark, g, IvfSq8))
   }
 
   /** Incremental maintenance for the persisted IVF×SQ8 index: frozen
     * centroids assign, the training-free encode quantizes — ONE
     * map-only projection, nothing retrains, nothing to err-monitor.
-    * Fenced. Returns the appended count. */
-  def appendToIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
-      path: String, newVecs: DataFrame, idCol: String,
-      vecCol: String, maxRowsPerWriteTask: Long = 0,
-      ingestMicros: Long = -1L): Long = {
-    graft.util.Fs.failIfUnderMaintenance(spark, path,
-      "appendToIvfSq8Index")
-    val g = genDir(spark, path)
-    val cents = graft.util.Gen.read(spark, s"$g/centroids")
-    val assigned = assignCells(
-      newVecs.select(col(idCol).as("neighbor_id"),
-        l2Normalize(col(vecCol)).as("cv")),
-      cents, "neighbor_id", "cv", keep = 1)
-      .select(col("neighbor_id"), col("cell"),
-        sq8EncodeCol(col("cv")).as("sq"))
-      .select(col("neighbor_id"), col("cell"), col("sq.vmin").as("vmin"),
-        col("sq.delta").as("delta"), col("sq.codes").as("codes"))
-      .localCheckpoint()
-    writeCellStore(assigned, "append", s"$g/codes",
-      maxRowsPerWriteTask)
-    logIngest(spark, g, assigned.select("neighbor_id"), ingestMicros)
-    assigned.count()
-  }
+    * Returns the appended count. */
+  def appendToIvfSq8Index(spark: SparkSession, path: String,
+      newVecs: DataFrame, idCol: String, vecCol: String,
+      maxRowsPerWriteTask: Long = 0, ingestMicros: Long = -1L): Long =
+    appendToIndex(spark, path, IvfSq8, "appendToIvfSq8Index",
+        maxRowsPerWriteTask, ingestMicros)(g =>
+      sq8Rows(assignRows(newVecs, idCol, vecCol,
+        Gen.read(spark, s"$g/centroids")), "neighbor_id", "cell"))
 
-  /** Compact the appended IVF×SQ8 code store — same zero-outage
-    * generation rewrite and physical tombstone drop as
-    * [[compactIvfIndex]]. Returns the compacted row count. */
-  def compactIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
-      path: String, maxRowsPerWriteTask: Long = 0): Long =
-    compactIvfPqIndex(spark, path, maxRowsPerWriteTask)
-
-  /** [[deleteFromIvfIndex]] for a persisted IVF×SQ8 index. */
-  def deleteFromIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
-      path: String, ids: DataFrame, idCol: String): Long =
-    appendTombstones(spark, path, ids, idCol, "deleteFromIvfSq8Index")
-
-  /** [[ivfIndexStats]] for the IVF×SQ8 code store. */
-  def ivfSq8IndexStats(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    cellStoreStats(spark, s"${genDir(spark, path)}/codes")
+  /** Compact the appended IVF×SQ8 code store ([[compactIndex]]).
+    * Returns the compacted row count. */
+  def compactIvfSq8Index(spark: SparkSession, path: String,
+      maxRowsPerWriteTask: Long = 0): Long =
+    compactIndex(spark, path, IvfSq8, maxRowsPerWriteTask)
 
   /** [[rebuildIvfIndex]] for a persisted IVF×SQ8 index. The code store
     * keeps codes, not vectors, so the rebuild REQUIRES the corpus (the
@@ -1576,65 +1602,32 @@ object Similarity {
     * index's tombstones — deleted ids must not resurrect), re-encodes,
     * and swaps the whole dir (centroids + codes + baseline)
     * atomically. Returns the rebuilt row count. */
-  def rebuildIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
-      path: String, corpus: DataFrame, idCol: String, vecCol: String,
+  def rebuildIvfSq8Index(spark: SparkSession, path: String,
+      corpus: DataFrame, idCol: String, vecCol: String,
       nCentroids: Int = 16, kmeansIters: Int = 4,
-      maxRowsPerWriteTask: Long = 0): Long = {
-    graft.util.Gen.rewrite(spark, path) { g =>
-      val live = tombstonesOf(spark, genDir(spark, path))
-        .map(ts => corpus.join(
-          broadcast(ts.withColumnRenamed("neighbor_id", idCol)),
-          Seq(idCol), "left_anti"))
-        .getOrElse(corpus)
-      writeIvfSq8IndexInto(
-        buildIvfSq8Index(live, idCol, vecCol, nCentroids, kmeansIters),
-        g, maxRowsPerWriteTask)
+      maxRowsPerWriteTask: Long = 0): Long =
+    rewriteIndex(spark, path, IvfSq8, "ann:rebuild") { (old, g) =>
+      val live = liveCorpus(spark, old, corpus, idCol)
+      writeCellIndex(buildIvfSq8Index(live, idCol, vecCol, nCentroids,
+        kmeansIters), g, IvfSq8, maxRowsPerWriteTask)
       writeIvfSq8BaselineInto(spark, g, live, idCol, vecCol)
-      carryIngestLog(spark, genDir(spark, path), g)
+      carryIngestLog(spark, old, g)
     }
-    graft.util.Gen.read(spark, s"${genDir(spark, path)}/codes").count()
-  }
 
-  /** IVF×SQ8 top-k serve: queries argmax into their nProbe cells (the
-    * map-only kernel) and broadcast with a precomputed Σq; candidate
-    * generation is the cell EQUI-join against the (possibly
-    * partition-pruned) code store; scoring is the SQ8 affine identity;
-    * the top `rerank` candidates per query fetch true vectors and
-    * rerank by exact cosine. Full probe + rerank ≥ corpus ≡ brute
-    * force (spec-pinned, the q131 contract). */
+  /** IVF×SQ8 top-k serve ([[rerankTopK]]): queries argmax into their
+    * nProbe cells (the map-only kernel) and broadcast with a precomputed
+    * Σq; candidate generation is the cell EQUI-join against the
+    * (possibly partition-pruned) code store; scoring is the SQ8 affine
+    * identity. Full probe + rerank ≥ corpus ≡ brute force (spec-pinned,
+    * the q131 contract). */
   def ivfSq8TopKFromIndex(index: (DataFrame, DataFrame),
       corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nProbe: Int = 4,
-      rerank: Int = 32): DataFrame = {
-    val (cents, codes) = index
-    val spark = corpus.sparkSession
-    val q = broadcast(
-      assignCells(queries.select(col(idCol).as("query_id"),
-          l2Normalize(col(vecCol)).as("qv")),
-        cents, "query_id", "qv", keep = nProbe)
-        .withColumn("qsum",
-          org.apache.spark.sql.functions
-            .aggregate(col("qv"), lit(0.0), (a, x) => a + x)))
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("neighbor_id"))
-    val cand = codes.join(q, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("approx", col("vmin") * col("qsum") +
-        col("delta") * sq8DotCol(col("qv"), col("codes")))
-      .withColumn("adc_rank", Ranks.cutRank(spark, wAdc, rerank))
-      .filter(col("adc_rank") <= rerank)
-      .select(col("query_id"), col("qv"), col("neighbor_id"))
-    val vecs = corpus.select(col(idCol).as("neighbor_id"),
-      l2Normalize(col(vecCol)).as("cv"))
-    val wCos = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    cand.join(vecs, Seq("neighbor_id"))
-      .withColumn("cos_sim", round(dotCol(col("qv"), col("cv")), 6))
-      .withColumn("rank", Ranks.cutRank(spark, wCos, k))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cos_sim"))
-  }
+      rerank: Int = 32): DataFrame =
+    rerankTopK(index._2,
+      broadcast(withQsum(probeRows(queries, idCol, vecCol, index._1,
+        nProbe))),
+      sq8Score, corpus, idCol, vecCol, k, rerank)
 
   def ivfSq8TopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nCentroids: Int = 16, nProbe: Int = 4,
@@ -1648,76 +1641,32 @@ object Similarity {
     * deterministic query sample from the caller's corpus (the code
     * store keeps affine codes, not raw vectors — same contract as the
     * PQ probe). */
-  def ivfSq8RecallProbe(spark: org.apache.spark.sql.SparkSession,
-      path: String, corpus: DataFrame, idCol: String, vecCol: String,
-      sampleN: Int = 64, k: Int = 10, nProbes: Seq[Int] = Seq(1, 2, 4, 8),
+  def ivfSq8RecallProbe(spark: SparkSession, path: String,
+      corpus: DataFrame, idCol: String, vecCol: String, sampleN: Int = 64,
+      k: Int = 10, nProbes: Seq[Int] = Seq(1, 2, 4, 8),
       rerank: Int = 128): DataFrame = {
-    import spark.implicits._
     val idx = loadIvfSq8Index(spark, path)
-    val nCells = idx._1.count().toInt
-    val queries = corpus
-      .orderBy(xxhash64(col(idCol)), col(idCol))
-      .limit(sampleN).localCheckpoint()
-    val truth = ivfSq8TopKFromIndex(idx, corpus, queries, idCol, vecCol,
-        k, nProbe = nCells, rerank = rerank)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint()
-    val truthN = truth.count()
-    nProbes.distinct.sorted.map { p =>
-      val hits = ivfSq8TopKFromIndex(idx, corpus, queries, idCol,
-          vecCol, k, nProbe = p, rerank = rerank)
-        .select(col("query_id"), col("neighbor_id"))
-        .join(truth, Seq("query_id", "neighbor_id"), "left_semi")
-        .count()
-      (p, sampleN, k, hits, truthN,
-        Percentiles.roundHalfUp(
-          hits.toDouble / math.max(truthN, 1L), 6))
-    }.toDF("n_probe", "sample_n", "k", "hits", "truth_n", "recall")
+    recallProbe(spark, idx._1, corpus, idCol, sampleN, k, nProbes)(
+      (q, p) => ivfSq8TopKFromIndex(idx, corpus, q, idCol, vecCol, k,
+        nProbe = p, rerank = rerank))
   }
 
   /** [[ivfIndexHealthReport]] for a persisted IVF×SQ8 index: the drift
     * axis is the PLAIN centroid monitor ([[ivfDriftReport]] against the
     * [[writeIvfSq8Baseline]] baseline — nothing else can drift in this
     * tier), recall from [[ivfSq8RecallProbe]] at the serving
-    * (nProbe, rerank), layout from [[ivfSq8IndexStats]] + the tombstone
-    * census. */
-  def ivfSq8IndexHealthReport(spark: org.apache.spark.sql.SparkSession,
-      path: String, corpus: DataFrame, batch: DataFrame, idCol: String,
-      vecCol: String, sampleN: Int = 64, k: Int = 10, nProbe: Int = 2,
-      rerank: Int = 128, maxP10Drift: Double = 0.05,
-      minRecall: Double = 0.9, maxFilesPerCell: Int = 16): DataFrame = {
-    import spark.implicits._
-    val d = ivfDriftReport(spark, path, batch, idCol, vecCol)
-      .filter(col("has_baseline"))
-      .agg(coalesce(sum(col("batch_n")), lit(0L)).as("n"),
-        (sum(col("mean_drift") * col("batch_n")) /
-          sum(col("batch_n"))).as("md"),
-        (sum(col("p10_drift") * col("batch_n")) /
-          sum(col("batch_n"))).as("pd"))
-      .first()
-    val batchN = d.getAs[Long]("n")
-    def safe(i: Int): Double = Option(d.get(i))
-      .map(x => Percentiles.roundHalfUp(x.asInstanceOf[Double], 6))
-      .getOrElse(0.0)
-    val meanDrift = safe(1)
-    val p10Drift = safe(2)
-    val recall = ivfSq8RecallProbe(spark, path, corpus, idCol, vecCol,
-        sampleN, k, Seq(nProbe), rerank)
-      .select(col("recall")).first().getDouble(0)
-    val s = ivfSq8IndexStats(spark, path)
-      .agg(max(col("n_files")).as("mf"), max(col("n_rows")).as("mr"),
-        sum(col("n_rows")).as("rows"))
-      .first()
-    val nTombstones = tombstonesOf(spark, genDir(spark, path))
-      .map(_.count()).getOrElse(0L)
-    Seq((batchN, meanDrift, p10Drift, nProbe, k, recall,
-      s.getAs[Long]("rows"), s.getAs[Long]("mr"), s.getAs[Long]("mf"),
-      nTombstones,
-      p10Drift > maxP10Drift || recall < minRecall,
-      s.getAs[Long]("mf") > maxFilesPerCell || nTombstones > 0L))
-      .toDF("batch_n", "w_mean_drift", "w_p10_drift", "n_probe", "k",
-        "recall", "store_rows", "max_cell_rows", "max_cell_files",
-        "n_tombstones", "rebuild_advised", "compact_advised")
-  }
+    * (nProbe, rerank). */
+  def ivfSq8IndexHealthReport(spark: SparkSession, path: String,
+      corpus: DataFrame, batch: DataFrame, idCol: String, vecCol: String,
+      sampleN: Int = 64, k: Int = 10, nProbe: Int = 2, rerank: Int = 128,
+      maxP10Drift: Double = 0.05, minRecall: Double = 0.9,
+      maxFilesPerCell: Int = 16): DataFrame =
+    healthReport(spark, path,
+      ivfDriftReport(spark, path, batch, idCol, vecCol),
+      "mean_drift", "p10_drift", maxP10Drift,
+      ivfSq8RecallProbe(spark, path, corpus, idCol, vecCol, sampleN, k,
+        Seq(nProbe), rerank),
+      nProbe, k, minRecall, maxFilesPerCell)
 
   /** IVF+PQ: the composed large-scale ANN index (coarse cells bound WHICH
     * rows are scored, PQ codes bound the BYTES each scoring touches —
@@ -1737,15 +1686,14 @@ object Similarity {
     // same cell layout as buildIvfIndex (see the note there): one
     // corpus-row exchange shared by the save's write repartition and
     // the serve join's per-cell parallelism
-    val assigned = assignCells(
-      corpus.select(col(idCol).as("neighbor_id"),
-        l2Normalize(col(vecCol)).as("cv")),
-      cents, "neighbor_id", "cv", keep = 1)
-      .select(col("neighbor_id"), col("cell"),
-        pqEncodeCol(col("cv"), cb).as("codes"))
-      .repartition(col("cell"))
-    (cents, cb, assigned)
+    (cents, cb, pqCellRows(assignRows(corpus, idCol, vecCol, cents), cb)
+      .repartition(col("cell")))
   }
+
+  /** Assigned (neighbor_id, cv, cell) rows as the IVF+PQ code rows. */
+  private def pqCellRows(assigned: DataFrame, cb: PqCodebooks): DataFrame =
+    assigned.select(col("neighbor_id"), col("cell"),
+      pqEncodeCol(col("cv"), cb).as("codes"))
 
   /** Persist an IVF+PQ index: centroids + one-row codebook table +
     * the code table partitioned BY CELL (probes read only the probed
@@ -1756,32 +1704,22 @@ object Similarity {
   def saveIvfPqIndex(index: (DataFrame, PqCodebooks, DataFrame),
       path: String, maxRowsPerWriteTask: Long = 0,
       ingestMicros: Long = -1L): Unit =
-    graft.util.Gen.rewrite(index._1.sparkSession, path) { g =>
-      writeIvfPqIndexInto(index, g, maxRowsPerWriteTask)
-      logIngest(index._1.sparkSession, g,
-        graft.util.Gen.read(index._1.sparkSession, s"$g/codes")
-          .select("neighbor_id"), ingestMicros)
-    }
+    saveIndex(index._1.sparkSession, path, IvfPq, ingestMicros)(g =>
+      writeIvfPqIndexInto(index, g, maxRowsPerWriteTask))
 
   private def writeIvfPqIndexInto(
-      index: (DataFrame, PqCodebooks, DataFrame),
-      path: String, maxRowsPerWriteTask: Long): Unit = {
-    val (cents, cb, assigned) = index
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    writeCodebooks(cb, cents.sparkSession, s"$path/codebooks")
-    val codes =
-      if (maxRowsPerWriteTask > 0) assigned.localCheckpoint()
-      else assigned
-    writeCellStore(codes, "overwrite", s"$path/codes",
-      maxRowsPerWriteTask)
+      index: (DataFrame, PqCodebooks, DataFrame), g: String,
+      maxRowsPerWriteTask: Long): Unit = {
+    val (cents, cb, codes) = index
+    writeCodebooks(cb, cents.sparkSession, s"$g/codebooks")
+    writeCellIndex((cents, codes), g, IvfPq, maxRowsPerWriteTask)
   }
 
-  def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
+  def loadIvfPqIndex(spark: SparkSession,
       path: String): (DataFrame, PqCodebooks, DataFrame) = {
     val g = genDir(spark, path)
-    (graft.util.Gen.read(spark, s"$g/centroids"),
-      readCodebooks(spark, s"$g/codebooks"),
-      dropTombstoned(spark, g, graft.util.Gen.read(spark, s"$g/codes")))
+    (Gen.read(spark, s"$g/centroids"),
+      readCodebooks(spark, s"$g/codebooks"), liveStore(spark, g, IvfPq))
   }
 
   /** Incremental maintenance for the persisted IVF+PQ index — the
@@ -1791,49 +1729,43 @@ object Similarity {
     * codebooks (no retrain — the [[ivfPqDriftReport]] quantization-
     * error monitor says when a rebuild is due), then appended to the
     * cell-partitioned code store. Assignment + encode are one map-only
-    * projection (literal argmax + codegen [[graft.expressions.PqEncode]]);
-    * the append touches only the batch's cells. Fenced against a
-    * racing [[compactIvfPqIndex]]. Returns the appended count. */
-  def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, newVecs: DataFrame, idCol: String,
-      vecCol: String, maxRowsPerWriteTask: Long = 0,
-      ingestMicros: Long = -1L): Long = {
-    graft.util.Fs.failIfUnderMaintenance(spark, path,
-      "appendToIvfPqIndex")
-    val g = genDir(spark, path)
-    val cents = graft.util.Gen.read(spark, s"$g/centroids")
-    val cb = readCodebooks(spark, s"$g/codebooks")
-    val assigned = assignCells(
-      newVecs.select(col(idCol).as("neighbor_id"),
-        l2Normalize(col(vecCol)).as("cv")),
-      cents, "neighbor_id", "cv", keep = 1)
-      .select(col("neighbor_id"), col("cell"),
-        pqEncodeCol(col("cv"), cb).as("codes"))
-      .localCheckpoint()
-    writeCellStore(assigned, "append", s"$g/codes",
-      maxRowsPerWriteTask)
-    logIngest(spark, g, assigned.select("neighbor_id"), ingestMicros)
-    assigned.count()
-  }
-
-  /** Compact the appended IVF+PQ code store — same accretion debt and
-    * same zero-outage [[graft.util.Gen.rewrite]] answer as
-    * [[compactIvfIndex]]: every cell rewrites to one file with
-    * tombstoned rows physically dropped, centroids/codebooks/baselines
-    * carried over, served rows untouched. Returns the compacted row
-    * count. */
-  def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, maxRowsPerWriteTask: Long = 0): Long = {
-    graft.util.Gen.rewrite(spark, path) { g =>
-      val old = genDir(spark, path)
-      carryAuxDatasets(spark, old, g, except = "codes")
-      carryIngestLog(spark, old, g)
-      writeCellStore(dropTombstoned(spark, old,
-        graft.util.Gen.read(spark, s"$old/codes")), "overwrite",
-        s"$g/codes", maxRowsPerWriteTask)
+    * projection (literal argmax + codegen [[graft.expressions.PqEncode]]).
+    * Returns the appended count. */
+  def appendToIvfPqIndex(spark: SparkSession, path: String,
+      newVecs: DataFrame, idCol: String, vecCol: String,
+      maxRowsPerWriteTask: Long = 0, ingestMicros: Long = -1L): Long =
+    appendToIndex(spark, path, IvfPq, "appendToIvfPqIndex",
+        maxRowsPerWriteTask, ingestMicros) { g =>
+      val cents = Gen.read(spark, s"$g/centroids")
+      val cb = readCodebooks(spark, s"$g/codebooks")
+      pqCellRows(assignRows(newVecs, idCol, vecCol, cents), cb)
     }
-    graft.util.Gen.read(spark, s"${genDir(spark, path)}/codes").count()
-  }
+
+  /** Compact the appended IVF+PQ code store ([[compactIndex]]): every
+    * cell rewrites to one file with tombstoned rows physically dropped,
+    * centroids/codebooks/baselines carried over, served rows untouched.
+    * Returns the compacted row count. */
+  def compactIvfPqIndex(spark: SparkSession, path: String,
+      maxRowsPerWriteTask: Long = 0): Long =
+    compactIndex(spark, path, IvfPq, maxRowsPerWriteTask)
+
+  /** [[rebuildIvfIndex]] for a persisted IVF+PQ index. The code store
+    * keeps codes, not vectors, so the rebuild REQUIRES the corpus (the
+    * same frame serves rerank from) — retrains centroids AND codebooks
+    * on it (minus the index's tombstones — deleted ids must not
+    * resurrect), re-encodes, and swaps the whole index dir (centroids +
+    * codebooks + code store + error baseline) atomically. Returns the
+    * rebuilt code-row count. */
+  def rebuildIvfPqIndex(spark: SparkSession, path: String,
+      corpus: DataFrame, idCol: String, vecCol: String, nCells: Int = 16,
+      m: Int = 16, k: Int = 16, maxRowsPerWriteTask: Long = 0): Long =
+    rewriteIndex(spark, path, IvfPq, "ann:rebuild") { (old, g) =>
+      val live = liveCorpus(spark, old, corpus, idCol)
+      writeIvfPqIndexInto(buildIvfPqIndex(live, idCol, vecCol, nCells, m,
+        k), g, maxRowsPerWriteTask)
+      writeIvfPqErrBaselineInto(spark, g, live, idCol, vecCol)
+      carryIngestLog(spark, old, g)
+    }
 
   /** Per-row PQ quantization error: `1 − ⟨v, recon(v)⟩` via the ADC
     * identity (the LUT of v against its own code word sums exactly
@@ -1842,6 +1774,17 @@ object Similarity {
     * were trained on. All three kernels are codegen'd natives. */
   private def pqErrCol(cv: Column, cb: PqCodebooks): Column =
     lit(1.0) - pqAdcCol(pqEncodeCol(cv, cb), pqLutCol(cv, cb), cb)
+
+  /** (cell, err) rows of `vecs` under generation `g`'s frozen centroids
+    * and codebooks — both sides of the quantization-error drift
+    * comparison. */
+  private def pqErrRows(spark: SparkSession, g: String, vecs: DataFrame,
+      idCol: String, vecCol: String): DataFrame = {
+    val cents = Gen.read(spark, s"$g/centroids")
+    val cb = readCodebooks(spark, s"$g/codebooks")
+    assignRows(vecs, idCol, vecCol, cents)
+      .select(col("cell"), pqErrCol(col("cv"), cb).as("err"))
+  }
 
   /** Write the FROZEN build-time quantization-error baseline for a
     * persisted IVF+PQ index: per cell, (base_n, mean, exact-p90 of the
@@ -1855,35 +1798,24 @@ object Similarity {
     * error grows with drift, so the TAIL of interest is the high end.
     * Corpus-side p90 routes through the bounded-memory exact selection
     * for the same hot-cell-OOM reason as [[cellBaseline]]. */
-  def writeIvfPqErrBaseline(spark: org.apache.spark.sql.SparkSession,
-      path: String, corpus: DataFrame, idCol: String,
-      vecCol: String): Unit = {
+  def writeIvfPqErrBaseline(spark: SparkSession, path: String,
+      corpus: DataFrame, idCol: String, vecCol: String): Unit = {
     // a writer into the CURRENT generation — fenced like an append
-    graft.util.Fs.failIfUnderMaintenance(spark, path,
-      "writeIvfPqErrBaseline")
+    Fs.failIfUnderMaintenance(spark, path, "writeIvfPqErrBaseline")
     writeIvfPqErrBaselineInto(spark, genDir(spark, path), corpus,
       idCol, vecCol)
   }
 
-  private def writeIvfPqErrBaselineInto(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, corpus: DataFrame, idCol: String,
-      vecCol: String): Unit = {
-    val cents = graft.util.Gen.read(spark, s"$path/centroids")
-    val cb = readCodebooks(spark, s"$path/codebooks")
-    val err = assignCells(
-      corpus.select(col(idCol).as("bid"),
-        l2Normalize(col(vecCol)).as("bv")),
-      cents, "bid", "bv", keep = 1)
-      .select(col("cell"), pqErrCol(col("bv"), cb).as("err"))
+  private def writeIvfPqErrBaselineInto(spark: SparkSession, g: String,
+      corpus: DataFrame, idCol: String, vecCol: String): Unit = {
+    val err = pqErrRows(spark, g, corpus, idCol, vecCol)
     err.groupBy(col("cell"))
       .agg(count(lit(1)).as("base_n"),
         round(avg(col("err")), 6).as("base_mean_err"))
       .join(graft.operators.Percentiles.groupedRangeExact(err,
         Seq("cell"), "err", Seq((0.90, "base_p90_err")), roundTo = 6),
         Seq("cell"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/err_baseline")
+      .coalesce(1).write.mode("overwrite").parquet(s"$g/err_baseline")
   }
 
   /** Quantization-error drift report for a persisted IVF+PQ index —
@@ -1898,9 +1830,8 @@ object Similarity {
     * tolerance"). Cells without build-corpus rows carry
     * has_baseline = false and NULL drifts — filter on the flag before
     * weighting, exactly like the IVF report. Cost ∝ batch. */
-  def ivfPqDriftReport(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String,
-      vecCol: String): DataFrame = {
+  def ivfPqDriftReport(spark: SparkSession, path: String,
+      batch: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val g = genDir(spark, path)
     val base = new org.apache.hadoop.fs.Path(s"$g/err_baseline")
     if (!base.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1911,20 +1842,13 @@ object Similarity {
           "idCol, vecCol) right after saveIvfPqIndex — sound only " +
           "while no drifted appends have landed; if they have, rebuild " +
           "+ re-save the index.")
-    val cents = graft.util.Gen.read(spark, s"$g/centroids")
-    val cb = readCodebooks(spark, s"$g/codebooks")
-    val err = assignCells(
-      batch.select(col(idCol).as("bid"),
-        l2Normalize(col(vecCol)).as("bv")),
-      cents, "bid", "bv", keep = 1)
-      .select(col("cell"), pqErrCol(col("bv"), cb).as("err"))
-    val bp = err.groupBy(col("cell"))
+    val bp = pqErrRows(spark, g, batch, idCol, vecCol)
+      .groupBy(col("cell"))
       .agg(count(lit(1)).as("batch_n"),
         round(avg(col("err")), 6).as("batch_mean_err"),
         round(org.apache.spark.sql.functions
           .expr("percentile(err, 0.90)"), 6).as("batch_p90_err"))
-    bp.join(graft.util.Gen.read(spark, s"$g/err_baseline"), Seq("cell"),
-        "left")
+    bp.join(Gen.read(spark, s"$g/err_baseline"), Seq("cell"), "left")
       .select(col("cell"),
         coalesce(col("base_n"), lit(0L)).as("base_n"),
         col("base_mean_err").isNotNull.as("has_baseline"),
@@ -1936,213 +1860,57 @@ object Similarity {
           .as("p90_err_drift"))
   }
 
-  /** Recall probe for a persisted IVF index — drift is a proxy; the
-    * serving SLA is RECALL, and this measures it directly on the live
-    * store: a deterministic hash-sampled query set drawn from the
-    * store itself is served at each `nProbe` and scored against the
-    * full-probe ground truth on the same index (full probe ≡ exact
-    * brute force over the store — the equivalence t52's oracle pins),
-    * yielding recall@k per nProbe. Emits (n_probe, sample_n, k, hits,
-    * truth_n, recall). Deterministic end to end (hash-ordered sample,
-    * tie-broken serve), so runs are comparable across days — pair it
-    * with [[ivfDriftReport]] to calibrate "your tolerance" in measured
-    * recall instead of cosine points. Cost: sampleN queries × (1 +
-    * len(nProbes)) serves, each partition-pruned except the full-probe
-    * truth pass. */
-  def ivfRecallProbe(spark: org.apache.spark.sql.SparkSession,
-      path: String, sampleN: Int = 64, k: Int = 10,
-      nProbes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
-    import spark.implicits._
-    val idx = loadIvfIndex(spark, path)
-    val nCents = idx._1.count().toInt
-    val queries = idx._2
-      .select(col("neighbor_id").as("vid"), col("cv"))
-      .orderBy(xxhash64(col("neighbor_id")), col("neighbor_id"))
-      .limit(sampleN).localCheckpoint()
-    val truth = ivfTopKFromIndex(idx, queries, "vid", "cv", k,
-        nProbe = nCents)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint()
-    val truthN = truth.count()
-    nProbes.distinct.sorted.map { p =>
-      val hits = ivfTopKFromIndex(idx, queries, "vid", "cv", k,
-          nProbe = p)
-        .select(col("query_id"), col("neighbor_id"))
-        .join(truth, Seq("query_id", "neighbor_id"), "left_semi")
-        .count()
-      (p, sampleN, k, hits, truthN,
-        Percentiles.roundHalfUp(
-          hits.toDouble / math.max(truthN, 1L), 6))
-    }.toDF("n_probe", "sample_n", "k", "hits", "truth_n", "recall")
-  }
-
-  /** The page-on-this operator: ONE per-index health row joining the
-    * three signals an operator otherwise reads separately — the drift
-    * report ([[ivfDriftReport]] against the frozen baseline, weighted
-    * by batch_n over has_baseline cells, exactly the filtering the
-    * drift scaladoc mandates), the measured recall SLA
-    * ([[ivfRecallProbe]] at the serving nProbe), and the store layout
-    * ([[ivfIndexStats]] + tombstone count) — with the decisions
-    * derived from CALLER thresholds: `rebuild_advised` when the
-    * weighted p10 drift exceeds `maxP10Drift` OR recall@k falls below
-    * `minRecall` (the r14 calibration: drift 0.00005 ⇔ recall 0.9625
-    * stays quiet, planted drift 0.663 ⇔ recall 0.75 pages — both
-    * spec-pinned); `compact_advised` when any cell accretes more than
-    * `maxFilesPerCell` files or tombstones await physical drop. Pure
-    * composition of three oracled/spec-pinned kernels; cost = one
-    * ∝-batch drift pass + the probe's sampled serves + a zero-data-byte
-    * layout scan. */
-  def ivfIndexHealthReport(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String, vecCol: String,
-      sampleN: Int = 64, k: Int = 10, nProbe: Int = 2,
-      maxP10Drift: Double = 0.05, minRecall: Double = 0.9,
-      maxFilesPerCell: Int = 16): DataFrame = {
-    import spark.implicits._
-    val d = ivfDriftReport(spark, path, batch, idCol, vecCol)
-      .filter(col("has_baseline"))
-      .agg(coalesce(sum(col("batch_n")), lit(0L)).as("n"),
-        (sum(col("mean_drift") * col("batch_n")) /
-          sum(col("batch_n"))).as("md"),
-        (sum(col("p10_drift") * col("batch_n")) /
-          sum(col("batch_n"))).as("pd"))
-      .first()
-    val batchN = d.getAs[Long]("n")
-    // a batch that lands only in no-baseline cells has NO measurable
-    // drift (batchN = 0) — report zero drift and let recall carry the
-    // decision rather than NPE on the null aggregate
-    def safe(i: Int): Double = Option(d.get(i))
-      .map(x => Percentiles.roundHalfUp(x.asInstanceOf[Double], 6))
-      .getOrElse(0.0)
-    val meanDrift = safe(1)
-    val p10Drift = safe(2)
-    val recall = ivfRecallProbe(spark, path, sampleN, k, Seq(nProbe))
-      .select(col("recall")).first().getDouble(0)
-    val s = ivfIndexStats(spark, path)
-      .agg(max(col("n_files")).as("mf"), max(col("n_rows")).as("mr"),
-        sum(col("n_rows")).as("rows"))
-      .first()
-    val nTombstones = tombstonesOf(spark, genDir(spark, path))
-      .map(_.count()).getOrElse(0L)
-    Seq((batchN, meanDrift, p10Drift, nProbe, k, recall,
-      s.getAs[Long]("rows"), s.getAs[Long]("mr"), s.getAs[Long]("mf"),
-      nTombstones,
-      p10Drift > maxP10Drift || recall < minRecall,
-      s.getAs[Long]("mf") > maxFilesPerCell || nTombstones > 0L))
-      .toDF("batch_n", "w_mean_drift", "w_p10_drift", "n_probe", "k",
-        "recall", "store_rows", "max_cell_rows", "max_cell_files",
-        "n_tombstones", "rebuild_advised", "compact_advised")
-  }
-
   /** [[ivfIndexHealthReport]] for a persisted IVF+PQ index: the drift
     * axis is the QUANTIZATION-ERROR monitor ([[ivfPqDriftReport]] —
     * error rises with drift, so the weighted `w_p90_err_drift` pages
     * when it EXCEEDS `maxP90ErrDrift`), recall comes from
-    * [[ivfPqRecallProbe]] at the serving (nProbe, rerank), layout from
-    * [[ivfPqIndexStats]] + the tombstone census. Needs the corpus (the
-    * frame serves rerank from), like every PQ-side operator. */
-  def ivfPqIndexHealthReport(spark: org.apache.spark.sql.SparkSession,
-      path: String, corpus: DataFrame, batch: DataFrame, idCol: String,
-      vecCol: String, sampleN: Int = 64, k: Int = 10, nProbe: Int = 2,
-      rerank: Int = 128, maxP90ErrDrift: Double = 0.05,
-      minRecall: Double = 0.9, maxFilesPerCell: Int = 16): DataFrame = {
-    import spark.implicits._
-    val d = ivfPqDriftReport(spark, path, batch, idCol, vecCol)
-      .filter(col("has_baseline"))
-      .agg(coalesce(sum(col("batch_n")), lit(0L)).as("n"),
-        (sum(col("mean_err_drift") * col("batch_n")) /
-          sum(col("batch_n"))).as("md"),
-        (sum(col("p90_err_drift") * col("batch_n")) /
-          sum(col("batch_n"))).as("pd"))
-      .first()
-    val batchN = d.getAs[Long]("n")
-    def safe(i: Int): Double = Option(d.get(i))
-      .map(x => Percentiles.roundHalfUp(x.asInstanceOf[Double], 6))
-      .getOrElse(0.0)
-    val meanErrDrift = safe(1)
-    val p90ErrDrift = safe(2)
-    val recall = ivfPqRecallProbe(spark, path, corpus, idCol, vecCol,
-        sampleN, k, Seq(nProbe), rerank)
-      .select(col("recall")).first().getDouble(0)
-    val s = ivfPqIndexStats(spark, path)
-      .agg(max(col("n_files")).as("mf"), max(col("n_rows")).as("mr"),
-        sum(col("n_rows")).as("rows"))
-      .first()
-    val nTombstones = tombstonesOf(spark, genDir(spark, path))
-      .map(_.count()).getOrElse(0L)
-    Seq((batchN, meanErrDrift, p90ErrDrift, nProbe, k, recall,
-      s.getAs[Long]("rows"), s.getAs[Long]("mr"), s.getAs[Long]("mf"),
-      nTombstones,
-      p90ErrDrift > maxP90ErrDrift || recall < minRecall,
-      s.getAs[Long]("mf") > maxFilesPerCell || nTombstones > 0L))
-      .toDF("batch_n", "w_mean_err_drift", "w_p90_err_drift", "n_probe",
-        "k", "recall", "store_rows", "max_cell_rows", "max_cell_files",
-        "n_tombstones", "rebuild_advised", "compact_advised")
-  }
+    * [[ivfPqRecallProbe]] at the serving (nProbe, rerank). Needs the
+    * corpus (the frame serves rerank from), like every PQ-side
+    * operator. */
+  def ivfPqIndexHealthReport(spark: SparkSession, path: String,
+      corpus: DataFrame, batch: DataFrame, idCol: String, vecCol: String,
+      sampleN: Int = 64, k: Int = 10, nProbe: Int = 2, rerank: Int = 128,
+      maxP90ErrDrift: Double = 0.05, minRecall: Double = 0.9,
+      maxFilesPerCell: Int = 16): DataFrame =
+    healthReport(spark, path,
+      ivfPqDriftReport(spark, path, batch, idCol, vecCol),
+      "mean_err_drift", "p90_err_drift", maxP90ErrDrift,
+      ivfPqRecallProbe(spark, path, corpus, idCol, vecCol, sampleN, k,
+        Seq(nProbe), rerank),
+      nProbe, k, minRecall, maxFilesPerCell)
 
   /** [[ivfRecallProbe]] for a persisted IVF+PQ index. The code store
     * keeps no raw vectors, so the probe samples its deterministic query
     * set from the CALLER's corpus (the same frame the serve reranks
-    * against) and measures recall@k per nProbe against the full-probe
-    * serve at the SAME `rerank` — isolating the nProbe axis, which is
-    * the knob the drift monitor calibrates (rerank sensitivity is the
-    * separate, spec-pinned `rerank ≥ corpus ≡ brute force` contract).
-    * Deterministic end to end, like the IVF probe. */
-  def ivfPqRecallProbe(spark: org.apache.spark.sql.SparkSession,
-      path: String, corpus: DataFrame, idCol: String, vecCol: String,
-      sampleN: Int = 64, k: Int = 10, nProbes: Seq[Int] = Seq(1, 2, 4, 8),
+    * against; queries keep the corpus schema, because the serve reads
+    * idCol/vecCol from both) and measures recall@k per nProbe against
+    * the full-probe serve at the SAME `rerank` — isolating the nProbe
+    * axis, which is the knob the drift monitor calibrates (rerank
+    * sensitivity is the separate, spec-pinned `rerank ≥ corpus ≡ brute
+    * force` contract). */
+  def ivfPqRecallProbe(spark: SparkSession, path: String,
+      corpus: DataFrame, idCol: String, vecCol: String, sampleN: Int = 64,
+      k: Int = 10, nProbes: Seq[Int] = Seq(1, 2, 4, 8),
       rerank: Int = 128): DataFrame = {
-    import spark.implicits._
     val idx = loadIvfPqIndex(spark, path)
-    val nCells = idx._1.count().toInt
-    // queries keep the corpus schema: the PQ serve reads idCol/vecCol
-    // from BOTH frames (corpus reranks by the same names)
-    val queries = corpus
-      .orderBy(xxhash64(col(idCol)), col(idCol))
-      .limit(sampleN).localCheckpoint()
-    val truth = ivfPqTopKFromIndex(idx, corpus, queries, idCol, vecCol,
-        k, nProbe = nCells, rerank = rerank)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint()
-    val truthN = truth.count()
-    nProbes.distinct.sorted.map { p =>
-      val hits = ivfPqTopKFromIndex(idx, corpus, queries, idCol, vecCol,
-          k, nProbe = p, rerank = rerank)
-        .select(col("query_id"), col("neighbor_id"))
-        .join(truth, Seq("query_id", "neighbor_id"), "left_semi")
-        .count()
-      (p, sampleN, k, hits, truthN,
-        Percentiles.roundHalfUp(
-          hits.toDouble / math.max(truthN, 1L), 6))
-    }.toDF("n_probe", "sample_n", "k", "hits", "truth_n", "recall")
+    recallProbe(spark, idx._1, corpus, idCol, sampleN, k, nProbes)(
+      (q, p) => ivfPqTopKFromIndex(idx, corpus, q, idCol, vecCol, k,
+        nProbe = p, rerank = rerank))
   }
 
+  /** IVF+PQ top-k serve ([[rerankTopK]]): queries argmax into their
+    * nProbe cells and broadcast with a per-query LUT; candidates are
+    * the cell EQUI-join against the (possibly partition-pruned) code
+    * store, scored by ADC and reranked by exact cosine. */
   def ivfPqTopKFromIndex(index: (DataFrame, PqCodebooks, DataFrame),
       corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nProbe: Int = 4,
       rerank: Int = 128): DataFrame = {
-    val (cents, cb, assigned) = index
-    val q = broadcast(
-      assignCells(queries.select(col(idCol).as("query_id"),
-          l2Normalize(col(vecCol)).as("qv")),
-        cents, "query_id", "qv", keep = nProbe)
-        .withColumn("lut", pqLutCol(col("qv"), cb)))
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("neighbor_id"))
-    val cand = assigned.join(q, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc", pqAdcCol(col("codes"), col("lut"), cb))
-      .withColumn("adc_rank",
-        Ranks.cutRank(cents.sparkSession, wAdc, rerank))
-      .filter(col("adc_rank") <= rerank)
-      .select(col("query_id"), col("qv"), col("neighbor_id"))
-    val vecs = corpus.select(col(idCol).as("neighbor_id"),
-      l2Normalize(col(vecCol)).as("cv"))
-    val wCos = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    cand.join(vecs, Seq("neighbor_id"))
-      .withColumn("cos_sim", round(dotCol(col("qv"), col("cv")), 6))
-      .withColumn("rank", Ranks.cutRank(cents.sparkSession, wCos, k))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cos_sim"))
+    val (cents, cb, codes) = index
+    rerankTopK(codes,
+      broadcast(withLut(probeRows(queries, idCol, vecCol, cents, nProbe),
+        cb)),
+      pqScore(cb), corpus, idCol, vecCol, k, rerank)
   }
 
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
@@ -2501,21 +2269,11 @@ object Similarity {
         when(dotCol(v, typedLit(planeVecs(i).toSeq)) >= 0, lit(1L << i))
           .otherwise(lit(0L)): Column
       }.reduce(_ + _)
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      l2Normalize(col(vecCol)).as("qv"))
+    val q = broadcast(queryRows(queries, idCol, vecCol)
       .withColumn("bucket", bucket(col("qv"))))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      l2Normalize(col(vecCol)).as("cv"))
+    val c = vectorRows(corpus, idCol, vecCol)
       .withColumn("bucket", bucket(col("cv")))
-    val scored = c.join(q, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim", round(dotCol(col("qv"), col("cv")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", Ranks.cutRank(corpus.sparkSession, w, k))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cos_sim"))
+    cosineTopK(c.join(q, Seq("bucket"))
+      .filter(col("query_id") =!= col("neighbor_id")), k)
   }
 }

@@ -11,11 +11,10 @@ import org.apache.spark.sql.functions._
   * child datasets and, for the flat ledgers, one parquet schema
   * footer — no data bytes are read.
   *
-  *   - `centroids/` + `assigned/`            → `ivf`
-  *   - `centroids/` + `codebooks/` + `codes/`→ `ivf_pq`
-  *   - `centroids/` + `codes/`               → `ivf_sq8`
-  *   - `codebooks/` + `codes/`               → `pq`
-  *   - `codes/` alone                        → `sq8`
+  *   - the five ANN index families (`ivf`, `ivf_pq`, `ivf_sq8`, `pq`,
+  *     `sq8`) by [[Similarity.IndexLayouts]], the one table of their
+  *     row store and auxiliary datasets; a directory holding some of
+  *     those datasets but no complete layout is `unknown`
   *   - `epoch-NNNNNNNNNNNN/` child dirs      → `admit_epochs`
   *     (a streamed-admit epoch root — [[Dedup.admitEpochHealthReport]])
   *   - flat rows with `hs` + `mh*` signatures → `neardup_ledger`
@@ -42,26 +41,22 @@ object StoreHealth {
     val g = graft.util.Gen.resolve(spark, path)
     val fs = new org.apache.hadoop.fs.Path(g)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def has(d: String) =
-      fs.exists(new org.apache.hadoop.fs.Path(g, d))
-    if (has("centroids")) {
-      if (has("codebooks") && has("codes")) "ivf_pq"
-      else if (has("assigned")) "ivf"
-      else if (has("codes")) "ivf_sq8"
-      else "unknown"
-    } else if (has("codebooks") && has("codes")) "pq"
-    else if (has("codes")) "sq8"
-    else if (fs.listStatus(new org.apache.hadoop.fs.Path(g)).exists(st =>
-      st.isDirectory && st.getPath.getName.matches("epoch-\\d+")))
-      "admit_epochs" // a streamed-admit epoch root (never versioned)
-    else {
-      // flat dataset: one schema footer decides among the ledgers
-      val cols = graft.util.Gen.read(spark, g).columns.toSet
-      if (cols.contains("hs") && cols.contains("mh0")) "neardup_ledger"
-      else if (cols.contains("band") && cols.contains("kh"))
-        "neardup_bands"
-      else if (cols.contains("text_md5")) "dedup_ledger"
-      else "unknown"
+    Similarity.layoutOf(spark, g).map(_.kind).getOrElse {
+      if (Similarity.IndexLayouts.flatMap(_.aux).distinct
+          .exists(d => fs.exists(new org.apache.hadoop.fs.Path(g, d))))
+        "unknown"
+      else if (fs.listStatus(new org.apache.hadoop.fs.Path(g)).exists(st =>
+        st.isDirectory && st.getPath.getName.matches("epoch-\\d+")))
+        "admit_epochs" // a streamed-admit epoch root (never versioned)
+      else {
+        // flat dataset: one schema footer decides among the ledgers
+        val cols = graft.util.Gen.read(spark, g).columns.toSet
+        if (cols.contains("hs") && cols.contains("mh0")) "neardup_ledger"
+        else if (cols.contains("band") && cols.contains("kh"))
+          "neardup_bands"
+        else if (cols.contains("text_md5")) "dedup_ledger"
+        else "unknown"
+      }
     }
   }
 
@@ -72,11 +67,8 @@ object StoreHealth {
   def storeHealthReport(spark: SparkSession, path: String): DataFrame = {
     val kind = detectStoreKind(spark, path)
     val report = kind match {
-      case "ivf" => Similarity.ivfIndexStats(spark, path)
-      case "ivf_pq" => Similarity.ivfPqIndexStats(spark, path)
-      case "ivf_sq8" => Similarity.ivfSq8IndexStats(spark, path)
-      case "pq" => Similarity.pqIndexStats(spark, path)
-      case "sq8" => Similarity.sq8IndexStats(spark, path)
+      case k if Similarity.IndexLayouts.exists(_.kind == k) =>
+        Similarity.indexStats(spark, path)
       case "dedup_ledger" => Dedup.dedupLedgerStats(spark, path)
       case "admit_epochs" => Dedup.admitEpochHealthReport(spark, path)
       case "neardup_ledger" => Dedup.nearDupLedgerHealthReport(spark, path)

@@ -244,7 +244,7 @@ object IvfLifecycleSmoke {
         val sp1 = time("PQ serve (64 queries, nProbe=4) post-compaction") {
           servePq()
         }
-        val maxF = Similarity.ivfPqIndexStats(spark, dirPq)
+        val maxF = Similarity.indexStats(spark, dirPq)
           .agg(org.apache.spark.sql.functions.max(col("n_files")))
           .head().getLong(0)
         println(s"  PQ code store after compaction: max files/cell " +
@@ -323,8 +323,8 @@ object IvfLifecycleSmoke {
       // (one fenced append), serve excludes them instantly, the next
       // compaction drops them physically and clears the tombstones
       val okDelete = locally {
-        val nDel = time("deleteFromIvfIndex (10k ids vs 300k store)") {
-          Similarity.deleteFromIvfIndex(spark, dir,
+        val nDel = time("deleteFromIndex (10k ids vs 300k store)") {
+          Similarity.deleteFromIndex(spark, dir,
             vecs(0, nBase + nBatches * batchRows)
               .filter(col("vec_id") % 30 === 7).select("vec_id"),
             "vec_id")
@@ -405,7 +405,7 @@ object IvfLifecycleSmoke {
           Similarity.saveIvfIndex(cached, dirS,
             maxRowsPerWriteTask = 65536)
         }
-        val st = Similarity.ivfIndexStats(spark, dirS)
+        val st = Similarity.indexStats(spark, dirS)
           .collect().map(r => (r.getAs[Long]("n_rows"),
             r.getAs[Long]("n_files"))).toSeq
         val (hotN, hotF) = st.maxBy(_._1)

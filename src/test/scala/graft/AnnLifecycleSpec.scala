@@ -21,10 +21,8 @@ class AnnLifecycleSpec extends SparkTestBase {
       cellPartitioned: Boolean,
       save: (DataFrame, String) => Unit,
       append: (DataFrame, String) => Long,
-      delete: (DataFrame, String) => Long,
       compact: String => Long,
       loadIds: String => Set[Long],
-      stats: String => DataFrame,
       statsCols: Seq[String])
 
   private val SavedAt = 1000L
@@ -43,50 +41,40 @@ class AnnLifecycleSpec extends SparkTestBase {
         ingestMicros = SavedAt),
       (b, p) => Similarity.appendToIvfIndex(spark, p, b, "vec_id",
         "embedding", ingestMicros = AppendedAt),
-      (d, p) => Similarity.deleteFromIvfIndex(spark, p, d, "vec_id"),
       p => Similarity.compactIvfIndex(spark, p),
-      p => ids(Similarity.loadIvfIndex(spark, p)._2),
-      p => Similarity.ivfIndexStats(spark, p), cellStats),
+      p => ids(Similarity.loadIvfIndex(spark, p)._2), cellStats),
     Family("pq", "codes", cellPartitioned = false,
       (c, p) => Similarity.savePqIndex(
         Similarity.buildPqIndex(c, "vec_id", "embedding"), p,
         ingestMicros = SavedAt),
       (b, p) => Similarity.appendToPqIndex(spark, p, b, "vec_id",
         "embedding", ingestMicros = AppendedAt),
-      (d, p) => Similarity.deleteFromPqIndex(spark, p, d, "vec_id"),
       p => Similarity.compactPqIndex(spark, p),
-      p => ids(Similarity.loadPqIndex(spark, p)._2),
-      p => Similarity.pqIndexStats(spark, p), flatStats),
+      p => ids(Similarity.loadPqIndex(spark, p)._2), flatStats),
     Family("sq8", "codes", cellPartitioned = false,
       (c, p) => Similarity.saveSq8Index(
         Similarity.buildSq8Index(c, "vec_id", "embedding"), p,
         ingestMicros = SavedAt),
       (b, p) => Similarity.appendToSq8Index(spark, p, b, "vec_id",
         "embedding", ingestMicros = AppendedAt),
-      (d, p) => Similarity.deleteFromSq8Index(spark, p, d, "vec_id"),
       p => Similarity.compactSq8Index(spark, p),
-      p => ids(Similarity.loadSq8Index(spark, p)),
-      p => Similarity.sq8IndexStats(spark, p), flatStats),
+      p => ids(Similarity.loadSq8Index(spark, p)), flatStats),
     Family("ivf_pq", "codes", cellPartitioned = true,
       (c, p) => Similarity.saveIvfPqIndex(
         Similarity.buildIvfPqIndex(c, "vec_id", "embedding"), p,
         ingestMicros = SavedAt),
       (b, p) => Similarity.appendToIvfPqIndex(spark, p, b, "vec_id",
         "embedding", ingestMicros = AppendedAt),
-      (d, p) => Similarity.deleteFromIvfPqIndex(spark, p, d, "vec_id"),
       p => Similarity.compactIvfPqIndex(spark, p),
-      p => ids(Similarity.loadIvfPqIndex(spark, p)._3),
-      p => Similarity.ivfPqIndexStats(spark, p), cellStats),
+      p => ids(Similarity.loadIvfPqIndex(spark, p)._3), cellStats),
     Family("ivf_sq8", "codes", cellPartitioned = true,
       (c, p) => Similarity.saveIvfSq8Index(
         Similarity.buildIvfSq8Index(c, "vec_id", "embedding"), p,
         ingestMicros = SavedAt),
       (b, p) => Similarity.appendToIvfSq8Index(spark, p, b, "vec_id",
         "embedding", ingestMicros = AppendedAt),
-      (d, p) => Similarity.deleteFromIvfSq8Index(spark, p, d, "vec_id"),
       p => Similarity.compactIvfSq8Index(spark, p),
-      p => ids(Similarity.loadIvfSq8Index(spark, p)._2),
-      p => Similarity.ivfSq8IndexStats(spark, p), cellStats))
+      p => ids(Similarity.loadIvfSq8Index(spark, p)._2), cellStats))
 
   test("five-family lifecycle: save → append → delete → expire → " +
       "compact → load leaves the same live ids, no tombstones, the " +
@@ -110,7 +98,8 @@ class AnnLifecycleSpec extends SparkTestBase {
       def gen = graft.util.Gen.resolve(spark, path)
       f.save(saved, path)
       assert(f.append(appended, path) === appended.count(), f.kind)
-      assert(f.delete(deleted, path) === deadIds.size.toLong, f.kind)
+      assert(Similarity.deleteFromIndex(spark, path, deleted, "vec_id")
+        === deadIds.size.toLong, f.kind)
       assert(Similarity.expireFromIndex(spark, path,
         (SavedAt + AppendedAt) / 2) === all.count(_ % 3 != 0).toLong,
         f.kind)
@@ -135,7 +124,7 @@ class AnnLifecycleSpec extends SparkTestBase {
             s"${f.kind}: files in ${c.getPath.getName}")
         }
       }
-      val st = f.stats(path)
+      val st = Similarity.indexStats(spark, path)
       assert(st.columns.toSeq === f.statsCols, f.kind)
       assert(st.agg(sum(col("n_rows"))).head().getLong(0) ===
         live.size.toLong, s"${f.kind}: stats rows")

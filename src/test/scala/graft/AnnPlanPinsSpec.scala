@@ -103,17 +103,17 @@ class AnnPlanPinsSpec extends SparkTestBase {
       // the layout-health scan must not read vector bytes: cell is a
       // partition column and the file name is metadata, so the parquet
       // ReadSchema prunes to the empty struct
-      val sp = Similarity.ivfIndexStats(spark, path)
+      val sp = Similarity.indexStats(spark, path)
         .queryExecution.executedPlan.toString
       assert(sp.contains("ReadSchema: struct<>"),
-        "ivfIndexStats scan prunes every data column " +
+        "indexStats scan prunes every data column " +
           "(ReadSchema: struct<>)")
       // deletion must not cost the serve its partition pruning: the
       // tombstone exclusion folds into a FILTER on the scan (not an
       // anti-join between the scan and the cell join, which would
       // block DPP's scan extraction) — serve a deleted index and
       // assert the dynamic pruning survives alongside the filter
-      Similarity.deleteFromIvfIndex(spark, path,
+      Similarity.deleteFromIndex(spark, path,
         e.filter(col("vec_id") >= 3 && col("vec_id") < 8)
           .select("vec_id"), "vec_id")
       val servedDel = Similarity.ivfTopKFromIndex(

@@ -227,7 +227,7 @@ class PipelineOpsSpec extends SparkTestBase {
         s"${graft.util.Gen.resolve(spark, dir)}/assigned").count()
       // the observability kernel agrees with the java.io ground truth
       def stats(): Map[String, (Long, Long)] =
-        Similarity.ivfIndexStats(spark, dir).collect()
+        Similarity.indexStats(spark, dir).collect()
           .map(r => s"cell=${r.get(0)}" ->
             (r.getAs[Long]("n_rows"), r.getAs[Long]("n_files"))).toMap
       val sBefore = stats()
@@ -411,7 +411,7 @@ class PipelineOpsSpec extends SparkTestBase {
       Similarity.saveIvfIndex(built, plain)
       Similarity.saveIvfIndex(built, salted, maxRowsPerWriteTask = 200)
       def stats(p: String): Map[String, (Long, Long)] =
-        Similarity.ivfIndexStats(spark, p).collect()
+        Similarity.indexStats(spark, p).collect()
           .map(r => r.get(0).toString ->
             (r.getAs[Long]("n_rows"), r.getAs[Long]("n_files"))).toMap
       val sp = stats(plain)
@@ -1904,7 +1904,7 @@ class PipelineOpsSpec extends SparkTestBase {
       .parquet(graft.util.Gen.resolve(spark, dir))
       .select("text_md5")
       .collect().map(_.getString(0)).toSet
-    assert(Dedup.compactDedupLedger(spark, dir, targetFiles = 2)
+    assert(Dedup.compactDedupLedger(spark, dir)
       === digests.size)
     // one digest-sorted file per touched bucket post-compaction
     assert(files().groupBy(_.getParent).values.forall(_.size == 1))
@@ -1933,7 +1933,7 @@ class PipelineOpsSpec extends SparkTestBase {
       Dedup.ledgerAdmit(spark, dir,
         Seq((99L, "fenced")).toDF("doc_id", "text"), "doc_id", "text")
     }
-    assert(Dedup.compactDedupLedger(spark, dir, targetFiles = 2) === n)
+    assert(Dedup.compactDedupLedger(spark, dir) === n)
     assert(!fs.exists(orphan) && !fs.exists(marker))
     } finally graft.util.Fs.deleteRecursively(root)
   }
@@ -2640,7 +2640,7 @@ class PipelineOpsSpec extends SparkTestBase {
       val dead = before.select(col("neighbor_id")).distinct()
         .localCheckpoint()
       val deadIds = dead.collect().map(_.getLong(0)).toSet
-      assert(Similarity.deleteFromIvfIndex(spark, ivf, dead,
+      assert(Similarity.deleteFromIndex(spark, ivf, dead,
         "neighbor_id") === deadIds.size.toLong)
       val served = Similarity.ivfTopKFromIndex(
         Similarity.loadIvfIndex(spark, ivf), queries, "vec_id",
@@ -2693,7 +2693,7 @@ class PipelineOpsSpec extends SparkTestBase {
         graft.util.Fs.maintenanceMarkerPath(ivf))
       fs.create(marker, true).close()
       intercept[IllegalStateException] {
-        Similarity.deleteFromIvfIndex(spark, ivf,
+        Similarity.deleteFromIndex(spark, ivf,
           emb.limit(1).select("vec_id"), "vec_id")
       }
       fs.delete(marker, false)
@@ -2701,7 +2701,7 @@ class PipelineOpsSpec extends SparkTestBase {
       // generation holds neither the rows nor a tombstones dir
       val survivor = served.limit(1).select("neighbor_id")
         .first().getLong(0)
-      Similarity.deleteFromIvfIndex(spark, ivf,
+      Similarity.deleteFromIndex(spark, ivf,
         Seq(survivor).toDF("vec_id"), "vec_id")
       val liveRows = rawStore().count() - 1
       assert(Similarity.rebuildIvfIndex(spark, ivf) === liveRows)
@@ -2711,7 +2711,7 @@ class PipelineOpsSpec extends SparkTestBase {
       val pq = s"$root/ivfpq"
       Similarity.saveIvfPqIndex(
         Similarity.buildIvfPqIndex(emb, "vec_id", "embedding"), pq)
-      Similarity.deleteFromIvfPqIndex(spark, pq, dead, "neighbor_id")
+      Similarity.deleteFromIndex(spark, pq, dead, "neighbor_id")
       val pqServed = Similarity.ivfPqTopKFromIndex(
         Similarity.loadIvfPqIndex(spark, pq), emb, queries, "vec_id",
         "embedding", k = 5, nProbe = 16, rerank = 1000)
@@ -2728,7 +2728,7 @@ class PipelineOpsSpec extends SparkTestBase {
       assert(Similarity.appendToPqIndex(spark, ppq,
         emb.filter(col("vec_id") >= 400), "vec_id", "embedding")
         === emb.filter(col("vec_id") >= 400).count())
-      Similarity.deleteFromPqIndex(spark, ppq, dead, "neighbor_id")
+      Similarity.deleteFromIndex(spark, ppq, dead, "neighbor_id")
       val ppqServed = Similarity.pqTopKFromIndex(
         Similarity.loadPqIndex(spark, ppq), emb, queries, "vec_id",
         "embedding", k = 5, rerank = 1000)
@@ -2744,7 +2744,7 @@ class PipelineOpsSpec extends SparkTestBase {
       val sq = s"$root/sq8"
       Similarity.saveSq8Index(
         Similarity.buildSq8Index(emb, "vec_id", "embedding"), sq)
-      Similarity.deleteFromSq8Index(spark, sq, dead, "neighbor_id")
+      Similarity.deleteFromIndex(spark, sq, dead, "neighbor_id")
       val sqServed = Similarity.sq8TopKFromIndex(
         Similarity.loadSq8Index(spark, sq), emb, queries, "vec_id",
         "embedding", k = 5, rerank = 1000)
@@ -2758,7 +2758,7 @@ class PipelineOpsSpec extends SparkTestBase {
         .isEmpty)
       assert(!fs.exists(new Path(
         s"${graft.util.Gen.resolve(spark, sq)}/tombstones")))
-      assert(Similarity.sq8IndexStats(spark, sq)
+      assert(Similarity.indexStats(spark, sq)
         .first().getAs[Long]("n_tombstones") === 0L)
     } finally graft.util.Fs.deleteRecursively(root)
   }
@@ -3354,7 +3354,7 @@ class PipelineOpsSpec extends SparkTestBase {
         .map(_.listFiles().count(_.getName.startsWith("part-"))).max
       assert(maxFilesPerCell() >= 2)
       // the layout-health kernel agrees with java.io ground truth
-      def statsMaxFiles(): Int = Similarity.ivfPqIndexStats(spark, dir)
+      def statsMaxFiles(): Int = Similarity.indexStats(spark, dir)
         .agg(max(col("n_files"))).head().getLong(0).toInt
       assert(statsMaxFiles() === maxFilesPerCell())
       def serve(): Set[(Long, Long, Long, Double)] =
@@ -3737,7 +3737,7 @@ class PipelineOpsSpec extends SparkTestBase {
           "vec_id", "embedding")
       }
       fs.delete(marker, false)
-      Similarity.deleteFromIvfSq8Index(spark, dir,
+      Similarity.deleteFromIndex(spark, dir,
         e.limit(7).select("vec_id"), "vec_id")
       assert(Similarity.loadIvfSq8Index(spark, dir)._2.count()
         === e.count() - 7)
@@ -3797,7 +3797,7 @@ class PipelineOpsSpec extends SparkTestBase {
       // flag the compact axis
       Similarity.appendToIvfIndex(spark, dir, drifted, "vec_id",
         "embedding")
-      Similarity.deleteFromIvfIndex(spark, dir,
+      Similarity.deleteFromIndex(spark, dir,
         base.limit(2).select("vec_id"), "vec_id")
       val accreted = Similarity.ivfIndexHealthReport(spark, dir, base,
         "vec_id", "embedding", sampleN = 16, k = 3, nProbe = 8,
@@ -3820,7 +3820,7 @@ class PipelineOpsSpec extends SparkTestBase {
       assert(!pqHealthy.getAs[Boolean]("compact_advised"))
       assert(pqHealthy.getAs[Double]("recall") === 1.0)
       assert(math.abs(pqHealthy.getAs[Double]("w_p90_err_drift")) < 0.01)
-      Similarity.deleteFromIvfPqIndex(spark, pqDir,
+      Similarity.deleteFromIndex(spark, pqDir,
         base.limit(1).select("vec_id"), "vec_id")
       assert(Similarity.ivfPqIndexHealthReport(spark, pqDir, base,
         base, "vec_id", "embedding", sampleN = 16, k = 3, nProbe = 8,
