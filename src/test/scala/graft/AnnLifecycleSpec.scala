@@ -15,7 +15,14 @@ import graft.operators.Similarity
 class AnnLifecycleSpec extends SparkTestBase {
   import SparkTestBase.session.implicits._
 
-  private val sf = "/root/testdata/sf0.001"
+  /** 500 seeded 64-dim vectors: ids and vector values are all the
+    * lifecycle steps look at. */
+  private lazy val emb = {
+    val rnd = new scala.util.Random(7)
+    (0L until 500L)
+      .map(i => (i, Array.fill(64)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+  }
 
   private case class Family(kind: String, store: String,
       cellPartitioned: Boolean,
@@ -80,7 +87,6 @@ class AnnLifecycleSpec extends SparkTestBase {
       "compact → load leaves the same live ids, no tombstones, the " +
       "ingest log minus the dead rows, one file per touched cell, and " +
       "the family's stats shape") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val saved = emb.filter(col("vec_id") % 3 =!= 0)
     val appended = emb.filter(col("vec_id") % 3 === 0)
     val deleted = emb.filter(col("vec_id") % 7 === 0).select("vec_id")

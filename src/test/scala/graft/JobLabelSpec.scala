@@ -50,7 +50,10 @@ class JobLabelSpec extends SparkTestBase {
         Dedup.ledgerAdmit(spark, ledger, docs.filter(col("doc_id") >= 20),
           "doc_id", "text")
       })
-      val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      val rnd = new scala.util.Random(7)
+      val emb = (0L until 200L)
+        .map(i => (i, Array.fill(16)(rnd.nextGaussian().toFloat)))
+        .toDF("vec_id", "embedding")
       val ivf = s"$root/ivf"
       Similarity.saveIvfIndex(Similarity.buildIvfIndex(
         emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding"), ivf)
