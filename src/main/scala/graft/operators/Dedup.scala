@@ -1,9 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.expressions.BloomSketch
 import graft.functions.TextFunctions._
+import graft.util.{Fs, Gen}
 
 /** Deduplication operators for training-data pipelines, designed 100-TB-first
   * (SURVEY.md §2.6 / BASELINE.json north star):
@@ -400,11 +403,19 @@ object Dedup {
     * unbounded at corpus scale; AQE picks broadcast when it fits. */
   private def verifyPairs(cands: DataFrame, arrA: DataFrame,
       arrB: DataFrame, threshold: Double): DataFrame =
-    cands
+    jaccardAtLeast(cands
       .join(arrA.select(col("doc").as("doc_a"), col("hs").as("hs_a")),
         Seq("doc_a"))
       .join(arrB.select(col("doc").as("doc_b"), col("hs").as("hs_b")),
-        Seq("doc_b"))
+        Seq("doc_b")), threshold)
+      .select(col("doc_a"), col("doc_b"), col("inter"), col("jaccard"))
+
+  /** The pairs whose sorted hash arrays `hs_a` and `hs_b` reach exact
+    * Jaccard ≥ `threshold` (rounded to 6 places), with `inter` and
+    * `jaccard` added — the one spelling of the verify. */
+  private def jaccardAtLeast(pairs: DataFrame,
+      threshold: Double): DataFrame =
+    pairs
       .withColumn("inter",
         size(array_intersect(col("hs_a"), col("hs_b"))).cast("long"))
       .withColumn("jaccard",
@@ -412,7 +423,6 @@ object Dedup {
           (size(col("hs_a")) + size(col("hs_b")) - col("inter"))
             .cast("double"), 6))
       .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("inter"), col("jaccard"))
 
   /** Cross-set exact Jaccard ≥ `threshold`: every (A-doc, B-doc) pair —
     * the incremental-ingest verify (new batch vs existing corpus). The
@@ -854,6 +864,145 @@ object Dedup {
         md5(col("clean")).as("clean_md5"))
   }
 
+  /** Number of doc buckets in the exact ledger's digest store and the
+    * near-dup ledger's primary store — the partition-pruning
+    * granularity of the exact seen probe and of the near-dup verify
+    * stage's hs fetch. A layout-baked constant like [[NdlKeyBuckets]]
+    * (a probe computed with a different modulus would silently miss
+    * every candidate). */
+  private val NdlDocBuckets = 32
+
+  /** Number of key buckets in the near-dup ledger's band store — the
+    * partition-pruning granularity of an admit's candidate probe. A
+    * constant, not a parameter, deliberately: the bucket of a key is
+    * baked into the store's layout, and a probe computed with a
+    * different modulus would silently miss every candidate (the same
+    * store-bound discipline as the hasher). 32 partition
+    * dirs keeps the per-admit dynamic-write commit cost tame (the
+    * measured dominant cost of a small-batch admit is files created,
+    * not bytes) while a daily batch still skips the buckets it does
+    * not touch. The partition dirs are deliberately coarse; pruning
+    * INSIDE a bucket comes from the trickle path's literal
+    * `In(kh, …)` fold (≤ [[NdlLiteralMaxReps]] reps), which reaches
+    * the parquet scan as a pushed filter and fires row-group stats on
+    * the kh-SORTED files [[writeBucketed]] lays down — a daily-SIZED
+    * batch has no kh predicate (its join touches most row groups
+    * anyway), so its floor is the partition pruning + column
+    * narrowing. */
+  private val NdlKeyBuckets = 32
+
+  /** Batch-rep bound for folding the probe's key hashes (and the exact
+    * ledger's digests) into a literal scan filter (≈4× this many 8-byte
+    * literals in the plan — same order as the index stores' 64k
+    * tombstone fold). Above it the equi-join alone carries the probe: a
+    * batch that big touches most row groups of most buckets, so the
+    * literal would bloat the plan for no read saved. */
+  private val NdlLiteralMaxReps = 2048L
+
+  /** Batch-rep bound for the broadcast probes (≈4× this many band keys
+    * on the wire). Daily batches sit far under it; bulk backfills
+    * beyond it take the shuffle path instead of an oversized
+    * broadcast. */
+  private val NdlDppMaxReps = 262144L
+
+  /** Doc bucket of a near-dup primary row (from its id) or of an exact
+    * ledger digest row (from the digest). */
+  private[graft] def ndlDb(c: Column): Column =
+    pmod(xxhash64(c), lit(NdlDocBuckets.toLong)).cast("int")
+
+  private def ndlKb(kh: Column): Column =
+    pmod(kh, lit(NdlKeyBuckets.toLong)).cast("int")
+
+  /** One bucketed store of a dedup ledger — the ledgers' analog of
+    * [[Similarity.IndexLayouts]]: its store kind (the name
+    * [[StoreHealth.detectStoreKind]] reports), the partition column and
+    * the function that derives it from the file columns, the bucket
+    * count, the sort keys inside a bucket file, and the file columns
+    * (regexes, in file order). Every write of the store goes through
+    * [[writeBucketed]], and the store kind of a dataset is the first
+    * entry of [[LedgerStores]] whose file columns it holds. */
+  private case class LedgerStore(kind: String, bucket: String,
+      bucketOf: Column, buckets: Int, keys: Seq[String],
+      fileCols: Seq[String])
+
+  /** The exact ledger's digest store: 16-byte digests, db-bucketed on
+    * the digest's hash and digest-sorted so the trickle path's pushed
+    * In(text_md5, …) literals fire parquet row-group stats. */
+  private val ExactStore = LedgerStore("dedup_ledger", "db",
+    ndlDb(col("text_md5")), NdlDocBuckets, Seq("text_md5"), Seq("text_md5"))
+
+  /** The near-dup primary: one signature row per distinct text,
+    * db-bucketed on the doc id (the verify fetch's pruning key). */
+  private val PrimaryStore = LedgerStore("neardup_ledger", "db",
+    ndlDb(col("doc")), NdlDocBuckets, Nil,
+    Seq("doc", "text_md5", "hs", "mh\\d+"))
+
+  /** The near-dup band store (`<path>_bands`): hashed band keys,
+    * kb-bucketed on the key hash and (band, kh)-sorted. */
+  private val BandStore = LedgerStore("neardup_bands", "kb",
+    ndlKb(col("kh")), NdlKeyBuckets, Seq("band", "kh"),
+    Seq("band", "kh", "doc"))
+
+  /** Detection order: the primary also holds the digest column. */
+  private val LedgerStores = Seq(PrimaryStore, BandStore, ExactStore)
+
+  /** The kind of the ledger store whose file columns `cols` holds. */
+  private[graft] def ledgerKindOf(cols: Seq[String]): Option[String] =
+    LedgerStores.find(_.fileCols.forall(p => cols.exists(_.matches(p))))
+      .map(_.kind)
+
+  /** The one write discipline of every ledger store (appends,
+    * compactions, forgets, expiries, band backfills): the store's file
+    * columns with the bucket derived from them, hash-repartitioned on
+    * the bucket into min(buckets, defaultParallelism) tasks — a bucket
+    * lands wholly in one task (which may hold several), so each write
+    * leaves one file per touched bucket, without waves of near-empty
+    * tasks on a small session; the explicit count keeps AQE from
+    * coalescing the write into one serial task. The sort leads with the
+    * bucket: the write requires that order and would replace a
+    * keys-only sort (files left unsorted), while (bucket, keys…)
+    * satisfies it. */
+  private def writeBucketed(store: LedgerStore, rows: DataFrame,
+      mode: String, dest: String): Unit =
+    rows.select(store.fileCols.flatMap(p => rows.columns.filter(_.matches(p)))
+        .map(col): _*)
+      .withColumn(store.bucket, store.bucketOf)
+      .repartition(math.min(store.buckets,
+        rows.sparkSession.sparkContext.defaultParallelism), col(store.bucket))
+      .sortWithinPartitions((store.bucket +: store.keys).map(col): _*)
+      .write.mode(mode).partitionBy(store.bucket).parquet(dest)
+
+  private def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The current generation of a ledger store. */
+  private def current(spark: SparkSession, path: String): DataFrame =
+    Gen.read(spark, Gen.resolve(spark, path))
+
+  /** A small file (an epoch seal, the geometry sidecar), overwritten;
+    * read back with [[Gen.readSmall]]. */
+  private def writeSmall(fs: FileSystem, p: Path, content: String): Unit = {
+    val out = fs.create(p, true)
+    out.write(content.getBytes("UTF-8"))
+    out.close()
+  }
+
+  /** The health core of a bucketed ledger store, with
+    * [[maxBucketFiles]]: one pass over `cols` and the file name `f` for
+    * the row count (`rows`) plus the ledger's own `aggs`. */
+  private def ledgerCensus(store: DataFrame, cols: Seq[String],
+      aggs: Column*): Row =
+    store.select((cols.map(col) :+ input_file_name().as("f")): _*)
+      .agg(count(lit(1)).as("rows"), aggs: _*).first()
+
+  /** The most files any one bucket holds, in one more pass — every
+    * admit batch appends one file per touched bucket, so this is batches
+    * since the last compaction, the compaction trigger. */
+  private def maxBucketFiles(store: DataFrame, bucket: String): Long =
+    store.select(col(bucket), input_file_name().as("f"))
+      .groupBy(col(bucket)).agg(countDistinct(col("f")).as("nf"))
+      .agg(max(col("nf"))).first().getLong(0)
+
   /** Persisted exact-dedup LEDGER — the production state behind a daily
     * exact-dedup ingest (the durable twin of q71's in-memory cross-set
     * gate and the streaming anti-join gate): a parquet store of content
@@ -863,13 +1012,10 @@ object Dedup {
     * digests, so the next batch sees them.
     *
     * Scale shape: the ledger holds ONE 16-byte digest row per distinct
-    * document ever admitted — no text; the anti-join is a digest
-    * equi-join (AQE broadcasts the batch side when small, the common
-    * daily case is batch ≪ ledger and the ledger side is the build
-    * side of a shuffled hash join); the append writes only the batch's
-    * new digests. Digest-bucketing the store would co-locate the join
-    * at a fixed ledger layout — documented, not required for
-    * correctness.
+    * document ever admitted — no text, db-bucketed on the digest
+    * ([[ExactStore]]); the seen probe is a pruned digest equi-join
+    * (see [[ledgerDecide]]); the append writes only the batch's new
+    * digests.
     *
     * Takedown/forget story: the exact ledger is id-free BY
     * CONSTRUCTION — the store holds only 16-byte content digests,
@@ -896,16 +1042,15 @@ object Dedup {
     * in-batch representative, `exact_store` carries a NULL partner by
     * design (the digest store is id-free — its takedown story — so
     * there is no identity to name). */
-  def ledgerAdmit(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String,
-      textCol: String, admittedOut: Option[String] = None,
+  def ledgerAdmit(spark: SparkSession, path: String, batch: DataFrame,
+      idCol: String, textCol: String, admittedOut: Option[String] = None,
       auditOut: Option[String] = None): DataFrame =
     // the INGEST LEASE serializes admit-vs-admit: two concurrent
     // admits each read the store before the other's append lands and
     // would double-admit content duplicated across the batches — the
     // loser fails loudly instead (admit-vs-maintenance is the marker
     // fence + Gen.rewrite's content re-verify, a separate mechanism)
-    graft.util.Fs.withIngestLease(spark, path, "ledgerAdmit") {
+    Fs.withIngestLease(spark, path, "ledgerAdmit") {
       val (admitted, legacyLayout) =
         ledgerDecide(spark, path, batch, idCol, textCol, auditOut)
       admittedOut.foreach(out =>
@@ -927,14 +1072,13 @@ object Dedup {
     * is id-free (its takedown story — there is no identity to name),
     * so "an earlier ingest admitted this content" is the whole
     * knowable fact. */
-  private def ledgerDecide(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String,
-      textCol: String,
+  private def ledgerDecide(spark: SparkSession, path: String,
+      batch: DataFrame, idCol: String, textCol: String,
       auditOut: Option[String] = None,
       materializeTo: Option[String] = None): (DataFrame, Boolean) =
-    graft.util.Fs.labeled(spark, "exact:decide") {
-    graft.util.Fs.failIfUnderMaintenance(spark, path, "ledgerAdmit")
-    val hasStore = graft.util.Gen.hasData(spark, path)
+    Fs.labeled(spark, "exact:decide") {
+    Fs.failIfUnderMaintenance(spark, path, "ledgerAdmit")
+    val hasStore = Gen.hasData(spark, path)
     val hashed = batch.filter(col(textCol).isNotNull)
       .withColumn("text_md5", md5(col(textCol)))
     // first occurrence per digest WITHIN the batch (min id — the
@@ -942,32 +1086,30 @@ object Dedup {
     val reps = hashed
       .groupBy(col("text_md5")).agg(min(col(idCol)).as(idCol))
     // …then minus the ledger. The store is db-bucketed on the digest
-    // hash ([[ledgerWriteDigests]] — the near-dup primary's probe
-    // shape), so the SEEN set comes from an INNER equi-join on
-    // (db, text_md5) with the batch side broadcast: dynamic partition
-    // pruning folds the batch's buckets into the store scan
-    // (ExplainCheck-pinned), and trickle batches (≤ the near-dup
+    // hash ([[ExactStore]] — the near-dup primary's probe shape), so
+    // the SEEN set comes from an INNER equi-join on (db, text_md5)
+    // with the batch side broadcast: dynamic partition pruning folds
+    // the batch's buckets into the store scan (pinned in
+    // LedgerPlanPinsSpec), and trickle batches (≤ the near-dup
     // literal bound) additionally fold their digest literals into a
     // pushed In(text_md5, …) filter that fires parquet row-group
     // stats on the digest-sorted files. The batch-minus-seen anti-join
     // then runs batch-vs-batch — no store scan on the anti side.
-    // Legacy un-bucketed stores take the same joins with db derived
-    // on the fly (no pruning; compactDedupLedger is the migration).
-    // a pre-r16 ledger (flat, unbucketed): probe with db derived on
-    // the fly (no pruning) and KEEP APPENDING FLAT — mixing bucket
-    // subdirs into a flat dataset dir would break its reads;
-    // compactDedupLedger is the one-time layout migration
+    // A pre-r16 ledger (flat, unbucketed) takes the same joins with db
+    // derived on the fly (no pruning) and KEEPS APPENDING FLAT —
+    // mixing bucket subdirs into a flat dataset dir would break its
+    // reads; compactDedupLedger is the one-time layout migration
     var legacyLayout = false
     val firstInBatch =
       if (!hasStore) reps
       else {
-        val s0 = graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, path))
+        val s0 = current(spark, path)
         legacyLayout = !s0.columns.contains("db")
         val store =
           if (!legacyLayout) s0
-          else s0.withColumn("db", ledgerDb(col("text_md5")))
+          else s0.withColumn("db", ExactStore.bucketOf)
         val batchDb = reps.select(col("text_md5"))
-          .withColumn("db", ledgerDb(col("text_md5")))
+          .withColumn("db", ExactStore.bucketOf)
           .localCheckpoint()
         val nDigests = batchDb.count()
         val scan =
@@ -1028,21 +1170,61 @@ object Dedup {
     * (Gen.appendDir establishes gen-1 for a fresh ledger — versioned
     * from birth, so the first compaction is already zero-outage).
     * Callers hold the ingest lease. */
-  private def ledgerAppend(spark: org.apache.spark.sql.SparkSession,
-      path: String, admitted: DataFrame, legacyLayout: Boolean): Unit =
-    graft.util.Fs.labeled(spark, "exact:append") {
+  private def ledgerAppend(spark: SparkSession, path: String,
+      admitted: DataFrame, legacyLayout: Boolean): Unit =
+    Fs.labeled(spark, "exact:append") {
       if (!admitted.isEmpty) {
-        val dest = graft.util.Gen.appendDir(spark, path)
+        val dest = Gen.appendDir(spark, path)
         if (legacyLayout)
           admitted.select(col("text_md5")).write.mode("append")
             .parquet(dest)
-        else
-          ledgerWriteDigests(admitted.select(col("text_md5")), "append",
-            dest)
+        else writeBucketed(ExactStore, admitted, "append", dest)
       }
     }
 
-  /** Streamed [[ledgerAdmit]] — the `foreachBatch` epoch protocol that
+  /** Streamed [[ledgerAdmit]]: one epoch of the shared [[admitEpoch]]
+    * protocol, whose persisted decisions are the epoch's admitted rows
+    * (`epoch-<id>/admitted`; the append re-reads the store layout on a
+    * retry). A crash between `_decided` and `_appended` can
+    * double-append digests — unique by construction in the seen-set
+    * semantics, reported by [[dedupLedgerStats]] and collapsed by
+    * [[compactDedupLedger]]'s distinct, decisions unaffected.
+    * `audit = true` writes the per-epoch drop reasons to
+    * `epoch-<id>/audit` (sealed by `_decided` with the decisions; read
+    * back flat with [[readAuditEpochs]] — exact_store rows carry a NULL
+    * partner, see [[ledgerAdmit]]). Returns the epoch's admitted rows
+    * (always the stored copy — bit-stable across retries). */
+  def ledgerAdmitStreamBatch(spark: SparkSession, path: String,
+      epochRoot: String, batch: DataFrame, idCol: String, textCol: String,
+      epochId: Long, audit: Boolean = false): DataFrame =
+    admitEpoch(spark, path, epochRoot, batch, idCol, textCol, epochId,
+        "ledgerAdmitStream", "exact")(
+      eDir => {
+        // the decide's materializeTo writes the epoch's admitted
+        // parquet directly (one materialization, not a checkpoint plus
+        // a write), and its probe already established the store layout
+        val (admitted, legacy) = ledgerDecide(spark, path, batch, idCol,
+          textCol, if (audit) Some(s"$eDir/audit") else None,
+          materializeTo = Some(s"$eDir/admitted"))
+        (admitted, () => ledgerAppend(spark, path, admitted, legacy))
+      },
+      // the layout re-derives from the store itself (a schema read), so
+      // the append is correct against whatever layout the first
+      // delivery established
+      eDir => ledgerAppend(spark, path, Gen.read(spark, s"$eDir/admitted"),
+        Gen.hasData(spark, path) &&
+          !current(spark, path).columns.contains("db")))
+
+  /** Wire a document stream into the exact-dedup ledger: one
+    * [[ledgerAdmitStreamBatch]] per micro-batch ([[admitStream]]). */
+  def ledgerAdmitStream(spark: SparkSession, path: String,
+      epochRoot: String, stream: DataFrame, idCol: String, textCol: String,
+      checkpointLocation: String, audit: Boolean = false): StreamingQuery =
+    admitStream(stream, checkpointLocation)((b, epochId) =>
+      ledgerAdmitStreamBatch(spark, path, epochRoot, b, idCol, textCol,
+        epochId, audit))
+
+  /** The `foreachBatch` epoch protocol both streamed admits share — it
     * makes RETRIED micro-batches idempotent. Structured Streaming
     * re-delivers an epoch after a failure (at-least-once into
     * `foreachBatch`), and a naive re-run would re-DECIDE the batch
@@ -1051,20 +1233,19 @@ object Dedup {
     * the downstream sink (which may have lost the first delivery —
     * that is why the epoch was retried) permanently loses them.
     * The fix is the crash-safe order [[ledgerAdmit]]'s scaladoc
-    * specifies, keyed by epoch: the admit DECISIONS are persisted
-    * under `epochRoot/epoch-<id>/admitted` and sealed with a
-    * `_decided` marker BEFORE the digest append, and an `_appended`
-    * marker seals the append — so a re-delivered epoch at any crash
-    * point re-emits the SAME decisions:
+    * specifies, keyed by epoch: `decide` persists the admit DECISIONS
+    * under `epochRoot/epoch-<id>/` (the admitted rows at `admitted`,
+    * plus whatever its append re-reads) and returns the admitted rows
+    * and its append; the protocol seals them with a `_decided` marker
+    * BEFORE that append, and an `_appended` marker seals the append —
+    * so a re-delivered epoch at any crash point re-emits the SAME
+    * decisions:
     *   - crash before `_decided`: re-decide against the unchanged
     *     ledger (deterministic — min-id reps, static store) and
     *     overwrite the partial epoch output;
     *   - crash between `_decided` and `_appended`: decisions are
-    *     sealed; the retry appends the STORED admitted digests and
-    *     seals (a crash mid-append can double-append digests — unique
-    *     by construction in the seen-set semantics, reported by
-    *     [[dedupLedgerStats]] and collapsed by
-    *     [[compactDedupLedger]]'s distinct, decisions unaffected);
+    *     sealed; `appendDecided` appends from the STORED decisions and
+    *     the protocol seals;
     *   - after `_appended`: the epoch is complete — re-emit the stored
     *     decisions, touch nothing.
     * The `_decided` seal carries the batch's [[epochFingerprint]],
@@ -1073,83 +1254,61 @@ object Dedup {
     * epochRoot) fails loudly instead of silently discarding the new
     * batch. Each epoch takes the same ingest lease as a batch admit,
     * so streamed and batch ingest serialize against each other and
-    * maintenance fail-fasts against both. `audit = true` writes the
-    * per-epoch drop reasons to `epoch-<id>/audit` (sealed by
-    * `_decided` with the decisions; read back flat with
-    * [[readAuditEpochs]] — exact_store rows carry a NULL partner, see
-    * [[ledgerAdmit]]). Returns the epoch's admitted
-    * rows (always the stored copy — bit-stable across retries). */
-  def ledgerAdmitStreamBatch(spark: org.apache.spark.sql.SparkSession,
-      path: String, epochRoot: String, batch: DataFrame, idCol: String,
-      textCol: String, epochId: Long,
-      audit: Boolean = false): DataFrame =
-    graft.util.Fs.withIngestLease(spark, path,
-        s"ledgerAdmitStream(epoch=$epochId)") {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val eDir = epochDir(epochRoot, epochId)
-      val decidedM = new org.apache.hadoop.fs.Path(s"$eDir/_decided")
-      val appendedM = new org.apache.hadoop.fs.Path(s"$eDir/_appended")
-      val admittedPath = s"$eDir/admitted"
-      val fp = epochFingerprint(batch, idCol, textCol)
-      checkEpochFingerprint(fs, decidedM, fp, epochId, epochRoot)
-      if (fs.exists(appendedM)) graft.util.Gen.read(spark, admittedPath)
-      else if (!fs.exists(decidedM)) {
-        // first delivery: the decide's materializeTo writes the epoch's
-        // admitted parquet directly (one materialization, not a
-        // checkpoint plus a write), and its probe already established
-        // the store layout — no second listing/schema read for `legacy`
-        val (admitted, legacy) =
-          ledgerDecide(spark, path, batch, idCol, textCol,
-            if (audit) Some(s"$eDir/audit") else None,
-            materializeTo = Some(admittedPath))
-        writeSeal(fs, decidedM, fp)
-        ledgerAppend(spark, path, admitted, legacy)
-        fs.create(appendedM, true).close()
-        admitted
-      } else {
-        // retry of a decided-but-unappended epoch: decisions are
-        // sealed — append the STORED admitted digests. legacy
-        // re-derives from the store itself (a schema read), so the
-        // append is correct against whatever layout the first
-        // delivery established
-        val admitted = graft.util.Gen.read(spark, admittedPath)
-        val legacy = graft.util.Gen.hasData(spark, path) &&
-          !graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, path))
-            .columns.contains("db")
-        ledgerAppend(spark, path, admitted, legacy)
-        fs.create(appendedM, true).close()
-        admitted
+    * maintenance fail-fasts against both. The epoch's own jobs run
+    * under `<phase>:epoch`. */
+  private def admitEpoch(spark: SparkSession, path: String,
+      epochRoot: String, batch: DataFrame, idCol: String, textCol: String,
+      epochId: Long, verb: String, phase: String)(
+      decide: String => (DataFrame, () => Unit),
+      appendDecided: String => Unit): DataFrame =
+    Fs.withIngestLease(spark, path, s"$verb(epoch=$epochId)") {
+      Fs.labeled(spark, s"$phase:epoch") {
+        val fs = fsOf(spark, path)
+        val eDir = epochDir(epochRoot, epochId)
+        val decidedM = new Path(s"$eDir/_decided")
+        val appendedM = new Path(s"$eDir/_appended")
+        val fp = epochFingerprint(batch, idCol, textCol)
+        checkEpochFingerprint(fs, decidedM, fp, epochId, epochRoot)
+        if (fs.exists(appendedM)) Gen.read(spark, s"$eDir/admitted")
+        else {
+          val admitted =
+            if (!fs.exists(decidedM)) {
+              val (admitted, append) = decide(eDir)
+              writeSmall(fs, decidedM, fp)
+              append()
+              admitted
+            } else {
+              appendDecided(eDir)
+              Gen.read(spark, s"$eDir/admitted")
+            }
+          fs.create(appendedM, true).close()
+          admitted
+        }
       }
     }
 
-  /** Wire a document stream into the exact-dedup ledger: one
-    * [[ledgerAdmitStreamBatch]] per micro-batch via `foreachBatch`,
-    * with the sink's checkpoint at `checkpointLocation` driving the
-    * epoch ids. The admitted rows of epoch N are at
-    * `epochRoot/epoch-<N>/admitted` — a downstream consumer reads them
-    * from there (the streamed analog of `admittedOut`), and retries
-    * re-emit identical content (see the epoch protocol). Caller stops
-    * the returned query. LIFECYCLE COUPLING: `epochRoot` and
-    * `checkpointLocation` must be created together and destroyed
-    * together — the epoch protocol keys idempotence by the
-    * checkpoint's batchIds, and a reset checkpoint over a surviving
-    * root is detected (loudly) by the [[epochFingerprint]] seal, not
-    * silently absorbed. While the stream lives, route ad-hoc backfills
-    * THROUGH it (feed them to the stream's source so they arrive as a
-    * normal epoch) rather than as concurrent [[ledgerAdmit]] batch
-    * calls — the shared ingest lease makes a batch admit that lands
-    * mid-epoch fail loudly by design. */
-  def ledgerAdmitStream(spark: org.apache.spark.sql.SparkSession,
-      path: String, epochRoot: String, stream: DataFrame, idCol: String,
-      textCol: String, checkpointLocation: String,
-      audit: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+  /** Run `epoch` on every micro-batch of `stream` via `foreachBatch`,
+    * the sink's checkpoint at `checkpointLocation` driving the epoch ids
+    * — the one wiring of both `*AdmitStream` verbs. The admitted rows of
+    * epoch N are at `epochRoot/epoch-<N>/admitted` — a downstream
+    * consumer reads them from there ([[readAdmittedEpochs]], the
+    * streamed analog of `admittedOut`), and retries re-emit identical
+    * content ([[admitEpoch]]). Caller stops the returned query.
+    * LIFECYCLE COUPLING: `epochRoot` and `checkpointLocation` must be
+    * created together and destroyed together — the epoch protocol keys
+    * idempotence by the checkpoint's batchIds, and a reset checkpoint
+    * over a surviving root is detected (loudly) by the
+    * [[epochFingerprint]] seal, not silently absorbed. While the stream
+    * lives, route ad-hoc backfills THROUGH it (feed them to the
+    * stream's source so they arrive as a normal epoch) rather than as
+    * concurrent batch admits — the shared ingest lease makes a batch
+    * admit that lands mid-epoch fail loudly by design. */
+  private def admitStream(stream: DataFrame, checkpointLocation: String)(
+      epoch: (DataFrame, Long) => DataFrame): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (b: DataFrame, epochId: Long) =>
-        ledgerAdmitStreamBatch(spark, path, epochRoot, b, idCol,
-          textCol, epochId, audit)
+        epoch(b, epochId)
         ()
       }
       .start()
@@ -1158,10 +1317,22 @@ object Dedup {
   private def epochDir(epochRoot: String, epochId: Long): String =
     f"$epochRoot/epoch-$epochId%012d"
 
-  private def parseEpoch(name: String): Option[Long] =
-    if (name.startsWith("epoch-"))
-      name.stripPrefix("epoch-").toLongOption
-    else None
+  /** The epoch ids under a streamed-admit root, ascending — the one
+    * listing behind ack, retire, the read-backs, sweep and health. */
+  private def epochIds(fs: FileSystem, epochRoot: String): Seq[Long] = {
+    val root = new Path(epochRoot)
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("epoch-"))
+      .flatMap(_.stripPrefix("epoch-").toLongOption).sorted
+  }
+
+  /** Whether an epoch's delivery completed (`_appended`): only SEALED
+    * epochs are contractual — an unsealed one is a crashed delivery
+    * whose retry needs its `_decided` decisions. */
+  private def sealedEpoch(fs: FileSystem, epochRoot: String,
+      e: Long): Boolean =
+    fs.exists(new Path(s"${epochDir(epochRoot, e)}/_appended"))
 
   /** Order-independent fingerprint of a delivered batch's CONTENT —
     * `"<row count>:<sum of (id, text) hashes>"`. The epoch protocol
@@ -1203,28 +1374,6 @@ object Dedup {
     s"$EpochFpPrefix${r.getLong(0)}:$x"
   }
 
-  /** Seal marker with CONTENT (the epoch fingerprint) — overwrite-true
-    * like the bare markers it replaces: the writer holds the ingest
-    * lease, so the only same-path writer is this epoch's own retry. */
-  private def writeSeal(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, content: String): Unit = {
-    val out = fs.create(p, true)
-    out.write(content.getBytes("UTF-8"))
-    out.close()
-  }
-
-  private def readSeal(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](256)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toString("UTF-8").trim
-    } finally in.close()
-  }
-
   private val warnedLegacySeals =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -1244,11 +1393,10 @@ object Dedup {
     * and stamping the delivered fingerprint as truth would eternalize
     * a possibly-reset batch — the warning tells the operator which
     * roots still carry unguarded epochs instead. */
-  private def checkEpochFingerprint(fs: org.apache.hadoop.fs.FileSystem,
-      decidedM: org.apache.hadoop.fs.Path, fp: String, epochId: Long,
-      epochRoot: String): Unit =
+  private def checkEpochFingerprint(fs: FileSystem, decidedM: Path,
+      fp: String, epochId: Long, epochRoot: String): Unit =
     if (fs.exists(decidedM)) {
-      val stored = readSeal(fs, decidedM)
+      val stored = Gen.readSmall(fs, decidedM)
       if (stored.isEmpty || !stored.startsWith(EpochFpPrefix)) {
         if (warnedLegacySeals.add(epochRoot))
           org.slf4j.LoggerFactory.getLogger("graft.operators.Dedup")
@@ -1281,10 +1429,9 @@ object Dedup {
   private val ConsumedPrefix = "_consumed-"
   private val ConsumerPrefix = "_consumed."
 
-  private def consumedName(n: Long): String = f"$ConsumedPrefix$n%012d"
-
   private def consumedName(consumer: String, n: Long): String =
-    f"$ConsumerPrefix$consumer-$n%012d"
+    if (consumer.isEmpty) f"$ConsumedPrefix$n%012d"
+    else f"$ConsumerPrefix$consumer-$n%012d"
 
   private def requireConsumerName(consumer: String): Unit =
     require(consumer.nonEmpty && consumer.matches("[A-Za-z0-9_]+"),
@@ -1293,8 +1440,9 @@ object Dedup {
 
   /** All ack markers under a root: (consumer, epoch) — the anonymous
     * consumer reads as the empty string. */
-  private def ackMarkers(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[(String, Long)] =
+  private def ackMarkers(fs: FileSystem,
+      epochRoot: String): Seq[(String, Long)] = {
+    val root = new Path(epochRoot)
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq.map(_.getPath.getName).flatMap { n =>
       if (n.startsWith(ConsumerPrefix)) {
@@ -1306,6 +1454,7 @@ object Dedup {
         n.stripPrefix(ConsumedPrefix).toLongOption.map(("", _))
       else None
     }
+  }
 
   /** The RETENTION GATE of a streamed-admit root: the SLOWEST
     * registered consumer's watermark — `min` over every consumer
@@ -1316,11 +1465,10 @@ object Dedup {
     * EVERY registered consumer has read past it — one lagging group
     * holds retention for all, which is the point: its unread admits
     * are unrecoverable once swept. */
-  def consumedAdmitWatermark(spark: org.apache.spark.sql.SparkSession,
+  def consumedAdmitWatermark(spark: SparkSession,
       epochRoot: String): Option[Long] = {
-    val root = new org.apache.hadoop.fs.Path(epochRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val byConsumer = ackMarkers(fs, root).groupBy(_._1)
+    val byConsumer = ackMarkers(fsOf(spark, epochRoot), epochRoot)
+      .groupBy(_._1)
     if (byConsumer.isEmpty) None
     else Some(byConsumer.values.map(_.map(_._2).max).min)
   }
@@ -1328,12 +1476,11 @@ object Dedup {
   /** One named consumer group's own watermark (its highest ack), if it
     * has registered. The retention gate is the min over ALL groups —
     * [[consumedAdmitWatermark]]. */
-  def consumerAdmitWatermark(spark: org.apache.spark.sql.SparkSession,
-      epochRoot: String, consumer: String): Option[Long] = {
+  def consumerAdmitWatermark(spark: SparkSession, epochRoot: String,
+      consumer: String): Option[Long] = {
     requireConsumerName(consumer)
-    val root = new org.apache.hadoop.fs.Path(epochRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ackMarkers(fs, root).filter(_._1 == consumer).map(_._2).maxOption
+    ackMarkers(fsOf(spark, epochRoot), epochRoot)
+      .filter(_._1 == consumer).map(_._2).maxOption
   }
 
   /** Consumer ack — the retention handshake that closes the streamed
@@ -1366,28 +1513,27 @@ object Dedup {
     * design. Same refuse-up-front rule as `keepGeneration`: a
     * protection verb must never be silently unprotective.
     * Returns this consumer's own watermark after the call. */
-  def ackAdmitEpochs(spark: org.apache.spark.sql.SparkSession,
-      epochRoot: String, upTo: Long): Long =
+  def ackAdmitEpochs(spark: SparkSession, epochRoot: String,
+      upTo: Long): Long =
     ackInternal(spark, epochRoot, "", upTo)
 
   /** Named-consumer-group form of [[ackAdmitEpochs]] — see its
     * scaladoc. `consumer` must match `[A-Za-z0-9_]+`. */
-  def ackAdmitEpochs(spark: org.apache.spark.sql.SparkSession,
-      epochRoot: String, consumer: String, upTo: Long): Long = {
+  def ackAdmitEpochs(spark: SparkSession, epochRoot: String,
+      consumer: String, upTo: Long): Long = {
     requireConsumerName(consumer)
     ackInternal(spark, epochRoot, consumer, upTo)
   }
 
-  private def ackInternal(spark: org.apache.spark.sql.SparkSession,
-      epochRoot: String, consumer: String, upTo: Long): Long = {
+  private def ackInternal(spark: SparkSession, epochRoot: String,
+      consumer: String, upTo: Long): Long = {
     require(upTo >= 0, "ackAdmitEpochs: upTo must be ≥ 0")
-    val root = new org.apache.hadoop.fs.Path(epochRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, epochRoot)
     // the idempotent no-op comes FIRST: a consumer re-acking its own
     // persisted progress after a restart must succeed even when every
     // sealed epoch at or below it has since been swept (the marker
     // outlives the epochs it acknowledges — that is its job)
-    val own = ackMarkers(fs, root).filter(_._1 == consumer).map(_._2)
+    val own = ackMarkers(fs, epochRoot).filter(_._1 == consumer).map(_._2)
     if (own.nonEmpty && own.max >= upTo) return own.max
     // an ADVANCING ack must reference a sealed epoch that exists: a
     // row count, an unsealed epoch, or a wrong root would push the
@@ -1395,17 +1541,9 @@ object Dedup {
     // gate forever. Newest-first with early exit — the common ack
     // (at or near the head) costs one existence probe, not one per
     // epoch dir ever created.
-    val epochsDesc =
-      if (!fs.exists(root)) Seq.empty[Long]
-      else fs.listStatus(root).toSeq
-        .flatMap(st => parseEpoch(st.getPath.getName)).sorted.reverse
-    val sealedAtOrAbove = epochsDesc.filter(_ >= upTo).exists(e =>
-      fs.exists(new org.apache.hadoop.fs.Path(
-        s"${epochDir(epochRoot, e)}/_appended")))
-    if (!sealedAtOrAbove) {
-      val newestSealed = epochsDesc.find(e =>
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"${epochDir(epochRoot, e)}/_appended")))
+    val epochsDesc = epochIds(fs, epochRoot).reverse
+    if (!epochsDesc.filter(_ >= upTo).exists(sealedEpoch(fs, epochRoot, _))) {
+      val newestSealed = epochsDesc.find(sealedEpoch(fs, epochRoot, _))
       throw new IllegalArgumentException(
         s"ackAdmitEpochs: cannot ack epoch $upTo at $epochRoot — the " +
           s"newest SEALED epoch is ${newestSealed.getOrElse(-1L)}. A " +
@@ -1414,12 +1552,10 @@ object Dedup {
           "monotone). Check the value (an epoch id, not a row count) " +
           "and the root.")
     }
-    def nameOf(n: Long) =
-      if (consumer.isEmpty) consumedName(n) else consumedName(consumer, n)
-    fs.create(new org.apache.hadoop.fs.Path(root, nameOf(upTo)),
-      true).close()
-    own.filter(_ < upTo).foreach(n => fs.delete(
-      new org.apache.hadoop.fs.Path(root, nameOf(n)), false))
+    fs.create(new Path(epochRoot, consumedName(consumer, upTo)), true)
+      .close()
+    own.filter(_ < upTo).foreach(n =>
+      fs.delete(new Path(epochRoot, consumedName(consumer, n)), false))
     upTo
   }
 
@@ -1442,8 +1578,8 @@ object Dedup {
     * legitimate end-of-life step. Fails loudly on a group that holds
     * no markers (a typo'd name must not report success), naming the
     * registered groups. Returns the number of markers removed. */
-  def retireConsumer(spark: org.apache.spark.sql.SparkSession,
-      epochRoot: String, consumer: String): Int = {
+  def retireConsumer(spark: SparkSession, epochRoot: String,
+      consumer: String): Int = {
     requireConsumerName(consumer)
     retireInternal(spark, epochRoot, consumer)
   }
@@ -1451,14 +1587,13 @@ object Dedup {
   /** [[retireConsumer]] for the ANONYMOUS consumer group (the unnamed
     * [[ackAdmitEpochs]] form) — it is one group like any other and
     * must be retirable the same way. */
-  def retireAnonymousConsumer(spark: org.apache.spark.sql.SparkSession,
-      epochRoot: String): Int = retireInternal(spark, epochRoot, "")
+  def retireAnonymousConsumer(spark: SparkSession, epochRoot: String): Int =
+    retireInternal(spark, epochRoot, "")
 
-  private def retireInternal(spark: org.apache.spark.sql.SparkSession,
-      epochRoot: String, consumer: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(epochRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val all = ackMarkers(fs, root)
+  private def retireInternal(spark: SparkSession, epochRoot: String,
+      consumer: String): Int = {
+    val fs = fsOf(spark, epochRoot)
+    val all = ackMarkers(fs, epochRoot)
     val own = all.filter(_._1 == consumer)
     val label =
       if (consumer.isEmpty) "the anonymous consumer" else s"'$consumer'"
@@ -1483,10 +1618,8 @@ object Dedup {
       log.info(s"retireConsumer: retiring $label at $epochRoot " +
         s"(watermark was ${own.map(_._2).max}); the retention gate " +
         "recomputes over the surviving groups at the next sweep")
-    def nameOf(n: Long) =
-      if (consumer.isEmpty) consumedName(n) else consumedName(consumer, n)
-    own.foreach { case (_, n) => fs.delete(
-      new org.apache.hadoop.fs.Path(root, nameOf(n)), false) }
+    own.foreach { case (_, n) =>
+      fs.delete(new Path(epochRoot, consumedName(consumer, n)), false) }
     own.size
   }
 
@@ -1496,43 +1629,16 @@ object Dedup {
     * (`_appended` missing — a crash the stream's retry will finish)
     * are EXCLUDED: their decisions are not yet contractual, and a
     * consumer that read them would double-count rows once the retry
-    * re-emits. One driver-side listing; the read is ONE flat
-    * multi-path parquet scan with the epoch label derived from the
-    * file path — NOT a per-epoch union fold, whose plan depth would
-    * grow with every micro-batch ever run (a year of 5-minute epochs
-    * is ~10⁵ nodes; this stays one scan node at any epoch count).
-    * Retention protocol: read, THEN [[ackAdmitEpochs]] — a consumer
-    * only ever re-reads epochs above its own watermark, so it never
-    * races [[sweepAdmitEpochs]]' reclaim (which stays at or below
-    * it); re-reading already-acked epochs forfeits that guarantee by
-    * definition. */
-  def readAdmittedEpochs(spark: org.apache.spark.sql.SparkSession,
-      epochRoot: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(epochRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sealedEpochs =
-      if (!fs.exists(root)) Seq.empty[Long]
-      else fs.listStatus(root).toSeq
-        .flatMap(st => parseEpoch(st.getPath.getName))
-        .filter(e => fs.exists(new org.apache.hadoop.fs.Path(
-          s"${epochDir(epochRoot, e)}/_appended")))
-        .sorted
-    require(sealedEpochs.nonEmpty,
+    * re-emits. Retention protocol: read, THEN [[ackAdmitEpochs]] — a
+    * consumer only ever re-reads epochs above its own watermark, so it
+    * never races [[sweepAdmitEpochs]]' reclaim (which stays at or
+    * below it); re-reading already-acked epochs forfeits that
+    * guarantee by definition. */
+  def readAdmittedEpochs(spark: SparkSession, epochRoot: String): DataFrame =
+    readEpochOutputs(spark, epochRoot, "admitted", optional = false,
       s"readAdmittedEpochs: $epochRoot holds no sealed epochs — the " +
         "stream has not completed a micro-batch yet (or the root is " +
         "wrong)")
-    // mergeSchema makes cross-epoch schema drift DETERMINISTIC (a
-    // column added mid-stream reads as null for older epochs) instead
-    // of letting one sampled footer silently win; the label regex is
-    // anchored to the path TAIL so an epoch root that itself lives
-    // under a path containing "epoch-N/admitted" cannot mislabel rows
-    spark.read.option("mergeSchema", "true").parquet(
-        sealedEpochs.map(e => s"${epochDir(epochRoot, e)}/admitted"): _*)
-      .withColumn("epoch",
-        regexp_extract(input_file_name(),
-          "epoch-(\\d+)/admitted/[^/]+$", 1)
-          .cast("long"))
-  }
 
   /** [[readAdmittedEpochs]]' sibling for a stream's per-epoch AUDIT
     * output — the near-dup root ([[nearDupLedgerAdmitStreamBatch]]
@@ -1546,29 +1652,33 @@ object Dedup {
     * that ran without audit simply contribute no paths; a root where
     * NO sealed epoch carries an audit fails loudly (the caller almost
     * certainly forgot `audit = true`). */
-  def readAuditEpochs(spark: org.apache.spark.sql.SparkSession,
-      epochRoot: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(epochRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val audited =
-      if (!fs.exists(root)) Seq.empty[Long]
-      else fs.listStatus(root).toSeq
-        .flatMap(st => parseEpoch(st.getPath.getName))
-        .filter { e =>
-          val d = epochDir(epochRoot, e)
-          fs.exists(new org.apache.hadoop.fs.Path(s"$d/_appended")) &&
-            fs.exists(new org.apache.hadoop.fs.Path(s"$d/audit"))
-        }
-        .sorted
-    require(audited.nonEmpty,
+  def readAuditEpochs(spark: SparkSession, epochRoot: String): DataFrame =
+    readEpochOutputs(spark, epochRoot, "audit", optional = true,
       s"readAuditEpochs: $epochRoot holds no sealed AUDITED epochs — " +
         "run the stream with audit = true (or check the root)")
-    spark.read.option("mergeSchema", "true").parquet(
-        audited.map(e => s"${epochDir(epochRoot, e)}/audit"): _*)
-      .withColumn("epoch",
-        regexp_extract(input_file_name(),
-          "epoch-(\\d+)/audit/[^/]+$", 1)
-          .cast("long"))
+
+  /** Every sealed epoch's `out` dataset (skipping epochs without one
+    * when `optional`) as ONE flat multi-path parquet scan with the
+    * epoch label derived from the file path — NOT a per-epoch union
+    * fold, whose plan depth would grow with every micro-batch ever run
+    * (a year of 5-minute epochs is ~10⁵ nodes; this stays one scan node
+    * at any epoch count). mergeSchema makes cross-epoch schema drift
+    * DETERMINISTIC (a column added mid-stream reads as null for older
+    * epochs) instead of letting one sampled footer silently win; the
+    * label regex is anchored to the path TAIL so an epoch root that
+    * itself lives under a path containing "epoch-N/<out>" cannot
+    * mislabel rows. */
+  private def readEpochOutputs(spark: SparkSession, epochRoot: String,
+      out: String, optional: Boolean, none: String): DataFrame = {
+    val fs = fsOf(spark, epochRoot)
+    val dirs = epochIds(fs, epochRoot)
+      .filter(sealedEpoch(fs, epochRoot, _))
+      .map(e => s"${epochDir(epochRoot, e)}/$out")
+      .filter(d => !optional || fs.exists(new Path(d)))
+    require(dirs.nonEmpty, none)
+    spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+      .withColumn("epoch", regexp_extract(input_file_name(),
+        s"epoch-(\\d+)/$out/[^/]+$$", 1).cast("long"))
   }
 
   /** Retention for a streamed-admit root: epoch dirs accumulate one
@@ -1596,15 +1706,11 @@ object Dedup {
     * sealed decisions (`_decided`) to stay idempotent — deleting it
     * would re-decide against a moved ledger. Returns the number of
     * epoch dirs removed. */
-  def sweepAdmitEpochs(spark: org.apache.spark.sql.SparkSession,
-      epochRoot: String, keepLast: Int = 8,
-      force: Boolean = false): Int = {
+  def sweepAdmitEpochs(spark: SparkSession, epochRoot: String,
+      keepLast: Int = 8, force: Boolean = false): Int = {
     require(keepLast >= 1, "keepLast must be ≥ 1")
-    val root = new org.apache.hadoop.fs.Path(epochRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0
-    val all = fs.listStatus(root).toSeq
-      .flatMap(st => parseEpoch(st.getPath.getName)).sorted
+    val fs = fsOf(spark, epochRoot)
+    val all = epochIds(fs, epochRoot)
     if (all.isEmpty) return 0
     val wm = consumedAdmitWatermark(spark, epochRoot)
     // the oldest epoch that stays — everything sealed below it goes,
@@ -1612,10 +1718,8 @@ object Dedup {
     val cut = all.drop(math.max(0, all.size - keepLast)).head
     val drop = all.filter(_ < cut)
       .filter(e => force || wm.forall(e <= _))
-      .filter(e => fs.exists(new org.apache.hadoop.fs.Path(
-        s"${epochDir(epochRoot, e)}/_appended")))
-    drop.foreach(e => fs.delete(
-      new org.apache.hadoop.fs.Path(epochDir(epochRoot, e)), true))
+      .filter(sealedEpoch(fs, epochRoot, _))
+    drop.foreach(e => fs.delete(new Path(epochDir(epochRoot, e)), true))
     drop.size
   }
 
@@ -1641,24 +1745,18 @@ object Dedup {
     * metadata I/O with ZERO Spark jobs at any store age: a health
     * poll on a year-old root (~10⁵ epochs) must not launch a scan
     * whose task count grows with stream age. */
-  def admitEpochHealthReport(spark: org.apache.spark.sql.SparkSession,
-      epochRoot: String, horizon: Int = 8): DataFrame = {
+  def admitEpochHealthReport(spark: SparkSession, epochRoot: String,
+      horizon: Int = 8): DataFrame = {
     import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(epochRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val all =
-      if (!fs.exists(root)) Seq.empty[Long]
-      else fs.listStatus(root).toSeq
-        .flatMap(st => parseEpoch(st.getPath.getName)).sorted
-    val sealedEpochs = all.filter(e =>
-      fs.exists(new org.apache.hadoop.fs.Path(
-        s"${epochDir(epochRoot, e)}/_appended")))
-    val audited = sealedEpochs.count(e => fs.exists(
-      new org.apache.hadoop.fs.Path(s"${epochDir(epochRoot, e)}/audit")))
+    val fs = fsOf(spark, epochRoot)
+    val all = epochIds(fs, epochRoot)
+    val sealedEpochs = all.filter(sealedEpoch(fs, epochRoot, _))
+    val audited = sealedEpochs.count(e =>
+      fs.exists(new Path(s"${epochDir(epochRoot, e)}/audit")))
     // the gate (the SLOWEST group's watermark) drives the lag/page;
     // n_consumers says how many groups hold it
     val wm = consumedAdmitWatermark(spark, epochRoot)
-    val nConsumers = ackMarkers(fs, root).map(_._1).distinct.size
+    val nConsumers = ackMarkers(fs, epochRoot).map(_._1).distinct.size
     val newestSealed = sealedEpochs.lastOption.getOrElse(-1L)
     val lag = wm match {
       case Some(w) if newestSealed >= 0 => newestSealed - w
@@ -1668,8 +1766,7 @@ object Dedup {
     // — never a Spark job (see the scaladoc); non-data siblings
     // (_SUCCESS, hidden files) are excluded by the .parquet suffix
     val admittedRows = sealedEpochs.iterator.map { e =>
-      val d = new org.apache.hadoop.fs.Path(
-        s"${epochDir(epochRoot, e)}/admitted")
+      val d = new Path(s"${epochDir(epochRoot, e)}/admitted")
       if (!fs.exists(d)) 0L
       else fs.listStatus(d).iterator
         .filter(st => st.isFile &&
@@ -1692,48 +1789,13 @@ object Dedup {
         "admitted_rows")
   }
 
-  /** Digest-bucket of the exact ledger's store layout — the analog of
-    * [[ndlDb]], baked into partition dirs the same way (a probe
-    * computed with a different modulus would mis-prune and re-admit
-    * duplicates; changing it requires one [[compactDedupLedger]]
-    * migration, which derives db from the digests either way). */
-  private def ledgerDb(md5Col: Column): Column =
-    pmod(xxhash64(md5Col), lit(NdlDocBuckets.toLong)).cast("int")
-
-  /** The exact ledger's one write discipline (append and compaction):
-    * digests land partitioned by db, one file per touched bucket per
-    * write, sorted by digest within the file so the trickle path's
-    * pushed In(text_md5, …) literals fire parquet row-group stats. */
-  private def ledgerWriteDigests(rows: DataFrame, mode: String,
-      dest: String): Unit =
-    writeBucketed(rows.withColumn("db", ledgerDb(col("text_md5"))),
-      "db", NdlDocBuckets, Seq("text_md5"), mode, dest)
-
-  /** The one write discipline of every ledger store (appends,
-    * compactions, forgets, expiries): hash-repartition on the bucket
-    * into min(buckets, defaultParallelism) tasks — a bucket lands wholly
-    * in one task (which may hold several), so each write leaves one
-    * file per touched bucket, without waves of near-empty tasks on a
-    * small session; the explicit count keeps AQE from coalescing the
-    * write into one serial task. The sort leads with the bucket: the
-    * write requires that order and would replace a keys-only sort
-    * (files left unsorted), while (bucket, keys…) satisfies it. */
-  private def writeBucketed(rows: DataFrame, bucket: String,
-      buckets: Int, keys: Seq[String], mode: String, dest: String): Unit =
-    rows.repartition(
-        math.min(buckets, rows.sparkSession.sparkContext.defaultParallelism),
-        col(bucket))
-      .sortWithinPartitions((bucket +: keys).map(col): _*)
-      .write.mode(mode).partitionBy(bucket).parquet(dest)
-
   /** Compact the [[ledgerAdmit]] digest store. Every admitted batch
     * appends its own parquet file set, so a year of daily ingest leaves
     * hundreds of small files whose open/footer overhead dominates the
     * anti-join's build-side scan — the same accretion-vs-read-
     * amplification debt the IVF cell store pays, with the same answer.
     * Rewrites every db bucket to one digest-sorted file
-    * ([[ledgerWriteDigests]] — the bucket count is the layout's own)
-    * as a NEW
+    * ([[writeBucketed]] over [[ExactStore]]) as a NEW
     * GENERATION via [[graft.util.Gen.rewrite]] (atomic commit-marker
     * flip — ZERO reader outage, with the maintenance marker that makes
     * a racing [[ledgerAdmit]] fail loudly instead of losing its rows
@@ -1745,15 +1807,13 @@ object Dedup {
     * any historical race is repaired here rather than silently
     * surviving forever. Returns the digest count of the compacted
     * ledger (= its row count, post-distinct). */
-  def compactDedupLedger(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    graft.util.Gen.rewrite(spark, path)(tmp =>
-      ledgerWriteDigests(
-        graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, path))
-          .select(col("text_md5")).distinct(),
+  def compactDedupLedger(spark: SparkSession, path: String): Long =
+    Fs.labeled(spark, "exact:compact") {
+      Gen.rewrite(spark, path)(tmp => writeBucketed(ExactStore,
+        current(spark, path).select(col("text_md5")).distinct(),
         "overwrite", tmp))
-    graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, path)).count()
-  }
+      current(spark, path).count()
+    }
 
   /** One-row layout health of the [[ledgerAdmit]] digest store — the
     * exact ledger's member of the observability matrix every other
@@ -1766,25 +1826,18 @@ object Dedup {
     * still runs the pre-bucketing legacy layout (`bucketed` false →
     * compaction is also the migration). One scan of the 16-byte digest
     * column + file names. */
-  def dedupLedgerStats(spark: org.apache.spark.sql.SparkSession,
-      path: String, maxFilesPerBucket: Int = 16): DataFrame = {
+  def dedupLedgerStats(spark: SparkSession, path: String,
+      maxFilesPerBucket: Int = 16): DataFrame = {
     import spark.implicits._
-    val s0 = graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, path))
+    val s0 = current(spark, path)
     val bucketed = s0.columns.contains("db")
     val withDb =
-      if (bucketed) s0
-      else s0.withColumn("db", ledgerDb(col("text_md5")))
-    val t = withDb.select(col("db"), col("text_md5"),
-        input_file_name().as("f"))
-      .agg(count(lit(1)).as("rows"),
-        countDistinct(col("text_md5")).as("digests"),
-        countDistinct(col("f")).as("files"))
-      .first()
+      if (bucketed) s0 else s0.withColumn("db", ExactStore.bucketOf)
+    val t = ledgerCensus(withDb, Seq("db", "text_md5"),
+      countDistinct(col("text_md5")).as("digests"),
+      countDistinct(col("f")).as("files"))
     val maxPerBucket =
-      if (bucketed)
-        withDb.select(col("db"), input_file_name().as("f"))
-          .groupBy(col("db")).agg(countDistinct(col("f")).as("nf"))
-          .agg(max(col("nf"))).first().getLong(0)
+      if (bucketed) maxBucketFiles(withDb, "db")
       else t.getAs[Long]("files") // flat: one "bucket"
     Seq((t.getAs[Long]("digests"),
       t.getAs[Long]("rows") - t.getAs[Long]("digests"),
@@ -1798,15 +1851,15 @@ object Dedup {
     * for near-duplicates, and the operator a daily 100-TB ingest
     * actually runs: history-aware near-dup WITHOUT re-scanning or
     * re-signaturing the historical corpus. The ledger is TWO parquet
-    * stores. The PRIMARY at `path` holds one row per distinct text ever
-    * seen — (doc, text_md5, hs: the sorted distinct shingle-hash array,
-    * mh0..mhN: the MinHash signature), exactly the per-doc state
-    * [[nearDupDrops]] derives per run, persisted once — partitioned by
-    * `db` = hash(doc) mod [[NdlDocBuckets]], so the verify stage's
-    * hs-array fetch (the WIDEST column in the store) reads only the
-    * buckets that hold actual candidates. The BAND STORE at
-    * `path + "_bands"` holds the exploded LSH band keys
-    * (kb, band, kh, doc) — kh the 8-byte key hash, partitioned by
+    * stores. The PRIMARY at `path` ([[PrimaryStore]]) holds one row per
+    * distinct text ever seen — (doc, text_md5, hs: the sorted distinct
+    * shingle-hash array, mh0..mhN: the MinHash signature), exactly the
+    * per-doc state [[nearDupDrops]] derives per run, persisted once —
+    * partitioned by `db` = hash(doc) mod [[NdlDocBuckets]], so the
+    * verify stage's hs-array fetch (the WIDEST column in the store)
+    * reads only the buckets that hold actual candidates. The BAND STORE
+    * at `path + "_bands"` ([[BandStore]]) holds the exploded LSH band
+    * keys (kb, band, kh, doc) — kh the 8-byte key hash, partitioned by
     * kb = kh mod [[NdlKeyBuckets]] (kb alone: kh determines kb, so a
     * band split would quadruple the directory/file counts for zero
     * extra pruning) — it exists so an admit's
@@ -1816,8 +1869,8 @@ object Dedup {
     * admit): the probe equi-joins the band store on (band, kb, key)
     * with the batch's keys broadcast, so dynamic partition pruning
     * skips every (band, kb) bucket the batch does not touch
-    * (ExplainCheck-pinned), and a bucket's rows are three narrow
-    * columns, not 16 signature columns.
+    * (pinned in LedgerPlanPinsSpec), and a bucket's rows are three
+    * narrow columns, not 16 signature columns.
     *
     * A batch admit is four bounded joins, none corpus-sized on the
     * batch side:
@@ -1881,8 +1934,8 @@ object Dedup {
     * (band, key) bucket; it is a plain shuffle equi-join, so AQE
     * skew-split handles it (the in-batch pass routes through
     * [[lshCandidatesFromSignatures]]'s explicit mega-bucket guard). */
-  def nearDupLedgerAdmit(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String, textCol: String,
+  def nearDupLedgerAdmit(spark: SparkSession, path: String,
+      batch: DataFrame, idCol: String, textCol: String,
       n: Int = 3, bands: Int = 4, rows: Int = 4,
       threshold: Double = 0.8,
       admittedOut: Option[String] = None,
@@ -1895,7 +1948,7 @@ object Dedup {
     // (admit-vs-maintenance stays the marker fence + content
     // re-verify; maintenance on the BANDS store also fail-fasts on
     // this primary lease via Gen.rewrite's extraLeases)
-    graft.util.Fs.withIngestLease(spark, path, "nearDupLedgerAdmit") {
+    Fs.withIngestLease(spark, path, "nearDupLedgerAdmit") {
       val (admitted, novel) = ndlDecide(spark, path, batch, idCol,
         textCol, n, bands, rows, threshold, hasher, auditOut)
       admittedOut.foreach(out =>
@@ -1909,23 +1962,21 @@ object Dedup {
     * — split out so the streamed form can persist both per epoch
     * BEFORE any append. Callers hold the primary's ingest lease.
     * Returns (admitted, novel). */
-  private def ndlDecide(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String, textCol: String,
+  private def ndlDecide(spark: SparkSession, path: String,
+      batch: DataFrame, idCol: String, textCol: String,
       n: Int, bands: Int, rows: Int, threshold: Double,
       hasher: Column => Column,
       auditOut: Option[String],
       materializeNovelTo: Option[String] = None)
       : (DataFrame, DataFrame) =
-    graft.util.Fs.labeled(spark, "ndl:decide") {
-    graft.util.Fs.failIfUnderMaintenance(spark, path,
-      "nearDupLedgerAdmit")
-    graft.util.Fs.failIfUnderMaintenance(spark, ndlBandsPath(path),
+    Fs.labeled(spark, "ndl:decide") {
+    Fs.failIfUnderMaintenance(spark, path, "nearDupLedgerAdmit")
+    Fs.failIfUnderMaintenance(spark, ndlBandsPath(path),
       "nearDupLedgerAdmit")
     val numPerms = bands * rows
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasStore = graft.util.Gen.hasData(spark, path)
-    ndlCheckMeta(fs, path, bands, rows, hasStore, "nearDupLedgerAdmit")
+    val hasStore = Gen.hasData(spark, path)
+    ndlCheckMeta(fsOf(spark, path), path, bands, rows, hasStore,
+      "nearDupLedgerAdmit")
 
     // batch prep: digest every row, collapse to min-id representatives
     // per distinct text (the exact stage — identical to nearDupDrops'
@@ -1960,7 +2011,7 @@ object Dedup {
     val storeColsDb = storeCols :+ "db"
     val store =
       if (hasStore) {
-        val s0 = graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, path))
+        val s0 = current(spark, path)
         val s = if (s0.columns.toSet == storeColsDb.toSet)
           s0.select(storeColsDb.map(col): _*) else s0
         if (s.columns.toSeq != storeColsDb) throw new IllegalStateException(
@@ -1973,31 +2024,16 @@ object Dedup {
         s
       } else batchSig.limit(0).withColumn("db", lit(0).cast("int"))
 
-    def jaccardPairs(cands: DataFrame, left: DataFrame,
-        right: DataFrame): DataFrame = cands
-      .join(left.select(col("doc").as("doc_a"), col("hs").as("hs_a")),
-        Seq("doc_a"))
-      .join(right.select(col("doc").as("doc_b"), col("hs").as("hs_b")),
-        Seq("doc_b"))
-      .withColumn("inter",
-        size(array_intersect(col("hs_a"), col("hs_b"))).cast("long"))
-      .withColumn("jaccard",
-        round(col("inter").cast("double") /
-          (size(col("hs_a")) + size(col("hs_b")) - col("inter"))
-            .cast("double"), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"))
     // the persisted band-key store: backfill it once when the primary
     // predates it (or its dir was lost) — an O(history) derivation
     // that buys every later admit its pruned probe
     val bandsPath = ndlBandsPath(path)
-    if (hasStore && !graft.util.Gen.hasData(spark, bandsPath))
+    if (hasStore && !Gen.hasData(spark, bandsPath))
       // the backfill is a store REWRITE — route it through the
       // generation protocol so a racing reader of a half-backfilled
       // band store is impossible (fresh stores just get gen-1)
-      graft.util.Gen.rewrite(spark, bandsPath)(g =>
-        ndlWriteBands(ndlWithKb(ndlBandKeys(store, bands, rows)),
-          "overwrite", g))
+      Gen.rewrite(spark, bandsPath)(g => writeBucketed(BandStore,
+        ndlWithKb(ndlBandKeys(store, bands, rows)), "overwrite", g))
     // hasData (not just hasStore): an all-unshingleable history (every
     // doc shorter than the shingle width) appends ZERO band keys, and
     // partitionBy writes no files for an empty frame — the store dir
@@ -2005,16 +2041,17 @@ object Dedup {
     // bandable signatures by construction, so the empty typed frame is
     // exactly its band store.
     val bandStore =
-      if (hasStore && graft.util.Gen.hasData(spark, bandsPath))
-        graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, bandsPath))
+      if (hasStore && Gen.hasData(spark, bandsPath))
+        current(spark, bandsPath)
       else ndlWithKb(ndlBandKeys(batchSig.limit(0), bands, rows))
 
     val exactVsStore = batchSig
       .join(store.select(col("text_md5")), Seq("text_md5"), "left_semi")
       .select(col("doc"))
-    val exactInBatch = withMd5
+    val exactBatchPairs = withMd5
       .join(reps.withColumnRenamed("doc", "rep"), Seq("text_md5"))
-      .filter(col("doc") =!= col("rep")).select(col("doc"))
+      .filter(col("doc") =!= col("rep"))
+    val exactInBatch = exactBatchPairs.select(col("doc"))
     // candidate probe: batch band keys vs the PERSISTED band store.
     // Broadcasting the batch side is what feeds dynamic partition
     // pruning into the store scan (only the batch's (band, kb) buckets
@@ -2032,11 +2069,11 @@ object Dedup {
     // fold their key hashes into a literal `isInCollection` FILTER on
     // the band-store scan — the tombstone-fold pattern. DPP's partition
     // floor is 1/NdlKeyBuckets; the pushed In(kh, …) reaches parquet as
-    // row-group stats against the kh-SORTED files (ndlWriteBands), so a
+    // row-group stats against the kh-SORTED files ([[BandStore]]), so a
     // 5-doc probe reads row groups ∝ its keys, not 1/32 of history.
     // Decisions are provably unchanged: the filter keeps exactly the
     // kh values the equi-join (still present, for the doc pairing)
-    // could match. ExplainCheck pins PushedFilters carrying kh.
+    // could match. LedgerPlanPinsSpec pins PushedFilters carrying kh.
     val bandScan =
       if (nReps <= NdlLiteralMaxReps) {
         val khs = batchKeys.select(col("kh")).distinct()
@@ -2054,25 +2091,20 @@ object Dedup {
     // widest column in the store is read only for buckets that hold
     // actual candidates
     val candDb = candsVsStore.withColumn("db", ndlDb(col("doc_a")))
-    val nearVsStorePairs = store
+    val nearVsStorePairs = jaccardAtLeast(store
       .select(col("db"), col("doc").as("doc_a"), col("hs").as("hs_a"))
       .join(if (smallBatch) broadcast(candDb) else candDb,
         Seq("db", "doc_a"))
       .join(batchSig.select(col("doc").as("doc_b"), col("hs").as("hs_b")),
-        Seq("doc_b"))
-      .withColumn("inter",
-        size(array_intersect(col("hs_a"), col("hs_b"))).cast("long"))
-      .withColumn("jaccard",
-        round(col("inter").cast("double") /
-          (size(col("hs_a")) + size(col("hs_b")) - col("inter"))
-            .cast("double"), 6))
-      .filter(col("jaccard") >= threshold)
+        Seq("doc_b")), threshold)
       .select(col("doc_a"), col("doc_b"))
     val nearVsStore = nearVsStorePairs.select(col("doc_b").as("doc"))
     val candsInBatch = lshCandidatesFromSignatures(
         batchSig.filter(col("mh0").isNotNull), bands, rows)
       .select(col("doc_a"), col("doc_b"))
-    val nearInBatchPairs = jaccardPairs(candsInBatch, batchSig, batchSig)
+    val nearInBatchPairs =
+      verifyPairs(candsInBatch, batchSig, batchSig, threshold)
+        .select(col("doc_a"), col("doc_b"))
     val nearInBatch = nearInBatchPairs.select(col("doc_b").as("doc"))
     // `auditOut` materializes the drop REASONS — the explainability/
     // takedown-audit surface: one row per (dropped doc, rule that
@@ -2100,9 +2132,7 @@ object Dedup {
           .groupBy(col("doc")).agg(min(col("partner")).as("partner"))
           .select(col("doc"), lit("exact_store").as("reason"),
             col("partner"))
-        val exactBatchP = withMd5
-          .join(reps.withColumnRenamed("doc", "rep"), Seq("text_md5"))
-          .filter(col("doc") =!= col("rep"))
+        val exactBatchP = exactBatchPairs
           .select(col("doc"), lit("exact_batch").as("reason"),
             col("rep").as("partner"))
         // the audit write IS the materialization (r19): checkpointing
@@ -2160,168 +2190,79 @@ object Dedup {
     * crash between ONE store's commit and its marker create
     * (microseconds — and still transient: compaction's distinct
     * collapses it). */
-  private def ndlAppend(spark: org.apache.spark.sql.SparkSession,
-      path: String, novel: DataFrame, bands: Int, rows: Int,
+  private def ndlAppend(spark: SparkSession, path: String,
+      novel: DataFrame, bands: Int, rows: Int,
       sealDir: Option[String] = None): Unit =
-    graft.util.Fs.labeled(spark, "ndl:append") {
+    Fs.labeled(spark, "ndl:append") {
     if (!novel.isEmpty) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = fsOf(spark, path)
       def half(marker: String)(write: => Unit): Unit = sealDir match {
         case None => write
         case Some(d) =>
-          val m = new org.apache.hadoop.fs.Path(s"$d/$marker")
+          val m = new Path(s"$d/$marker")
           if (!fs.exists(m)) { write; fs.create(m, true).close() }
       }
       half("_bands_appended") {
-        ndlWriteBands(ndlWithKb(ndlBandKeys(novel, bands, rows)), "append",
-          graft.util.Gen.appendDir(spark, ndlBandsPath(path)))
+        writeBucketed(BandStore, ndlWithKb(ndlBandKeys(novel, bands, rows)),
+          "append", Gen.appendDir(spark, ndlBandsPath(path)))
       }
       half("_primary_appended") {
-        ndlWritePrimary(novel, "append",
-          graft.util.Gen.appendDir(spark, path))
+        writeBucketed(PrimaryStore, novel, "append",
+          Gen.appendDir(spark, path))
       }
     }
     }
 
-  /** Streamed [[nearDupLedgerAdmit]] — the same epoch protocol as
-    * [[ledgerAdmitStreamBatch]] (read its scaladoc for the retry
-    * semantics), with TWO persisted decision sets per epoch: the
-    * admitted batch rows (`epoch-<id>/admitted`, what downstream
-    * consumes) and the novel signature rows (`epoch-<id>/novel`, what
-    * the append writes to both stores) — both sealed by `_decided`
-    * before any append, so a re-delivered epoch re-emits identical
-    * decisions AND re-appends exactly the signatures it first decided,
-    * never re-deriving either against a ledger the first delivery
-    * moved. Each store's append is sealed with its own per-epoch
-    * marker (see [[ndlAppend]]), so a retry skips the half that
-    * already landed; only a crash between one store's commit and its
-    * marker can still double-append that half — decisions unaffected
-    * (candidates and verify pairs de-duplicate),
+  /** Streamed [[nearDupLedgerAdmit]]: one epoch of the shared
+    * [[admitEpoch]] protocol with TWO persisted decision sets per
+    * epoch: the admitted batch rows (`epoch-<id>/admitted`, what
+    * downstream consumes) and the novel signature rows
+    * (`epoch-<id>/novel`, what the append writes to both stores) —
+    * both sealed by `_decided` before any append, so a re-delivered
+    * epoch re-emits identical decisions AND re-appends exactly the
+    * signatures it first decided, never re-deriving either against a
+    * ledger the first delivery moved. Each store's append is sealed
+    * with its own per-epoch marker (see [[ndlAppend]]), so a retry
+    * skips the half that already landed; only a crash between one
+    * store's commit and its marker can still double-append that half —
+    * decisions unaffected (candidates and verify pairs de-duplicate),
     * [[compactNearDupLedger]]'s distinct collapses the rows. Audit
     * output is per-epoch when `audit = true` (`epoch-<id>/audit`,
     * same schema as the batch `auditOut`). */
-  def nearDupLedgerAdmitStreamBatch(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, epochRoot: String, batch: DataFrame, idCol: String,
-      textCol: String, epochId: Long, n: Int = 3, bands: Int = 4,
-      rows: Int = 4, threshold: Double = 0.8,
-      hasher: Column => Column = hash60(_),
+  def nearDupLedgerAdmitStreamBatch(spark: SparkSession, path: String,
+      epochRoot: String, batch: DataFrame, idCol: String, textCol: String,
+      epochId: Long, n: Int = 3, bands: Int = 4, rows: Int = 4,
+      threshold: Double = 0.8, hasher: Column => Column = hash60(_),
       audit: Boolean = false): DataFrame =
-    graft.util.Fs.withIngestLease(spark, path,
-        s"nearDupLedgerAdmitStream(epoch=$epochId)") {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val eDir = epochDir(epochRoot, epochId)
-      val decidedM = new org.apache.hadoop.fs.Path(s"$eDir/_decided")
-      val appendedM = new org.apache.hadoop.fs.Path(s"$eDir/_appended")
-      val admittedPath = s"$eDir/admitted"
-      val novelPath = s"$eDir/novel"
-      val fp = epochFingerprint(batch, idCol, textCol)
-      checkEpochFingerprint(fs, decidedM, fp, epochId, epochRoot)
-      if (fs.exists(appendedM)) graft.util.Gen.read(spark, admittedPath)
-      else if (!fs.exists(decidedM)) {
-        // first delivery: the decide's materializeNovelTo writes the
-        // epoch's novel parquet directly (one materialization, not a
-        // checkpoint plus a second full write)
+    admitEpoch(spark, path, epochRoot, batch, idCol, textCol, epochId,
+        "nearDupLedgerAdmitStream", "ndl")(
+      eDir => {
+        // the decide's materializeNovelTo writes the epoch's novel
+        // parquet directly (one materialization, not a checkpoint plus
+        // a second full write)
         val (admitted, novel) = ndlDecide(spark, path, batch, idCol,
           textCol, n, bands, rows, threshold, hasher,
           if (audit) Some(s"$eDir/audit") else None,
-          materializeNovelTo = Some(novelPath))
-        admitted.write.mode("overwrite").parquet(admittedPath)
-        writeSeal(fs, decidedM, fp)
-        ndlAppend(spark, path, novel, bands, rows,
-          sealDir = Some(eDir))
-        fs.create(appendedM, true).close()
-        graft.util.Gen.read(spark, admittedPath)
-      } else {
-        // retry of a decided-but-unappended epoch: append the STORED
-        // novel signatures, touch no decision
-        ndlAppend(spark, path, graft.util.Gen.read(spark, novelPath), bands,
-          rows, sealDir = Some(eDir))
-        fs.create(appendedM, true).close()
-        graft.util.Gen.read(spark, admittedPath)
-      }
-    }
+          materializeNovelTo = Some(s"$eDir/novel"))
+        admitted.write.mode("overwrite").parquet(s"$eDir/admitted")
+        (Gen.read(spark, s"$eDir/admitted"),
+          () => ndlAppend(spark, path, novel, bands, rows, Some(eDir)))
+      },
+      eDir => ndlAppend(spark, path, Gen.read(spark, s"$eDir/novel"),
+        bands, rows, Some(eDir)))
 
   /** Wire a document stream into the near-dup ledger: one
-    * [[nearDupLedgerAdmitStreamBatch]] per micro-batch via
-    * `foreachBatch`, the sink checkpoint at `checkpointLocation`
-    * driving the epoch ids; admitted rows of epoch N land at
-    * `epochRoot/epoch-<N>/admitted` and retries re-emit identical
-    * content. Caller stops the returned query. Same lifecycle coupling
-    * as [[ledgerAdmitStream]]: `epochRoot` lives and dies with
-    * `checkpointLocation` (a reset checkpoint over a surviving root
-    * fails loudly on the fingerprint seal), and ad-hoc backfills route
-    * THROUGH the stream's source as normal epochs — a concurrent
-    * batch [[nearDupLedgerAdmit]] mid-epoch fails loudly on the shared
-    * ingest lease by design. */
-  def nearDupLedgerAdmitStream(spark: org.apache.spark.sql.SparkSession,
-      path: String, epochRoot: String, stream: DataFrame, idCol: String,
-      textCol: String, checkpointLocation: String, n: Int = 3,
-      bands: Int = 4, rows: Int = 4, threshold: Double = 0.8,
-      hasher: Column => Column = hash60(_), audit: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (b: DataFrame, epochId: Long) =>
-        nearDupLedgerAdmitStreamBatch(spark, path, epochRoot, b, idCol,
-          textCol, epochId, n, bands, rows, threshold, hasher, audit)
-        ()
-      }
-      .start()
-
-  /** Number of doc buckets in the near-dup ledger's primary store — the
-    * partition-pruning granularity of the verify stage's hs fetch. A
-    * layout-baked constant like [[NdlKeyBuckets]] (a probe computed
-    * with a different modulus would silently miss every candidate's
-    * array). */
-  private val NdlDocBuckets = 32
-
-  private[graft] def ndlDb(doc: Column): Column =
-    pmod(xxhash64(doc), lit(NdlDocBuckets.toLong)).cast("int")
-
-  /** The primary store's one write discipline (append, compaction, and
-    * the forget and expiry rewrites): rows land partitioned by
-    * db = hash(doc) mod [[NdlDocBuckets]], one file per touched bucket
-    * per write ([[writeBucketed]]). */
-  private def ndlWritePrimary(rows: DataFrame, mode: String,
-      dest: String): Unit =
-    writeBucketed(rows.withColumn("db", ndlDb(col("doc"))),
-      "db", NdlDocBuckets, Nil, mode, dest)
-
-  /** Number of key buckets in the near-dup ledger's band store — the
-    * partition-pruning granularity of an admit's candidate probe. A
-    * constant, not a parameter, deliberately: the bucket of a key is
-    * baked into the store's layout, and a probe computed with a
-    * different modulus would silently miss every candidate (the same
-    * store-bound discipline as the hasher). 32 partition
-    * dirs keeps the per-admit dynamic-write commit cost tame (the
-    * measured dominant cost of a small-batch admit is files created,
-    * not bytes) while a daily batch still skips the buckets it does
-    * not touch. The partition dirs are deliberately coarse; pruning
-    * INSIDE a bucket comes from the trickle path's literal
-    * `In(kh, …)` fold (≤ [[NdlLiteralMaxReps]] reps), which reaches
-    * the parquet scan as a pushed filter and fires row-group stats on
-    * the kh-SORTED files [[ndlWriteBands]] lays down — a daily-SIZED
-    * batch has no kh predicate (its join touches most row groups
-    * anyway), so its floor is the partition pruning + column
-    * narrowing. */
-  private val NdlKeyBuckets = 32
-
-  /** Batch-rep bound for folding the probe's key hashes into a literal
-    * scan filter (≈4× this many 8-byte literals in the plan — same
-    * order as the index stores' 64k tombstone fold). Above it the
-    * equi-join alone carries the probe: a batch that big touches most
-    * row groups of most buckets, so the literal would bloat the plan
-    * for no read saved. */
-  private val NdlLiteralMaxReps = 2048L
-
-  /** Batch-rep bound for the broadcast band probe (≈4× this many band
-    * keys on the wire). Daily batches sit far under it; bulk backfills
-    * beyond it take the shuffle path instead of an oversized
-    * broadcast. */
-  private val NdlDppMaxReps = 262144L
+    * [[nearDupLedgerAdmitStreamBatch]] per micro-batch
+    * ([[admitStream]]). */
+  def nearDupLedgerAdmitStream(spark: SparkSession, path: String,
+      epochRoot: String, stream: DataFrame, idCol: String, textCol: String,
+      checkpointLocation: String, n: Int = 3, bands: Int = 4,
+      rows: Int = 4, threshold: Double = 0.8,
+      hasher: Column => Column = hash60(_),
+      audit: Boolean = false): StreamingQuery =
+    admitStream(stream, checkpointLocation)((b, epochId) =>
+      nearDupLedgerAdmitStreamBatch(spark, path, epochRoot, b, idCol,
+        textCol, epochId, n, bands, rows, threshold, hasher, audit))
 
   /** Sibling path of the near-dup ledger's persisted band-key store. */
   private[graft] def ndlBandsPath(path: String): String = path + "_bands"
@@ -2338,34 +2279,22 @@ object Dedup {
     * ([[compactNearDupLedger]] rewrites both stores AND the sidecar
     * with the current moduli). Read/written through the Hadoop FS
     * directly — no Spark job on the admit path. */
-  private def ndlMetaPath(path: String): String = path + "_meta"
+  private def ndlMetaPath(path: String): Path = new Path(path + "_meta")
 
   private def ndlMetaJson(bands: Int, rows: Int): String =
     s"""{"bands":$bands,"rows":$rows,"key_buckets":$NdlKeyBuckets,""" +
       s""""doc_buckets":$NdlDocBuckets,"layout":2}"""
 
-  private def ndlWriteMeta(
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      bands: Int, rows: Int): Unit = {
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(ndlMetaPath(path)), true)
-    out.write(ndlMetaJson(bands, rows).getBytes("UTF-8"))
-    out.close()
-  }
-
   /** Verify (or create / backfill) the geometry sidecar. `hasStore`
     * distinguishes a fresh ledger (write it) from a pre-sidecar one
     * (backfill it — stores from this code lineage used the current
     * constants). */
-  private def ndlCheckMeta(
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      bands: Int, rows: Int, hasStore: Boolean, who: String): Unit = {
-    val mp = new org.apache.hadoop.fs.Path(ndlMetaPath(path))
+  private def ndlCheckMeta(fs: FileSystem, path: String, bands: Int,
+      rows: Int, hasStore: Boolean, who: String): Unit = {
+    val mp = ndlMetaPath(path)
     val expect = ndlMetaJson(bands, rows)
     if (fs.exists(mp) && hasStore) {
-      val in = fs.open(mp)
-      val got = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+      val got = Gen.readSmall(fs, mp)
       if (got != expect) throw new IllegalStateException(
         s"$who: $path was created with geometry $got; this call/build " +
           s"implies $expect. Admit with the recorded band split, or — " +
@@ -2376,21 +2305,32 @@ object Dedup {
       // fresh ledger (or a first admit that crashed before any append
       // left a sidecar with no store behind it — nothing is bound yet):
       // (re)stamp with this call's geometry
-      ndlWriteMeta(fs, path, bands, rows)
+      writeSmall(fs, mp, expect)
   }
 
-  private def ndlReadMeta(fs: org.apache.hadoop.fs.FileSystem,
+  private def ndlReadMeta(fs: FileSystem,
       path: String): Option[Map[String, Int]] = {
-    val mp = new org.apache.hadoop.fs.Path(ndlMetaPath(path))
+    val mp = ndlMetaPath(path)
     if (!fs.exists(mp)) None
-    else {
-      val in = fs.open(mp)
-      val got = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some("\"(\\w+)\":(\\d+)".r.findAllMatchIn(got)
-        .map(m => m.group(1) -> m.group(2).toInt).toMap)
-    }
+    else Some("\"(\\w+)\":(\\d+)".r.findAllMatchIn(Gen.readSmall(fs, mp))
+      .map(m => m.group(1) -> m.group(2).toInt).toMap)
   }
+
+  /** Refuse to rewrite a ledger whose sidecar records other bucket
+    * moduli than this build's: the rewrite recomputes buckets with the
+    * current moduli, and mixing them would mis-prune (compaction is the
+    * migration). */
+  private def ndlRequireModuli(meta: Option[Map[String, Int]],
+      path: String, who: String, verb: String): Unit =
+    meta.foreach { m =>
+      if (m("key_buckets") != NdlKeyBuckets ||
+          m("doc_buckets") != NdlDocBuckets)
+        throw new IllegalStateException(
+          s"$who: $path was written under bucket moduli " +
+            s"(${m("key_buckets")}, ${m("doc_buckets")}); this build " +
+            s"uses ($NdlKeyBuckets, $NdlDocBuckets) — run " +
+            s"compactNearDupLedger once to migrate, then $verb.")
+    }
 
   /** Explode a signature frame into LSH band keys: (doc, band, key) —
     * one home for the banding spelling the store, the batch probe, and
@@ -2419,21 +2359,8 @@ object Dedup {
     * unchanged by the hashing. */
   private[graft] def ndlWithKb(keys: DataFrame): DataFrame =
     keys.withColumn("kh", xxhash64(col("key")))
-      .withColumn("kb", ndlKb(col("kh")))
+      .withColumn("kb", BandStore.bucketOf)
       .drop("key")
-
-  private def ndlKb(kh: Column): Column =
-    pmod(kh, lit(NdlKeyBuckets.toLong)).cast("int")
-
-  /** The band store's one write discipline (append, backfill and every
-    * rewrite): hashed rows (kb, band, kh, doc) land partitioned by kb,
-    * one file per touched bucket per write ([[writeBucketed]]), sorted
-    * by (band, kh) within the file so parquet row-group stats refine
-    * the bucket-level pruning. */
-  private def ndlWriteBands(hashed: DataFrame, mode: String,
-      dest: String): Unit =
-    writeBucketed(hashed.select(col("kb"), col("band"), col("kh"),
-      col("doc")), "kb", NdlKeyBuckets, Seq("band", "kh"), mode, dest)
 
   /** Rebuild the band store from the primary's signatures — the
     * explicit form of the backfill [[nearDupLedgerAdmit]] runs when the
@@ -2448,11 +2375,9 @@ object Dedup {
     * Sidecar-less pre-sidecar ledgers fall back to the passed values
     * (checked against the signature column count, as before). Returns
     * the band-key row count. */
-  def rebuildNearDupLedgerBands(spark: org.apache.spark.sql.SparkSession,
-      path: String, bands: Int = 0, rows: Int = 0): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val meta = ndlReadMeta(fs, path)
+  def rebuildNearDupLedgerBands(spark: SparkSession, path: String,
+      bands: Int = 0, rows: Int = 0): Long = {
+    val meta = ndlReadMeta(fsOf(spark, path), path)
     meta.foreach { m =>
       if ((bands > 0 && bands != m("bands")) ||
           (rows > 0 && rows != m("rows")))
@@ -2462,34 +2387,70 @@ object Dedup {
             s"rebuilding with ${bands}x$rows would write band keys no " +
             "admit probe ever matches. Omit bands/rows to use the " +
             "recorded geometry.")
-      if (m("key_buckets") != NdlKeyBuckets ||
-          m("doc_buckets") != NdlDocBuckets)
-        throw new IllegalStateException(
-          s"rebuildNearDupLedgerBands: $path was written under bucket " +
-            s"moduli (${m("key_buckets")}, ${m("doc_buckets")}); this " +
-            s"build uses ($NdlKeyBuckets, $NdlDocBuckets) — run " +
-            "compactNearDupLedger once to migrate, then rebuild.")
     }
+    ndlRequireModuli(meta, path, "rebuildNearDupLedgerBands", "rebuild")
     val useBands = meta.map(_("bands")).getOrElse(if (bands > 0) bands
       else 4)
     val useRows = meta.map(_("rows")).getOrElse(if (rows > 0) rows
       else 4)
-    val primary = graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, path))
+    val primary = current(spark, path)
     val mh = primary.columns.count(_.startsWith("mh"))
     require(useBands * useRows == mh,
       s"band geometry ${useBands}x$useRows does not match the ledger's " +
         s"$mh signature columns")
     val bandsPath = ndlBandsPath(path)
-    graft.util.Gen.rewrite(spark, bandsPath, extraLeases = Seq(path))(
-      g => ndlWriteBands(ndlWithKb(ndlBandKeys(primary, useBands, useRows)),
-        "overwrite", g))
+    Gen.rewrite(spark, bandsPath, extraLeases = Seq(path))(g =>
+      writeBucketed(BandStore,
+        ndlWithKb(ndlBandKeys(primary, useBands, useRows)), "overwrite", g))
     // an all-unshingleable primary rebuilds to an EMPTY band store
     // (no files, no schema) — report 0 keys instead of failing to
     // infer a schema that was never written
-    if (graft.util.Gen.hasData(spark, bandsPath))
-      graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, bandsPath))
-        .count()
+    if (Gen.hasData(spark, bandsPath)) current(spark, bandsPath).count()
     else 0L
+  }
+
+  /** The near-dup ledger's one two-store rewrite — behind
+    * [[nearDupLedgerForget]], the retention grade of
+    * [[nearDupLedgerExpire]] and [[compactNearDupLedger]]: the band
+    * store becomes `bands(current band rows)` and the primary
+    * `primary(current primary rows)`, each through a zero-outage
+    * [[graft.util.Gen.rewrite]] generation flip ([[writeBucketed]]
+    * recomputes every bucket). A LEDGER-LEVEL fence — the PRIMARY's
+    * maintenance marker — is held across BOTH flips: a crash after the
+    * band flip but before the primary flip leaves the two stores
+    * inconsistent (a forget's band rows scrubbed with its primary ids
+    * original; an expiry's band keys purged with their primary rows
+    * kept), a state in which an admit's verify join would SILENTLY drop
+    * near-vs-history candidates — so the surviving marker keeps admits
+    * failing loudly until the verb is RE-RUN to completion (each verb
+    * is idempotent over the half-done state). The band store rewrites
+    * first; its rewrite fails fast on the PRIMARY's ingest lease too,
+    * the lease that serializes ingest into the band store — without
+    * it, an admit that took its lease before the marker went down would
+    * only be caught by the late content re-verify. A band rewrite that
+    * fails before its publish leaves both stores as they were, so it
+    * lifts the fence; from the band flip on, any failure leaves it
+    * down. A missing band store is left for the next admit's backfill.
+    * The marker is created and deleted once here (the primary's rewrite
+    * runs with `ownsMarker`), as often as one plain rewrite would. */
+  private def rewriteNearDupLedger(spark: SparkSession, path: String)(
+      bands: DataFrame => DataFrame, primary: DataFrame => DataFrame): Unit = {
+    val bandsPath = ndlBandsPath(path)
+    Gen.createMarker(spark, path)
+    try {
+      if (Gen.hasData(spark, bandsPath))
+        Gen.rewrite(spark, bandsPath, extraLeases = Seq(path))(tmp =>
+          writeBucketed(BandStore, bands(current(spark, bandsPath)),
+            "overwrite", tmp))
+    } catch {
+      case e: Throwable =>
+        Gen.deleteMarker(spark, path)
+        throw e
+    }
+    Gen.rewrite(spark, path, ownsMarker = true)(tmp =>
+      writeBucketed(PrimaryStore, primary(current(spark, path)),
+        "overwrite", tmp))
+    Gen.deleteMarker(spark, path)
   }
 
   /** Forget documents from the near-dup ledger — the takedown/opt-out
@@ -2501,98 +2462,42 @@ object Dedup {
     * IDENTITY: its id is scrubbed to a deterministic digest-keyed
     * NEGATIVE sentinel (ledger ids are numeric and non-negative under
     * the documented ingest contract — the in-batch LSH pass requires
-    * long-orderable ids) in BOTH stores, via zero-outage
-    * [[graft.util.Gen.rewrite]] generation flips (admits fail loudly
-    * for the window; readers are never fenced). A LEDGER-LEVEL fence —
-    * the PRIMARY's maintenance marker — is held across BOTH rewrites:
-    * a crash after the band flip but before the primary flip leaves
-    * the two stores inconsistent (band rows scrubbed, primary ids
-    * original), a state in which an admit's verify join would SILENTLY
-    * drop near-vs-history candidates for every forgotten signature —
-    * so the surviving marker keeps admits failing loudly until the
-    * forget is RE-RUN to completion (which is idempotent: sentinels
-    * derive from the digest, so the mapping is stable across runs, and
-    * already-scrubbed band rows simply stop matching it). The band
-    * store scrubs first. Admit decisions are bit-identical before and
-    * after (spec-pinned): the store side of every join carries the
-    * scrubbed id only as an opaque join key, and no decision compares
-    * store ids with batch ids. Returns the number of primary rows
-    * scrubbed. */
-  def nearDupLedgerForget(spark: org.apache.spark.sql.SparkSession,
-      path: String, ids: DataFrame, idCol: String): Long = {
-    // the scrub recomputes db with the CURRENT modulus — refuse to mix
-    // generations if the store predates a modulus change (compaction
-    // is the migration)
-    val mfs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ndlReadMeta(mfs, path).foreach { m =>
-      if (m("key_buckets") != NdlKeyBuckets ||
-          m("doc_buckets") != NdlDocBuckets)
-        throw new IllegalStateException(
-          s"nearDupLedgerForget: $path was written under bucket moduli " +
-            s"(${m("key_buckets")}, ${m("doc_buckets")}); this build " +
-            s"uses ($NdlKeyBuckets, $NdlDocBuckets) — run " +
-            "compactNearDupLedger once to migrate, then forget.")
-    }
-    val primary0 = graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, path))
-    val docType = primary0.schema("doc").dataType
-    val sentinel = (lit(-1L) - pmod(xxhash64(col("text_md5")),
-      lit(Long.MaxValue))).cast(docType)
-    val mapping = primary0
-      .join(ids.select(col(idCol).cast(docType).as("doc")).distinct(),
-        Seq("doc"), "left_semi")
-      .select(col("doc"), sentinel.as("new_doc"))
-      .localCheckpoint()
-    val nForgot = mapping.count()
-    if (nForgot == 0L) return 0L
-    val bandsPath = ndlBandsPath(path)
-    // the LEDGER-LEVEL fence (see the scaladoc): the primary's marker
-    // spans BOTH store rewrites, so a crash between them leaves admits
-    // failing loudly instead of silently dropping near-vs-history
-    // candidates against the inconsistent pair
-    graft.util.Gen.createMarker(spark, path)
-    try {
-      if (graft.util.Gen.hasData(spark, bandsPath))
-        // the band store's ingest is serialized by the PRIMARY's lease
-        // (one lease covers the admit's appends to both stores), so
-        // fail fast on it here too — without this, an admit that took
-        // its lease before our marker went down would only be caught
-        // by the late content re-verify
-        graft.util.Gen.rewrite(spark, bandsPath,
-            extraLeases = Seq(path)) { tmp =>
-          ndlWriteBands(
-            graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, bandsPath))
-              .join(broadcast(mapping), Seq("doc"), "left")
-              .withColumn("doc", coalesce(col("new_doc"), col("doc"))),
-            "overwrite", tmp)
-        }
-    } catch {
-      case e: Throwable =>
-        // the band rewrite failed BEFORE its publish: both stores are
-        // still the consistent pre-forget pair, so lift the ledger
-        // fence and surface the failure (re-run at leisure)
-        graft.util.Gen.deleteMarker(spark, path)
-        throw e
-    }
-    // from here on any failure deliberately leaves the ledger fence
-    // down (ownsMarker = true): the band store may already be
-    // scrubbed, and only a COMPLETED re-run restores consistency
-    graft.util.Gen.rewrite(spark, path, ownsMarker = true) { tmp =>
-      val s = graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, path))
-      val dataCols = s.columns.filter(_ != "db")
-      // db recomputes from the scrubbed id — the row MOVES to the
-      // sentinel's bucket, which is where the verify fetch (whose
+    * long-orderable ids) in BOTH stores, via the fenced two-store
+    * rewrite ([[rewriteNearDupLedger]]; admits fail loudly for the
+    * window, readers are never fenced). A re-run after a crash between
+    * the two flips completes the scrub: sentinels derive from the
+    * digest, so the mapping is stable across runs, and already-scrubbed
+    * band rows simply stop matching it. Admit decisions are
+    * bit-identical before and after (spec-pinned): the store side of
+    * every join carries the scrubbed id only as an opaque join key, and
+    * no decision compares store ids with batch ids. Returns the number
+    * of primary rows scrubbed. */
+  def nearDupLedgerForget(spark: SparkSession, path: String,
+      ids: DataFrame, idCol: String): Long =
+    Fs.labeled(spark, "ndl:forget") {
+      // the scrub recomputes db with the CURRENT modulus
+      ndlRequireModuli(ndlReadMeta(fsOf(spark, path), path), path,
+        "nearDupLedgerForget", "forget")
+      val primary0 = current(spark, path)
+      val docType = primary0.schema("doc").dataType
+      val sentinel = (lit(-1L) - pmod(xxhash64(col("text_md5")),
+        lit(Long.MaxValue))).cast(docType)
+      val mapping = primary0
+        .join(ids.select(col(idCol).cast(docType).as("doc")).distinct(),
+          Seq("doc"), "left_semi")
+        .select(col("doc"), sentinel.as("new_doc"))
+        .localCheckpoint()
+      val nForgot = mapping.count()
+      // db recomputes from the scrubbed id — the primary row MOVES to
+      // the sentinel's bucket, which is where the verify fetch (whose
       // candidate side derives db from the band store's scrubbed id)
       // will look for it
-      ndlWritePrimary(
+      def scrub(s: DataFrame): DataFrame =
         s.join(broadcast(mapping), Seq("doc"), "left")
           .withColumn("doc", coalesce(col("new_doc"), col("doc")))
-          .select(dataCols.map(col): _*),
-        "overwrite", tmp)
+      if (nForgot > 0L) rewriteNearDupLedger(spark, path)(scrub, scrub)
+      nForgot
     }
-    graft.util.Gen.deleteMarker(spark, path)
-    nForgot
-  }
 
   /** One-row paging surface for the near-dup ledger — the twin of the
     * index stores' `*IndexHealthReport`s, joining the three signals an
@@ -2612,44 +2517,32 @@ object Dedup {
     *     bookkeeping, and the population [[nearDupLedgerExpire]]'s
     *     `dropForgottenSignatures` flag would purge.
     * One zero-vector-byte scan per store (file name + id/partition
-    * columns only). Quiet-by-default thresholds; spec-pinned on
+    * columns only; [[ledgerCensus]], [[maxBucketFiles]]).
+    * Quiet-by-default thresholds; spec-pinned on
     * planted accretion/forget/lost-bands fixtures. (A streamed-epoch
     * retry that crashed between one store's append commit and its
     * per-store seal — see [[ndlAppend]] — can transiently trip the
     * sync check in the `>` direction; the next
     * [[compactNearDupLedger]] clears it.) */
-  def nearDupLedgerHealthReport(spark: org.apache.spark.sql.SparkSession,
-      path: String, maxFilesPerBucket: Int = 16): DataFrame = {
+  def nearDupLedgerHealthReport(spark: SparkSession, path: String,
+      maxFilesPerBucket: Int = 16): DataFrame = {
     import spark.implicits._
-    val g = graft.util.Gen.resolve(spark, path)
-    val primary = graft.util.Gen.read(spark, g)
-    val p = primary
-      .select(col("db"), col("doc"), col("mh0"),
-        input_file_name().as("f"))
-      .agg(count(lit(1)).as("rows"),
-        sum(when(col("doc") < 0L, 1L).otherwise(0L)).as("sents"),
-        sum(when(col("mh0").isNotNull, 1L).otherwise(0L)).as("banded"),
-        countDistinct(col("f")).as("files"),
-        countDistinct(col("db")).as("buckets"))
-      .first()
-    val pMaxFiles = primary
-      .select(col("db"), input_file_name().as("f"))
-      .groupBy(col("db")).agg(countDistinct(col("f")).as("nf"))
-      .agg(max(col("nf"))).first().getLong(0)
+    val primary = current(spark, path)
+    val p = ledgerCensus(primary, Seq("db", "doc", "mh0"),
+      sum(when(col("doc") < 0L, 1L).otherwise(0L)).as("sents"),
+      sum(when(col("mh0").isNotNull, 1L).otherwise(0L)).as("banded"),
+      countDistinct(col("f")).as("files"),
+      countDistinct(col("db")).as("buckets"))
+    val pMaxFiles = maxBucketFiles(primary, "db")
     val bandsPath = ndlBandsPath(path)
-    val hasBands = graft.util.Gen.hasData(spark, bandsPath)
+    val hasBands = Gen.hasData(spark, bandsPath)
     val (bandRows, bMaxFiles) =
       if (hasBands) {
-        val b = graft.util.Gen
-          .read(spark, graft.util.Gen.resolve(spark, bandsPath))
-          .select(col("kb"), input_file_name().as("f"))
-        (b.count(),
-          b.groupBy(col("kb")).agg(countDistinct(col("f")).as("nf"))
-            .agg(max(col("nf"))).first().getLong(0))
+        val b = current(spark, bandsPath)
+        (ledgerCensus(b, Seq("kb")).getLong(0), maxBucketFiles(b, "kb"))
       } else (0L, 0L)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nBands = ndlReadMeta(fs, path).map(_("bands")).getOrElse(4)
+    val nBands =
+      ndlReadMeta(fsOf(spark, path), path).map(_("bands")).getOrElse(4)
     val expectedBandRows = p.getAs[Long]("banded") * nBands
     Seq((p.getAs[Long]("rows"), p.getAs[Long]("sents"),
       p.getAs[Long]("banded"), pMaxFiles, hasBands, bandRows,
@@ -2680,110 +2573,59 @@ object Dedup {
     *     documented horizon after which a near-copy of purged content
     *     RE-ADMITS (non-transitivity cuts both ways: dropping the row
     *     is the only way to truly stop matching against it, and a
-    *     retention mandate demands exactly that). Runs under the same
-    *     ledger-level fence as the forget (primary marker spans both
-    *     store rewrites; a crash mid-way leaves admits failing loudly
-    *     until the re-run completes). Previously-forgotten rows
+    *     retention mandate demands exactly that). Runs through the same
+    *     fenced two-store rewrite as the forget
+    *     ([[rewriteNearDupLedger]]). Previously-forgotten rows
     *     (negative sentinel ids) carry NO age by construction — their
     *     identity is gone — so they are purged only when
     *     `dropForgottenSignatures = true` explicitly says so.
     *
     * Returns the number of primary rows scrubbed (takedown grade) or
     * physically dropped (retention grade). Idempotent either way. */
-  def nearDupLedgerExpire(spark: org.apache.spark.sql.SparkSession,
-      path: String, beforeDoc: Long, dropSignatures: Boolean = false,
-      dropForgottenSignatures: Boolean = false): Long = {
-    if (!dropSignatures) {
-      val ids = graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, path))
-        .filter(col("doc") >= 0L && col("doc") < beforeDoc)
-        .select(col("doc"))
-      return nearDupLedgerForget(spark, path, ids, "doc")
+  def nearDupLedgerExpire(spark: SparkSession, path: String,
+      beforeDoc: Long, dropSignatures: Boolean = false,
+      dropForgottenSignatures: Boolean = false): Long =
+    Fs.labeled(spark, "ndl:expire") {
+      if (!dropSignatures)
+        nearDupLedgerForget(spark, path, current(spark, path)
+          .filter(col("doc") >= 0L && col("doc") < beforeDoc)
+          .select(col("doc")), "doc")
+      else {
+        val expired = col("doc") >= 0L && col("doc") < lit(beforeDoc)
+        val purge =
+          if (dropForgottenSignatures) expired || col("doc") < 0L
+          else expired
+        val nDrop = current(spark, path).filter(purge).count()
+        if (nDrop > 0L)
+          rewriteNearDupLedger(spark, path)(_.filter(!purge), _.filter(!purge))
+        nDrop
+      }
     }
-    val expired = col("doc") >= 0L && col("doc") < lit(beforeDoc)
-    val purge =
-      if (dropForgottenSignatures) expired || col("doc") < 0L
-      else expired
-    val primary0 = graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, path))
-    val nDrop = primary0.filter(purge).count()
-    if (nDrop == 0L) return 0L
-    val bandsPath = ndlBandsPath(path)
-    // the ledger-level fence, exactly the forget's choreography: the
-    // primary's marker spans both rewrites so a crash between them
-    // (bands purged, primary not) keeps admits failing loudly instead
-    // of silently matching candidates whose verify rows are doomed
-    graft.util.Gen.createMarker(spark, path)
-    try {
-      if (graft.util.Gen.hasData(spark, bandsPath))
-        // fail fast on the PRIMARY's lease too — it is the lease that
-        // serializes ingest into this band store (see the forget)
-        graft.util.Gen.rewrite(spark, bandsPath,
-            extraLeases = Seq(path)) { tmp =>
-          ndlWriteBands(
-            graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, bandsPath))
-              .filter(!purge),
-            "overwrite", tmp)
-        }
-    } catch {
-      case e: Throwable =>
-        graft.util.Gen.deleteMarker(spark, path)
-        throw e
-    }
-    graft.util.Gen.rewrite(spark, path, ownsMarker = true) { tmp =>
-      val s = graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, path))
-      val dataCols = s.columns.filter(_ != "db")
-      ndlWritePrimary(s.filter(!purge).select(dataCols.map(col): _*),
-        "overwrite", tmp)
-    }
-    graft.util.Gen.deleteMarker(spark, path)
-    nDrop
-  }
 
   /** Compact the [[nearDupLedgerAdmit]] stores — same accretion debt
-    * and same answer as [[compactDedupLedger]], applied to both halves:
-    * the primary rewrites each db bucket to one file, the band store
-    * each (band, kb) bucket to one key-sorted file (every admit batch
-    * appended one file per touched bucket), both as zero-outage
-    * [[graft.util.Gen.rewrite]] generation flips (a racing admit fails
-    * loudly at its fence check; readers are never fenced), collapsing
-    * any duplicate rows a
-    * historical race smuggled in. Also the one-time MIGRATION for a
-    * ledger written before the db partitioning existed (the rewrite
-    * derives db from the data columns either way). The band rewrite
-    * derives from the band store itself (its content is exactly the
-    * exploded keys, so no band geometry is needed); a missing band
-    * store is left for the next admit's backfill. Returns the
-    * compacted primary row count. */
-  def compactNearDupLedger(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.util.Gen.rewrite(spark, path) { tmp =>
-      val s0 = graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, path))
-      val data = s0.columns.filter(_ != "db")
-      ndlWritePrimary(s0.select(data.map(col): _*).distinct(),
-        "overwrite", tmp)
+    * and same answer as [[compactDedupLedger]], applied to both halves
+    * through the fenced two-store rewrite ([[rewriteNearDupLedger]]):
+    * the band store rewrites each kb bucket and the primary each db
+    * bucket to one key-sorted file (every admit batch appended one file
+    * per touched bucket), collapsing any duplicate rows a historical
+    * race smuggled in. Buckets recompute from the data columns, which
+    * makes this also the one-time MIGRATION for a ledger written before
+    * the db partitioning existed and for a bucket-modulus upgrade. The
+    * band rewrite derives from the band store itself (its content is
+    * exactly the exploded keys, so no band geometry is needed).
+    * Returns the compacted primary row count. */
+  def compactNearDupLedger(spark: SparkSession, path: String): Long =
+    Fs.labeled(spark, "ndl:compact") {
+      rewriteNearDupLedger(spark, path)(_.distinct(),
+        _.drop("db").distinct())
+      // the geometry sidecar re-stamps with the CURRENT moduli (bands ×
+      // rows are the ledger's own, carried over); a pre-sidecar ledger
+      // stays sidecar-less until its next admit backfills one
+      val fs = fsOf(spark, path)
+      ndlReadMeta(fs, path).foreach(m =>
+        writeSmall(fs, ndlMetaPath(path), ndlMetaJson(m("bands"), m("rows"))))
+      current(spark, path).count()
     }
-    val bandsPath = ndlBandsPath(path)
-    if (graft.util.Gen.hasData(spark, bandsPath))
-      // fail fast on the PRIMARY's lease too — it is the lease that
-      // serializes ingest into this band store (see the forget)
-      graft.util.Gen.rewrite(spark, bandsPath,
-          extraLeases = Seq(path)) { tmp =>
-        // kb recomputes from kh — this is what makes compaction the
-        // bucket-modulus MIGRATION (a store written under an older
-        // modulus relayouts to the current one here)
-        ndlWriteBands(
-          graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, bandsPath))
-            .distinct().withColumn("kb", ndlKb(col("kh"))),
-          "overwrite", tmp)
-      }
-    // the geometry sidecar re-stamps with the CURRENT moduli (bands ×
-    // rows are the ledger's own, carried over); a pre-sidecar ledger
-    // stays sidecar-less until its next admit backfills one
-    ndlReadMeta(fs, path).foreach(m =>
-      ndlWriteMeta(fs, path, m("bands"), m("rows")))
-    graft.util.Gen.read(spark, graft.util.Gen.resolve(spark, path)).count()
-  }
 
   /** The STREAMING-ingest form of [[removeBoilerplate]]'s rebuild: the
     * hot-segment set is precomputed by a batch job over the existing

@@ -1045,7 +1045,7 @@ object Similarity {
     * every consumer — serve, recall probe, stats-free reads — sees the
     * post-deletion corpus. */
   def loadIvfIndex(spark: SparkSession,
-      path: String): (DataFrame, DataFrame) = {
+      path: String): (DataFrame, DataFrame) = Fs.labeled(spark, "ann:load") {
     val g = genDir(spark, path)
     (Gen.read(spark, s"$g/centroids"), liveStore(spark, g, Ivf))
   }
@@ -1231,14 +1231,15 @@ object Similarity {
     * probe side's static size estimate is ~100× under the exploded
     * reality and the planner broadcasts what it should shuffle). */
   def ivfTopKFromIndex(index: (DataFrame, DataFrame), queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nProbe: Int = 2): DataFrame = {
-    val (cents, assigned) = index
-    val q0 = probeRows(queries, idCol, vecCol, cents, nProbe)
-    val q = if (isCellPartitionedScan(assigned)) q0
-      else q0.repartition(col("cell"))
-    cosineTopK(assigned.join(q, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id")), k)
-  }
+      idCol: String, vecCol: String, k: Int, nProbe: Int = 2): DataFrame =
+    Fs.labeled(queries.sparkSession, "ann:serve") {
+      val (cents, assigned) = index
+      val q0 = probeRows(queries, idCol, vecCol, cents, nProbe)
+      val q = if (isCellPartitionedScan(assigned)) q0
+        else q0.repartition(col("cell"))
+      cosineTopK(assigned.join(q, Seq("cell"))
+        .filter(col("query_id") =!= col("neighbor_id")), k)
+    }
 
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nCentroids: Int = 16, nProbe: Int = 2,

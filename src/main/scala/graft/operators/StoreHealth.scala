@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
   * pager for an operator who inherits a directory and does not know
   * (or does not trust the runbook about) which family wrote it.
   * [[detectStoreKind]] reads the LAYOUT, not metadata that could lie:
-  * the families are distinguishable from the resolved generation's
-  * child datasets and, for the flat ledgers, one parquet schema
-  * footer — no data bytes are read.
+  * store kinds come from the two layout tables, matched against the
+  * resolved generation's child datasets and, for the flat ledgers, one
+  * parquet schema footer — no data bytes are read.
   *
   *   - the five ANN index families (`ivf`, `ivf_pq`, `ivf_sq8`, `pq`,
   *     `sq8`) by [[Similarity.IndexLayouts]], the one table of their
@@ -17,11 +17,11 @@ import org.apache.spark.sql.functions._
   *     those datasets but no complete layout is `unknown`
   *   - `epoch-NNNNNNNNNNNN/` child dirs      → `admit_epochs`
   *     (a streamed-admit epoch root — [[Dedup.admitEpochHealthReport]])
-  *   - flat rows with `hs` + `mh*` signatures → `neardup_ledger`
-  *   - flat rows with only digest columns    → `dedup_ledger`
-  *   - flat rows with `band`/`kh` keys       → `neardup_bands`
-  *     (the near-dup ledger's sibling store — health is reported for
-  *     the ledger PAIR, so the dispatcher redirects to the primary)
+  *   - flat ledger stores by the file columns of Dedup's ledger store
+  *     table ([[Dedup.ledgerKindOf]]): signature rows → `neardup_ledger`,
+  *     band keys → `neardup_bands` (the near-dup ledger's sibling store
+  *     — health is reported for the ledger PAIR, so the dispatcher
+  *     redirects to the primary), digests → `dedup_ledger`
   *
   * [[storeHealthReport]] then routes to the family's existing report
   * verb and prepends a `store_kind` column, so the first column of the
@@ -48,15 +48,9 @@ object StoreHealth {
       else if (fs.listStatus(new org.apache.hadoop.fs.Path(g)).exists(st =>
         st.isDirectory && st.getPath.getName.matches("epoch-\\d+")))
         "admit_epochs" // a streamed-admit epoch root (never versioned)
-      else {
-        // flat dataset: one schema footer decides among the ledgers
-        val cols = graft.util.Gen.read(spark, g).columns.toSet
-        if (cols.contains("hs") && cols.contains("mh0")) "neardup_ledger"
-        else if (cols.contains("band") && cols.contains("kh"))
-          "neardup_bands"
-        else if (cols.contains("text_md5")) "dedup_ledger"
-        else "unknown"
-      }
+      else // flat dataset: one schema footer decides among the ledgers
+        Dedup.ledgerKindOf(graft.util.Gen.read(spark, g).columns.toSeq)
+          .getOrElse("unknown")
     }
   }
 

@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * pushdown, broadcast dims, top-k without global sort, no cartesian
   * products in the banded/bucketed similarity paths, and exchange reuse
   * inside the near-dup pipeline. Run: `sbt "runMain graft.tools.ExplainCheck"`.
-  * The ANN serve/build/persisted-index pins run in the test suite
-  * instead, as `graft.AnnPlanPinsSpec`. */
+  * The ANN serve/build/persisted-index pins and the dedup ledgers'
+  * store-probe pins run in the test suite instead, as
+  * `graft.AnnPlanPinsSpec` and `graft.LedgerPlanPinsSpec`. */
 object ExplainCheck {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")
@@ -361,107 +362,6 @@ object ExplainCheck {
       plan("q06_dedup_first").contains("WindowGroupLimit"))
     check("q68 stratified take-k plans a WindowGroupLimit prune",
       plan("q68_stratified_k").contains("WindowGroupLimit"))
-    // the near-dup ledger's persisted band store exists so an admit's
-    // candidate probe reads ∝ the batch's touched buckets, not the
-    // whole history: the probe equi-join on the (band, kb) partition
-    // columns must feed dynamic partition pruning into the band-store
-    // scan (the same DPP mechanism as the persisted IVF serve pinned in
-    // graft.AnnPlanPinsSpec). The probe
-    // below is assembled from the very helpers the admit uses
-    // (ndlBandKeys/ndlWithKb — one home for the banding spelling).
-    locally {
-      import org.apache.spark.sql.functions._
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_explain_ndl").toString
-      val ledger = s"$root/ledger"
-      try {
-        graft.operators.Dedup.nearDupLedgerAdmit(spark, ledger,
-          docs, "doc_id", "text")
-        val batch = docs.filter(col("doc_id") < 40)
-        val sig = graft.operators.Dedup.minHashSignatures(
-          batch, "doc_id", "text").withColumnRenamed("doc_id", "doc")
-        val probe = spark.read.parquet(graft.util.Gen.resolve(spark,
-            graft.operators.Dedup.ndlBandsPath(ledger)))
-          .join(broadcast(graft.operators.Dedup.ndlWithKb(
-            graft.operators.Dedup.ndlBandKeys(sig, 4, 4)
-              .withColumnRenamed("doc", "doc_b"))),
-            Seq("band", "kb", "kh"))
-          .select(col("doc").as("doc_a"), col("doc_b")).distinct()
-        probe.count()
-        val p = probe.queryExecution.executedPlan.toString
-        check("near-dup ledger band probe gets dynamic partition " +
-          "pruning on the band store's kb buckets",
-          p.contains("dynamicpruningexpression"))
-        // the TRICKLE path's second lever: a small batch's key hashes
-        // fold into a literal In(kh, …) that reaches the parquet scan
-        // as a pushed filter — row-group stats on the kh-SORTED band
-        // files prune INSIDE each kb bucket (the partition floor is
-        // only 1/NdlKeyBuckets). Assembled exactly like the admit's
-        // bandScan fold; both levers must coexist in one plan.
-        val khs = graft.operators.Dedup.ndlWithKb(
-            graft.operators.Dedup.ndlBandKeys(sig, 4, 4))
-          .select(col("kh")).distinct().collect().map(_.getLong(0)).sorted
-        val trickle = spark.read.parquet(graft.util.Gen.resolve(spark,
-            graft.operators.Dedup.ndlBandsPath(ledger)))
-          .filter(col("kh").isInCollection(khs))
-          .join(broadcast(graft.operators.Dedup.ndlWithKb(
-            graft.operators.Dedup.ndlBandKeys(sig, 4, 4)
-              .withColumnRenamed("doc", "doc_b"))),
-            Seq("band", "kb", "kh"))
-          .select(col("doc").as("doc_a"), col("doc_b")).distinct()
-        trickle.count()
-        val tp = trickle.queryExecution.executedPlan.toString
-        check("trickle band probe pushes the literal kh fold into the " +
-          "band-store scan (PushedFilters carries In(kh, …)) with DPP " +
-          "still live in the same plan",
-          tp.contains("PushedFilters: [In(kh") &&
-            tp.contains("dynamicpruningexpression"))
-        // ...and the verify stage's hs fetch prunes the PRIMARY store
-        // to the candidates' db buckets — the widest column in the
-        // ledger is only read where candidates actually live
-        val verify = spark.read
-          .parquet(graft.util.Gen.resolve(spark, ledger))
-          .select(col("db"), col("doc").as("doc_a"), col("hs"))
-          // db through Dedup.ndlDb — the ONE spelling of the bucket
-          // function, shared with the admit, so a modulus change can
-          // never leave this checker asserting a stale layout
-          .join(broadcast(probe.withColumn("db",
-            graft.operators.Dedup.ndlDb(col("doc_a")))),
-            Seq("db", "doc_a"))
-        verify.count()
-        val vp = verify.queryExecution.executedPlan.toString
-        check("near-dup ledger verify fetch gets dynamic partition " +
-          "pruning on the primary's db buckets",
-          vp.contains("dynamicpruningexpression"))
-        // the EXACT ledger's seen-probe has the same shape since r16
-        // (db-bucketed digest store, broadcast batch, literal digest
-        // fold): both levers must reach the digest scan
-        val exact = s"$root/exact"
-        graft.operators.Dedup.ledgerAdmit(spark, exact, docs,
-          "doc_id", "text")
-        val bd = docs.filter(col("doc_id") < 40)
-          .select(md5(col("text")).as("text_md5")).distinct()
-          .withColumn("db",
-            pmod(xxhash64(col("text_md5")), lit(32L)).cast("int"))
-          .localCheckpoint()
-        val md5s = bd.select(col("text_md5"))
-          .collect().map(_.getString(0)).sorted
-        val seenProbe = spark.read
-          .parquet(graft.util.Gen.resolve(spark, exact))
-          .filter(col("text_md5").isInCollection(md5s))
-          .select(col("db"), col("text_md5"))
-          .join(broadcast(bd), Seq("db", "text_md5"))
-          .select(col("text_md5")).distinct()
-        seenProbe.count()
-        val ep = seenProbe.queryExecution.executedPlan.toString
-        check("exact-ledger seen probe gets DPP on the digest store's " +
-          "db buckets AND pushes the literal digest fold " +
-          "(PushedFilters carries In(text_md5, …))",
-          ep.contains("dynamicpruningexpression") &&
-            ep.contains("PushedFilters: [In(text_md5"))
-      } finally graft.util.Fs.deleteRecursively(root)
-    }
     println("all plan assertions hold")
     spark.stop()
   }

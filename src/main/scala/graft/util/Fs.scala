@@ -9,15 +9,24 @@ object Fs {
   /** Run `body` with a thread-local Spark job description (guide §1.5
     * — label your jobs): every action the body triggers is labeled in
     * the UI/event log/QueryProbe with the protocol phase it belongs
-    * to. Restores the caller's label on exit (labels nest: an admit's
-    * sub-phases append to the admit's own label). Zero effect on
-    * results or plans — scheduling metadata only. */
+    * to. The label is also the call site, so every stage of those
+    * jobs is named by it — including the stages adaptive query
+    * execution submits from its own threads, whose captured call site
+    * would otherwise be a JDK frame. Restores the caller's label and
+    * call site on exit (labels nest: an inner phase's label holds for
+    * its own jobs only). Zero effect on results or plans — scheduling
+    * metadata only. */
   def labeled[T](spark: org.apache.spark.sql.SparkSession,
       desc: String)(body: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
+    val prevSite = sc.getLocalProperty("callSite.short")
     sc.setJobDescription(desc)
-    try body finally sc.setJobDescription(prev)
+    sc.setCallSite(desc)
+    try body finally {
+      sc.setJobDescription(prev)
+      sc.setLocalProperty("callSite.short", prevSite)
+    }
   }
 
   /** The shared maintenance-rewrite protocol for an on-disk parquet

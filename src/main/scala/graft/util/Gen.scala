@@ -164,7 +164,9 @@ object Gen {
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def readSmall(fs: FileSystem, p: Path): String = {
+  /** A small file's whole content as trimmed UTF-8 — commit pointers
+    * here, and the dedup ledgers' epoch seals and geometry sidecar. */
+  private[graft] def readSmall(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
     try {
       val out = new java.io.ByteArrayOutputStream()
@@ -664,7 +666,8 @@ object Gen {
     *
     * `ownsMarker = true` is for callers that hold the store's
     * maintenance marker THEMSELVES across a larger critical section
-    * (the near-dup forget spans two stores under the primary's
+    * (the near-dup ledger's two-store rewrite — forget, retention
+    * expiry, compaction — spans both stores under the primary's
     * marker): the rewrite then neither creates nor deletes it, and a
     * failure leaves it down — the caller decides when the compound
     * operation is complete.

@@ -2806,9 +2806,10 @@ class PipelineOpsSpec extends SparkTestBase {
       // idempotence: the id is gone, so a re-forget scrubs nothing
       assert(Dedup.nearDupLedgerForget(spark, dir,
         Seq(100L).toDF("doc_id"), "doc_id") === 0L)
-      // crash between the two swaps: re-running forget for OTHER ids
-      // leaves the earlier sentinels untouched (digest-keyed mapping),
-      // and the compactor keeps the scrubbed rows
+      // a second forget for OTHER ids leaves the earlier sentinels
+      // untouched (digest-keyed mapping), and the compactor keeps the
+      // scrubbed rows (a crash between the two store flips is
+      // LedgerLifecycleSpec's)
       assert(Dedup.nearDupLedgerForget(spark, dir,
         Seq(101L).toDF("doc_id"), "doc_id") === 1L)
       Dedup.compactNearDupLedger(spark, dir)
