@@ -11,15 +11,7 @@ import graft.operators.Similarity
   * it pins; a refactor that changes one of these plans fails here. */
 class AnnPlanPinsSpec extends SparkTestBase {
 
-  private val dir = "/root/testdata/sf0.01"
-
-  private def plan(q: String, executed: Boolean = false): String = {
-    val df = graft.SparkEntry.queries(q)(spark, dir)
-    if (executed) df.count()
-    df.queryExecution.executedPlan.toString
-  }
-
-  private lazy val e = spark.read.parquet(s"$dir/embeddings.parquet")
+  private lazy val e = spark.read.parquet(s"$testdata/embeddings.parquet")
 
   // IVF+PQ serve: candidate generation must be the cell EQUI-join
   // (broadcast probed query cells), never an all-pairs scan

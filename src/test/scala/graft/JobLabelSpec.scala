@@ -29,12 +29,7 @@ class JobLabelSpec extends SparkTestBase {
         ()
       }
     }
-    org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(tap)
-    try {
-      body
-      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(tap)
+    listening(tap)(body)
     (descs.toArray(Array.empty[String]).toSeq,
       stages.toArray(Array.empty[(String, String)]).toSeq)
   }

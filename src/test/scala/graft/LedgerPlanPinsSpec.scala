@@ -11,13 +11,12 @@ import graft.operators.Dedup
   * admit itself fails here: dynamic partition pruning on the near-dup
   * band store and primary, the trickle batch's pushed `In(kh, …)` key
   * fold, and the exact ledger's pruned, literal-folded seen probe.
-  * sf0.01 holds 500 documents, so every admit here is a trickle batch
-  * (at most `NdlLiteralMaxReps` representatives). */
+  * sf0.01 holds 500 documents, so every admit on it is a trickle batch
+  * (at most `NdlLiteralMaxReps` representatives); the non-trickle probe
+  * runs on seeded in-memory documents. */
 class LedgerPlanPinsSpec extends SparkTestBase {
 
-  private val dir = "/root/testdata/sf0.01"
-
-  private lazy val docs = spark.read.parquet(s"$dir/documents.parquet")
+  private lazy val docs = spark.read.parquet(s"$testdata/documents.parquet")
 
   /** Executed-plan strings of every query `body` runs. */
   private def plansOf(body: => Unit): Seq[String] = {
@@ -29,12 +28,7 @@ class LedgerPlanPinsSpec extends SparkTestBase {
       override def onFailure(f: String, qe: QueryExecution,
           e: Exception): Unit = ()
     }
-    org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
-    spark.listenerManager.register(tap)
-    try {
-      body
-      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
-    } finally spark.listenerManager.unregister(tap)
+    listening(tap)(body)
     plans.toArray(Array.empty[String]).toSeq
   }
 
@@ -46,6 +40,15 @@ class LedgerPlanPinsSpec extends SparkTestBase {
         cols.forall(out.contains)
       }
     }
+
+  /** `n` seeded documents from `from` on: 16 words each, drawn from a
+    * 65,536-word vocabulary, so no two are near-duplicates. */
+  private def seededDocs(from: Int, n: Int) = {
+    import SparkTestBase.session.implicits._
+    (from until from + n).map(i => (i.toLong, (0 until 16).map(j =>
+      "w" + (scala.util.hashing.MurmurHash3.stringHash(s"$i:$j") & 0xffff))
+      .mkString(" "))).toDF("doc_id", "text")
+  }
 
   private def withLedger(body: String => Unit): Unit = {
     val root = java.nio.file.Files
@@ -93,6 +96,34 @@ class LedgerPlanPinsSpec extends SparkTestBase {
         "exact-ledger seen probe gets DPP on the digest store's db " +
           "buckets AND pushes the literal digest fold " +
           "(PushedFilters carries In(text_md5, …))")
+    }
+  }
+
+  test("non-trickle admit (more than NdlLiteralMaxReps = 2,048 " +
+      "representatives): the band probe and the exact seen probe keep " +
+      "DPP without the literal In(kh, …) / In(text_md5, …) fold") {
+    withLedger { root =>
+      val ledger = s"$root/ledger"
+      val exact = s"$root/exact"
+      val seed = seededDocs(0, 100)
+      Dedup.nearDupLedgerAdmit(spark, ledger, seed, "doc_id", "text")
+      Dedup.ledgerAdmit(spark, exact, seed, "doc_id", "text")
+      val batch = seededDocs(100, 2100)
+      val bandScans = scans(plansOf(Dedup.nearDupLedgerAdmit(spark, ledger,
+        batch, "doc_id", "text")), "band", "kh", "kb")
+      assert(bandScans.exists(_.contains("dynamicpruningexpression")),
+        "non-trickle band probe gets dynamic partition pruning on the " +
+          "band store's kb buckets")
+      assert(!bandScans.exists(_.contains("In(kh")),
+        "non-trickle band probe folds no literal kh set into the scan")
+      val seenScans = scans(plansOf(Dedup.ledgerAdmit(spark, exact, batch,
+        "doc_id", "text")), "text_md5", "db")
+      assert(seenScans.exists(_.contains("dynamicpruningexpression")),
+        "non-trickle exact seen probe gets DPP on the digest store's " +
+          "db buckets")
+      assert(!seenScans.exists(_.contains("In(text_md5")),
+        "non-trickle exact seen probe folds no literal digest set into " +
+          "the scan")
     }
   }
 }

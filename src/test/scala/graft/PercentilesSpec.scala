@@ -227,17 +227,17 @@ class PercentilesSpec extends SparkTestBase {
           spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
       }
     }
-    spark.sparkContext.addSparkListener(listener)
     try {
       // force UnsafeExternalSorter to spill every 128 rows — the exact
       // path a 100-TB hot group exercises, shrunk to test scale
       conf.set("spark.sql.windowExec.buffer.spill.threshold", "128")
       val ps = Seq(0.25, 0.5, 0.9, 0.99)
-      val got = Percentiles.groupedExact(big, Seq("g"), "v",
-        ps.zipWithIndex.map { case (p, i) => p -> s"p$i" }, roundTo = -1)
-        .collect().map(r => r.getString(r.fieldIndex("g")) ->
-          ps.indices.map(i => r.getDouble(r.fieldIndex(s"p$i")))).toMap
-      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
+      val got = listening(listener) {
+        Percentiles.groupedExact(big, Seq("g"), "v",
+          ps.zipWithIndex.map { case (p, i) => p -> s"p$i" }, roundTo = -1)
+          .collect().map(r => r.getString(r.fieldIndex("g")) ->
+            ps.indices.map(i => r.getDouble(r.fieldIndex(s"p$i")))).toMap
+      }
       assert(spilled.get() > 0L,
         "window pass did not spill — the forced-spill conf lost effect")
       val exp = big.groupBy("g")
@@ -247,7 +247,6 @@ class PercentilesSpec extends SparkTestBase {
       for (g <- got.keySet; i <- ps.indices)
         assert(bits(got(g)(i)) === bits(exp(g)(i)), s"g=$g p=${ps(i)}")
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       before match {
         case Some(v) =>
           conf.set("spark.sql.windowExec.buffer.spill.threshold", v)

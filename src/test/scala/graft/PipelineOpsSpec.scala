@@ -3080,14 +3080,11 @@ class PipelineOpsSpec extends SparkTestBase {
     }
     // the task count of every write stage `body` runs
     def writeTasks(body: => Unit): Seq[Int] = {
-      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
       resultTasks.clear(); writeStages.clear()
-      body
-      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
+      listening(tap)(body)
       import scala.jdk.CollectionConverters._
       writeStages.asScala.toSeq.map(resultTasks.get(_).intValue)
     }
-    spark.sparkContext.addSparkListener(tap)
     try {
       // appends to existing ledgers: the steady-state write
       Dedup.ledgerAdmit(spark, s"$root/exact", layoutDocs(0 until 50),
@@ -3103,10 +3100,7 @@ class PipelineOpsSpec extends SparkTestBase {
       assert(near.size === 2 && near.forall(_ == want),
         s"near-dup append (bands, primary) write stages ran $near " +
           s"tasks, want $want")
-    } finally {
-      spark.sparkContext.removeSparkListener(tap)
-      graft.util.Fs.deleteRecursively(root)
-    }
+    } finally graft.util.Fs.deleteRecursively(root)
   }
 
   test("nearDupLedgerAdmit auditOut: drop reasons AND min partners are " +

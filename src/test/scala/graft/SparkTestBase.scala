@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.GraftSparkBridge
+import org.apache.spark.scheduler.SparkListener
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession for the whole test JVM (suites share it via
@@ -10,6 +13,40 @@ trait SparkTestBase extends AnyFunSuite {
 
   def fixturePath: String =
     graft.sources.JaegerJsonSource.resourceToTempFile("/jaeger_fixture.json")
+
+  /** The sf0.01 driver testdata the plan-pin specs plan against. */
+  val testdata = "/root/testdata/sf0.01"
+
+  /** Executed-plan string of driver query `q` on [[testdata]];
+    * `executed` runs the query first, so the plan read is adaptive
+    * execution's final one. */
+  def plan(q: String, executed: Boolean = false): String = {
+    val df = SparkEntry.queries(q)(spark, testdata)
+    if (executed) df.count()
+    df.queryExecution.executedPlan.toString
+  }
+
+  /** Runs `body` with `tap` on the listener bus: drains the bus so no
+    * earlier event reaches `tap`, adds it, runs `body`, drains again so
+    * every event `body` caused has reached `tap`, and removes it. */
+  def listening[T](tap: SparkListener)(body: => T): T =
+    onBus(spark.sparkContext.addSparkListener(tap),
+      spark.sparkContext.removeSparkListener(tap))(body)
+
+  /** [[listening]] for a query-execution listener. */
+  def listening[T](tap: QueryExecutionListener)(body: => T): T =
+    onBus(spark.listenerManager.register(tap),
+      spark.listenerManager.unregister(tap))(body)
+
+  private def onBus[T](add: => Unit, remove: => Unit)(body: => T): T = {
+    GraftSparkBridge.drainListenerBus(spark.sparkContext)
+    add
+    try {
+      val r = body
+      GraftSparkBridge.drainListenerBus(spark.sparkContext)
+      r
+    } finally remove
+  }
 }
 
 object SparkTestBase {

@@ -1827,18 +1827,11 @@ class StreamingSpec extends SparkTestBase {
             j: org.apache.spark.scheduler.SparkListenerJobStart)
             : Unit = { jobs.incrementAndGet(); () }
       }
-      org.apache.spark.GraftSparkBridge.drainListenerBus(
-        spark.sparkContext)
-      spark.sparkContext.addSparkListener(tap)
-      try {
-        val h = Dedup.admitEpochHealthReport(spark, epochs).head()
-        assert(h.getAs[Long]("admitted_rows") === scanCount)
-        org.apache.spark.GraftSparkBridge.drainListenerBus(
-          spark.sparkContext)
-        assert(jobs.get === 0,
-          s"health report launched ${jobs.get} Spark jobs — a health " +
-            "poll must stay one driver listing at any store age")
-      } finally spark.sparkContext.removeSparkListener(tap)
+      val h = listening(tap)(Dedup.admitEpochHealthReport(spark, epochs).head())
+      assert(h.getAs[Long]("admitted_rows") === scanCount)
+      assert(jobs.get === 0,
+        s"health report launched ${jobs.get} Spark jobs — a health " +
+          "poll must stay one driver listing at any store age")
     } finally graft.util.Fs.deleteRecursively(root)
   }
 
