@@ -73,10 +73,12 @@ object Bench {
     (flag, cpuRatio, jobRatio, cpuShift, jobShift)
   }
 
-  /** The ONE home of the bench session config (ADVICE r19: QueryProbe
-    * hand-copied this block, so a future Bench config change would
-    * silently diverge the profiler from the workload it attributes —
-    * both now build here).
+  /** The ONE session config of the engine: every SparkSession in the
+    * repo builds here — the bench, perfbench, `Verify`, the test suite,
+    * the demos, `QueryProbe` and the scale smokes — so correctness is
+    * proven under the config the benchmark measures. A caller that
+    * needs a different value sets it on top of this builder, with its
+    * reason at the call site.
     *   - codegen cache 5000: the default 100-entry cache thrashes on
     *     the wider plans (q42 alone has ~100 codegen units); with
     *     eviction EVERY rep paid 10+ s of janino recompilation —

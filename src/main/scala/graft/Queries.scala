@@ -1737,7 +1737,7 @@ object Queries {
     * with probability proportional to token count, stable across reruns
     * and partition layouts because the uniform derives from the salted
     * content hash — which is also what lets DuckDB replay the exact
-    * draw. Top-k plans TakeOrderedAndProject (ExplainCheck-pinned). */
+    * draw. Top-k plans TakeOrderedAndProject (pinned in PlanPinsSpec). */
   private def q96(s: SparkSession, dir: String): DataFrame =
     Curation.weightedSample(
         docs(s, dir).select(col("doc_id"), col("source"),
@@ -1879,7 +1879,7 @@ object Queries {
     // the k-row label-sum table feeds BOTH the global derivation and the
     // final join; localCheckpoint materializes it once so the corpus is
     // scanned exactly once (without it Catalyst plans the scan per
-    // consumer — ExplainCheck pins the single-scan shape)
+    // consumer — PlanPinsSpec pins the single-scan shape)
     val sums = micro.groupBy(col("label"))
       .agg(count(lit(1)).as("n"),
         vector_to_array(Summarizer.sum(col("mv"))).as("a"))

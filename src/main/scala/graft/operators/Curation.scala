@@ -92,7 +92,7 @@ object Curation {
       .orderBy(hashBucket(col(idCol), salt), col(idCol))
     // cutRank + adjacent <= k filter: under the group-limit threshold
     // InferWindowGroupLimit prunes each group to k rows BEFORE the
-    // window sort (plan-pinned by ExplainCheck) — the top-k fast path
+    // window sort (plan-pinned by PlanPinsSpec) — the top-k fast path
     // AND the overflow guard; above it cutRank switches to the
     // long-safe rank (see Ranks scaladoc)
     df.withColumn("rn", Ranks.cutRank(df.sparkSession, w, k))

@@ -68,31 +68,16 @@ object Dedup {
     * `explode(shinglesFromTokens(toks, n))` spelling, which pays an
     * interpreted HOF lambda per shingle (~20 s of executor time per
     * corpus pass at sf0.1 — the cost that made q41/q75 GC-bound and t13
-    * serial before their codegen rewrites). */
+    * serial before their codegen rewrites; A/B'd in one session, this
+    * form measured marginally cheaper and never worse). */
   def shingleIndex(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, hasher: Column => Column = hash60(_)): DataFrame =
-    shingleIndexForm(df, idCol, textCol, n, hasher, hof = false)
-
-  /** Both spellings of the index, A/B-able in one session (see
-    * tools.ShingleAb): `hof = false` is the codegen posexplode form
-    * (the default — measured marginally cheaper and never worse),
-    * `hof = true` the explode-over-HOF-array form. Identical strings and
-    * hashes either way. */
-  private[graft] def shingleIndexForm(df: DataFrame, idCol: String,
-      textCol: String, n: Int, hasher: Column => Column,
-      hof: Boolean): DataFrame =
-    if (hof)
-      df.select(col(idCol).as("doc"), tokens(col(textCol)).as("toks"))
-        .select(col("doc"), explode(shinglesFromTokens(col("toks"), n)).as("sh"))
-        .select(col("doc"), hasher(col("sh")).as("h"))
-        .distinct()
-    else
-      df.select(col(idCol).as("doc"), tokens(col(textCol)).as("toks"))
-        .select(col("doc"), col("toks"), posexplode(col("toks")))
-        .filter(col("pos") <= size(col("toks")) - n)
-        .select(col("doc"), hasher(concat_ws(" ",
-          (0 until n).map(j => get(col("toks"), col("pos") + j)): _*)).as("h"))
-        .distinct()
+    df.select(col(idCol).as("doc"), tokens(col(textCol)).as("toks"))
+      .select(col("doc"), col("toks"), posexplode(col("toks")))
+      .filter(col("pos") <= size(col("toks")) - n)
+      .select(col("doc"), hasher(concat_ws(" ",
+        (0 until n).map(j => get(col("toks"), col("pos") + j)): _*)).as("h"))
+      .distinct()
 
   /** Per-document MinHash signature columns `mh0..mhN` from a shingle
     * index. Map-side partial min keeps the shuffle at (doc, numPerms longs).
@@ -943,6 +928,15 @@ object Dedup {
     ndlKb(col("kh")), NdlKeyBuckets, Seq("band", "kh"),
     Seq("band", "kh", "doc"))
 
+  /** The broadcast probe side of a bucket equi-join against `store`.
+    * Spark plans dynamic partition pruning into the store scan only when
+    * the broadcast side holds a predicate its PartitionPruning rule
+    * deems selective. A trickle batch gets one inferred from its literal
+    * key fold and a larger batch has none, so this adds the bucket-range
+    * filter, which every row passes. */
+  private def pruningProbe(store: LedgerStore, rows: DataFrame): DataFrame =
+    broadcast(rows.filter(col(store.bucket) < store.buckets))
+
   /** Detection order: the primary also holds the digest column. */
   private val LedgerStores = Seq(PrimaryStore, BandStore, ExactStore)
 
@@ -1120,8 +1114,9 @@ object Dedup {
             else store.filter(col("text_md5").isInCollection(md5s))
           } else store
         val seenSet = scan.select(col("db"), col("text_md5"))
-          .join(if (nDigests <= NdlDppMaxReps) broadcast(batchDb)
-            else batchDb, Seq("db", "text_md5"))
+          .join(if (nDigests <= NdlDppMaxReps)
+              pruningProbe(ExactStore, batchDb) else batchDb,
+            Seq("db", "text_md5"))
           .select(col("text_md5")).distinct()
         reps.join(seenSet, Seq("text_md5"), "left_anti")
       }
@@ -2064,7 +2059,8 @@ object Dedup {
         .withColumnRenamed("doc", "doc_b"))
     val nReps = batchSig.count()
     val smallBatch = nReps <= NdlDppMaxReps
-    val probe = if (smallBatch) broadcast(batchKeys) else batchKeys
+    val probe =
+      if (smallBatch) pruningProbe(BandStore, batchKeys) else batchKeys
     // TRICKLE batches (a takedown check, a small feed) additionally
     // fold their key hashes into a literal `isInCollection` FILTER on
     // the band-store scan — the tombstone-fold pattern. DPP's partition
@@ -2093,7 +2089,7 @@ object Dedup {
     val candDb = candsVsStore.withColumn("db", ndlDb(col("doc_a")))
     val nearVsStorePairs = jaccardAtLeast(store
       .select(col("db"), col("doc").as("doc_a"), col("hs").as("hs_a"))
-      .join(if (smallBatch) broadcast(candDb) else candDb,
+      .join(if (smallBatch) pruningProbe(PrimaryStore, candDb) else candDb,
         Seq("db", "doc_a"))
       .join(batchSig.select(col("doc").as("doc_b"), col("hs").as("hs_b")),
         Seq("doc_b")), threshold)
@@ -2528,11 +2524,9 @@ object Dedup {
       maxFilesPerBucket: Int = 16): DataFrame = {
     import spark.implicits._
     val primary = current(spark, path)
-    val p = ledgerCensus(primary, Seq("db", "doc", "mh0"),
+    val p = ledgerCensus(primary, Seq("doc", "mh0"),
       sum(when(col("doc") < 0L, 1L).otherwise(0L)).as("sents"),
-      sum(when(col("mh0").isNotNull, 1L).otherwise(0L)).as("banded"),
-      countDistinct(col("f")).as("files"),
-      countDistinct(col("db")).as("buckets"))
+      sum(when(col("mh0").isNotNull, 1L).otherwise(0L)).as("banded"))
     val pMaxFiles = maxBucketFiles(primary, "db")
     val bandsPath = ndlBandsPath(path)
     val hasBands = Gen.hasData(spark, bandsPath)

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *     would defeat the rewrite and buffer/sort ENTIRE partitions —
   *     measured as the dominant cost at the >2^31-row scale the
   *     long-safe form was meant to protect. AnnPlanPinsSpec (the ANN
-  *     serves) and ExplainCheck pin `WindowGroupLimit` in
+  *     serves) and PlanPinsSpec pin `WindowGroupLimit` in
   *     representative plans so a pattern/conf regression (which would
   *     silently restore both the slow path and the overflow exposure)
   *     fails loudly.

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale smoke for the r19 crawl front door: builds a synthetic WARC
@@ -20,9 +19,10 @@ import org.apache.spark.sql.functions._
 object CrawlScaleSmoke {
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.length > 0) args(0).toLong else 200000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // 64 shuffle partitions (twice the cores), as this smoke has always
+    // run, so its timings stay comparable with its recorded runs
+    val spark = graft.Bench.sessionBuilder("32")
+      .config("spark.sql.shuffle.partitions", "64").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.TraceFrame
 import graft.operators.SpanOps
 import graft.sources.JaegerJsonSource
@@ -11,13 +10,7 @@ import graft.sources.JaegerJsonSource
   * `sbt "runMain graft.tools.Demo"` */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.sessionBuilder("4").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val path =

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.operators.SpanOps
@@ -12,10 +11,7 @@ import graft.streaming.TraceStreams
   * `sbt "runMain graft.tools.DemoStreaming"`. */
 object DemoStreaming {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Bench.sessionBuilder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val fx = JaegerJsonSource.resourceToTempFile("/jaeger_fixture.json")
     val flat = SpanOps.flatten(JaegerJsonSource.traces(spark, fx))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
@@ -21,10 +20,7 @@ object IvfLifecycleSmoke {
     val nBase = if (args.length > 0) args(0).toLong else 200000L
     val nBatches = if (args.length > 1) args(1).toInt else 10
     val batchRows = nBase / 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Bench.sessionBuilder("32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def time[T](label: String)(f: => T): T = {

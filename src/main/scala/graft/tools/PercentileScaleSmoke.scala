@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Percentiles
 
@@ -20,10 +19,7 @@ import graft.operators.Percentiles
 object PercentileScaleSmoke {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 8000000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Bench.sessionBuilder("32").getOrCreate()
     import spark.implicits._
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.analysis.CriticalPath
 import graft.model.SpanLite
@@ -18,10 +17,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val nTraces = if (args.length > 0) args(0).toLong else 50000L
     val perTrace = if (args.length > 1) args(1).toInt else 20
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Bench.sessionBuilder("32").getOrCreate()
     import spark.implicits._
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -3,7 +3,7 @@ package graft.util
 import java.nio.file.{Files, Path, Paths}
 
 /** Tiny filesystem helpers shared by the temp-index lifecycles (t52's
-  * driver entry, ExplainCheck's DPP probe, the DAG-resume spec). */
+  * driver entry, the plan-pin specs' DPP probes, the DAG-resume spec). */
 object Fs {
 
   /** Run `body` with a thread-local Spark job description (guide §1.5

@@ -16,10 +16,10 @@ class ExtensionsSpec extends AnyFunSuite {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s2 = SparkSession.builder()
-        .master("local[4]")
+      // the extensions are the point of this session; the rest is the
+      // shared config
+      val s2 = Bench.sessionBuilder("4")
         .withExtensions(new GraftExtensions())
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
       assert(s2 ne base) // a genuinely new session, not the cached one
       val v = s2

@@ -1200,7 +1200,7 @@ class PipelineOpsSpec extends SparkTestBase {
     // the rank <= k sites rely on InferWindowGroupLimit for BOTH the
     // top-k fast path and the Int-rank overflow guard (Ranks scaladoc);
     // this pins that the rewrite never changes WHAT is returned, only
-    // how much is sorted — so the plan assertion in ExplainCheck is a
+    // how much is sorted — so the plan assertion in PlanPinsSpec is a
     // pure performance pin, not a correctness dependency
     import SparkTestBase.session.implicits._
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")

@@ -7,7 +7,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession for the whole test JVM (suites share it via
-  * getOrCreate). Mirrors the driver's Verify session configuration. */
+  * getOrCreate), built by [[Bench.sessionBuilder]] like every session of
+  * the engine, so the suite runs under the config the benchmark
+  * measures. */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
 
@@ -50,11 +52,5 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = Bench.sessionBuilder("4").getOrCreate()
 }

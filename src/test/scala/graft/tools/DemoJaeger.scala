@@ -1,15 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.sources.jaeger.JaegerSource
 
 /** Drives the "jaeger" DSv2 format end-to-end with the fixture-backed
   * client: `sbt "Test/runMain graft.tools.DemoJaeger"`. */
 object DemoJaeger {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Bench.sessionBuilder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val opts = Map(
       "client" -> classOf[graft.FixtureJaegerClient].getName,
