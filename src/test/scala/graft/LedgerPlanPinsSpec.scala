@@ -41,15 +41,6 @@ class LedgerPlanPinsSpec extends SparkTestBase {
       }
     }
 
-  /** `n` seeded documents from `from` on: 16 words each, drawn from a
-    * 65,536-word vocabulary, so no two are near-duplicates. */
-  private def seededDocs(from: Int, n: Int) = {
-    import SparkTestBase.session.implicits._
-    (from until from + n).map(i => (i.toLong, (0 until 16).map(j =>
-      "w" + (scala.util.hashing.MurmurHash3.stringHash(s"$i:$j") & 0xffff))
-      .mkString(" "))).toDF("doc_id", "text")
-  }
-
   private def withLedger(body: String => Unit): Unit = {
     val root = java.nio.file.Files
       .createTempDirectory("graft_ledger_pins").toString
@@ -105,10 +96,10 @@ class LedgerPlanPinsSpec extends SparkTestBase {
     withLedger { root =>
       val ledger = s"$root/ledger"
       val exact = s"$root/exact"
-      val seed = seededDocs(0, 100)
+      val seed = seededDocs(0 until 100)
       Dedup.nearDupLedgerAdmit(spark, ledger, seed, "doc_id", "text")
       Dedup.ledgerAdmit(spark, exact, seed, "doc_id", "text")
-      val batch = seededDocs(100, 2100)
+      val batch = seededDocs(100 until 2200)
       val bandScans = scans(plansOf(Dedup.nearDupLedgerAdmit(spark, ledger,
         batch, "doc_id", "text")), "band", "kh", "kb")
       assert(bandScans.exists(_.contains("dynamicpruningexpression")),

@@ -3007,13 +3007,6 @@ class PipelineOpsSpec extends SparkTestBase {
       s"not sorted by ${keys.mkString(", ")}")
   }
 
-  /** Distinct 16-word documents from a 65k-word vocabulary: no two share
-    * a shingle, so every doc admits and every bucket fills. */
-  private def layoutDocs(ids: Range): org.apache.spark.sql.DataFrame =
-    ids.map(i => (i.toLong, (0 until 16).map(j =>
-      "w" + (scala.util.hashing.MurmurHash3.stringHash(s"$i:$j") & 0xffff))
-      .mkString(" "))).toDF("doc_id", "text")
-
   test("ledger stores: every write leaves one key-sorted file per " +
       "bucket dir — exact ledger after an admit and a compaction; " +
       "near-dup band store and primary after an admit, a forget, an " +
@@ -3024,15 +3017,15 @@ class PipelineOpsSpec extends SparkTestBase {
     val ndl = s"$root/ndl"
     val bands = Dedup.ndlBandsPath(ndl)
     try {
-      Dedup.ledgerAdmit(spark, exact, layoutDocs(0 until 1000),
+      Dedup.ledgerAdmit(spark, exact, seededDocs(0 until 1000),
         "doc_id", "text")
       assertBucketLayout(exact, Seq("text_md5"))
-      Dedup.ledgerAdmit(spark, exact, layoutDocs(1000 until 1200),
+      Dedup.ledgerAdmit(spark, exact, seededDocs(1000 until 1200),
         "doc_id", "text")
       assert(Dedup.compactDedupLedger(spark, exact) === 1200L)
       assertBucketLayout(exact, Seq("text_md5"))
 
-      assert(Dedup.nearDupLedgerAdmit(spark, ndl, layoutDocs(0 until 1000),
+      assert(Dedup.nearDupLedgerAdmit(spark, ndl, seededDocs(0 until 1000),
         "doc_id", "text").count() === 1000L)
       assertBucketLayout(bands, Seq("band", "kh"))
       assertBucketLayout(ndl, Nil)
@@ -3040,13 +3033,13 @@ class PipelineOpsSpec extends SparkTestBase {
         (0L until 100L).toDF("doc_id"), "doc_id") === 100L)
       assertBucketLayout(bands, Seq("band", "kh"))
       assertBucketLayout(ndl, Nil)
-      Dedup.nearDupLedgerAdmit(spark, ndl, layoutDocs(1000 until 1200),
+      Dedup.nearDupLedgerAdmit(spark, ndl, seededDocs(1000 until 1200),
         "doc_id", "text")
       assert(Dedup.nearDupLedgerExpire(spark, ndl, beforeDoc = 200L,
         dropSignatures = true) === 100L)
       assertBucketLayout(bands, Seq("band", "kh"))
       assertBucketLayout(ndl, Nil)
-      Dedup.nearDupLedgerAdmit(spark, ndl, layoutDocs(1200 until 1300),
+      Dedup.nearDupLedgerAdmit(spark, ndl, seededDocs(1200 until 1300),
         "doc_id", "text")
       assert(Dedup.compactNearDupLedger(spark, ndl) === 1200L)
       assertBucketLayout(bands, Seq("band", "kh"))
@@ -3087,16 +3080,16 @@ class PipelineOpsSpec extends SparkTestBase {
     }
     try {
       // appends to existing ledgers: the steady-state write
-      Dedup.ledgerAdmit(spark, s"$root/exact", layoutDocs(0 until 50),
+      Dedup.ledgerAdmit(spark, s"$root/exact", seededDocs(0 until 50),
         "doc_id", "text")
-      Dedup.nearDupLedgerAdmit(spark, s"$root/ndl", layoutDocs(0 until 50),
+      Dedup.nearDupLedgerAdmit(spark, s"$root/ndl", seededDocs(0 until 50),
         "doc_id", "text")
       val exact = writeTasks(Dedup.ledgerAdmit(spark, s"$root/exact",
-        layoutDocs(50 until 300), "doc_id", "text"))
+        seededDocs(50 until 300), "doc_id", "text"))
       assert(exact.size === 1 && exact.forall(_ == want),
         s"exact append write stages ran $exact tasks, want $want")
       val near = writeTasks(Dedup.nearDupLedgerAdmit(spark, s"$root/ndl",
-        layoutDocs(50 until 300), "doc_id", "text").count())
+        seededDocs(50 until 300), "doc_id", "text").count())
       assert(near.size === 2 && near.forall(_ == want),
         s"near-dup append (bands, primary) write stages ran $near " +
           s"tasks, want $want")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.GraftSparkBridge
 import org.apache.spark.scheduler.SparkListener
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,6 +26,16 @@ trait SparkTestBase extends AnyFunSuite {
     val df = SparkEntry.queries(q)(spark, testdata)
     if (executed) df.count()
     df.queryExecution.executedPlan.toString
+  }
+
+  /** Distinct 16-word documents with ids `ids`, from a 65k-word
+    * vocabulary: no two share a shingle, so every doc admits and every
+    * ledger bucket fills. */
+  def seededDocs(ids: Range): DataFrame = {
+    import SparkTestBase.session.implicits._
+    ids.map(i => (i.toLong, (0 until 16).map(j =>
+      "w" + (scala.util.hashing.MurmurHash3.stringHash(s"$i:$j") & 0xffff))
+      .mkString(" "))).toDF("doc_id", "text")
   }
 
   /** Runs `body` with `tap` on the listener bus: drains the bus so no
