@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Multimodal, Robots}
 import graft.functions.TextFunctions
 
-/** Physical-plan pins of the driver queries and the map-only censuses on
-  * the sf0.01 driver testdata: filter pushdown, broadcast dimension
+/** Physical-plan pins of the SparkEntry queries and the map-only censuses
+  * on the sf0.01 testdata: filter pushdown, broadcast dimension
   * sides, top-k without a global sort, no cartesian product in the
   * banded, bucketed and equi-joined similarity paths, exchange counts,
   * partition-keyed windows, and shuffles that carry hashes or digests

@@ -16,10 +16,10 @@ trait SparkTestBase extends AnyFunSuite {
   def fixturePath: String =
     graft.sources.JaegerJsonSource.resourceToTempFile("/jaeger_fixture.json")
 
-  /** The sf0.01 driver testdata the plan-pin specs plan against. */
+  /** The sf0.01 testdata the plan-pin specs plan against. */
   val testdata = "/root/testdata/sf0.01"
 
-  /** Executed-plan string of driver query `q` on [[testdata]];
+  /** Executed-plan string of SparkEntry query `q` on [[testdata]];
     * `executed` runs the query first, so the plan read is adaptive
     * execution's final one. */
   def plan(q: String, executed: Boolean = false): String = {
