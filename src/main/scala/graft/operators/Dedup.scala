@@ -928,15 +928,6 @@ object Dedup {
     ndlKb(col("kh")), NdlKeyBuckets, Seq("band", "kh"),
     Seq("band", "kh", "doc"))
 
-  /** The broadcast probe side of a bucket equi-join against `store`.
-    * Spark plans dynamic partition pruning into the store scan only when
-    * the broadcast side holds a predicate its PartitionPruning rule
-    * deems selective. A trickle batch gets one inferred from its literal
-    * key fold and a larger batch has none, so this adds the bucket-range
-    * filter, which every row passes. */
-  private def pruningProbe(store: LedgerStore, rows: DataFrame): DataFrame =
-    broadcast(rows.filter(col(store.bucket) < store.buckets))
-
   /** Detection order: the primary also holds the digest column. */
   private val LedgerStores = Seq(PrimaryStore, BandStore, ExactStore)
 
@@ -1082,13 +1073,15 @@ object Dedup {
     // …then minus the ledger. The store is db-bucketed on the digest
     // hash ([[ExactStore]] — the near-dup primary's probe shape), so
     // the SEEN set comes from an INNER equi-join on (db, text_md5)
-    // with the batch side broadcast: dynamic partition pruning folds
-    // the batch's buckets into the store scan (pinned in
-    // LedgerPlanPinsSpec), and trickle batches (≤ the near-dup
-    // literal bound) additionally fold their digest literals into a
-    // pushed In(text_md5, …) filter that fires parquet row-group
-    // stats on the digest-sorted files. The batch-minus-seen anti-join
-    // then runs batch-vs-batch — no store scan on the anti side.
+    // with the batch side broadcast. Trickle batches (≤ the near-dup
+    // literal bound) fold their digest literals into a pushed
+    // In(text_md5, …) filter that fires parquet row-group stats on the
+    // digest-sorted files, and that filter is the selective predicate
+    // dynamic partition pruning needs to fold the batch's buckets into
+    // the store scan (both pinned in LedgerPlanPinsSpec); a larger
+    // batch's digests touch every bucket, and its scan gets no DPP.
+    // The batch-minus-seen anti-join then runs batch-vs-batch — no
+    // store scan on the anti side.
     // A pre-r16 ledger (flat, unbucketed) takes the same joins with db
     // derived on the fly (no pruning) and KEEPS APPENDING FLAT —
     // mixing bucket subdirs into a flat dataset dir would break its
@@ -1114,9 +1107,8 @@ object Dedup {
             else store.filter(col("text_md5").isInCollection(md5s))
           } else store
         val seenSet = scan.select(col("db"), col("text_md5"))
-          .join(if (nDigests <= NdlDppMaxReps)
-              pruningProbe(ExactStore, batchDb) else batchDb,
-            Seq("db", "text_md5"))
+          .join(if (nDigests <= NdlDppMaxReps) broadcast(batchDb)
+            else batchDb, Seq("db", "text_md5"))
           .select(col("text_md5")).distinct()
         reps.join(seenSet, Seq("text_md5"), "left_anti")
       }
@@ -2050,7 +2042,10 @@ object Dedup {
     // candidate probe: batch band keys vs the PERSISTED band store.
     // Broadcasting the batch side is what feeds dynamic partition
     // pruning into the store scan (only the batch's (band, kb) buckets
-    // are read) — sound while the batch is daily-sized; a bulk backfill
+    // are read) for a trickle batch, whose literal kh fold below is the
+    // selective predicate DPP needs; a larger batch's keys touch every
+    // bucket and its scan gets no DPP. Broadcasting is sound while the
+    // batch is daily-sized; a bulk backfill
     // beyond NdlDppMaxReps reps would be an oversized broadcast, so it
     // falls back to the plain shuffle equi-join (same decisions, and a
     // batch that large touches every bucket anyway)
@@ -2059,8 +2054,7 @@ object Dedup {
         .withColumnRenamed("doc", "doc_b"))
     val nReps = batchSig.count()
     val smallBatch = nReps <= NdlDppMaxReps
-    val probe =
-      if (smallBatch) pruningProbe(BandStore, batchKeys) else batchKeys
+    val probe = if (smallBatch) broadcast(batchKeys) else batchKeys
     // TRICKLE batches (a takedown check, a small feed) additionally
     // fold their key hashes into a literal `isInCollection` FILTER on
     // the band-store scan — the tombstone-fold pattern. DPP's partition
@@ -2085,12 +2079,21 @@ object Dedup {
     // equi-join against the db-partitioned primary — broadcasting the
     // candidate side feeds partition pruning into the hs scan, so the
     // widest column in the store is read only for buckets that hold
-    // actual candidates
+    // actual candidates. Spark plans that pruning only when the
+    // broadcast side holds a predicate its PartitionPruning rule deems
+    // selective: a trickle batch's candidates inherit the literal kh
+    // fold, a larger batch's have none, so for those the bucket-range
+    // filter (every row passes it) stands in. Their few candidates
+    // touch few buckets (on a 6,000-doc store, 20 candidates read 48 of
+    // 96 primary files, against all 96 without it)
     val candDb = candsVsStore.withColumn("db", ndlDb(col("doc_a")))
+    val candProbe =
+      if (!smallBatch) candDb
+      else if (nReps <= NdlLiteralMaxReps) broadcast(candDb)
+      else broadcast(candDb.filter(col("db") < PrimaryStore.buckets))
     val nearVsStorePairs = jaccardAtLeast(store
       .select(col("db"), col("doc").as("doc_a"), col("hs").as("hs_a"))
-      .join(if (smallBatch) pruningProbe(PrimaryStore, candDb) else candDb,
-        Seq("db", "doc_a"))
+      .join(candProbe, Seq("db", "doc_a"))
       .join(batchSig.select(col("doc").as("doc_b"), col("hs").as("hs_b")),
         Seq("doc_b")), threshold)
       .select(col("doc_a"), col("doc_b"))

@@ -12,8 +12,9 @@ import graft.operators.Dedup
   * band store and primary, the trickle batch's pushed `In(kh, …)` key
   * fold, and the exact ledger's pruned, literal-folded seen probe.
   * sf0.01 holds 500 documents, so every admit on it is a trickle batch
-  * (at most `NdlLiteralMaxReps` representatives); the non-trickle probe
-  * runs on seeded in-memory documents. */
+  * (at most `NdlLiteralMaxReps` representatives); the non-trickle probes
+  * run on seeded in-memory documents. A non-trickle batch touches every
+  * band and digest bucket, so only its verify fetch is pinned to DPP. */
 class LedgerPlanPinsSpec extends SparkTestBase {
 
   private lazy val docs = spark.read.parquet(s"$testdata/documents.parquet")
@@ -91,28 +92,39 @@ class LedgerPlanPinsSpec extends SparkTestBase {
   }
 
   test("non-trickle admit (more than NdlLiteralMaxReps = 2,048 " +
-      "representatives): the band probe and the exact seen probe keep " +
-      "DPP without the literal In(kh, …) / In(text_md5, …) fold") {
+      "representatives): broadcast probes without the literal " +
+      "In(kh, …) / In(text_md5, …) fold, and DPP on the verify fetch") {
     withLedger { root =>
       val ledger = s"$root/ledger"
       val exact = s"$root/exact"
       val seed = seededDocs(0 until 100)
       Dedup.nearDupLedgerAdmit(spark, ledger, seed, "doc_id", "text")
       Dedup.ledgerAdmit(spark, exact, seed, "doc_id", "text")
-      val batch = seededDocs(100 until 2200)
-      val bandScans = scans(plansOf(Dedup.nearDupLedgerAdmit(spark, ledger,
-        batch, "doc_id", "text")), "band", "kh", "kb")
-      assert(bandScans.exists(_.contains("dynamicpruningexpression")),
-        "non-trickle band probe gets dynamic partition pruning on the " +
-          "band store's kb buckets")
-      assert(!bandScans.exists(_.contains("In(kh")),
+      // fresh documents plus copies of ten stored texts under new ids,
+      // so the verify fetch has candidates to fetch
+      val batch = seededDocs(100 until 2200).unionByName(
+        seededDocs(0 until 10).withColumn("doc_id", col("doc_id") + 10000L))
+      val ndPlans = plansOf(Dedup.nearDupLedgerAdmit(spark, ledger,
+        batch, "doc_id", "text"))
+      assert(ndPlans.exists(
+        "BroadcastHashJoin \\[band#\\d+, kb#\\d+, kh#\\d+L\\]".r
+          .findFirstIn(_).isDefined),
+        "non-trickle band probe is a broadcast equi-join on (band, kb, kh)")
+      assert(!scans(ndPlans, "band", "kh", "kb").exists(_.contains("In(kh")),
         "non-trickle band probe folds no literal kh set into the scan")
-      val seenScans = scans(plansOf(Dedup.ledgerAdmit(spark, exact, batch,
-        "doc_id", "text")), "text_md5", "db")
-      assert(seenScans.exists(_.contains("dynamicpruningexpression")),
-        "non-trickle exact seen probe gets DPP on the digest store's " +
-          "db buckets")
-      assert(!seenScans.exists(_.contains("In(text_md5")),
+      assert(scans(ndPlans, "hs", "db")
+        .exists(_.contains("dynamicpruningexpression")),
+        "non-trickle verify fetch gets dynamic partition pruning on the " +
+          "primary's db buckets")
+      val exPlans = plansOf(Dedup.ledgerAdmit(spark, exact, batch,
+        "doc_id", "text"))
+      assert(exPlans.exists(
+        "BroadcastHashJoin \\[db#\\d+, text_md5#\\d+\\]".r
+          .findFirstIn(_).isDefined),
+        "non-trickle exact seen probe is a broadcast equi-join on " +
+          "(db, text_md5)")
+      assert(!scans(exPlans, "text_md5", "db")
+        .exists(_.contains("In(text_md5")),
         "non-trickle exact seen probe folds no literal digest set into " +
           "the scan")
     }
