@@ -1036,18 +1036,18 @@ object Dedup {
     // loser fails loudly instead (admit-vs-maintenance is the marker
     // fence + Gen.rewrite's content re-verify, a separate mechanism)
     Fs.withIngestLease(spark, path, "ledgerAdmit") {
-      val (admitted, legacyLayout) =
+      val admitted =
         ledgerDecide(spark, path, batch, idCol, textCol, auditOut)
       admittedOut.foreach(out =>
         admitted.write.mode("overwrite").parquet(out))
-      ledgerAppend(spark, path, admitted, legacyLayout)
+      ledgerAppend(spark, path, admitted)
       admitted
     }
 
   /** The admit's READ-DECIDE half ([[ledgerAdmit]]'s body up to the
     * checkpointed admitted set) — split out so the streamed form can
     * persist the decisions per epoch BEFORE any append. Callers hold
-    * the ingest lease. Returns (admitted, legacyLayout).
+    * the ingest lease. Returns the admitted rows.
     *
     * `auditOut` materializes the drop REASONS — the exact ledger's
     * explainability surface, mirroring the near-dup `auditOut`: one
@@ -1060,7 +1060,7 @@ object Dedup {
   private def ledgerDecide(spark: SparkSession, path: String,
       batch: DataFrame, idCol: String, textCol: String,
       auditOut: Option[String] = None,
-      materializeTo: Option[String] = None): (DataFrame, Boolean) =
+      materializeTo: Option[String] = None): DataFrame =
     Fs.labeled(spark, "exact:decide") {
     Fs.failIfUnderMaintenance(spark, path, "ledgerAdmit")
     val hasStore = Gen.hasData(spark, path)
@@ -1082,19 +1082,10 @@ object Dedup {
     // batch's digests touch every bucket, and its scan gets no DPP.
     // The batch-minus-seen anti-join then runs batch-vs-batch — no
     // store scan on the anti side.
-    // A pre-r16 ledger (flat, unbucketed) takes the same joins with db
-    // derived on the fly (no pruning) and KEEPS APPENDING FLAT —
-    // mixing bucket subdirs into a flat dataset dir would break its
-    // reads; compactDedupLedger is the one-time layout migration
-    var legacyLayout = false
     val firstInBatch =
       if (!hasStore) reps
       else {
-        val s0 = current(spark, path)
-        legacyLayout = !s0.columns.contains("db")
-        val store =
-          if (!legacyLayout) s0
-          else s0.withColumn("db", ExactStore.bucketOf)
+        val store = exactStore(spark, path, "ledgerAdmit")
         val batchDb = reps.select(col("text_md5"))
           .withColumn("db", ExactStore.bucketOf)
           .localCheckpoint()
@@ -1148,34 +1139,43 @@ object Dedup {
       exactBatch.unionByName(storeDropped)
         .write.mode("overwrite").parquet(out)
     }
-    (admitted, legacyLayout)
+    admitted
   }
 
-  /** The admit's APPEND half — same no-fragmentation guard as the
-    * near-dup ledger: an all-duplicate batch must not grow the file
-    * count. The append lands in the CURRENT generation
+  /** The exact ledger's current digest store. A store without the `db`
+    * bucket column is the unbucketed layout from before the bucketing:
+    * no code writes it, so it is refused, untouched. */
+  private def exactStore(spark: SparkSession, path: String,
+      who: String): DataFrame = {
+    val s = current(spark, path)
+    if (!s.columns.contains("db")) throw new IllegalStateException(
+      s"$who: $path holds an exact ledger in the unbucketed layout " +
+        s"(columns ${s.columns.mkString(",")}, no db) — a layout from " +
+        "before the db bucketing, which this code does not write; it " +
+        "was left untouched. Rebuild the ledger into a new path.")
+    s
+  }
+
+  /** The admit's APPEND half. The partitioned write of an empty frame
+    * writes no part file, so an all-duplicate batch does not grow the
+    * file count. The append lands in the CURRENT generation
     * (Gen.appendDir establishes gen-1 for a fresh ledger — versioned
     * from birth, so the first compaction is already zero-outage).
     * Callers hold the ingest lease. */
   private def ledgerAppend(spark: SparkSession, path: String,
-      admitted: DataFrame, legacyLayout: Boolean): Unit =
+      admitted: DataFrame): Unit =
     Fs.labeled(spark, "exact:append") {
-      if (!admitted.isEmpty) {
-        val dest = Gen.appendDir(spark, path)
-        if (legacyLayout)
-          admitted.select(col("text_md5")).write.mode("append")
-            .parquet(dest)
-        else writeBucketed(ExactStore, admitted, "append", dest)
-      }
+      writeBucketed(ExactStore, admitted, "append",
+        Gen.appendDir(spark, path))
     }
 
   /** Streamed [[ledgerAdmit]]: one epoch of the shared [[admitEpoch]]
     * protocol, whose persisted decisions are the epoch's admitted rows
-    * (`epoch-<id>/admitted`; the append re-reads the store layout on a
-    * retry). A crash between `_decided` and `_appended` can
-    * double-append digests — unique by construction in the seen-set
-    * semantics, reported by [[dedupLedgerStats]] and collapsed by
-    * [[compactDedupLedger]]'s distinct, decisions unaffected.
+    * (`epoch-<id>/admitted`). A crash between `_decided` and
+    * `_appended` can double-append digests — unique by construction in
+    * the seen-set semantics, reported by [[dedupLedgerStats]] and
+    * collapsed by [[compactDedupLedger]]'s distinct, decisions
+    * unaffected.
     * `audit = true` writes the per-epoch drop reasons to
     * `epoch-<id>/audit` (sealed by `_decided` with the decisions; read
     * back flat with [[readAuditEpochs]] — exact_store rows carry a NULL
@@ -1189,18 +1189,13 @@ object Dedup {
       eDir => {
         // the decide's materializeTo writes the epoch's admitted
         // parquet directly (one materialization, not a checkpoint plus
-        // a write), and its probe already established the store layout
-        val (admitted, legacy) = ledgerDecide(spark, path, batch, idCol,
+        // a write)
+        val admitted = ledgerDecide(spark, path, batch, idCol,
           textCol, if (audit) Some(s"$eDir/audit") else None,
           materializeTo = Some(s"$eDir/admitted"))
-        (admitted, () => ledgerAppend(spark, path, admitted, legacy))
+        (admitted, () => ledgerAppend(spark, path, admitted))
       },
-      // the layout re-derives from the store itself (a schema read), so
-      // the append is correct against whatever layout the first
-      // delivery established
-      eDir => ledgerAppend(spark, path, Gen.read(spark, s"$eDir/admitted"),
-        Gen.hasData(spark, path) &&
-          !current(spark, path).columns.contains("db")))
+      eDir => ledgerAppend(spark, path, Gen.read(spark, s"$eDir/admitted")))
 
   /** Wire a document stream into the exact-dedup ledger: one
     * [[ledgerAdmitStreamBatch]] per micro-batch ([[admitStream]]). */
@@ -1342,12 +1337,8 @@ object Dedup {
     * (a legitimate retry matches under any partitioning) yet
     * multiset-sensitive (an xor would cancel even-multiplicity rows —
     * {A,A,B} vs {B,B,B} collide). The value is VERSION-PREFIXED
-    * (`fp1:`): a seal whose prefix this code does not recognize is a
-    * PREVIOUS format's — accepted like the r17 empty seals (the
-    * protocol upgrades the seal at the next fresh epoch; refusing
-    * would crash-loop every in-flight root on upgrade), with a
-    * once-per-JVM log warning that the guard is not yet active for
-    * that epoch. */
+    * (`fp1:`), so an empty seal or one in another fingerprint format
+    * differs from every delivery and fails as a mismatch. */
   private val EpochFpPrefix = "fp1:"
 
   private def epochFingerprint(batch: DataFrame, idCol: String,
@@ -1361,39 +1352,13 @@ object Dedup {
     s"$EpochFpPrefix${r.getLong(0)}:$x"
   }
 
-  private val warnedLegacySeals =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Fail loudly when a decided epochId is re-delivered with DIFFERENT
-    * rows (see [[epochFingerprint]]). An EMPTY stored seal (the
-    * pre-fingerprint bare markers) or one carrying an UNRECOGNIZED
-    * format prefix (an earlier fingerprint algorithm) is accepted with
-    * a once-per-root warning — the guard is defense-in-depth, and
-    * refusing on upgrade would crash-loop every in-flight root; fresh
-    * epochs seal in the current format, so the guarded surface grows
-    * forward from the upgrade. Both legacy shapes warn: the empty
-    * seals are exactly the LOW epoch ids (0, 1, …) a reset checkpoint
-    * re-delivers into, so a silent accept there would leave the guard
-    * invisibly inactive where it matters most. A legacy epoch is
-    * deliberately NOT re-sealed on re-delivery: neither legacy shape
-    * can VERIFY the delivered rows match the originally-decided batch,
-    * and stamping the delivered fingerprint as truth would eternalize
-    * a possibly-reset batch — the warning tells the operator which
-    * roots still carry unguarded epochs instead. */
+    * rows (see [[epochFingerprint]]), the epoch left untouched. */
   private def checkEpochFingerprint(fs: FileSystem, decidedM: Path,
       fp: String, epochId: Long, epochRoot: String): Unit =
     if (fs.exists(decidedM)) {
       val stored = Gen.readSmall(fs, decidedM)
-      if (stored.isEmpty || !stored.startsWith(EpochFpPrefix)) {
-        if (warnedLegacySeals.add(epochRoot))
-          org.slf4j.LoggerFactory.getLogger("graft.operators.Dedup")
-            .warn(s"epoch $epochId at $epochRoot carries a " +
-              (if (stored.isEmpty) "pre-fingerprint (empty) seal"
-               else "seal in a previous fingerprint format") +
-              " — the reset-checkpoint guard is inactive for epochs " +
-              "sealed before the upgrade; fresh epochs seal in the " +
-              "current format")
-      } else if (stored != fp)
+      if (stored != fp)
         throw new IllegalStateException(
           s"epoch $epochId at $epochRoot is already decided for a " +
             s"DIFFERENT batch (sealed fingerprint $stored, delivered " +
@@ -1786,9 +1751,7 @@ object Dedup {
     * GENERATION via [[graft.util.Gen.rewrite]] (atomic commit-marker
     * flip — ZERO reader outage, with the maintenance marker that makes
     * a racing [[ledgerAdmit]] fail loudly instead of losing its rows
-    * to the flip). Also the one-time MIGRATION for a ledger written
-    * before the db bucketing existed (db derives from the digests
-    * either way). The rewrite also collapses duplicate digest rows
+    * to the flip). The rewrite also collapses duplicate digest rows
     * (`distinct` on the 16-byte digest): under the enforced
     * single-writer fence none exist, but a duplicate smuggled in by
     * any historical race is repaired here rather than silently
@@ -1809,29 +1772,22 @@ object Dedup {
     * smuggled rows in and the next compaction will repair it), file
     * count and max files per db bucket (grows one per admit batch —
     * the [[compactDedupLedger]] trigger, compared against
-    * `maxFilesPerBucket` for `compact_advised`), and whether the store
-    * still runs the pre-bucketing legacy layout (`bucketed` false →
-    * compaction is also the migration). One scan of the 16-byte digest
-    * column + file names. */
+    * `maxFilesPerBucket` for `compact_advised`). One scan of the
+    * 16-byte digest column + file names. */
   def dedupLedgerStats(spark: SparkSession, path: String,
       maxFilesPerBucket: Int = 16): DataFrame = {
     import spark.implicits._
-    val s0 = current(spark, path)
-    val bucketed = s0.columns.contains("db")
-    val withDb =
-      if (bucketed) s0 else s0.withColumn("db", ExactStore.bucketOf)
-    val t = ledgerCensus(withDb, Seq("db", "text_md5"),
+    val store = exactStore(spark, path, "dedupLedgerStats")
+    val t = ledgerCensus(store, Seq("db", "text_md5"),
       countDistinct(col("text_md5")).as("digests"),
       countDistinct(col("f")).as("files"))
-    val maxPerBucket =
-      if (bucketed) maxBucketFiles(withDb, "db")
-      else t.getAs[Long]("files") // flat: one "bucket"
+    val maxPerBucket = maxBucketFiles(store, "db")
     Seq((t.getAs[Long]("digests"),
       t.getAs[Long]("rows") - t.getAs[Long]("digests"),
-      t.getAs[Long]("files"), maxPerBucket, bucketed,
-      maxPerBucket > maxFilesPerBucket || !bucketed))
+      t.getAs[Long]("files"), maxPerBucket,
+      maxPerBucket > maxFilesPerBucket))
       .toDF("n_digests", "n_duplicate_rows", "n_files",
-        "max_bucket_files", "bucketed", "compact_advised")
+        "max_bucket_files", "compact_advised")
   }
 
   /** Persisted NEAR-dup ledger — the incremental twin of [[ledgerAdmit]]
@@ -2005,9 +1961,7 @@ object Dedup {
           s"$path holds a near-dup ledger with a different geometry " +
             s"(columns ${s.columns.mkString(",")}; this call implies " +
             s"${storeColsDb.mkString(",")}) — admit with the bands/rows " +
-            "the ledger was created with (a pre-db-partition ledger " +
-            "migrates once via compactNearDupLedger), or start a new " +
-            "store")
+            "the ledger was created with, or start a new store")
         s
       } else batchSig.limit(0).withColumn("db", lit(0).cast("int"))
 
@@ -2173,9 +2127,8 @@ object Dedup {
   }
 
   /** The near-dup admit's APPEND half. An all-duplicate batch (a daily
-    * re-run, a replayed feed) appends NOTHING — an unconditional
-    * append would still write one empty part file per re-run and
-    * fragment the store for no information. Band keys land FIRST (see
+    * re-run, a replayed feed) appends no file: the partitioned write of
+    * an empty frame writes no part file. Band keys land FIRST (see
     * [[nearDupLedgerAdmit]]'s crash-ordering note). Callers hold the
     * primary's ingest lease. `sealDir` (the streamed path's epoch dir)
     * seals each store's append with its own marker
@@ -2193,7 +2146,6 @@ object Dedup {
       novel: DataFrame, bands: Int, rows: Int,
       sealDir: Option[String] = None): Unit =
     Fs.labeled(spark, "ndl:append") {
-    if (!novel.isEmpty) {
       val fs = fsOf(spark, path)
       def half(marker: String)(write: => Unit): Unit = sealDir match {
         case None => write
@@ -2209,7 +2161,6 @@ object Dedup {
         writeBucketed(PrimaryStore, novel, "append",
           Gen.appendDir(spark, path))
       }
-    }
     }
 
   /** Streamed [[nearDupLedgerAdmit]]: one epoch of the shared
@@ -2284,52 +2235,58 @@ object Dedup {
     s"""{"bands":$bands,"rows":$rows,"key_buckets":$NdlKeyBuckets,""" +
       s""""doc_buckets":$NdlDocBuckets,"layout":2}"""
 
-  /** Verify (or create / backfill) the geometry sidecar. `hasStore`
-    * distinguishes a fresh ledger (write it) from a pre-sidecar one
-    * (backfill it — stores from this code lineage used the current
-    * constants). */
+  /** Verify (or create) the geometry sidecar. `hasStore` distinguishes
+    * a fresh ledger (write it) from one whose sidecar must match. */
   private def ndlCheckMeta(fs: FileSystem, path: String, bands: Int,
       rows: Int, hasStore: Boolean, who: String): Unit = {
-    val mp = ndlMetaPath(path)
     val expect = ndlMetaJson(bands, rows)
-    if (fs.exists(mp) && hasStore) {
-      val got = Gen.readSmall(fs, mp)
+    // fresh ledger (or a first admit that crashed before any append
+    // left a sidecar with no store behind it — nothing is bound yet):
+    // (re)stamp with this call's geometry
+    if (!hasStore) writeSmall(fs, ndlMetaPath(path), expect)
+    else {
+      val got = ndlMetaRaw(fs, path, who)
       if (got != expect) throw new IllegalStateException(
         s"$who: $path was created with geometry $got; this call/build " +
           s"implies $expect. Admit with the recorded band split, or — " +
           "for a bucket-modulus upgrade — run compactNearDupLedger " +
           "once (it rewrites both stores and the sidecar with the " +
           "current moduli).")
-    } else
-      // fresh ledger (or a first admit that crashed before any append
-      // left a sidecar with no store behind it — nothing is bound yet):
-      // (re)stamp with this call's geometry
-      writeSmall(fs, mp, expect)
+    }
   }
 
-  private def ndlReadMeta(fs: FileSystem,
-      path: String): Option[Map[String, Int]] = {
+  /** The sidecar of a ledger that has a store. A store without one is
+    * the layout from before the sidecar existed: no code writes it, so
+    * it is refused, untouched. */
+  private def ndlMetaRaw(fs: FileSystem, path: String,
+      who: String): String = {
     val mp = ndlMetaPath(path)
-    if (!fs.exists(mp)) None
-    else Some("\"(\\w+)\":(\\d+)".r.findAllMatchIn(Gen.readSmall(fs, mp))
-      .map(m => m.group(1) -> m.group(2).toInt).toMap)
+    if (!fs.exists(mp)) throw new IllegalStateException(
+      s"$who: $path holds a near-dup ledger without its geometry " +
+        s"sidecar ($mp) — a layout from before the sidecar existed, " +
+        "which this code does not write; it was left untouched. " +
+        "Rebuild the ledger into a new path.")
+    Gen.readSmall(fs, mp)
   }
+
+  private def ndlReadMeta(fs: FileSystem, path: String,
+      who: String): Map[String, Int] =
+    "\"(\\w+)\":(\\d+)".r.findAllMatchIn(ndlMetaRaw(fs, path, who))
+      .map(m => m.group(1) -> m.group(2).toInt).toMap
 
   /** Refuse to rewrite a ledger whose sidecar records other bucket
     * moduli than this build's: the rewrite recomputes buckets with the
     * current moduli, and mixing them would mis-prune (compaction is the
     * migration). */
-  private def ndlRequireModuli(meta: Option[Map[String, Int]],
+  private def ndlRequireModuli(m: Map[String, Int],
       path: String, who: String, verb: String): Unit =
-    meta.foreach { m =>
-      if (m("key_buckets") != NdlKeyBuckets ||
-          m("doc_buckets") != NdlDocBuckets)
-        throw new IllegalStateException(
-          s"$who: $path was written under bucket moduli " +
-            s"(${m("key_buckets")}, ${m("doc_buckets")}); this build " +
-            s"uses ($NdlKeyBuckets, $NdlDocBuckets) — run " +
-            s"compactNearDupLedger once to migrate, then $verb.")
-    }
+    if (m("key_buckets") != NdlKeyBuckets ||
+        m("doc_buckets") != NdlDocBuckets)
+      throw new IllegalStateException(
+        s"$who: $path was written under bucket moduli " +
+          s"(${m("key_buckets")}, ${m("doc_buckets")}); this build " +
+          s"uses ($NdlKeyBuckets, $NdlDocBuckets) — run " +
+          s"compactNearDupLedger once to migrate, then $verb.")
 
   /** Explode a signature frame into LSH band keys: (doc, band, key) —
     * one home for the banding spelling the store, the batch probe, and
@@ -2363,44 +2320,21 @@ object Dedup {
 
   /** Rebuild the band store from the primary's signatures — the
     * explicit form of the backfill [[nearDupLedgerAdmit]] runs when the
-    * band store is missing, for operators migrating a pre-band ledger
+    * band store is missing, for operators restoring a lost band store
     * ahead of their next ingest window. Geometry comes from the
-    * ledger's `<path>_meta` sidecar when one exists (the DEFAULT —
-    * passing nothing cannot silently rebuild a 2×8 ledger with 4×4
-    * keys, the exact silent-miss hole the sidecar exists to close);
-    * explicitly-passed `bands`/`rows` must MATCH the recorded
-    * geometry, and the sidecar's bucket moduli must match this build's
+    * ledger's `<path>_meta` sidecar (so a 2×8 ledger can never be
+    * rebuilt with 4×4 keys, the silent-miss hole the sidecar exists to
+    * close), and the sidecar's bucket moduli must match this build's
     * (a modulus upgrade migrates via [[compactNearDupLedger]] first).
-    * Sidecar-less pre-sidecar ledgers fall back to the passed values
-    * (checked against the signature column count, as before). Returns
-    * the band-key row count. */
-  def rebuildNearDupLedgerBands(spark: SparkSession, path: String,
-      bands: Int = 0, rows: Int = 0): Long = {
-    val meta = ndlReadMeta(fsOf(spark, path), path)
-    meta.foreach { m =>
-      if ((bands > 0 && bands != m("bands")) ||
-          (rows > 0 && rows != m("rows")))
-        throw new IllegalStateException(
-          s"rebuildNearDupLedgerBands: $path was created with geometry " +
-            s"${m("bands")}x${m("rows")} (per its _meta sidecar); " +
-            s"rebuilding with ${bands}x$rows would write band keys no " +
-            "admit probe ever matches. Omit bands/rows to use the " +
-            "recorded geometry.")
-    }
+    * Returns the band-key row count. */
+  def rebuildNearDupLedgerBands(spark: SparkSession, path: String): Long = {
+    val meta = ndlReadMeta(fsOf(spark, path), path,
+      "rebuildNearDupLedgerBands")
     ndlRequireModuli(meta, path, "rebuildNearDupLedgerBands", "rebuild")
-    val useBands = meta.map(_("bands")).getOrElse(if (bands > 0) bands
-      else 4)
-    val useRows = meta.map(_("rows")).getOrElse(if (rows > 0) rows
-      else 4)
-    val primary = current(spark, path)
-    val mh = primary.columns.count(_.startsWith("mh"))
-    require(useBands * useRows == mh,
-      s"band geometry ${useBands}x$useRows does not match the ledger's " +
-        s"$mh signature columns")
     val bandsPath = ndlBandsPath(path)
     Gen.rewrite(spark, bandsPath, extraLeases = Seq(path))(g =>
-      writeBucketed(BandStore,
-        ndlWithKb(ndlBandKeys(primary, useBands, useRows)), "overwrite", g))
+      writeBucketed(BandStore, ndlWithKb(ndlBandKeys(current(spark, path),
+        meta("bands"), meta("rows"))), "overwrite", g))
     // an all-unshingleable primary rebuilds to an EMPTY band store
     // (no files, no schema) — report 0 keys instead of failing to
     // infer a schema that was never written
@@ -2475,8 +2409,8 @@ object Dedup {
       ids: DataFrame, idCol: String): Long =
     Fs.labeled(spark, "ndl:forget") {
       // the scrub recomputes db with the CURRENT modulus
-      ndlRequireModuli(ndlReadMeta(fsOf(spark, path), path), path,
-        "nearDupLedgerForget", "forget")
+      ndlRequireModuli(ndlReadMeta(fsOf(spark, path), path,
+        "nearDupLedgerForget"), path, "nearDupLedgerForget", "forget")
       val primary0 = current(spark, path)
       val docType = primary0.schema("doc").dataType
       val sentinel = (lit(-1L) - pmod(xxhash64(col("text_md5")),
@@ -2538,8 +2472,8 @@ object Dedup {
         val b = current(spark, bandsPath)
         (ledgerCensus(b, Seq("kb")).getLong(0), maxBucketFiles(b, "kb"))
       } else (0L, 0L)
-    val nBands =
-      ndlReadMeta(fsOf(spark, path), path).map(_("bands")).getOrElse(4)
+    val nBands = ndlReadMeta(fsOf(spark, path), path,
+      "nearDupLedgerHealthReport")("bands")
     val expectedBandRows = p.getAs[Long]("banded") * nBands
     Seq((p.getAs[Long]("rows"), p.getAs[Long]("sents"),
       p.getAs[Long]("banded"), pMaxFiles, hasBands, bandRows,
@@ -2606,21 +2540,19 @@ object Dedup {
     * bucket to one key-sorted file (every admit batch appended one file
     * per touched bucket), collapsing any duplicate rows a historical
     * race smuggled in. Buckets recompute from the data columns, which
-    * makes this also the one-time MIGRATION for a ledger written before
-    * the db partitioning existed and for a bucket-modulus upgrade. The
+    * makes this also the MIGRATION for a bucket-modulus upgrade. The
     * band rewrite derives from the band store itself (its content is
     * exactly the exploded keys, so no band geometry is needed).
     * Returns the compacted primary row count. */
   def compactNearDupLedger(spark: SparkSession, path: String): Long =
     Fs.labeled(spark, "ndl:compact") {
+      val fs = fsOf(spark, path)
+      val m = ndlReadMeta(fs, path, "compactNearDupLedger")
       rewriteNearDupLedger(spark, path)(_.distinct(),
         _.drop("db").distinct())
       // the geometry sidecar re-stamps with the CURRENT moduli (bands ×
-      // rows are the ledger's own, carried over); a pre-sidecar ledger
-      // stays sidecar-less until its next admit backfills one
-      val fs = fsOf(spark, path)
-      ndlReadMeta(fs, path).foreach(m =>
-        writeSmall(fs, ndlMetaPath(path), ndlMetaJson(m("bands"), m("rows"))))
+      // rows are the ledger's own, carried over)
+      writeSmall(fs, ndlMetaPath(path), ndlMetaJson(m("bands"), m("rows")))
       current(spark, path).count()
     }
 

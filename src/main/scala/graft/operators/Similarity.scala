@@ -262,30 +262,30 @@ object Similarity {
   private[graft] def assignCells(df: DataFrame, cents: DataFrame,
       id: String, v: String, keep: Int,
       keepSim: Boolean = false): DataFrame = {
-    // gate the driver collect on a cheap bounded count FIRST: the
-    // >MaxLiteralCents case exists precisely because the centroid table
-    // is too big to ship around, so collecting it just to discover that
-    // (e.g. 64k × 768-dim centroids ≈ 400 MB) could OOM the driver
-    // before the shuffled fallback is ever taken
-    if (cents.limit(MaxLiteralCents + 1).count() > MaxLiteralCents)
+    // one BOUNDED collect decides the path and fetches the centroids:
+    // the >MaxLiteralCents case exists precisely because the centroid
+    // table is too big to ship around, so an unbounded collect (e.g.
+    // 64k × 768-dim centroids ≈ 400 MB) could OOM the driver before
+    // the shuffled fallback is ever taken. One partition makes it one
+    // job: a limit's take otherwise scans a multi-file table in rounds
+    val centArr =
+      collectCentIds(cents.coalesce(1).limit(MaxLiteralCents + 1))
+    if (centArr.length > MaxLiteralCents)
       return assignCellsShuffled(df, cents, id, v, keep, keepSim)
-    val centArr = collectCentIds(cents)
-    if (centArr.length <= MaxLiteralCents) {
-      val top = nearestCellsCol(centArr, col(v), keep)
-      val best =
-        if (keep == 1) element_at(top, 1)
-        else explode(top)
-      val withBest = df.withColumn("__cellbest", best)
-      // keepSim exposes the assignment similarity itself (the dot
-      // against the winning centroid) — the drift monitor profiles it;
-      // everything else only needs the cell
-      if (keepSim)
-        withBest.select(col(id), col(v),
-          (-col("__cellbest.neg_id")).as("cell"),
-          col("__cellbest.s").as("cent_sim"))
-      else withBest.select(col(id), col(v),
-        (-col("__cellbest.neg_id")).as("cell"))
-    } else assignCellsShuffled(df, cents, id, v, keep, keepSim)
+    val top = nearestCellsCol(centArr, col(v), keep)
+    val best =
+      if (keep == 1) element_at(top, 1)
+      else explode(top)
+    val withBest = df.withColumn("__cellbest", best)
+    // keepSim exposes the assignment similarity itself (the dot
+    // against the winning centroid) — the drift monitor profiles it;
+    // everything else only needs the cell
+    if (keepSim)
+      withBest.select(col(id), col(v),
+        (-col("__cellbest.neg_id")).as("cell"),
+        col("__cellbest.s").as("cent_sim"))
+    else withBest.select(col(id), col(v),
+      (-col("__cellbest.neg_id")).as("cell"))
   }
 
   /** The > [[MaxLiteralCents]] fallback (a centroid matrix too big to
@@ -505,9 +505,9 @@ object Similarity {
 
   /** The resolved DATA directory of a persisted index: its current
     * committed generation under the [[graft.util.Gen]] layout (zero-
-    * reader-outage maintenance), or the path itself for a legacy flat
-    * index. Every persisted-index verb resolves ONCE at entry — one or
-    * two namenode RPCs, never per-expression. */
+    * reader-outage maintenance), or the path itself for a generation
+    * dir handed in directly. Every persisted-index verb resolves ONCE
+    * at entry — one or two namenode RPCs, never per-expression. */
   private def genDir(spark: SparkSession, path: String): String =
     Gen.resolve(spark, path)
 
@@ -1139,9 +1139,9 @@ object Similarity {
     * the drifted batches would let each append pull the baseline toward
     * the drift and mask exactly the gradual degradation the monitor
     * exists to catch — and would cost a corpus-size scan per check
-    * instead of nCentroids rows). An index persisted before the baseline
-    * existed fails with a pointer to [[backfillIvfBaseline]] instead of
-    * a raw path-not-found. */
+    * instead of nCentroids rows). An index without the baseline (saved
+    * before the drift monitor existed) fails with a pointer to
+    * [[rebuildIvfIndex]] instead of a raw path-not-found. */
   def ivfDriftReport(spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
     val g = genDir(spark, path)
@@ -1149,40 +1149,13 @@ object Similarity {
     if (!base.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .exists(base))
       throw new IllegalStateException(
-        s"$path has no baseline/ dataset (index saved before the drift " +
-          "monitor existed). Run Similarity.backfillIvfBaseline(spark, " +
-          "path) BEFORE any drifted appends land in the store, or " +
-          "rebuild + re-save the index.")
-    val baseDf = Gen.read(spark, s"$g/baseline")
-    // legacy-SCHEMA guard, not just legacy-existence: a baseline written
-    // before the p10 columns would otherwise surface as a raw
-    // unresolved-column AnalysisException deep inside the report plan
-    // instead of the actionable remediation
-    if (!baseDf.columns.contains("base_p10_cos"))
-      throw new IllegalStateException(
-        s"$path/baseline predates the p10 drift columns. Re-derive it " +
-          "with Similarity.backfillIvfBaseline(spark, path) — sound " +
-          "only while the store is unappended; if drifted appends have " +
-          "already landed, rebuild + re-save the index.")
-    driftAgainst(baseDf, Gen.read(spark, s"$g/centroids"), batch, idCol,
-      vecCol)
-  }
-
-  /** Backfill the `baseline/` dataset for an index persisted before
-    * [[saveIvfIndex]] wrote one. Derives it from the CURRENT store, so
-    * it is sound exactly while the store still holds the build-time
-    * corpus — run it BEFORE drifted appends land, or the baseline is
-    * born contaminated with precisely the drift it should expose. */
-  def backfillIvfBaseline(spark: SparkSession, path: String): Unit = {
-    // a writer into the CURRENT generation: fenced like an append (a
-    // rewrite racing this would either fence it out here or abort at
-    // its content re-verify)
-    Fs.failIfUnderMaintenance(spark, path, "backfillIvfBaseline")
-    val (cents, assigned) = loadIvfIndex(spark, path)
-    cellBaseline(cents,
-      assigned.select(col("cell").cast("long").as("cell"), col("cv")))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"${genDir(spark, path)}/baseline")
+        s"ivfDriftReport: $path has no baseline/ dataset — an index " +
+          "layout from before the drift monitor, which this code does " +
+          "not write; it was left untouched. Rebuild it with " +
+          "Similarity.rebuildIvfIndex(spark, path), which writes a " +
+          "fresh baseline.")
+    driftAgainst(Gen.read(spark, s"$g/baseline"),
+      Gen.read(spark, s"$g/centroids"), batch, idCol, vecCol)
   }
 
   /** Shared finish of both [[ivfDriftReport]] forms: argmax-assign the
@@ -1794,9 +1767,9 @@ object Similarity {
     * against a store-derived baseline would let each drifted append
     * mask the next). The code store keeps no vectors, so the error can
     * only be derived while the ORIGINAL build corpus is in hand — call
-    * this right after [[saveIvfPqIndex]], before any append lands
-    * (same soundness window as [[backfillIvfBaseline]]). p90, not p10:
-    * error grows with drift, so the TAIL of interest is the high end.
+    * this right after [[saveIvfPqIndex]], before any append lands.
+    * p90, not p10: error grows with drift, so the TAIL of interest is
+    * the high end.
     * Corpus-side p90 routes through the bounded-memory exact selection
     * for the same hot-cell-OOM reason as [[cellBaseline]]. */
   def writeIvfPqErrBaseline(spark: SparkSession, path: String,

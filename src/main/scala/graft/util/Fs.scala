@@ -29,169 +29,24 @@ object Fs {
     }
   }
 
-  /** The shared maintenance-rewrite protocol for an on-disk parquet
-    * store a Spark job wants to rewrite in place (IVF cell-store
-    * compaction, dedup-ledger compaction): `writeTo` materializes the
-    * rewrite into a sibling `<store>_compacting` dir (a Spark job
-    * cannot safely overwrite the directory it is reading), then the
-    * swap runs as two renames through the store's own Hadoop
-    * FileSystem — store → `<store>_old`, compacted → store, delete
-    * old. Each rename is an atomic metadata op on POSIX/HDFS. Crash
-    * safety: a prior run that died between its renames left the store
-    * missing and `<store>_old` holding the only original copy — a
-    * RE-RUN restores it before the cleanup deletes touch anything
-    * (deleting first would destroy both surviving copies). A failed
-    * promote rolls the first rename back, and the rollback result is
-    * CHECKED — if it also fails (e.g. a concurrent writer recreated
-    * the store) the exception says where both copies actually are.
-    * SINGLE MAINTENANCE WRITER — a BEST-EFFORT fence that narrows the
-    * race window (check-then-act, not atomic): a `<store>_maintenance`
-    * marker file goes down BEFORE the snapshot read and comes up only
-    * after the swap completes, and every in-repo ingest writer
-    * ([[graft.operators.Similarity]] appends,
-    * [[graft.operators.Dedup]] ledger admits) calls
-    * [[failIfUnderMaintenance]] first — an append racing a compaction
-    * fails LOUDLY at its fence check instead of being silently dropped
-    * by the swap. The residual window (an append that passed its fence
-    * check just before the marker went down and commits during the
-    * rewrite) is closed by a CONTENT-SUMMARY RE-VERIFY: the store's
-    * recursive (file count, byte count) is captured right after marker
-    * creation and re-checked before the first rename — a changed
-    * summary aborts the swap with the store intact (rows committed
-    * before the capture are also in the later snapshot read, so they
-    * are never lost). The summary is RECURSIVE deliberately: for a
-    * directory-of-datasets store an append commits nested inside a
-    * child dir and leaves the top-level listing unchanged (dir names
-    * and lengths don't change on HDFS/S3A). Maintenance
-    * writers fence EACH OTHER across nesting levels: a rewrite fails
-    * up front while the ENCLOSING directory's marker is down (a
-    * whole-index rebuild owns every store inside it) or while any
-    * `*_maintenance` marker exists INSIDE the store being swapped (a
-    * child-store compaction in flight would be torn apart by a parent
-    * rename); same-store re-runs deliberately pass (the crashed-run
-    * recovery path). A run that crashes mid-swap leaves the marker in
-    * place (so ingest stays fenced off the half-swapped store) and a
-    * re-run clears it after recovering the rename state; a `writeTo`
-    * that THROWS before any rename lifts the marker itself — the
-    * store was never touched, so leaving ingest fenced would turn a
-    * transient job failure into an outage. READERS are not
-    * fenced: between the two renames the store path does not exist,
-    * so a concurrent reader (an index serve, a ledger anti-join) hits
-    * path-not-found for that window. [[Gen.rewrite]] is the
-    * zero-reader-outage successor (per-writer staging dirs + an
-    * atomic exclusive commit-pointer create — one winner under
-    * concurrent maintenance) and is what every in-repo lifecycle
-    * verb routes through; THIS protocol remains as Gen's one-time
-    * MIGRATION path for legacy flat stores, and for callers that
-    * genuinely want rename-swap semantics on POSIX/HDFS. */
-  def swapRewrite(spark: org.apache.spark.sql.SparkSession,
-      storePath: String)(writeTo: String => Unit): Unit = {
-    import org.apache.hadoop.fs.Path
-    val store = new Path(storePath)
-    val tmp = new Path(storePath + "_compacting")
-    val old = new Path(storePath + "_old")
-    val marker = new Path(maintenanceMarkerPath(storePath))
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // cross-level fencing BEFORE creating our own marker. Parent: a
-    // whole-dir rebuild holding the enclosing marker owns this store
-    // too. Children: a live child-store rewrite has its marker INSIDE
-    // this dir — renaming the dir out from under it would tear it
-    // apart. Our OWN marker deliberately does not fail us (re-running
-    // a crashed rewrite on the same store is the recovery path).
-    Option(store.getParent)
-      .map(p => new Path(maintenanceMarkerPath(p.toString)))
-      .filter(fs.exists).foreach { m =>
-        throw new IllegalStateException(
-          s"swapRewrite: enclosing directory of $storePath is under " +
-            s"maintenance ($m exists) — a whole-index rebuild owns " +
-            "this store; retry after it completes (or re-run IT if " +
-            "it crashed)")
-      }
-    if (fs.exists(store) && fs.getFileStatus(store).isDirectory) {
-      val inner = fs.listStatus(store)
-        .filter(_.getPath.getName.endsWith("_maintenance"))
-      if (inner.nonEmpty)
-        throw new IllegalStateException(
-          s"swapRewrite: $storePath contains maintenance markers " +
-            s"(${inner.map(_.getPath.getName).mkString(", ")}) — a " +
-            "store inside it is mid-rewrite (or crashed mid-rewrite); " +
-            "finish/re-run that rewrite first")
-    }
-    // fence — before the crash recovery and long before the snapshot
-    // read inside writeTo; create(overwrite=true) also makes a re-run
-    // over a crashed rewrite's surviving marker a no-op
-    fs.create(marker, true).close()
-    if (!fs.exists(store) && fs.exists(old) && !fs.rename(old, store))
-      throw new java.io.IOException(
-        s"swapRewrite: $store is missing and restoring $old failed — " +
-          "recover manually before re-running")
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    // capture the post-marker content summary (recursive file + byte
-    // counts — a direct-children listing would miss an append nested
-    // inside a partition/tombstones subdir): any ingest that slipped
-    // through the check-then-act window and commits AFTER this capture
-    // is caught by the re-verify below; one that committed BEFORE it
-    // is also in writeTo's (later) snapshot read, so nothing is lost
-    def listing(): Option[(Long, Long)] =
-      if (fs.exists(store)) {
-        val cs = fs.getContentSummary(store)
-        Some((cs.getFileCount, cs.getLength))
-      } else None
-    val preListing = listing()
-    try writeTo(tmp.toString)
-    catch {
-      case e: Throwable =>
-        // no rename has happened: the store is intact, so leaving the
-        // marker down would fence ingest until a human intervened —
-        // clean up and surface the original failure instead
-        fs.delete(tmp, true)
-        fs.delete(marker, false)
-        throw e
-    }
-    if (listing() != preListing) {
-      fs.delete(tmp, true)
-      fs.delete(marker, false)
-      throw new IllegalStateException(
-        s"swapRewrite: $storePath changed while the rewrite ran (an " +
-          "ingest slipped through the fence's check-then-act window) " +
-          "— the swap was aborted with the store intact; re-run to " +
-          "include the new rows")
-    }
-    if (!fs.rename(store, old))
-      throw new java.io.IOException(
-        s"swapRewrite: could not move $store aside")
-    if (!fs.rename(tmp, store)) {
-      val restored = fs.rename(old, store)
-      throw new java.io.IOException(
-        if (restored)
-          s"swapRewrite: could not promote $tmp; original restored"
-        else
-          s"swapRewrite: could not promote $tmp AND rollback failed — " +
-            s"original at $old, compacted at $tmp, store state unknown")
-    }
-    fs.delete(old, true)
-    fs.delete(marker, false)
-  }
-
-  /** Sibling path of the maintenance marker [[swapRewrite]] holds for
-    * the rewrite window. */
+  /** Sibling path of the maintenance marker a [[Gen.rewrite]] holds
+    * for its rewrite window. */
   def maintenanceMarkerPath(storePath: String): String =
     storePath + "_maintenance"
 
   /** The ingest-side half of the maintenance fence: every writer that
-    * appends to a swapRewrite-maintained store calls this first and
-    * fails loudly while a compaction window (or a crashed compaction's
-    * surviving marker) is open — the alternative is rows committed
-    * after the snapshot read being silently dropped by the swap, the
-    * one failure mode that LOSES data. */
+    * appends to a [[Gen]] store calls this first and fails loudly while
+    * a rewrite window (or a crashed rewrite's surviving marker) is open
+    * — the alternative is rows committed after the snapshot read being
+    * silently obsoleted by the generation flip, the one failure mode
+    * that LOSES data. */
   def failIfUnderMaintenance(spark: org.apache.spark.sql.SparkSession,
       storePath: String, who: String): Unit = {
     import org.apache.hadoop.fs.Path
     val store = new Path(storePath)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // check the store's own marker AND the enclosing directory's: a
-    // whole-index rewrite (rebuildIvfIndex swaps the index DIR, not one
+    // whole-index rewrite (rebuildIvfIndex rewrites the index DIR, not one
     // dataset under it) fences every dataset it contains
     val markers = Seq(Some(store), Option(store.getParent)).flatten
       .map(p => new Path(maintenanceMarkerPath(p.toString)))
@@ -199,8 +54,9 @@ object Fs {
       throw new IllegalStateException(
         s"$who: $storePath is under maintenance ($m exists) — a " +
           "compaction/rebuild is running (rows appended now would be " +
-          "silently dropped by its swap) or crashed mid-run (re-run it " +
-          "to recover and clear the marker); retry after it completes")
+          "silently dropped by its generation flip) or crashed mid-run " +
+          "(re-run it to recover and clear the marker); retry after " +
+          "it completes")
     }
   }
 

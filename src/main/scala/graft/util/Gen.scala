@@ -3,9 +3,9 @@ package graft.util
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Versioned GENERATION layout for every persisted store — the
-  * zero-reader-outage successor to [[Fs.swapRewrite]]'s two-rename
-  * window, with OPTIMISTIC CONCURRENCY between maintenance writers.
+/** Versioned GENERATION layout for every persisted store — zero
+  * reader outage across rewrites, with OPTIMISTIC CONCURRENCY between
+  * maintenance writers.
   *
   * Layout (v2): a store at `P` holds its data inside per-writer
   * STAGING dirs, `P/gen-00000002-3fa91c55/…` — the 8-digit number is
@@ -60,11 +60,11 @@ import org.apache.spark.sql.SparkSession
   * until the NEXT rewrite sweeps it (one full maintenance cycle of
   * grace — tune with [[sweepGenerations]] if disk pressure demands
   * eager reclaim, after in-flight readers quiesce). Transient disk
-  * cost is the same 2× a swapRewrite held during its window, held for
-  * a cycle instead. A deploy that needs a generation to OUTLIVE the
-  * grace window (reproducible serving on a [[resolveAt]] pin, an A/B
-  * held open across rebuilds) takes a [[keepGeneration]] retention
-  * ref, which every sweep honors until [[releaseGeneration]].
+  * cost is 2× the store, held for one cycle. A deploy that needs a
+  * generation to OUTLIVE the grace window (reproducible serving on a
+  * [[resolveAt]] pin, an A/B held open across rebuilds) takes a
+  * [[keepGeneration]] retention ref, which every sweep honors until
+  * [[releaseGeneration]].
   *
   * Crash safety, by construction:
   *   - a crash mid-write leaves an UNREFERENCED staging dir no
@@ -77,9 +77,9 @@ import org.apache.spark.sql.SparkSession
   *     entry sweep mid-write and die with an arbitrary task IO error
   *     instead of the designed stale-snapshot abort — data-safe either
   *     way, since a doomed writer could never publish;
-  *   - the maintenance marker (`P_maintenance`, shared spelling with
-  *     [[Fs.swapRewrite]]) goes down before the snapshot read and
-  *     comes up after the publish, so ingest writers — which call
+  *   - the maintenance marker (`P_maintenance`,
+  *     [[Fs.maintenanceMarkerPath]]) goes down before the snapshot
+  *     read and comes up after the publish, so ingest writers — which call
   *     [[Fs.failIfUnderMaintenance]] first — fail loudly for the
   *     window instead of appending rows into a generation the flip is
   *     about to obsolete; a crash leaves the marker down (ingest stays
@@ -94,12 +94,13 @@ import org.apache.spark.sql.SparkSession
   *
   * Ingest ([[appendDir]]) writes into the CURRENT generation — an
   * append-only mutation readers tolerate by definition (they just see
-  * more rows), exactly like appending to a flat store.
+  * more rows).
   *
-  * Legacy flat stores (written before this layout existed) resolve to
-  * themselves and keep working; their first [[rewrite]] MIGRATES them
-  * — one last [[Fs.swapRewrite]] whose payload is generation 1
-  * (documented one-time outage), versioned forever after. */
+  * A FLAT root — visible data but no generation artifacts, the layout
+  * stores had before generations existed — is refused by [[rewrite]]
+  * and [[appendDir]] and left untouched: no code writes it any more.
+  * Readers still take a non-versioned dir as itself, because epoch
+  * roots and generation dirs handed in directly are read that way. */
 object Gen {
 
   private val GenPrefix = "gen-"
@@ -236,8 +237,9 @@ object Gen {
     }
 
   /** Resolve a store path to the directory a READER should scan: the
-    * highest committed generation when versioned, the path itself when
-    * flat/legacy (or empty). One or two namenode RPCs; call once per
+    * highest committed generation when versioned, the path itself
+    * otherwise (an epoch root, a generation dir handed in directly, or
+    * a missing store). One or two namenode RPCs; call once per
     * load, not per expression. Deliberately ignores maintenance
     * markers — readers are never fenced. */
   def resolve(spark: SparkSession, storePath: String): String = {
@@ -259,8 +261,8 @@ object Gen {
     * the first read's inferred schema is cached per (data dir,
     * session) and later reads pass it explicitly — identical results
     * by construction (the cached schema IS what inference would
-    * return), minus the repeated footer jobs. Flat legacy dirs are the
-    * one non-unique name class; [[Fs.deleteRecursively]] invalidates
+    * return), minus the repeated footer jobs. Non-versioned dirs are
+    * the one non-unique name class; [[Fs.deleteRecursively]] invalidates
     * by prefix so a delete+recreate at the same path re-infers.
     * Bounded: cleared wholesale past 4096 entries (each is a tiny
     * StructType; the bound only matters to long test JVMs). */
@@ -283,7 +285,7 @@ object Gen {
     readSchemaCache.keySet.removeIf(_.startsWith(pathPrefix))
 
   /** Does the store hold any readable data? Versioned: a committed
-    * generation with at least one non-hidden entry. Flat: any
+    * generation with at least one non-hidden entry. Non-versioned: any
     * non-hidden entry. Staging dirs never count. */
   def hasData(spark: SparkSession, storePath: String): Boolean = {
     val store = new Path(storePath)
@@ -296,16 +298,19 @@ object Gen {
         case Some((_, dir)) => new Path(store, dir)
         case None => return false
       }
-    fs.exists(dataDir) && fs.listStatus(dataDir).exists { st =>
+    hasVisible(fs, dataDir)
+  }
+
+  /** Does `dir` exist with a visible (not `_`/`.`-prefixed) entry? */
+  private def hasVisible(fs: FileSystem, dir: Path): Boolean =
+    fs.exists(dir) && fs.listStatus(dir).exists { st =>
       val n = st.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")
     }
-  }
 
   /** The directory an INGEST append should write into: the current
-    * generation (versioned), the path itself (legacy flat store with
-    * data), or a freshly-established generation 1 (new store —
-    * committed immediately: an empty generation receiving appends is
+    * generation (versioned) or a freshly-established generation 1 (new
+    * store — committed immediately: an empty generation receiving appends is
     * indistinguishable from a committed one receiving appends, and
     * versioned-from-birth means the store's first compaction is
     * already zero-outage). Race-safe like [[rewrite]]: two concurrent
@@ -321,42 +326,43 @@ object Gen {
     s.current match {
       case Some((_, dir)) => new Path(store, dir).toString
       case None =>
-        if (s.stagings.isEmpty && hasFlatData(fs, store))
-          storePath // legacy flat store
+        refuseFlat(fs, store, s, "Gen.appendDir")
+        // a store reduced to crash artifacts (poisoned pointers,
+        // doomed stagings/temps) self-heals here: sweeping first is
+        // what frees a poisoned `_commit-00000001` for the publish
+        sweep(fs, store, s)
+        // never adopt an EXISTING staging dir: it is another
+        // writer's — in flight (appending into it would race its
+        // publish) or crashed (partial content) — so establish our
+        // OWN generation-1 staging and publish it with the same
+        // temp+rename every rewrite uses
+        val token = newToken()
+        val g = new Path(store, genDirName(1L, token))
+        fs.mkdirs(g)
+        if (publishPointer(fs, store, 1L, g.getName, token))
+          g.toString
         else {
-          // a store reduced to crash artifacts (poisoned pointers,
-          // doomed stagings/temps) self-heals here: sweeping first is
-          // what frees a poisoned `_commit-00000001` for the publish
-          sweep(fs, store, s)
-          // never adopt an EXISTING staging dir: it is another
-          // writer's — in flight (appending into it would race its
-          // publish) or crashed (partial content) — so establish our
-          // OWN generation-1 staging and publish it with the same
-          // temp+rename every rewrite uses
-          val token = newToken()
-          val g = new Path(store, genDirName(1L, token))
-          fs.mkdirs(g)
-          if (publishPointer(fs, store, 1L, g.getName, token))
-            g.toString
-          else {
-            // lost the establish race — append into the winner's
-            // dir; our empty staging is doomed and sweeps later
-            fs.delete(g, true)
-            resolve(spark, storePath)
-          }
+          // lost the establish race — append into the winner's
+          // dir; our empty staging is doomed and sweeps later
+          fs.delete(g, true)
+          resolve(spark, storePath)
         }
     }
   }
 
-  /** A legacy FLAT store: no generation artifacts, but real (visible,
-    * non-hidden) content at the root. Counting only visible entries is
-    * deliberate — a store reduced to a poisoned pointer or a publish
-    * temp by a crash must NOT be mistaken for flat data. */
-  private def hasFlatData(fs: FileSystem, store: Path): Boolean =
-    fs.exists(store) && fs.listStatus(store).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
+  /** Refuse a FLAT root: no generation artifacts, but real (visible,
+    * non-hidden) content at the root — the layout stores had before
+    * generations existed. Counting only visible entries is deliberate:
+    * a store reduced to a poisoned pointer or a publish temp by a
+    * crash must NOT be mistaken for flat data. */
+  private def refuseFlat(fs: FileSystem, store: Path, s: Scan,
+      who: String): Unit =
+    if (s.commits.isEmpty && s.stagings.isEmpty && hasVisible(fs, store))
+      throw new IllegalStateException(
+        s"$who: $store is a flat store (data at the root, no generation " +
+          "commit) — a layout from before generation stores, which " +
+          "this code does not write; it was left untouched. Rebuild it " +
+          "into a new store path.")
 
   private[graft] def createMarker(spark: SparkSession,
       storePath: String): Unit = {
@@ -683,10 +689,9 @@ object Gen {
       writeTo: String => Unit): Unit = {
     val store = new Path(storePath)
     val fs = fsOf(spark, store)
-    // cross-level fencing, same rules as swapRewrite: an enclosing
-    // dir's rewrite owns this store; a child store mid-rewrite inside
-    // this dir (or inside the current generation) must not be swept
-    // out from under its own maintenance
+    // cross-level fencing: an enclosing dir's rewrite owns this store;
+    // a child store mid-rewrite inside this dir (or inside the current
+    // generation) must not be swept out from under its own maintenance
     Option(store.getParent)
       .map(p => new Path(Fs.maintenanceMarkerPath(p.toString)))
       .filter(fs.exists).foreach { m =>
@@ -722,28 +727,9 @@ object Gen {
             "finishes) or crashed (clear with Fs.clearIngestLease " +
             "and re-run its batch first)")
     }
+    refuseFlat(fs, store, scan0, "Gen.rewrite")
     if (!ownsMarker) createMarker(spark, storePath)
     def lift(): Unit = if (!ownsMarker) deleteMarker(spark, storePath)
-    if (scan0.commits.isEmpty && scan0.stagings.isEmpty &&
-        hasFlatData(fs, store)) {
-      // LEGACY FLAT STORE — migrate through one last swapRewrite
-      // (documented one-time reader outage): the payload is the
-      // store's first generation, committed inside the temp dir so
-      // the promoting rename publishes data and pointer together.
-      // swapRewrite manages the same marker path itself; release
-      // ours first so its create/delete does not fight the
-      // protocol (and re-assert it afterwards for ownsMarker
-      // callers mid-compound-operation).
-      if (!ownsMarker) deleteMarker(spark, storePath)
-      Fs.swapRewrite(spark, storePath) { tmp =>
-        val g = new Path(tmp, genDirName(1L, newToken()))
-        writeTo(g.toString)
-        val out = fs.create(new Path(tmp, commitName(1L)), true)
-        out.write(g.getName.getBytes("UTF-8")); out.close()
-      }
-      if (ownsMarker) createMarker(spark, storePath)
-      return
-    }
     // reclaim: superseded generations (reader grace over) and doomed
     // stagings (their target's pointer names another dir). A racing
     // writer's UNDOOMED staging survives — it owns a different dir

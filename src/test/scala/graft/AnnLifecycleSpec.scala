@@ -97,8 +97,6 @@ class AnnLifecycleSpec extends SparkTestBase {
     val live = all.filter(_ % 3 == 0) -- deadIds
     val root = java.nio.file.Files
       .createTempDirectory("graft_ann_lifecycle").toString
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     try families.foreach { f =>
       val path = s"$root/${f.kind}"
       def gen = graft.util.Gen.resolve(spark, path)

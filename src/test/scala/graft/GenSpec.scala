@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.util.Gen
 
 /** Pins the versioned-generation store protocol ([[graft.util.Gen]]) —
-  * the zero-reader-outage successor to swapRewrite that every persisted
-  * store's lifecycle verbs route through:
+  * the zero-reader-outage rewrite that every persisted store's
+  * lifecycle verbs route through:
   *   - a reader that resolved BEFORE a rewrite's flip completes
   *     correctly against its generation (the concurrent-reader spec);
   *   - resolution never lands on a staging dir (the commit POINTER —
@@ -17,8 +17,10 @@ import graft.util.Gen
   *   - two CONCURRENT rewrites resolve to exactly one winner: the
   *     loser's publish aborts loudly with the winner's generation
   *     serving (the OCC spec);
-  *   - legacy flat stores migrate on their first rewrite, v1
-  *     marker-in-dir stores stay readable and are superseded in place;
+  *   - a flat root (the pre-generation layout) is refused by rewrite
+  *     and appendDir and left untouched; v1 marker-in-dir stores stay
+  *     readable and are superseded in place;
+  *   - maintenance writers fence each other across nesting levels;
   *   - ingest appends land in the CURRENT generation or fail loudly at
   *     the maintenance fence, and an append that slips the fence's
   *     check-then-act window aborts the publish (content re-verify). */
@@ -27,9 +29,6 @@ class GenSpec extends SparkTestBase {
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
-
-  private def fs =
-    new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def rows(n: Int, tag: String) =
     (0 until n).map(i => (i.toLong, s"$tag-$i")).toDF("id", "v")
@@ -242,27 +241,39 @@ class GenSpec extends SparkTestBase {
     } finally graft.util.Fs.deleteRecursively(root)
   }
 
-  test("legacy flat store: resolve/appendDir pass through; the first " +
-      "rewrite MIGRATES to the versioned layout (one-time outage) and " +
-      "later rewrites are generation flips") {
-    val root = tmp("graft_gen_legacy")
-    val store = s"$root/store"
+  test("cross-level fences: a rewrite refuses while the enclosing " +
+      "directory is under maintenance or a store inside it is " +
+      "mid-rewrite, writing nothing; its own surviving marker does not " +
+      "fence a re-run") {
+    val root = tmp("graft_gen_fence")
+    val store = s"$root/idx/store"
+    val marker = new Path(graft.util.Fs.maintenanceMarkerPath(store))
     try {
-      rows(3, "flat").write.parquet(store) // a pre-Gen store
-      assert(Gen.resolve(spark, store) === store)
-      assert(Gen.hasData(spark, store))
-      assert(Gen.appendDir(spark, store) === store)
+      Gen.rewrite(spark, store)(g => rows(3, "a").write.parquet(g))
+      val before = tree(root)
+      // each marker and the rewrite it fences: the ENCLOSING dir's (a
+      // whole-index rebuild owns the store), and a child store's,
+      // inside the dir (seen by a rewrite of the parent) or inside the
+      // current generation
+      for ((m, target, msg) <- Seq(
+          (s"$root/idx_maintenance", store, "enclosing directory"),
+          (marker.toString, s"$root/idx", "contains maintenance markers"),
+          (s"${Gen.resolve(spark, store)}/child_maintenance", store,
+            "contains maintenance markers"))) {
+        fs.create(new Path(m), true).close()
+        val e = intercept[IllegalStateException](
+          Gen.rewrite(spark, target)(_ => fail("writeTo ran")))
+        assert(e.getMessage.contains(msg))
+        fs.delete(new Path(m), false)
+        assert(tree(root) === before)
+      }
+      // a same-store re-run passes its OWN surviving marker (the
+      // crashed-rewrite recovery path must not fence itself out)
+      fs.create(marker, true).close()
       Gen.rewrite(spark, store)(g =>
-        rows(3, "flat").write.parquet(g))
-      assert(Gen.currentGeneration(spark, store) === Some(1L))
-      assert(isGenDir(Gen.resolve(spark, store), 1L))
-      assert(spark.read.parquet(Gen.resolve(spark, store))
-        .count() === 3L)
-      Gen.rewrite(spark, store)(g =>
-        rows(7, "v2").write.parquet(g))
+        spark.read.parquet(Gen.resolve(spark, store)).write.parquet(g))
+      assert(!fs.exists(marker))
       assert(Gen.currentGeneration(spark, store) === Some(2L))
-      assert(spark.read.parquet(Gen.resolve(spark, store))
-        .count() === 7L)
     } finally graft.util.Fs.deleteRecursively(root)
   }
 
@@ -302,6 +313,19 @@ class GenSpec extends SparkTestBase {
       rows(1, "x").write.mode("append").parquet(d2)
       assert(spark.read.parquet(Gen.resolve(spark, store2))
         .count() === 1L)
+      // a FLAT root (data at the root, no generation commit — the
+      // pre-generation layout) is refused by appendDir and rewrite and
+      // left untouched; readers still take it as itself
+      val flat = s"$root/flat"
+      rows(3, "flat").write.parquet(flat)
+      val before = tree(root)
+      for (e <- Seq(
+          intercept[IllegalStateException](Gen.appendDir(spark, flat)),
+          intercept[IllegalStateException](
+            Gen.rewrite(spark, flat)(_ => fail("writeTo ran")))))
+        assert(e.getMessage.contains(s"$flat is a flat store"))
+      assert(tree(root) === before)
+      assert(Gen.resolve(spark, flat) === flat && Gen.hasData(spark, flat))
     } finally graft.util.Fs.deleteRecursively(root)
   }
 

@@ -50,9 +50,6 @@ class LedgerLifecycleSpec extends SparkTestBase {
     try body(root) finally Fs.deleteRecursively(root)
   }
 
-  private lazy val fs = new Path("/").getFileSystem(
-    spark.sparkContext.hadoopConfiguration)
-
   private def copy(src: String, dst: String): Unit =
     if (fs.exists(new Path(src)))
       FileUtil.copy(fs, new Path(src), fs, new Path(dst), false,

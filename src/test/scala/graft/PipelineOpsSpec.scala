@@ -365,8 +365,6 @@ class PipelineOpsSpec extends SparkTestBase {
       // returns the committed generation — the zero-outage claim),
       // ingest stays fenced, and a compactor re-run sweeps the orphan
       // and completes.
-      val fs = new Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val orphan = new Path(s"$dir/gen-00000099")
       fs.mkdirs(orphan)
       fs.create(new Path(orphan, "junk.parquet"), true).close()
@@ -443,13 +441,12 @@ class PipelineOpsSpec extends SparkTestBase {
     }
   }
 
-  test("ivfDriftReport (persisted path): a pre-baseline index fails with " +
-      "an actionable pointer, and backfillIvfBaseline restores exact " +
-      "parity with the save-time baseline") {
-    import org.apache.hadoop.fs.Path
+  test("ivfDriftReport (persisted path): an index without a baseline " +
+      "fails with a pointer to rebuildIvfIndex and is left untouched; " +
+      "the rebuild restores the report") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_backfill").toString
+      .createTempDirectory("graft_ivf_nobaseline").toString
     try {
       Similarity.saveIvfIndex(
         Similarity.buildIvfIndex(emb, "vec_id", "embedding"), dir)
@@ -457,18 +454,19 @@ class PipelineOpsSpec extends SparkTestBase {
       def report(): Set[org.apache.spark.sql.Row] =
         Similarity.ivfDriftReport(spark, dir, batch, "vec_id",
           "embedding").collect().toSet
-      val want = report()
-      // an index persisted before the monitor existed: no baseline/
-      val fs = new Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(
-        s"${graft.util.Gen.resolve(spark, dir)}/baseline"), true)
+      assert(report().nonEmpty)
+      // an index saved before the monitor existed: no baseline/
+      graft.util.Fs.deleteRecursively(
+        s"${graft.util.Gen.resolve(spark, dir)}/baseline")
+      val before = tree(dir)
       val ex = intercept[IllegalStateException](report())
-      assert(ex.getMessage.contains("backfillIvfBaseline"))
-      // backfill from the (unappended) store == what save would have
-      // written: same derivation over the same rows
-      Similarity.backfillIvfBaseline(spark, dir)
-      assert(report() === want && want.nonEmpty)
+      assert(ex.getMessage.contains(s"$dir has no baseline/") &&
+        ex.getMessage.contains("rebuildIvfIndex"))
+      assert(tree(dir) === before)
+      // the named remediation writes a complete new generation,
+      // baseline included
+      Similarity.rebuildIvfIndex(spark, dir)
+      assert(report().nonEmpty)
     } finally graft.util.Fs.deleteRecursively(dir)
   }
 
@@ -1830,8 +1828,6 @@ class PipelineOpsSpec extends SparkTestBase {
       "is the crashed-admit recovery") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_lease").toString + "/ledger"
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val leasePath = new org.apache.hadoop.fs.Path(
       graft.util.Fs.ingestLeasePath(dir))
     val b1 = Seq((1L, "alpha content")).toDF("doc_id", "text")
@@ -1922,8 +1918,6 @@ class PipelineOpsSpec extends SparkTestBase {
     // the surviving marker — admits fail loudly, readers keep the
     // committed generation, and a compaction re-run sweeps the orphan
     // and completes with the marker cleared
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val n = spark.read.parquet(graft.util.Gen.resolve(spark, dir)).count()
     val orphan = new Path(s"$dir/gen-00000099")
     fs.mkdirs(orphan)
@@ -2340,8 +2334,6 @@ class PipelineOpsSpec extends SparkTestBase {
       val ivf = s"$root/ivf"
       Similarity.saveIvfIndex(
         Similarity.buildIvfIndex(emb, "vec_id", "embedding"), ivf)
-      val fs = new Path(ivf)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val marker = new Path(
         graft.util.Fs.maintenanceMarkerPath(ivf))
       // a maintenance window is open (what Gen.rewrite does first): the
@@ -2403,81 +2395,6 @@ class PipelineOpsSpec extends SparkTestBase {
       assert(Dedup.ledgerAdmit(spark, ledger,
         Seq((4L, "d")).toDF("doc_id", "text"), "doc_id", "text")
         .count() === 1L)
-    } finally graft.util.Fs.deleteRecursively(root)
-  }
-
-  test("swapRewrite hardening: a failed writeTo lifts the marker, a " +
-      "mid-rewrite store change aborts the swap intact, and maintenance " +
-      "writers fence each other across nesting levels") {
-    import org.apache.hadoop.fs.Path
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_fence2").toString
-    try {
-      val store = s"$root/idx/store"
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-        .write.parquet(store)
-      val fs = new Path(store)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val marker = new Path(graft.util.Fs.maintenanceMarkerPath(store))
-      // 1. writeTo throws BEFORE any rename: the store is untouched, so
-      // the marker must come back up (leaving it down would turn a
-      // transient job failure into an ingest outage) and the original
-      // exception must surface
-      val boom = intercept[RuntimeException] {
-        graft.util.Fs.swapRewrite(spark, store)(_ =>
-          throw new RuntimeException("transient job failure"))
-      }
-      assert(boom.getMessage === "transient job failure")
-      assert(!fs.exists(marker))
-      assert(spark.read.parquet(store).count() === 2L)
-      // 2. the check-then-act window: an ingest that slipped past its
-      // fence check and commits DURING the rewrite changes the store's
-      // listing — the swap must abort with the store (including the
-      // slipped rows) intact and the marker lifted
-      val slipped = intercept[IllegalStateException] {
-        graft.util.Fs.swapRewrite(spark, store) { tmp =>
-          Seq((3L, "c")).toDF("id", "v")
-            .write.mode("append").parquet(store) // bypasses the fence
-          spark.read.parquet(store).limit(2).write.parquet(tmp)
-        }
-      }
-      assert(slipped.getMessage.contains("changed while the rewrite ran"))
-      assert(!fs.exists(marker))
-      assert(spark.read.parquet(store).count() === 3L)
-      // a clean re-run (the remediation the error names) succeeds
-      graft.util.Fs.swapRewrite(spark, store)(tmp =>
-        spark.read.parquet(store).write.parquet(tmp))
-      assert(spark.read.parquet(store).count() === 3L)
-      // 3. parent fence: while the ENCLOSING dir is under maintenance
-      // (a whole-index rebuild), a child-store rewrite must fail up
-      // front, before creating its own marker
-      val parentMarker = new Path(
-        graft.util.Fs.maintenanceMarkerPath(s"$root/idx"))
-      fs.create(parentMarker, true).close()
-      val pex = intercept[IllegalStateException] {
-        graft.util.Fs.swapRewrite(spark, store)(tmp =>
-          spark.read.parquet(store).write.parquet(tmp))
-      }
-      assert(pex.getMessage.contains("enclosing directory"))
-      assert(!fs.exists(marker))
-      fs.delete(parentMarker, false)
-      // 4. child fence: a live child-store rewrite has its marker
-      // INSIDE the dir a whole-index rebuild would rename — the parent
-      // rewrite must refuse to tear it apart
-      fs.create(marker, true).close()
-      val cex = intercept[IllegalStateException] {
-        graft.util.Fs.swapRewrite(spark, s"$root/idx")(tmp =>
-          spark.read.parquet(store).write.parquet(s"$tmp/store"))
-      }
-      assert(cex.getMessage.contains("contains maintenance markers"))
-      fs.delete(marker, false)
-      // 5. same-store re-run still passes its OWN surviving marker (the
-      // crashed-rewrite recovery path must not fence itself out)
-      fs.create(marker, true).close()
-      graft.util.Fs.swapRewrite(spark, store)(tmp =>
-        spark.read.parquet(store).write.parquet(tmp))
-      assert(!fs.exists(marker))
-      assert(spark.read.parquet(store).count() === 3L)
     } finally graft.util.Fs.deleteRecursively(root)
   }
 
@@ -2679,8 +2596,6 @@ class PipelineOpsSpec extends SparkTestBase {
       assert(rawStore()
         .filter(col("neighbor_id").isInCollection(deadIds.toSeq))
         .isEmpty) // post-compaction: physically gone
-      val fs = new Path(ivf)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       assert(!fs.exists(new Path(
         s"${graft.util.Gen.resolve(spark, ivf)}/tombstones")))
       val postCompact = Similarity.ivfTopKFromIndex(
@@ -2887,10 +2802,8 @@ class PipelineOpsSpec extends SparkTestBase {
         k = 3, nProbe = 16)
       assert(ivfServed.filter(col("neighbor_id") % 3 =!= 0).isEmpty)
       assert(Similarity.compactIvfIndex(spark, ivf) === fresh.count())
-      assert(!new Path(s"${graft.util.Gen.resolve(spark, ivf)}/tombstones")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new Path(
-          s"${graft.util.Gen.resolve(spark, ivf)}/tombstones")))
+      assert(!fs.exists(new Path(
+        s"${graft.util.Gen.resolve(spark, ivf)}/tombstones")))
     } finally graft.util.Fs.deleteRecursively(root)
   }
 
@@ -3147,7 +3060,8 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("dedupLedgerStats: accretion pages compact, compaction quiets " +
-      "it, duplicates count zero under the fence, legacy layout flags") {
+      "it, duplicates count zero under the fence; an unbucketed store " +
+      "is refused, untouched") {
     val root = java.nio.file.Files
       .createTempDirectory("graft_ledger_stats").toString
     val dir = s"$root/ledger"
@@ -3163,57 +3077,30 @@ class PipelineOpsSpec extends SparkTestBase {
         maxFilesPerBucket = 1).first()
       assert(accreted.getAs[Long]("n_digests") === 80L)
       assert(accreted.getAs[Long]("n_duplicate_rows") === 0L)
-      assert(accreted.getAs[Boolean]("bucketed"))
       assert(accreted.getAs[Boolean]("compact_advised"))
       Dedup.compactDedupLedger(spark, dir)
       val quiet = Dedup.dedupLedgerStats(spark, dir,
         maxFilesPerBucket = 1).first()
       assert(quiet.getAs[Long]("max_bucket_files") === 1L)
       assert(!quiet.getAs[Boolean]("compact_advised"))
-      // a legacy flat store reads out unbucketed and advises the
-      // migration
-      val legacy = s"$root/legacy"
+      // the unbucketed layout from before the db bucketing (digests
+      // only, flat at the root) is refused by stats, admit and
+      // compaction, and nothing is written or swept
+      val flat = s"$root/flat"
       Seq("x", "y").toDF("t").select(md5(col("t")).as("text_md5"))
-        .write.parquet(legacy)
-      val l = Dedup.dedupLedgerStats(spark, legacy).first()
-      assert(!l.getAs[Boolean]("bucketed"))
-      assert(l.getAs[Boolean]("compact_advised"))
-    } finally graft.util.Fs.deleteRecursively(root)
-  }
-
-  test("legacy flat exact-ledger: admits keep the flat layout (no " +
-      "bucket dirs mixed in), decisions hold, and compaction is the " +
-      "one-time bucket migration") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ledger_legacy").toString
-    val dir = s"$root/ledger"
-    try {
-      // a pre-r16 store: flat parquet, one text_md5 column, no gens
-      Seq("alpha content", "beta content").toDF("t")
-        .select(md5(col("t")).as("text_md5")).write.parquet(dir)
-      // admit against it: seen digests still bar re-admission, the
-      // novel one lands, and the store dir stays a readable FLAT
-      // dataset (an append of bucket subdirs would break its reads)
-      val a = Dedup.ledgerAdmit(spark, dir,
-        Seq((1L, "alpha content"), (2L, "novel content"))
-          .toDF("doc_id", "text"), "doc_id", "text")
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(a === Set(2L))
-      val flat = spark.read.parquet(graft.util.Gen.resolve(spark, dir))
-      assert(flat.columns.toSeq === Seq("text_md5"))
-      assert(flat.count() === 3L)
-      // compaction migrates to the db-bucketed generation layout...
-      assert(Dedup.compactDedupLedger(spark, dir) === 3L)
-      val migrated = spark.read
-        .parquet(graft.util.Gen.resolve(spark, dir))
-      assert(migrated.columns.toSet === Set("text_md5", "db"))
-      // ...and post-migration admits take the bucketed path with the
-      // same decisions
-      assert(Dedup.ledgerAdmit(spark, dir,
-        Seq((3L, "novel content"), (4L, "another novel"))
-          .toDF("doc_id", "text"), "doc_id", "text")
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-        === Set(4L))
+        .write.parquet(flat)
+      val before = tree(root)
+      for ((e, layout) <- Seq(
+          intercept[IllegalStateException](
+            Dedup.dedupLedgerStats(spark, flat)) -> "unbucketed layout",
+          intercept[IllegalStateException](Dedup.ledgerAdmit(spark, flat,
+            Seq((1L, "z")).toDF("doc_id", "text"), "doc_id", "text")) ->
+            "unbucketed layout",
+          intercept[IllegalStateException](
+            Dedup.compactDedupLedger(spark, flat)) -> "flat store"))
+        assert(e.getMessage.contains(s"$flat ") &&
+          e.getMessage.contains(layout))
+      assert(tree(root) === before)
     } finally graft.util.Fs.deleteRecursively(root)
   }
 
@@ -3262,6 +3149,22 @@ class PipelineOpsSpec extends SparkTestBase {
       assert(Dedup.rebuildNearDupLedgerBands(spark, dir)
         === health().getAs[Long]("expected_band_rows"))
       assert(!health().getAs[Boolean]("rebuild_bands_advised"))
+      // a ledger without its geometry sidecar (the layout from before
+      // the sidecar existed) is refused by every verb that needs the
+      // geometry, and nothing is written, stamped or swept
+      java.nio.file.Files.delete(java.nio.file.Paths.get(dir + "_meta"))
+      val before = tree(root)
+      Seq(() => Dedup.nearDupLedgerAdmit(spark, dir,
+          Seq(mk(20L, "a fifth document")).toDF("doc_id", "text"),
+          "doc_id", "text"),
+        () => health(), () => Dedup.rebuildNearDupLedgerBands(spark, dir),
+        () => Dedup.nearDupLedgerForget(spark, dir, Seq(2L).toDF("doc_id"),
+          "doc_id"),
+        () => Dedup.compactNearDupLedger(spark, dir)).foreach { verb =>
+        assert(intercept[IllegalStateException](verb()).getMessage.contains(
+          s"$dir holds a near-dup ledger without its geometry sidecar"))
+      }
+      assert(tree(root) === before)
     } finally graft.util.Fs.deleteRecursively(root)
   }
 
@@ -3361,8 +3264,6 @@ class PipelineOpsSpec extends SparkTestBase {
       import org.apache.hadoop.fs.Path
       val marker = new Path(
         graft.util.Fs.maintenanceMarkerPath(dir))
-      val fs = marker
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.create(marker, true).close()
       intercept[IllegalStateException] {
         Similarity.appendToIvfPqIndex(spark, dir, batch.limit(3),
@@ -3500,6 +3401,25 @@ class PipelineOpsSpec extends SparkTestBase {
       !p.contains("Window") && p.contains("partial_max"))
   }
 
+  test("assignCells decides the kernel path and fetches a persisted " +
+      "index's centroids in ONE Spark job (a bounded collect)") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_assign_jobs").toString
+    try {
+      Similarity.saveIvfIndex(
+        Similarity.buildIvfIndex(emb, "vec_id", "embedding"), dir)
+      val cents = Similarity.loadIvfIndex(spark, dir)._1
+      val in = emb.select(col("vec_id").as("nid"),
+        Similarity.l2Normalize(col("embedding")).as("nv"))
+      val (assigned, jobs) = withJobCount(
+        Similarity.assignCells(in, cents, "nid", "nv", keep = 1))
+      assert(jobs === 1,
+        s"assignCells ran $jobs jobs over a 16-row centroid table")
+      assert(assigned.count() === emb.count())
+    } finally graft.util.Fs.deleteRecursively(dir)
+  }
+
   test("rebuildIvfIndex: drift-triggered in-place retrain — the rebuilt " +
       "baseline absorbs the drifted ingest, the whole-index swap is " +
       "crash-recoverable, and the enclosing-dir fence blocks appends") {
@@ -3541,8 +3461,6 @@ class PipelineOpsSpec extends SparkTestBase {
       assert(recall === 1.0)
       // enclosing-dir fence: the whole-index marker blocks appends to
       // the store UNDER it
-      val fs = new Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val marker = new Path(graft.util.Fs.maintenanceMarkerPath(dir))
       fs.create(marker, true).close()
       intercept[IllegalStateException] {
@@ -3715,8 +3633,6 @@ class PipelineOpsSpec extends SparkTestBase {
       // compaction bounds files; fence blocks a racing append; delete
       // excludes immediately and compaction drops physically
       assert(Similarity.compactIvfSq8Index(spark, dir) === e.count())
-      val fs = new Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val marker = new Path(
         graft.util.Fs.maintenanceMarkerPath(dir))
       fs.create(marker, true).close()

@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.GraftSparkBridge
-import org.apache.spark.scheduler.SparkListener
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** One shared local SparkSession for the whole test JVM (suites share it via
   * getOrCreate), built by [[Bench.sessionBuilder]] like every session of
@@ -36,6 +37,32 @@ trait SparkTestBase extends AnyFunSuite {
     ids.map(i => (i.toLong, (0 until 16).map(j =>
       "w" + (scala.util.hashing.MurmurHash3.stringHash(s"$i:$j") & 0xffff))
       .mkString(" "))).toDF("doc_id", "text")
+  }
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  def withJobCount[T](body: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val r = listening(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    })(body)
+    (r, n.get)
+  }
+
+  /** The local file system every spec's stores live on. */
+  lazy val fs: org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path("/").getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+
+  /** Every path under the local dir `dir`, files with their size: equal
+    * before and after a call means it wrote and deleted nothing there. */
+  def tree(dir: String): Set[String] = {
+    import java.nio.file.{Files, Paths}
+    val w = Files.walk(Paths.get(dir))
+    try w.iterator.asScala.map(p =>
+      s"$p ${if (Files.isDirectory(p)) "" else Files.size(p)}").toSet
+    finally w.close()
   }
 
   /** Runs `body` with `tap` on the listener bus: drains the bus so no

@@ -1327,8 +1327,6 @@ class StreamingSpec extends SparkTestBase {
       // seal and retry — decisions still come from the sealed store
       // (bit-identical), the re-append may duplicate digests, and
       // compaction collapses them to the same distinct count
-      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(
         s"$epochs/epoch-000000000001/_appended"), false)
       val replay2 = Dedup.ledgerAdmitStreamBatch(spark, ledger, epochs,
@@ -1424,8 +1422,6 @@ class StreamingSpec extends SparkTestBase {
         (0L until 4L).map(_ -> 5L).toMap)
       // an UNSEALED epoch (crash between _decided and _appended) is
       // invisible to consumers...
-      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(
         f"$epochs/epoch-${3L}%012d/_appended"), false)
       assert(Dedup.readAdmittedEpochs(spark, epochs)
@@ -1555,18 +1551,22 @@ class StreamingSpec extends SparkTestBase {
           "doc_id", "text", 0L)
       }
       assert(e3.getMessage.contains("DIFFERENT batch"))
-      // a seal in a PREVIOUS fingerprint format (a pre-upgrade epoch)
-      // is accepted, not crash-looped: the guard is defense-in-depth
-      // and fresh epochs re-seal in the current format
-      val fs2 = new org.apache.hadoop.fs.Path(root).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      val dM = new org.apache.hadoop.fs.Path(
+      // a seal in a PREVIOUS fingerprint format or an EMPTY one (the
+      // pre-fingerprint bare marker) cannot vouch for the delivered
+      // rows: even the true retry fails as the mismatch, epoch untouched
+      val seal = new org.apache.hadoop.fs.Path(
         f"$root/e/epoch-${0L}%012d/_decided")
-      val o = fs2.create(dM, true)
-      o.write("3:12345".getBytes("UTF-8")); o.close()
-      assert(Dedup.ledgerAdmitStreamBatch(spark, s"$root/l",
-        s"$root/e", mk(Seq(3L, 1L, 2L)), "doc_id", "text", 0L)
-        .count() === 3L)
+      assert(graft.util.Gen.readSmall(fs, seal).startsWith("fp1:"))
+      for (old <- Seq("3:12345", "")) {
+        val o = fs.create(seal, true)
+        o.write(old.getBytes("UTF-8")); o.close()
+        val before = tree(root)
+        assert(intercept[IllegalStateException](
+          Dedup.ledgerAdmitStreamBatch(spark, s"$root/l", s"$root/e",
+            mk(Seq(3L, 1L, 2L)), "doc_id", "text", 0L))
+          .getMessage.contains("DIFFERENT batch"))
+        assert(tree(root) === before)
+      }
     } finally graft.util.Fs.deleteRecursively(root)
   }
 
@@ -1627,8 +1627,6 @@ class StreamingSpec extends SparkTestBase {
       // the OLD watermark, its marker landed next to the fresh one)
       // must never move the watermark backwards — max wins, and a
       // later ack reclaims the leftover lower marker
-      val fs = new org.apache.hadoop.fs.Path(epochs).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
       fs.create(new org.apache.hadoop.fs.Path(epochs,
         f"_consumed-${1L}%012d"), true).close() // the stale ack's marker
       assert(Dedup.consumedAdmitWatermark(spark, epochs) === Some(2L))
@@ -1726,9 +1724,7 @@ class StreamingSpec extends SparkTestBase {
       // been swept and the newest delivery crashed unsealed — the
       // marker outlives the epochs it acknowledges; only an ADVANCING
       // ack needs a sealed epoch to reference
-      val fsA = new org.apache.hadoop.fs.Path(epochs).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      fsA.delete(new org.apache.hadoop.fs.Path(
+      fs.delete(new org.apache.hadoop.fs.Path(
         f"$epochs/epoch-${3L}%012d/_appended"), false)
       assert(Dedup.ackAdmitEpochs(spark, epochs, "trainer", 3L) === 3L)
       intercept[IllegalArgumentException] {
@@ -1795,9 +1791,7 @@ class StreamingSpec extends SparkTestBase {
       // the anonymous group is one group like any other — retirable,
       // and multiple leftover markers all go (the race-leftover shape)
       Dedup.ackAdmitEpochs(spark, epochs, 4L)
-      val fsR = new org.apache.hadoop.fs.Path(epochs).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      fsR.create(new org.apache.hadoop.fs.Path(epochs,
+      fs.create(new org.apache.hadoop.fs.Path(epochs,
         f"_consumed-${3L}%012d"), true).close() // stale-ack leftover
       assert(Dedup.retireAnonymousConsumer(spark, epochs) === 2)
       assert(Dedup.consumedAdmitWatermark(spark, epochs) === Some(4L))
@@ -1821,70 +1815,12 @@ class StreamingSpec extends SparkTestBase {
       }
       val scanCount = Dedup.readAdmittedEpochs(spark, epochs).count()
       assert(scanCount === 12L)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val tap = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart)
-            : Unit = { jobs.incrementAndGet(); () }
-      }
-      val h = listening(tap)(Dedup.admitEpochHealthReport(spark, epochs).head())
+      val (h, jobs) =
+        withJobCount(Dedup.admitEpochHealthReport(spark, epochs).head())
       assert(h.getAs[Long]("admitted_rows") === scanCount)
-      assert(jobs.get === 0,
-        s"health report launched ${jobs.get} Spark jobs — a health " +
+      assert(jobs === 0,
+        s"health report launched $jobs Spark jobs — a health " +
           "poll must stay one driver listing at any store age")
-    } finally graft.util.Fs.deleteRecursively(root)
-  }
-
-  test("legacy-seal upgrade path: a root holding a bare (empty, " +
-      "pre-fingerprint) _decided receives a fresh epoch — the new " +
-      "seal is fp1-prefixed and a reset-checkpoint replay against " +
-      "the FRESH epoch fails loudly, while the legacy epoch stays " +
-      "readable and re-emits (guard documented-inactive there)") {
-    import SparkTestBase.session.implicits._
-    import graft.operators.Dedup
-    val root = Files.createTempDirectory("graft_seal_migrate").toString
-    val ledger = s"$root/ledger"
-    val epochs = s"$root/epochs"
-    try {
-      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      // epoch 0 in the OLD format: run it, then strip the seal's
-      // content back to the bare pre-fingerprint marker shape
-      Dedup.ledgerAdmitStreamBatch(spark, ledger, epochs,
-        Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text"),
-        "doc_id", "text", 0L)
-      fs.create(new org.apache.hadoop.fs.Path(
-        f"$epochs/epoch-${0L}%012d/_decided"), true).close()
-      // a fresh epoch on the same root seals in the CURRENT format
-      Dedup.ledgerAdmitStreamBatch(spark, ledger, epochs,
-        Seq((3L, "gamma")).toDF("doc_id", "text"),
-        "doc_id", "text", 1L)
-      def sealContent(e: Long): String = {
-        val in = fs.open(new org.apache.hadoop.fs.Path(
-          f"$epochs/epoch-$e%012d/_decided"))
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      }
-      assert(sealContent(0L).isEmpty)
-      assert(sealContent(1L).startsWith("fp1:"))
-      // reset-checkpoint replay against the FRESH epoch: loud failure
-      val e = intercept[IllegalStateException] {
-        Dedup.ledgerAdmitStreamBatch(spark, ledger, epochs,
-          Seq((9L, "reset batch")).toDF("doc_id", "text"),
-          "doc_id", "text", 1L)
-      }
-      assert(e.getMessage.contains("DIFFERENT batch"))
-      // the legacy epoch is accepted (once-per-root warning; the
-      // guard is documented-inactive for pre-upgrade epochs) and
-      // re-emits its sealed decisions even under a different
-      // delivered batch — an empty seal cannot distinguish one
-      assert(Dedup.ledgerAdmitStreamBatch(spark, ledger, epochs,
-        Seq((9L, "reset batch")).toDF("doc_id", "text"),
-        "doc_id", "text", 0L).count() === 2L)
-      // the mixed-format root reads back flat, both epochs labeled
-      assert(Dedup.readAdmittedEpochs(spark, epochs)
-        .select("epoch").distinct().as[Long].collect().sorted.toSeq ===
-        Seq(0L, 1L))
     } finally graft.util.Fs.deleteRecursively(root)
   }
 
@@ -1935,8 +1871,6 @@ class StreamingSpec extends SparkTestBase {
         .toDF("doc_id", "text")
       Dedup.nearDupLedgerAdmitStreamBatch(spark, ledger, epochs, b,
         "doc_id", "text", 0L)
-      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
       val eDir = f"$epochs/epoch-${0L}%012d"
       assert(fs.exists(new org.apache.hadoop.fs.Path(
         s"$eDir/_bands_appended")))
