@@ -11,13 +11,17 @@ import graft.model.{CritSeg, SpanLite}
   *
   * The sweep-line automaton is inherently sequential **per trace** but
   * embarrassingly parallel **across traces**: each trace is one small group
-  * (≤ thousands of spans), so the distributed shape is
-  * `groupByKey(traceID).flatMapGroups` — a single hash-partitioned shuffle of
-  * only the 8 `SpanLite` columns (nested-column pruning keeps tags/logs out of
-  * the shuffle), then pure Scala per group on executors. At 100 TB the cost is
-  * one shuffle of the narrow span projection; group skew (pathological
-  * 100k-span traces) stays bounded because the automaton is O(n log n) in the
-  * group size.
+  * (≤ thousands of spans), so the distributed shape is one hash shuffle on
+  * traceID into `defaultParallelism` partitions, a sort by traceID within
+  * each partition, and a pass that streams each run of one trace's spans
+  * into [[compute]] — pure Scala on executors, memory bounded by one trace.
+  * The shuffle carries only the 8 `SpanLite` columns (nested-column pruning
+  * keeps tags/logs out of it). The explicit partition count keeps AQE from
+  * coalescing the small shuffle into one reduce task that computes every
+  * trace serially (the sizing `Dedup.writeBucketed` uses). At 100 TB the
+  * cost is one shuffle of the narrow span projection; group skew
+  * (pathological 100k-span traces) stays bounded because the automaton is
+  * O(n log n) in the group size.
   *
   * Determinism: the reference relies on Python's stable `list.sort` over
   * insertion order (`traceframe.py:571`). Distributed inputs have no
@@ -97,9 +101,19 @@ object CriticalPath {
   /** A1/A2: distributed critical path — per-trace fan-out across executors. */
   def segments(spans: Dataset[SpanLite]): Dataset[CritSeg] = {
     import spans.sparkSession.implicits._
-    spans.groupByKey(_.traceID)
-      .flatMapGroups((_: String, it: Iterator[SpanLite]) =>
-        compute(it.toSeq).iterator)
+    spans
+      .repartition(spans.sparkSession.sparkContext.defaultParallelism,
+        col("traceID"))
+      .sortWithinPartitions(col("traceID"))
+      .mapPartitions { it =>
+        val in = it.buffered
+        Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+          val id = in.head.traceID
+          val trace = mutable.ArrayBuffer.empty[SpanLite]
+          while (in.hasNext && in.head.traceID == id) trace += in.next()
+          compute(trace.toSeq)
+        }
+      }
   }
 
   /** Same over the flat spans frame produced by `SpanOps.flatten` — selects

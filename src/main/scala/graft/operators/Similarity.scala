@@ -636,9 +636,15 @@ object Similarity {
     // wholly in one task (hash of the cell picks the partition), so
     // each write still leaves one file per touched cell.
     val writeParts = assigned.sparkSession.sparkContext.defaultParallelism
+    // each cell's rows in id order, in place of the writer's own sort by
+    // cell: a cell file's row order then depends on its rows alone, not
+    // on the order tasks read their input, so two compactions of one
+    // store write identical files
+    def write(parts: DataFrame): Unit =
+      parts.sortWithinPartitions(col("cell"), col("neighbor_id"))
+        .write.mode(mode).partitionBy("cell").parquet(dest)
     if (maxRowsPerTask <= 0) {
-      assigned.repartition(writeParts, col("cell")).write.mode(mode)
-        .partitionBy("cell").parquet(dest)
+      write(assigned.repartition(writeParts, col("cell")))
       return
     }
     // salted form — the escape hatch for the hot-cell caveat above: a
@@ -658,8 +664,7 @@ object Similarity {
         ((r.getLong(1) + maxRowsPerTask - 1) / maxRowsPerTask).max(1L))
       .toMap
     if (salts.values.forall(_ == 1L)) {
-      assigned.repartition(writeParts, col("cell")).write.mode(mode)
-        .partitionBy("cell").parquet(dest)
+      write(assigned.repartition(writeParts, col("cell")))
       return
     }
     val saltOf = coalesce(
@@ -674,9 +679,8 @@ object Similarity {
         s"(census total / maxRowsPerTask=$maxRowsPerTask) — raise " +
         "maxRowsPerTask (or use the unsalted default) so the task " +
         "count stays sane")
-    assigned.repartition(totalParts.toInt,
-        col("cell"), pmod(hash(col("neighbor_id")), saltOf))
-      .write.mode(mode).partitionBy("cell").parquet(dest)
+    write(assigned.repartition(totalParts.toInt,
+      col("cell"), pmod(hash(col("neighbor_id")), saltOf)))
   }
 
   /** Carry the layout's auxiliary datasets of an index generation

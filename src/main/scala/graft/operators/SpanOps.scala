@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
+import graft.expressions.{LastWinMap, ParentSpanId}
 
 /** Span-shaping operators: raw traces → flat spans frame
   * (reference `spans_from_jaeger_file` / `append_spans`,
@@ -11,37 +15,24 @@ import org.apache.spark.sql.functions._
   * tag key into its own column (71 columns on its fixture; unbounded at
   * scale). Our core model keeps `tags` as a stable `MapType(String,String)`
   * column — schema-stable at 100 TB — and offers [[pivotTags]] as an explicit
-  * two-job wide pivot for interactive use.
+  * wide pivot for interactive use: one census job, then the projection.
   */
 object SpanOps {
 
   /** T3 `parent_span` (`traceframe.py:429-433`): first CHILD_OF reference's
-    * spanID, else "". */
+    * spanID, else "" — one compiled pass ([[graft.expressions.SpanKernels]]). */
   def parentExpr(span: Column): Column =
-    coalesce(
-      get(filter(span.getField("references"),
-        r => r.getField("refType") === "CHILD_OF"), lit(0))
-        .getField("spanID"),
-      lit(""))
+    column(ParentSpanId(expression(span.getField("references"))))
 
   /** T4 `taglist_to_tags` (`traceframe.py:261-265`): tag entry array → map
     * with duplicate keys resolved LAST-wins, like the reference's dict
-    * overwrite — expressed directly in the plan (keep each key's final
-    * occurrence, then `map_from_entries` over now-unique keys), so no
-    * session-global `spark.sql.mapKeyDedupPolicy` mutation is needed and
-    * the operator composes under any session config. Tag lists are tiny
-    * (≤ tens of entries) so the quadratic last-occurrence scan is noise. */
-  def lastWinMap(entries: Column, valueField: String): Column = {
-    val withIdx = transform(entries, (t, i) =>
-      struct(t.getField("key").as("key"),
-        t.getField(valueField).as("value"), i.as("i")))
-    val kept = filter(withIdx, e =>
-      !exists(withIdx, o =>
-        o.getField("key") === e.getField("key") &&
-          o.getField("i") > e.getField("i")))
-    map_from_entries(transform(kept, e =>
-      struct(e.getField("key").as("key"), e.getField("value").as("value"))))
-  }
+    * overwrite, in one compiled pass per span
+    * ([[graft.expressions.SpanKernels.lastWinMap]]): no session-global
+    * `spark.sql.mapKeyDedupPolicy` mutation is needed, so the operator
+    * composes under any session config. A null key raises `NULL_MAP_KEY`,
+    * as a map cannot hold one. */
+  def lastWinMap(entries: Column, valueField: String): Column =
+    column(LastWinMap(expression(entries), valueField))
 
   private val emptyTags =
     array().cast("array<struct<key:string,type:string,value:string>>")
@@ -92,9 +83,9 @@ object SpanOps {
     * discriminator (bool/int64/float64/string) so the frame matches the
     * reference's per-key dtypes (`traceframe.py:466`, README.md:29-60) —
     * `df.filter($"http.status_code" > 400)` compares numerically, not
-    * lexically. Two jobs, same shape as Spark's own `Pivot`: job 1 collects
-    * the distinct (key, type) set to the driver (skipped when `keys` is
-    * given), job 2 is a pure projection with `try_cast` per key. `maxKeys`
+    * lexically. Same shape as Spark's own `Pivot`: one census job finds
+    * the keys and their discriminators ([[keyCensus]]; skipped when `keys`
+    * is given), then a pure projection with `try_cast` per key. `maxKeys`
     * guards against hostile key cardinality at scale (analogous to
     * `spark.sql.pivotMaxValues`). */
   def pivotTags(flatSpans: DataFrame, keys: Option[Seq[String]] = None,
@@ -102,27 +93,10 @@ object SpanOps {
     val hasTypes = flatSpans.columns.contains("tagTypes")
     val keyTypes: Seq[(String, String)] = keys match {
       case Some(ks) => ks.map(_ -> "string")
-      case None if hasTypes =>
-        // aggregate per KEY (not per (key,type) pair) so the cardinality
-        // guard counts keys deterministically: orderBy + limit over keys,
-        // conflicting discriminators detected via countDistinct — a
-        // hostile corpus can overflow the key limit (require below fires)
-        // but can never silently mistype or drop a surviving key
-        flatSpans
-          .select(explode(map_entries(col("tagTypes"))).as("e"))
-          .select(col("e.key").as("k"), col("e.value").as("t"))
-          .groupBy(col("k"))
-          .agg(countDistinct(col("t")).as("nt"), min(col("t")).as("t"))
-          .orderBy(col("k")).limit(maxKeys + 1)
-          .collect()
-          .map(r => (r.getString(0),
-            if (r.getLong(1) > 1) "string"
-            else sparkTypeFor(Set(r.getString(2)))))
-          .toSeq
       case None =>
-        flatSpans.select(explode(map_keys(col("tags"))).as("k"))
-          .distinct().orderBy("k").limit(maxKeys + 1)
-          .collect().map(_.getString(0) -> "string").toSeq
+        keyCensus(flatSpans, if (hasTypes) "tagTypes" else "tags", maxKeys)
+          .map { case (k, ts) =>
+            k -> (if (hasTypes) sparkTypeFor(ts) else "string") }
     }
     require(keyTypes.size <= maxKeys,
       s"tag pivot would create ${keyTypes.size} columns (> $maxKeys); " +
@@ -134,6 +108,47 @@ object SpanOps {
       (if (t == "string") v else v.try_cast(t)).as(k)
     }
     flatSpans.select(fixed ++ pivoted: _*)
+  }
+
+  /** The first `maxKeys + 1` keys of the string map column `mapCol`, in
+    * Spark's string order, each with the set of its non-null values (null
+    * discriminators are ignored, as `countDistinct` ignores them; a set
+    * stops growing at 2, which already means "conflicting"). One Spark
+    * job: each partition folds the map's exploded entries, as internal
+    * rows, into a key table (and stops reading once it holds
+    * `maxKeys + 1` keys, so the caller's cardinality guard still fires),
+    * and `treeAggregate` merges the tables. Driver memory is bounded by
+    * the key cap. The entries are read through `explode(map_entries(…))`,
+    * not by walking `MapData` by hand: with the hand walk the pivot's
+    * write job that follows ran at about 2x its executor CPU through the
+    * first passes of a fresh JVM (perfbench `trace-ingest`, 4 vCPUs). */
+  private def keyCensus(flatSpans: DataFrame, mapCol: String,
+      maxKeys: Int): Seq[(String, Set[String])] = {
+    type Census = Map[String, Set[String]]
+    def merge(a: Census, b: Census): Census =
+      b.foldLeft(a) { case (m, (k, ts)) =>
+        m.updated(k, (m.getOrElse(k, Set.empty[String]) ++ ts).take(2))
+      }
+    val census = flatSpans.select(explode(map_entries(col(mapCol))).as("e"))
+      .select(col("e.key"), col("e.value")).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val seen = new java.util.HashMap[UTF8String, Set[String]]
+        while (rows.hasNext && seen.size <= maxKeys) {
+          val r = rows.next()
+          val k = r.getUTF8String(0)
+          var ts = seen.get(k)
+          if (ts == null) { ts = Set.empty; seen.put(k.clone(), ts) }
+          if (ts.size < 2 && !r.isNullAt(1)) seen.put(k, ts + r.getString(1))
+        }
+        val out = Map.newBuilder[String, Set[String]]
+        seen.forEach((k, ts) => out += k.toString -> ts)
+        Iterator.single(out.result())
+      }
+      .treeAggregate(Map.empty: Census)(merge, merge)
+    census.toSeq
+      .sortWith((a, b) => UTF8String.fromString(a._1)
+        .compareTo(UTF8String.fromString(b._1)) < 0)
+      .take(maxKeys + 1)
   }
 
   /** Inverse of [[flatten]]: reassemble nested trace rows from a flat spans
@@ -173,32 +188,48 @@ object SpanOps {
       .withColumn("warnings", lit(null).cast("array<string>"))
   }
 
-  /** T13 `traceWithSpans` (`traceframe.py:620-632`): point-lookup join of the
-    * traces frame with its (deduplicated) spans, as a single nested row.
-    * Dedup keeps the first span per spanID **deterministically** (window rank
-    * by startTime, spanID-hash) — pandas' `drop_duplicates` keep-first is
-    * row-order-dependent, which has no stable distributed analog.
-    * Reference parity: raises when the traceID is absent
-    * (`traceframe.py:625` — the reference is eager, so `strict` costs one
-    * point-lookup job; pass `strict = false` for a lazy empty result). */
+  /** T13 `traceWithSpans` (`traceframe.py:620-632`): the trace's summary
+    * row with its (deduplicated) spans as one nested row. Eager, like the
+    * reference: two jobs, each bounded by one trace, collect the summary
+    * row and the trace's spans; the driver keeps the first span per spanID
+    * by `(startTime, duration)` (pandas' `drop_duplicates` keep-first is
+    * row-order-dependent, which has no stable distributed analog), orders
+    * the spans by `(startTime, spanID)` and returns a local frame.
+    * Raises when the traceID is absent (`traceframe.py:625`), after the
+    * first job; `strict = false` returns an empty frame instead. */
   def traceWithSpans(traces: DataFrame, flatSpans: DataFrame,
       traceID: String, strict: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    if (strict && traces.filter(col("traceID") === traceID).isEmpty)
+    val spark = traces.sparkSession
+    val summary = traces.filter(col("traceID") === traceID)
+    val spanCols = Seq("spanID", "operationName", "startTime", "duration",
+      "processID", "parent", "service")
+    val spans = flatSpans.filter(col("traceID") === traceID)
+      .select(spanCols.map(col): _*)
+    val key = summary.schema("traceID")
+    val schema = StructType(key +: summary.schema.filterNot(_ == key) :+
+      StructField("spans", ArrayType(spans.schema, containsNull = false),
+        nullable = false))
+    val rows = summary.collect()
+    if (strict && rows.isEmpty)
       throw new NoSuchElementException(
         s"No trace with traceID=$traceID") // traceframe.py:625 raises
-    val w = Window.partitionBy(col("spanID"))
-      .orderBy(col("startTime"), col("duration"))
-    val spansAgg = flatSpans
-      .filter(col("traceID") === traceID)
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
-      .groupBy(col("traceID"))
-      .agg(collect_list(struct(
-        col("spanID"), col("operationName"), col("startTime"),
-        col("duration"), col("processID"), col("parent"), col("service")))
-        .as("spans"))
-    traces.filter(col("traceID") === traceID).join(spansAgg, Seq("traceID"))
+    val nested = if (rows.isEmpty) Nil else {
+      val (start, dur, id) = (spans.schema.fieldIndex("startTime"),
+        spans.schema.fieldIndex("duration"), spans.schema.fieldIndex("spanID"))
+      // nulls first, as Spark's ascending sort puts them
+      def long(r: Row, i: Int) =
+        if (r.isNullAt(i)) Long.MinValue else r.getLong(i)
+      val kept = spans.collect()
+        .sortBy(r => (long(r, start), long(r, dur)))
+        .groupBy(_.getString(id)).values.map(_.head).toSeq
+        .sortBy(r => (long(r, start), Option(r.getString(id))))
+      val k = summary.schema.fieldIndex("traceID")
+      val rest = summary.schema.indices.filterNot(_ == k)
+      // a trace without spans has no row, as in the summary ⋈ spans join
+      if (kept.isEmpty) Nil
+      else rows.toSeq.map(r => Row.fromSeq(
+        (r.get(k) +: rest.map(r.get)) :+ kept))
+    }
+    spark.createDataFrame(java.util.Arrays.asList(nested: _*), schema)
   }
 }

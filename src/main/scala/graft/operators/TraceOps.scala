@@ -2,44 +2,38 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
+import graft.expressions.{ErrTagCount, RootSpan}
 
 /** Trace-shaping operators: raw trace rows → the 8-column traces summary frame
   * (reference `process_traces` + per-row kernels,
   * `/root/reference/traceframe/traceframe.py:140-230`).
   *
-  * Every kernel (K1-K7 in SURVEY.md §2.2) is a pure codegen'd `Column`
-  * expression over the nested `spans` array — no UDFs, no shuffle until the
-  * final global sort. The reference recomputes the root span 4× per row
-  * (`traceframe.py:222-226`); here a single shared `root` struct column is
-  * computed once.
+  * Every kernel (K1-K7 in SURVEY.md §2.2) is a `Column` expression over the
+  * nested `spans` array — no UDFs; the two array scans (K1 root, K4 error
+  * tags) are compiled kernels ([[graft.expressions.SpanKernels]]). The
+  * reference recomputes the root span 4× per row (`traceframe.py:222-226`);
+  * here a single shared `root` struct column is computed once.
   */
 object TraceOps {
 
   /** K1 `rootspan` (`traceframe.py:140-155`): first span with zero references;
     * quirk preserved for golden parity: fallback is `spans[0]` (first, NOT
     * earliest — the reference marks this TODO), null when the trace is empty. */
-  def rootSpan(spans: Column): Column =
-    coalesce(
-      get(filter(spans, s => size(s.getField("references")) === 0), lit(0)),
-      get(spans, lit(0)))
+  def rootSpan(spans: Column): Column = column(RootSpan(expression(spans)))
 
   /** K4 `traceobj_errcount` (`traceframe.py:177-183`): counts `error` **tags**,
-    * not error spans — a span with two error tags counts twice (quirk kept). */
-  def errTagCount(spans: Column): Column =
-    coalesce(
-      aggregate(spans, lit(0),
-        (acc, s) =>
-          acc + coalesce(
-            size(filter(coalesce(s.getField("tags"), array()),
-              t => t.getField("key") === "error")),
-            lit(0))),
-      lit(0))
+    * not error spans — a span with two error tags counts twice (quirk kept);
+    * 0 for a null spans array. */
+  def errTagCount(spans: Column): Column = column(ErrTagCount(expression(spans)))
 
   /** T1 `process_traces` (`traceframe.py:209-230`): the traces summary frame.
     *
     * Columns: traceID, traceName, nspans, errspans, duration (µs), startTime,
-    * processes, iserror — globally sorted by startTime desc (range-partitioned
-    * shuffle; the only shuffle in this pipeline).
+    * processes, iserror — globally sorted by startTime desc. The JSON scan
+    * and the projection run once: the narrow summary rows are hash-exchanged
+    * on traceID first, so the range partitioner's sampling job and the sort
+    * read shuffle blocks instead of parsing the raw input a second time.
     */
   def summarize(rawTraces: DataFrame): DataFrame = {
     val svc = tryElementAt(col("processes"), col("root.processID"))
@@ -64,6 +58,7 @@ object TraceOps {
         col("processes"))
       // K7 (`traceframe.py:229`)
       .withColumn("iserror", col("errspans") > 0)
+      .repartition(col("traceID"))
       .orderBy(desc("startTime"))
   }
 

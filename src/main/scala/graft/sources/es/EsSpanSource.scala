@@ -353,7 +353,7 @@ object EsSpanOps {
         lit(null).cast("array<string>").as("warnings"),
         col("s.process.serviceName").as("service"),
         SpanOps.parentExpr(col("s")).as("parent"),
-        // last-win duplicate-key fold, conf-free (see SpanOps.lastWinMap)
+        // last-win duplicate-key fold (see SpanOps.lastWinMap)
         SpanOps.lastWinMap(
           coalesce(col("s.tags"),
             array().cast("array<struct<key:string,type:string,value:string>>")),

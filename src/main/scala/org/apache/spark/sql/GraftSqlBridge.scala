@@ -10,4 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Spark's own `NULL_MAP_KEY` error, for kernels that build maps. */
+  def nullMapKeyError(): Throwable =
+    errors.QueryExecutionErrors.nullAsMapKeyNotAllowedError()
 }

@@ -134,4 +134,40 @@ class AnnLifecycleSpec extends SparkTestBase {
         live.size.toLong, s"${f.kind}: stats rows")
     } finally graft.util.Fs.deleteRecursively(root)
   }
+
+  test("two compactions of one cell-partitioned store write every cell " +
+      "file with the same rows in the same order: id order") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_ann_compact_order").toString
+    try families.filter(_.cellPartitioned).foreach { f =>
+      val (a, b) = (s"$root/${f.kind}_a", s"$root/${f.kind}_b")
+      // saved and appended ids interleave, so a cell's files hold
+      // alternating id runs that a concatenation leaves out of order
+      f.save(emb.filter(col("vec_id") % 3 =!= 0), a)
+      f.append(emb.filter(col("vec_id") % 3 === 0).repartition(3), a)
+      f.append(emb.filter(col("vec_id") % 3 === 0)
+        .withColumn("vec_id", col("vec_id") + 1000L), a)
+      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(a), fs, new Path(b),
+        false, spark.sparkContext.hadoopConfiguration)
+      f.compact(a)
+      f.compact(b)
+      // each cell's ids in the order its one file holds them
+      def cellRows(p: String): Map[String, Seq[Long]] = {
+        val store = new Path(s"${graft.util.Gen.resolve(spark, p)}/${f.store}")
+        fs.listStatus(store).filter(_.getPath.getName.startsWith("cell="))
+          .map { c =>
+            val part = fs.listStatus(c.getPath)
+              .filter(_.getPath.getName.startsWith("part-"))
+            assert(part.length === 1, s"${f.kind}: ${c.getPath.getName}")
+            c.getPath.getName -> spark.read.parquet(part.head.getPath.toString)
+              .select("neighbor_id").collect().map(_.getLong(0)).toSeq
+          }.toMap
+      }
+      val (ra, rb) = (cellRows(a), cellRows(b))
+      assert(ra.nonEmpty && ra === rb, f.kind)
+      ra.foreach { case (cell, ids) =>
+        assert(ids === ids.sorted, s"${f.kind}: $cell")
+      }
+    } finally graft.util.Fs.deleteRecursively(root)
+  }
 }

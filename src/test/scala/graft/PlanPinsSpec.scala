@@ -23,6 +23,19 @@ class PlanPinsSpec extends SparkTestBase {
   private def hashExchanges(p: String): Int =
     "Exchange hashpartitioning".r.findAllIn(p).length
 
+  // the span kernels are compiled expressions: no higher-order function
+  // of the engine is left in the paper pass (t02's own `transform` over
+  // `map_entries` renders the tag map for the oracle, and is the only one)
+  test("t01/t02 plans hold no engine higher-order function") {
+    val hof = "\\b(transform|filter|exists|aggregate)\\(".r
+    assert(hof.findFirstIn(plan("t01_trace_summary")).isEmpty)
+    val t02 = plan("t02_span_flatten")
+    assert(hof.findAllMatchIn(t02).map(m => t02.substring(m.start))
+      .forall(_.startsWith("transform(map_entries(")))
+    assert(t02.contains("graft_last_win_map") &&
+      t02.contains("graft_parent_span_id"))
+  }
+
   test("q02 pushes filters to the parquet scan") {
     assert(plan("q02_filter_project").contains("PushedFilters: [Is"))
   }
