@@ -29,7 +29,12 @@ object SpanKernels {
 
   /** T4 last-win fold: the tag array as a map, each key's LAST occurrence
     * kept, entries in the order those occurrences appear; null values are
-    * kept, a null key (or a null tag) raises Spark's `NULL_MAP_KEY`. */
+    * kept. A null key (or a null tag) keeps the result of the
+    * higher-order form this replaced, whose `exists` compared keys in
+    * three-valued logic: a null key in the LAST tag raises Spark's
+    * `NULL_MAP_KEY`; anywhere else it drops itself and every tag before
+    * it (`[null-key, a]` → `{a}`). Tag lists are short, so the check for
+    * a later occurrence is a pairwise scan. */
   def lastWinMap(tags: ArrayData, nFields: Int, keyOrd: Int,
       valueOrd: Int): MapData = {
     val n = tags.numElements()
@@ -37,32 +42,24 @@ object SpanKernels {
     val values = new Array[Any](n)
     // distinct keys fill keys/values from the back, scanning backwards,
     // so the first occurrence seen is the last one and the kept entries
-    // end up in array order; long lists swap the pairwise check for a set
-    val seen = if (n > 16) new java.util.HashSet[UTF8String] else null
+    // end up in array order
     var m = n
     var i = n - 1
-    while (i >= 0) {
-      if (tags.isNullAt(i)) throw GraftSqlBridge.nullMapKeyError()
+    while (i >= 0 && !tags.isNullAt(i) &&
+        !tags.getStruct(i, nFields).isNullAt(keyOrd)) {
       val t = tags.getStruct(i, nFields)
-      if (t.isNullAt(keyOrd)) throw GraftSqlBridge.nullMapKeyError()
       val k = t.getUTF8String(keyOrd)
-      val fresh =
-        if (seen != null) seen.add(k)
-        else {
-          var j = m
-          while (j < n && !keys(j).equals(k)) j += 1
-          j == n
-        }
-      if (fresh) {
+      var j = m
+      while (j < n && !keys(j).equals(k)) j += 1
+      if (j == n) {
         m -= 1
         keys(m) = k
         values(m) = if (t.isNullAt(valueOrd)) null else t.getUTF8String(valueOrd)
       }
       i -= 1
     }
-    if (m == 0) new ArrayBasedMapData(new GenericArrayData(keys),
-      new GenericArrayData(values))
-    else new ArrayBasedMapData(new GenericArrayData(keys.slice(m, n)),
+    if (i == n - 1 && n > 0) throw GraftSqlBridge.nullMapKeyError()
+    new ArrayBasedMapData(new GenericArrayData(keys.slice(m, n)),
       new GenericArrayData(values.slice(m, n)))
   }
 

@@ -29,8 +29,10 @@ object SpanOps {
     * overwrite, in one compiled pass per span
     * ([[graft.expressions.SpanKernels.lastWinMap]]): no session-global
     * `spark.sql.mapKeyDedupPolicy` mutation is needed, so the operator
-    * composes under any session config. A null key raises `NULL_MAP_KEY`,
-    * as a map cannot hold one. */
+    * composes under any session config. A null key (or null tag) in the
+    * last position raises `NULL_MAP_KEY`, as a map cannot hold one; one
+    * earlier in the list drops itself and every tag before it, as the
+    * three-valued higher-order form did. */
   def lastWinMap(entries: Column, valueField: String): Column =
     column(LastWinMap(expression(entries), valueField))
 
@@ -94,7 +96,8 @@ object SpanOps {
     val keyTypes: Seq[(String, String)] = keys match {
       case Some(ks) => ks.map(_ -> "string")
       case None =>
-        keyCensus(flatSpans, if (hasTypes) "tagTypes" else "tags", maxKeys)
+        keyCensus(flatSpans, if (hasTypes) "tagTypes" else "tags", hasTypes,
+          maxKeys)
           .map { case (k, ts) =>
             k -> (if (hasTypes) sparkTypeFor(ts) else "string") }
     }
@@ -110,27 +113,33 @@ object SpanOps {
     flatSpans.select(fixed ++ pivoted: _*)
   }
 
-  /** The first `maxKeys + 1` keys of the string map column `mapCol`, in
-    * Spark's string order, each with the set of its non-null values (null
+  /** The keys of the string map column `mapCol`, in Spark's string order,
+    * each with the set of its non-null values when `withValues` (null
     * discriminators are ignored, as `countDistinct` ignores them; a set
-    * stops growing at 2, which already means "conflicting"). One Spark
-    * job: each partition folds the map's exploded entries, as internal
-    * rows, into a key table (and stops reading once it holds
-    * `maxKeys + 1` keys, so the caller's cardinality guard still fires),
-    * and `treeAggregate` merges the tables. Driver memory is bounded by
-    * the key cap. The entries are read through `explode(map_entries(…))`,
-    * not by walking `MapData` by hand: with the hand walk the pivot's
-    * write job that follows ran at about 2x its executor CPU through the
-    * first passes of a fresh JVM (perfbench `trace-ingest`, 4 vCPUs). */
+    * stops growing at 2, which already means "conflicting"), else with an
+    * empty set. One Spark job: each partition folds the map's exploded
+    * entries, as internal rows, into a key table, and `treeAggregate`
+    * merges the tables. Every table, per partition and merged, stops
+    * taking new keys at `maxKeys + 1`, so driver and executor memory are
+    * bounded by the key cap and the caller's cardinality guard still
+    * fires; past the cap, which keys are kept is unspecified. The entries
+    * are read through `explode(map_entries(…))`, not by walking `MapData`
+    * by hand: with the hand walk the pivot's write job that follows ran at
+    * about 2x its executor CPU through the first passes of a fresh JVM
+    * (perfbench `trace-ingest`, 4 vCPUs). */
   private def keyCensus(flatSpans: DataFrame, mapCol: String,
-      maxKeys: Int): Seq[(String, Set[String])] = {
+      withValues: Boolean, maxKeys: Int): Seq[(String, Set[String])] = {
     type Census = Map[String, Set[String]]
     def merge(a: Census, b: Census): Census =
       b.foldLeft(a) { case (m, (k, ts)) =>
-        m.updated(k, (m.getOrElse(k, Set.empty[String]) ++ ts).take(2))
+        if (m.contains(k)) m.updated(k, (m(k) ++ ts).take(2))
+        else if (m.size <= maxKeys) m.updated(k, ts)
+        else m
       }
-    val census = flatSpans.select(explode(map_entries(col(mapCol))).as("e"))
-      .select(col("e.key"), col("e.value")).queryExecution.toRdd
+    val entries = flatSpans.select(explode(map_entries(col(mapCol))).as("e"))
+    val census = entries
+      .select(col("e.key") +: (if (withValues) Seq(col("e.value")) else Nil): _*)
+      .queryExecution.toRdd
       .mapPartitions { rows =>
         val seen = new java.util.HashMap[UTF8String, Set[String]]
         while (rows.hasNext && seen.size <= maxKeys) {
@@ -138,17 +147,16 @@ object SpanOps {
           val k = r.getUTF8String(0)
           var ts = seen.get(k)
           if (ts == null) { ts = Set.empty; seen.put(k.clone(), ts) }
-          if (ts.size < 2 && !r.isNullAt(1)) seen.put(k, ts + r.getString(1))
+          if (withValues && ts.size < 2 && !r.isNullAt(1))
+            seen.put(k, ts + r.getString(1))
         }
         val out = Map.newBuilder[String, Set[String]]
         seen.forEach((k, ts) => out += k.toString -> ts)
         Iterator.single(out.result())
       }
       .treeAggregate(Map.empty: Census)(merge, merge)
-    census.toSeq
-      .sortWith((a, b) => UTF8String.fromString(a._1)
-        .compareTo(UTF8String.fromString(b._1)) < 0)
-      .take(maxKeys + 1)
+    census.toSeq.sortWith((a, b) => UTF8String.fromString(a._1)
+      .compareTo(UTF8String.fromString(b._1)) < 0)
   }
 
   /** Inverse of [[flatten]]: reassemble nested trace rows from a flat spans
@@ -196,7 +204,10 @@ object SpanOps {
     * row-order-dependent, which has no stable distributed analog), orders
     * the spans by `(startTime, spanID)` and returns a local frame.
     * Raises when the traceID is absent (`traceframe.py:625`), after the
-    * first job; `strict = false` returns an empty frame instead. */
+    * first job. Both modes are eager: `strict = false` runs the same jobs
+    * when the trace exists (the join form it replaced ran none until its
+    * frame was read) and, when it is absent, returns an empty frame after
+    * the first job, without reading the spans. */
   def traceWithSpans(traces: DataFrame, flatSpans: DataFrame,
       traceID: String, strict: Boolean = true): DataFrame = {
     val spark = traces.sparkSession

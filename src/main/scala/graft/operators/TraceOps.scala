@@ -30,10 +30,8 @@ object TraceOps {
   /** T1 `process_traces` (`traceframe.py:209-230`): the traces summary frame.
     *
     * Columns: traceID, traceName, nspans, errspans, duration (µs), startTime,
-    * processes, iserror — globally sorted by startTime desc. The JSON scan
-    * and the projection run once: the narrow summary rows are hash-exchanged
-    * on traceID first, so the range partitioner's sampling job and the sort
-    * read shuffle blocks instead of parsing the raw input a second time.
+    * processes, iserror — globally sorted by startTime desc (range-partitioned
+    * shuffle; the only shuffle in this pipeline).
     */
   def summarize(rawTraces: DataFrame): DataFrame = {
     val svc = tryElementAt(col("processes"), col("root.processID"))
@@ -58,7 +56,6 @@ object TraceOps {
         col("processes"))
       // K7 (`traceframe.py:229`)
       .withColumn("iserror", col("errspans") > 0)
-      .repartition(col("traceID"))
       .orderBy(desc("startTime"))
   }
 

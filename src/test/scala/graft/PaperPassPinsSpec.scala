@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -10,9 +10,8 @@ import graft.sources.JaegerJsonSource
 
 /** Job, stage and input pins of the paper pass on the bundled fixture:
   * each stage does its work once, at full parallelism. The tag census is
-  * one job, the one-trace lookup two, the critical path's reduce stage
-  * runs `defaultParallelism` tasks, and `summarize` reads its JSON input
-  * once. */
+  * one job, the one-trace lookup two, and the critical path's reduce
+  * stage runs `defaultParallelism` tasks. */
 class PaperPassPinsSpec extends SparkTestBase {
 
   private lazy val raw = JaegerJsonSource.traces(spark, fixturePath)
@@ -33,7 +32,8 @@ class PaperPassPinsSpec extends SparkTestBase {
     assert(tagsOnly.columns.length === 20)
   }
 
-  test("traceWithSpans runs 2 jobs; a missing trace raises after at most 1") {
+  test("traceWithSpans runs 2 jobs; a missing trace raises after at most " +
+      "1, or with strict = false comes back empty after 1") {
     val dir = tmpDir()
     TraceOps.summarize(raw).write.mode("overwrite").parquet(s"$dir/summary")
     flat.write.mode("overwrite").parquet(s"$dir/flat")
@@ -46,6 +46,11 @@ class PaperPassPinsSpec extends SparkTestBase {
     val (_, m) = withJobCount(intercept[NoSuchElementException](
       SpanOps.traceWithSpans(summary, spans, "nope")))
     assert(m <= 1)
+    // strict = false is eager too: one job, and no read of the spans
+    val (none, k) = withJobCount(
+      SpanOps.traceWithSpans(summary, spans, "nope", strict = false))
+    assert(k === 1)
+    assert(none.isEmpty)
   }
 
   /** The lazy join `traceWithSpans` was before it turned eager: the
@@ -100,24 +105,5 @@ class PaperPassPinsSpec extends SparkTestBase {
     })(CriticalPath.segmentsFromFlat(flat).collect())
     val last = stages(stages.keys.max)
     assert(last === spark.sparkContext.defaultParallelism)
-  }
-
-  test("summarize reads its JSON input once: task bytesRead sum to the " +
-      "file length") {
-    val input = s"${tmpDir()}/traces.jsonl"
-    raw.select(to_json(struct(col("*")))).coalesce(1).write.text(s"$input.d")
-    val part = new java.io.File(s"$input.d").listFiles()
-      .find(_.getName.startsWith("part-")).get
-    java.nio.file.Files.move(part.toPath, new java.io.File(input).toPath)
-    val read = new java.util.concurrent.atomic.AtomicLong
-    listening(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        if (e.taskMetrics != null)
-          read.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
-        ()
-      }
-    })(TraceOps.summarize(JaegerJsonSource.tracesJsonl(spark, input))
-      .write.mode("overwrite").parquet(s"${tmpDir()}/summary"))
-    assert(read.get === new java.io.File(input).length)
   }
 }

@@ -152,14 +152,36 @@ class SpanKernelsSpec extends SparkTestBase {
     assert(dup === Seq("a" -> "bool", "c" -> "string", "b" -> "float64"))
   }
 
-  test("last-win map kernel raises NULL_MAP_KEY on a null key or a null tag, " +
-      "as the HOF form does") {
+  test("last-win map kernel ≡ HOF form on null keys and null tags: last " +
+      "position raises NULL_MAP_KEY, elsewhere the tag and all before it drop") {
     val tagsType = JaegerModel.spanSchema("tags").dataType
-    val schema = StructType(Seq(org.apache.spark.sql.types.StructField(
-      "tags", tagsType)))
-    for (tags <- Seq(Seq(tag("a", "string", "1"), tag(null, "string", "2")),
-        Seq(tag("a", "string", "1"), null))) {
-      val df = frame(Seq(Row(tags)), schema)
+    val schema = StructType(Seq(
+      org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("tags", tagsType)))
+    val a = tag("a", "string", "1")
+    val b = tag("b", "string", "2")
+    val nullKey = tag(null, "string", "3")
+    // three-valued `exists`: a later null key makes every earlier tag's
+    // "is there a later occurrence" test null, so filter drops it
+    val dropping = frame(Seq(
+      Row("null key first", Seq(nullKey, a)),
+      Row("null tag first", Seq(null, a)),
+      Row("null tag between", Seq(a, null, b)),
+      Row("null key between, key repeats", Seq(a, nullKey, b, a)),
+      Row("two nulls", Seq(b, null, a, nullKey, b))), schema)
+    assertParity(dropping, map_entries(SpanOps.lastWinMap(col("tags"), "value")),
+      map_entries(hofLastWinMap(col("tags"), "value")))
+    val kept = dropping.select(col("id"),
+        map_entries(SpanOps.lastWinMap(col("tags"), "value")))
+      .collect().map(r => r.getString(0) ->
+        r.getSeq[Row](1).map(e => e.getString(0) -> e.getString(1))).toMap
+    assert(kept("null key first") === Seq("a" -> "1"))
+    assert(kept("null tag between") === Seq("b" -> "2"))
+    assert(kept("null key between, key repeats") === Seq("b" -> "2", "a" -> "1"))
+    assert(kept("two nulls") === Seq("b" -> "2"))
+    for (tags <- Seq(Seq(a, nullKey), Seq(a, null), Seq(nullKey, a, null))) {
+      val df = frame(Seq(Row("last", tags)), schema)
       // the innermost error condition: a task failure arrives wrapped
       def condition(c: Column) = Iterator
         .iterate[Throwable](intercept[Exception](df.select(c).collect()))(
